@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Benchmark main: one JSON line with per-query wall times.
   *
@@ -32,100 +31,61 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** Force full computation of every output column. bit_xor is overflow-free
-    * (ANSI mode) and order-independent. */
-  private def consume(df: DataFrame): Unit = {
-    val cols = df.columns.map(c => col(s"`$c`").cast("string"))
-    df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).collect()
-    ()
-  }
-
-  private def build(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
-
   /** BENCH_FULL narrowing-guard decision (pure, spec-pinned): the full record
-    * accepts a run only when it covers at least as many queries AND the same
-    * SF dir as the record it would replace. Round-10 postmortem: a 1-query
-    * investigation run clobbered the 93-query record; round-15 postmortem: a
-    * full-count sf0.001 verification run clobbered the sf0.1 record — query
-    * count alone doesn't identify the workload. An absent or unparsable
-    * prior record accepts anything (first write wins). A deliberate SF move
-    * (or recovering from a wrong-SF first write, which would otherwise hold
-    * the record forever) is BENCH_ALLOW_SF_CHANGE=1 — the same explicit
+    * accepts a run only when it covers at least as many queries, the same
+    * SF dir AND the same core count as the record it would replace. Round-10
+    * postmortem: a 1-query investigation run clobbered the 93-query record;
+    * round-15 postmortem: a full-count sf0.001 verification run clobbered
+    * the sf0.1 record — query count alone doesn't identify the workload;
+    * round-20: an 8-core run replaced the 32-core record. An absent or
+    * unparsable prior record accepts anything (first write wins), and a
+    * prior without a `cpus` stamp accepts any core count. A deliberate SF
+    * move (or recovering from a wrong-SF first write, which would otherwise
+    * hold the record forever) is BENCH_ALLOW_SF_CHANGE=1 — the same explicit
     * ratchet-override contract as scale_bench's SCALE_ALLOW_DOWNSIZE. */
   private[graft] def fullRecordAccepts(prior: String, nQueries: Int, sfDir: String,
+                                       cpus: Int = Harness.cpus,
                                        allowSfChange: Boolean = sys.env.get("BENCH_ALLOW_SF_CHANGE").contains("1")): Boolean = {
     val priorN = """"n_queries":(\d+)""".r
       .findFirstMatchIn(prior).map(_.group(1).toInt).getOrElse(0)
     val priorSf = """"sf":"([^"]+)"""".r
       .findFirstMatchIn(prior).map(_.group(1)).getOrElse(sfDir)
-    nQueries >= priorN && (sfDir == priorSf || allowSfChange)
+    val priorCpus = """"cpus":(\d+)""".r
+      .findFirstMatchIn(prior).map(_.group(1).toInt).getOrElse(cpus)
+    nQueries >= priorN && (sfDir == priorSf || allowSfChange) && cpus == priorCpus
+  }
+
+  /** The conditions a run was taken under, for the full record only:
+    * cores, git HEAD, Spark and JVM versions. */
+  private def conditions(cpus: Int): String = {
+    val head =
+      try {
+        val p = new ProcessBuilder("git", "rev-parse", "HEAD").redirectErrorStream(true).start()
+        val out = scala.io.Source.fromInputStream(p.getInputStream).mkString.trim
+        if (p.waitFor() == 0) out else "unknown"
+      } catch { case _: Throwable => "unknown" }
+    s""""cpus":$cpus,"git":"$head","spark":"${org.apache.spark.SPARK_VERSION}",""" +
+      s""""jvm":"${System.getProperty("java.version")}","""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
+    val loadGate = Harness.loadGate
 
-    // Load gate: a sample started while the box is already busy measures the
-    // ambient load, not the query (round-7 postmortem: recorded 38.1s for a
-    // query that runs 4.25s isolated — under load the whole suite, every
-    // sample agreed). Threshold defaults to half the worker threads: our own
-    // just-finished queries leave a small decaying contribution (~1-3 on this
-    // suite, 1-min EWMA), genuinely competing work shows up as tens. The wait
-    // is bounded per sample AND by a global budget so a busy box degrades to
-    // the old behavior (measure anyway, record the load) instead of hanging.
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(900000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[bench][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s " +
-          f"(budget ${waitBudgetMs / 1000}s left)")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
-
-    var spark = build(cpus)
+    var spark = Harness.session(cpus)
     def restart(): SparkSession = {
       // a failed teardown must never kill the whole bench run: log, wait out
       // transient churn (port reuse, executor threads draining), try once more
-      try {
-        spark.streams.active.foreach(_.stop())
-        spark.stop()
-      } catch { case e: Throwable => System.err.println(s"[bench] stop failed: ${e.getMessage}") }
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      try Harness.stop(spark)
+      catch { case e: Throwable => System.err.println(s"[bench] stop failed: ${e.getMessage}") }
       spark =
-        try build(cpus)
+        try Harness.session(cpus)
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] session rebuild failed, retrying: ${e.getMessage}")
             Thread.sleep(2000)
-            build(cpus)
+            Harness.session(cpus)
         }
       spark
     }
@@ -138,7 +98,7 @@ object Bench {
     // warm-up: run everything once, un-timed
     queries.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
-      try consume(fn(spark, sfDir))
+      try Harness.consume(fn(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench][warmup] $name failed: ${e.getMessage}") }
       System.err.println(f"[bench][warmup] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
       restart()
@@ -228,7 +188,7 @@ object Bench {
       // full line (everything, as every round before) → BENCH_FULL.json;
       // compact line (summary only) → stdout for the driver's tail capture
       val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""load_gate":$loadGate,"samples":$ss,$oracleRaw"jobs":$jobsJson,"ratios":$ratiosJson,""" +
+        s""""load_gate":$loadGate,${conditions(cpus)}"samples":$ss,$oracleRaw"jobs":$jobsJson,"ratios":$ratiosJson,""" +
         s""""queries":$qs,"slowest":$slowest,"worst_ratio":$worstRatio,"worst_jobs":$worstJobs,""" +
         s"""$summary,"failed":$failed,"n_queries":${best.size}}"""
       val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
@@ -269,40 +229,27 @@ object Bench {
     }
 
     def measure(pass: String, name: String, fn: (SparkSession, String) => DataFrame): Unit = {
-      val load = gateOnLoad(name)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          stages.addAndGet(j.stageInfos.size)
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
+      val load = Harness.gateOnLoad(name)
+      val ledger = new Harness.Ledger(spark)
       val t0 = System.nanoTime()
       val sec =
-        try { consume(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+        try { Harness.consume(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             -1.0
         }
-        finally {
-          // the listener bus is async; the final job necessarily STARTED
-          // before consume() returned, but its event may be a few ms behind —
-          // a short drain keeps the counts exact in practice
-          Thread.sleep(50)
-          spark.sparkContext.removeSparkListener(counter)
-        }
+      val jobLog = ledger.jobLog()
+      ledger.close()
+      val (jobs, stages) = (jobLog.size, jobLog.map(_.stages.size).sum)
       System.err.println(f"[bench][$pass] $name $sec%.2fs load=$load%.2f " +
-        s"jobs=${jobs.get} stages=${stages.get}")
+        s"jobs=$jobs stages=$stages")
       if (sec >= 0) {
         samples(name) = (sec, load) :: samples(name)
         val (prev, _) = best(name)
         if (prev < 0 || sec < prev) {
           best(name) = (sec, load)
-          jobsOf(name) = (jobs.get, stages.get)
+          jobsOf(name) = (jobs, stages)
         }
       }
       restart()
@@ -338,7 +285,7 @@ object Bench {
       // drain; min() keeps whichever is faster, and the recorded load tells
       // the reader which regime won.
       val loadFlag = sys.env.get("SPARK_GRAFT_LOAD_FLAG").map(_.toDouble)
-        .getOrElse(math.max(2.0, 0.1 * cpus.toDouble))
+        .getOrElse(math.max(2.0, 0.1 * cpus))
       val loaded = queries.filter { case (name, _) =>
         val (sec, load) = best(name); sec >= 0 && load > loadFlag
       }
@@ -364,7 +311,7 @@ object Bench {
     * duckdb; see tools/oracle_bench.py) and return (total_sec, full JSON
     * line). Skipped quietly when the tool or its runtime is unavailable —
     * the artifact then carries oracle_total_sec: null rather than a guess. */
-  private def runOracleBench(sfDir: String, cpus: String,
+  private def runOracleBench(sfDir: String, cpus: Int,
                              measured: Seq[String]): Option[(Double, String)] =
     try {
       val script = new java.io.File("tools/oracle_bench.py")
@@ -381,48 +328,13 @@ object Bench {
         None
     }
 
-  /** Dump SparkEntry.oracleSql as JSON for oracle_bench.py — always fresh,
-    * so the oracle never runs a stale statement set (the script's own
-    * fallback dump costs a full Verify run). */
-  private def dumpOracleSql(outDir: java.io.File): Unit = {
-    outDir.mkdirs()
-    def esc(s: String): String = {
-      val b = new StringBuilder(s.length + 16)
-      s.foreach {
-        case '"' => b.append("\\\"")
-        case '\\' => b.append("\\\\")
-        case '\n' => b.append("\\n")
-        case '\r' => b.append("\\r")
-        case '\t' => b.append("\\t")
-        case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-        case c => b.append(c)
-      }
-      b.toString
-    }
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ",\n", "}")
-    java.nio.file.Files.write(outDir.toPath.resolve("oracle_sql.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the symmetrized-bench companion: untimed artifact builds (ordered)
-    // plus per-query timed overrides (see SparkEntry.oracleSetupSql)
-    val setup = SparkEntry.oracleSetupSql
-      .map { case (t, sql) => s"""["${esc(t)}", "${esc(sql)}"]""" }
-      .mkString("[", ",\n", "]")
-    val timed = SparkEntry.oracleBenchSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ",\n", "}")
-    java.nio.file.Files.write(outDir.toPath.resolve("oracle_bench_sql.json"),
-      s"""{"setup": $setup,\n"timed": $timed}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
-  }
-
-  private def runOracleScript(script: java.io.File, sfDir: String, cpus: String,
+  private def runOracleScript(script: java.io.File, sfDir: String, cpus: Int,
                               measured: Seq[String]): Option[(Double, String)] = {
       System.err.println("[bench] timing DuckDB oracle suite for the ratio denominator…")
-      dumpOracleSql(new java.io.File("/tmp/graft_oracle_bench"))
-      val pb = new ProcessBuilder("python3", script.getPath, sfDir, cpus)
+      // always fresh, so the oracle never runs a stale statement set (the
+      // script's own fallback dump costs a full Verify run)
+      Harness.dumpOracleSql(new java.io.File("/tmp/graft_oracle_bench"))
+      val pb = new ProcessBuilder("python3", script.getPath, sfDir, cpus.toString)
       // scope the oracle run to the queries Spark actually measured
       pb.environment().put("SPARK_GRAFT_ONLY", measured.mkString(","))
       // stderr flows straight to ours: buffering it behind the stdout read

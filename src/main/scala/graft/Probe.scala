@@ -1,80 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scratch diagnostics. Default mode: bucket-size distribution + candidate
-  * volume of the MinHash cascade on a scaled corpus. `floor` mode: break the
-  * fixed per-query cost a fresh-session bench sample pays — session build,
-  * parquet listing/footer, first action (codegen + scheduling), warm action —
-  * so the bench's per-query overhead floor is attributed, not guessed. */
+/** Attribution diagnostics, each measured under the bench config.
+  * Usage: graft.Probe floor | jobs [q1,q2,...] | stream | ccskew
+  *  - `floor`: the fixed per-query cost a fresh-session bench sample pays;
+  *  - `jobs`: per-job wall time, stages and call site of bench queries;
+  *  - `stream`: per-batch phases of the stream-stream interval-join drain;
+  *  - `ccskew`: per-stage task skew of the distributed CC loop. */
 object Probe {
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("floor")) { floorProbe(); return }
-    if (args.headOption.contains("gtv")) { gtvProbe(); return }
-    if (args.headOption.contains("stream")) { streamProbe(); return }
-    if (args.headOption.contains("graph")) { graphProbe(args.drop(1).headOption.getOrElse("q_graph_triangles")); return }
-    if (args.headOption.contains("ccskew")) { ccSkewProbe(); return }
-    val copies = sys.env.getOrElse("SCALE_COPIES", "20").toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.llm.Dedup
-
-    val n = 32
-    val docs = ScaleCorpus.build(spark, sfDir, copies, n).localCheckpoint(true)
-
-    val sets = Dedup.shingleSets(docs, "text", "doc_id", 5).localCheckpoint(true)
-    val sig = Dedup.minhashSignatures(sets, "doc_id", 8).localCheckpoint(true)
-
-    val bandStructs = (0 until 4).map { b =>
-      val bv = concat(col(s"h${b * 2}"), col(s"h${b * 2 + 1}"))
-      struct(lit(b).as("band"), bv.as("bv"))
-    }
-    val bands = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("x"))
-      .select(col("doc_id"), col("x.band").as("band"), col("x.bv").as("bv"))
-      .localCheckpoint(true)
-
-    val sizes = bands.groupBy("band", "bv").agg(count(lit(1)).as("sz")).localCheckpoint(true)
-    System.err.println("[probe] bucket size distribution (top 10):")
-    sizes.orderBy(desc("sz")).limit(10).collect()
-      .foreach(r => System.err.println(s"[probe]   band=${r.get(0)} sz=${r.get(2)}"))
-    val stats = sizes.agg(
-      count(lit(1)).as("buckets"),
-      sum(col("sz") * col("sz")).as("sum_sq")).first()
-    System.err.println(s"[probe] buckets=${stats.get(0)} sum_sq(pair work)=${stats.get(1)}")
-    val capped = sizes.filter(col("sz") <= 50)
-      .agg(sum(col("sz") * col("sz"))).first()
-    System.err.println(s"[probe] pair work with cap 50: ${capped.get(0)}")
-    spark.stop()
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("floor") => floorProbe()
+    case Some("jobs") =>
+      jobsProbe(args.drop(1).headOption.getOrElse("q_graph_triangles").split(",").toSeq)
+    case Some("stream") => streamProbe()
+    case Some("ccskew") => ccSkewProbe()
+    case _ =>
+      System.err.println("usage: graft.Probe floor | jobs [q1,q2,...] | stream | ccskew")
+      sys.exit(2)
   }
 
-  /** Per-JOB wall-time attribution of one bench query (default
-    * q_graph_triangles), measured exactly as a Bench sample runs it: fresh
-    * session, warm-up pass, then a timed pass with a job listener recording
-    * each job's duration and call site — so "N jobs × floor" claims are
-    * measured, not inferred. */
+  private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private def reps(default: Int): Int = sys.env.getOrElse("PROBE_REPS", default.toString).toInt
+
   /** Per-stage skew attribution for the distributed CC loop on the ScaleGraph
     * power-law graph: which stage carries the max/median task-time straggler.
     * SCALE_EDGES / SCALE_NODES size the graph (defaults match ScaleGraph). */
   private def ccSkewProbe(): Unit = {
     val edgesN = sys.env.getOrElse("SCALE_EDGES", "10000000").toLong
     val nodesN = sys.env.getOrElse("SCALE_NODES", "2000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val work = java.nio.file.Files.createTempDirectory("graft_ccskew")
-    TempCleanup.deleteOnExit(work)
+    val spark = Harness.session()
+    val work = Harness.workDir("graft_ccskew")
     spark.range(edgesN).select(
         floor(pow(rand(7), 2.5) * nodesN).cast("long").as("src"),
         floor(pow(rand(11), 2.5) * nodesN).cast("long").as("dst"))
@@ -82,55 +38,26 @@ object Probe {
       .write.mode("overwrite").parquet(s"$work/edges.parquet")
     val edges = spark.read.parquet(s"$work/edges.parquet")
 
-    case class T(dur: Long, srRec: Long, swRec: Long, inRec: Long, gc: Long)
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, T)]()
-    val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        val t = if (m == null) T(te.taskInfo.duration, -1, -1, -1, -1)
-          else T(te.taskInfo.duration, m.shuffleReadMetrics.recordsRead,
-            m.shuffleWriteMetrics.recordsWritten, m.inputMetrics.recordsRead,
-            m.jvmGCTime)
-        tasks.add((te.stageId, t)); ()
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stageNames.put(si.stageId, si.name.take(60)); ()
-      }
-    })
+    val ledger = new Harness.Ledger(spark)
     val t = System.nanoTime()
     val out = graft.er.ConnectedComponents.run(edges, driverThreshold = 0L)
       .localCheckpoint(true)
     out.count()
     val sec = (System.nanoTime() - t) / 1e9
-    // SparkListener events arrive asynchronously on the listener bus — the
-    // final stages' task-end events may still be queued when count() returns,
-    // under-attributing the tail rounds' skew. waitUntilEmpty is
-    // private[spark], so drain via reflection with a bounded-sleep fallback.
-    try {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethods.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .map(_.invoke(bus))
-        .getOrElse(bus.getClass.getMethods.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-          .map(_.invoke(bus, java.lang.Long.valueOf(10000L))).getOrElse(Thread.sleep(2000)))
-    } catch { case _: Throwable => Thread.sleep(2000) }
-    val byStage = tasks.toArray(Array.empty[(Int, T)])
-      .groupBy(_._1).toSeq.sortBy(_._1)
+    val stageNames = ledger.jobLog().flatMap(_.stages).map(s => s.id -> s.name.take(60)).toMap
+    val byStage = ledger.taskLog().groupBy(_.stage).toSeq.sortBy(_._1)
     println(f"total=$sec%.1fs  stages=${byStage.size}")
     byStage.foreach { case (sid, ts0) =>
-      val all = ts0.map(_._2).sortBy(_.dur)
-      val ts = all.filter(_.dur >= 200)
+      val all = ts0.sortBy(_.ms)
+      val ts = all.filter(_.ms >= 200)
       if (ts.length >= 8) {
-        val med = ts(ts.length / 2).dur
-        val mx = ts.last.dur
+        val med = ts(ts.length / 2).ms
+        val mx = ts.last.ms
         val ratio = mx.toDouble / med
         val flag = if (ratio >= 2.0) "  <== SKEW" else ""
-        println(f"stage=$sid%5d tasks=${all.length}%4d med=${med}ms max=${mx}ms ratio=$ratio%.2f  ${stageNames.getOrDefault(sid, "?")}$flag")
+        println(f"stage=$sid%5d tasks=${all.length}%4d med=${med}ms max=${mx}ms ratio=$ratio%.2f  ${stageNames.getOrElse(sid, "?")}$flag")
         if (ratio >= 2.0) {
-          val medT = ts(ts.length / 2)
-          println(s"    med task: $medT")
+          println(s"    med task: ${ts(ts.length / 2)}")
           all.takeRight(4).foreach(x => println(s"    slow task: $x"))
         }
       }
@@ -138,81 +65,38 @@ object Probe {
     spark.stop()
   }
 
-  private def graphProbe(qname: String): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("PROBE_REPS", "3").toInt
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    val fn = SparkEntry.queries(qname)
-    def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-      val cols = df.columns.map(c => col(s"`$c`").cast("string"))
-      df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).collect()
-      ()
-    }
-    for (rep <- 1 to reps) {
-      val spark = build()
-      // warm-up, untimed (mirrors the bench's suite-wide warm pass)
-      consume(fn(spark, sfDir))
-      val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val stages = js.stageInfos.sortBy(_.stageId)
-            .map(si => s"s${si.stageId}(${si.numTasks}t)").mkString(",")
-          val props = Option(js.properties)
-          val eid = props.map(_.getProperty("spark.sql.execution.id", "-")).getOrElse("-")
-          val root = props.map(_.getProperty("spark.sql.execution.root.id", "-")).getOrElse("-")
-          val site = s"exec=$eid/root=$root $stages"
-          jobs.put(js.jobId, (System.nanoTime(), site)); ()
-        }
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(jobs.get(je.jobId)).foreach { case (t0, site) =>
-            done.add((je.jobId, (System.nanoTime() - t0) / 1e9, site))
-          }
-          ()
-        }
-      })
-      val t0 = System.nanoTime()
-      consume(fn(spark, sfDir))
-      val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let listener events drain
-      val rows = done.toArray(Array.empty[(Int, Double, String)]).sortBy(_._1)
-      val jobSum = rows.map(_._2).sum
-      println(f"[graphprobe] rep=$rep $qname total=$total%.2fs jobs=${rows.length} jobSum=$jobSum%.2fs gap=${total - jobSum}%.2fs")
-      rows.foreach { case (id, sec, site) =>
-        val startOff = (jobs.get(id)._1 - t0) / 1e9
-        println(f"[graphprobe]   job=$id start=$startOff%.2f end=${startOff + sec}%.2f ($sec%.3fs) $site")
+  /** Per-job wall-time attribution of bench queries, measured as a Bench
+    * sample runs them: per rep a fresh session, an untimed warm-up, then a
+    * timed pass whose ledger records each job's span, stages and call site —
+    * so "N jobs × floor" claims are measured, not inferred. `gap` is wall
+    * time outside the summed job spans (driver-side planning and waits). */
+  private def jobsProbe(names: Seq[String]): Unit =
+    for (name <- names; rep <- 1 to reps(3)) {
+      val fn = SparkEntry.queries(name)
+      val spark = Harness.session()
+      Harness.consume(fn(spark, sfDir))
+      val ledger = new Harness.Ledger(spark)
+      val t0 = System.currentTimeMillis()
+      val tn = System.nanoTime()
+      Harness.consume(fn(spark, sfDir))
+      val total = (System.nanoTime() - tn) / 1e9
+      val jobs = ledger.jobLog()
+      val jobSum = jobs.map(j => j.endMs - j.startMs).sum / 1e3
+      println(f"[jobs] rep=$rep $name total=$total%.2fs jobs=${jobs.size} " +
+        f"stages=${jobs.map(_.stages.size).sum} jobSum=$jobSum%.2fs gap=${total - jobSum}%.2fs")
+      jobs.foreach { j =>
+        val stages = j.stages.map(s => s"s${s.id}(${s.tasks}t)").mkString(",")
+        println(f"[jobs]   job=${j.id} start=${(j.startMs - t0) / 1e3}%.2f " +
+          f"end=${(j.endMs - t0) / 1e3}%.2f (${(j.endMs - j.startMs) / 1e3}%.3fs) $stages ${j.site}")
       }
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      Harness.stop(spark)
     }
-  }
 
   /** Per-batch breakdown of the bench's stream-stream interval-join drain:
     * how many AvailableNow micro-batches the fixture takes and where each
     * batch's time goes (planning, state commit, addBatch). */
   private def streamProbe(): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -228,7 +112,7 @@ object Probe {
           s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).sum}")
       }
     })
-    for (i <- 1 to sys.env.getOrElse("PROBE_REPS", "2").toInt) {
+    for (i <- 1 to reps(2)) {
       val t0 = System.nanoTime()
       val out = graft.streaming.Streams.streamIntervalJoin(spark, s"$sfDir/events.parquet", 60)
       val n = out.count()
@@ -237,52 +121,20 @@ object Probe {
     spark.stop()
   }
 
-  /** Does a cross-session global-temp-view read substitute the cached
-    * InMemoryRelation (accurate stats, no recompute)? The Catalog's in-db
-    * hand-off depends on it. */
-  private def gtvProbe(): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    val df = Seq((1, "a"), (2, "b")).toDF("k", "v").groupBy("k").count()
-    df.persist(); df.count()
-    df.createOrReplaceGlobalTempView("gt_probe")
-    val s2 = spark.newSession()
-    val back = s2.table("global_temp.gt_probe")
-    val plan = back.queryExecution.executedPlan.toString
-    println(plan)
-    println("HAS_INMEM=" + plan.contains("InMemory"))
-    println("STATS=" + back.queryExecution.optimizedPlan.stats.sizeInBytes)
-    spark.stop()
-  }
-
   /** Fresh-session trivial-query cost breakdown, run K times (mirrors one
     * Bench sample: build a session, read a table, hash-reduce it). */
   private def floorProbe(): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("PROBE_REPS", "5").toInt
     def ms(t0: Long) = (System.nanoTime() - t0) / 1e6
-    for (i <- 1 to reps) {
+    for (i <- 1 to reps(5)) {
       val tBuild = System.nanoTime()
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Harness.session()
       val buildMs = ms(tBuild)
       val tRead = System.nanoTime()
       val df = spark.read.parquet(s"$sfDir/region.parquet") // 5 rows: pure overhead
       val readMs = ms(tRead)
       def consume(): Double = {
         val t = System.nanoTime()
-        val cols = df.columns.map(c => col(s"`$c`").cast("string"))
-        df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).collect()
+        Harness.consume(df)
         ms(t)
       }
       val firstMs = consume()  // plan + codegen + schedule + scan, cold session
@@ -293,9 +145,7 @@ object Probe {
       val shuffleMs = ms(tShuffle)
       println(f"""{"metric":"floor","rep":$i,"build_ms":$buildMs%.0f,"read_ms":$readMs%.0f,""" +
         f""""first_action_ms":$firstMs%.0f,"warm_action_ms":$warmMs%.0f,"shuffle_action_ms":$shuffleMs%.0f}""")
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      Harness.stop(spark)
     }
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{Sample, bestOf}
 
 /** Off-toy scale proof for the ANN layer: synthesize `SCALE_COPIES`× the
   * sf0.1 embeddings table with deterministic per-copy perturbations, then
@@ -50,54 +48,8 @@ object ScaleAnn {
     val nLists = sys.env.getOrElse("SCALE_NLISTS", "64").toInt
     val nQueries = sys.env.getOrElse("SCALE_NQUERIES", "200").toInt
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    // same discipline as Bench.gateOnLoad: bounded wait for the 1-min load
-    // to drop below ~0.5× worker threads before starting each timed phase
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(600000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[scale_ann][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
 
     // --- scaled corpus: copy 0 original; copy i>0 perturbs every dimension
     // by a deterministic hash-derived offset in [-0.1, 0.1] (xxhash64 % 101
@@ -106,8 +58,7 @@ object ScaleAnn {
     // corpus geometry: every published ScaleAnn number was taken at ±0.1, and
     // tightening it (e.g. a non-negative pmod) degenerates the seed set
     // enough to distort search cost 5-7×.
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_ann")
-    TempCleanup.deleteOnExit(work)
+    val work = Harness.workDir("graft_scale_ann")
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -129,7 +80,6 @@ object ScaleAnn {
     // search path (the residual r9 ivf1 straggler after list balancing).
     val queries = corpus.filter(
       col("vec_id") % copies === 0 && col("vec_id") < nQueries.toLong * copies)
-    durations.clear()
 
     import graft.llm.Similarity
 
@@ -139,35 +89,22 @@ object ScaleAnn {
     val stride = math.max(1L, nVecs / nLists)
     val seedWhere = col("vec_id") % stride === 0 && col("vec_id") < stride * nLists
 
-    // Per-phase min-of-K (default 2) — the ScaleStream lesson applied here:
-    // this box's co-tenant bursts outlast both the wrapper's settle and a
-    // phase-start gate (observed: pq_encode 18s and 135s in back-to-back
-    // runs, the SLOW one at the lower phase-start load). Phase outputs are
-    // deterministic, so min is the clean-window estimator; the winning
-    // sample's load and straggler are what get recorded.
-    val phaseSamples = sys.env.getOrElse("SCALE_PHASE_SAMPLES", "2").toInt
-    require(phaseSamples >= 1, s"SCALE_PHASE_SAMPLES must be >= 1, got $phaseSamples")
-    def bestOf[A](tag: String)(body: => A): (A, Double, Double, Double) = {
-      val runs = (1 to phaseSamples).map { _ =>
-        val load = gateOnLoad(tag)
-        val t = System.nanoTime()
-        val a = body
-        val sec = (System.nanoTime() - t) / 1e9
-        val st = straggler()
-        System.err.println(f"[scale_ann] $tag sample $sec%.1fs load=$load%.2f")
-        (a, sec, st, load)
-      }
-      val win = runs.minBy(_._2)
+    // Per-phase min-of-K (Harness.bestOf): co-tenant load bursts outlast
+    // both the wrapper's settle and a phase-start gate (observed: pq_encode
+    // 18s and 135s in back-to-back runs, the SLOW one at the lower
+    // phase-start load).
+    def best[A](tag: String)(body: => A): Sample[A] = {
+      val runs = bestOf(tag, ledger)(body)
       // losing samples' localCheckpoints would otherwise pin block-manager
       // memory for the rest of the run (unpersist is a no-op on plain reads)
-      runs.filter(_ ne win).foreach {
-        case (ds: org.apache.spark.sql.Dataset[_], _, _, _) => ds.unpersist(); ()
+      runs.tail.foreach {
+        case Sample(ds: org.apache.spark.sql.Dataset[_], _, _, _) => ds.unpersist(); ()
         case _ => ()
       }
-      win
+      runs.head
     }
 
-    val (seeds, trainSec, trainStraggler, loadTrain) = bestOf("train") {
+    val Sample(seeds, trainSec, trainStraggler, loadTrain) = best("train") {
       val s = Similarity.kmeansSeeds(corpus, "vec_id", "embedding", nLists,
           iters = 1, seedWhere = Some(seedWhere))
         .localCheckpoint(true)
@@ -181,7 +118,7 @@ object ScaleAnn {
     // captures that sample's file listing, which the winning (or later)
     // sample's overwrite replaces — deferred reads then fail with
     // FileNotFoundException on part files that no longer exist.
-    val (_, buildSec, buildStraggler, loadBuild) = bestOf("build") {
+    val Sample(_, buildSec, buildStraggler, loadBuild) = best("build") {
       Similarity.assignToLists(corpus, "vec_id", "embedding", seeds, "match_id")
         .write.mode("overwrite").parquet(s"$work/lists.parquet")
     }
@@ -190,8 +127,8 @@ object ScaleAnn {
     val listSkew = if (sizes.isEmpty) -1.0
       else sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
 
-    def searchIvf(nProbe: Int): (org.apache.spark.sql.DataFrame, Double, Double, Double) =
-      bestOf(s"ivf$nProbe") {
+    def searchIvf(nProbe: Int): Sample[org.apache.spark.sql.DataFrame] =
+      best(s"ivf$nProbe") {
         val out = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding",
           nLists = nLists, k = k, nProbe = nProbe,
           seedTable = Some(seeds), listTable = Some(lists))
@@ -199,10 +136,10 @@ object ScaleAnn {
         out.count()
         out
       }
-    val (_, ivf1Sec, ivf1Straggler, loadIvf1) = searchIvf(1)
-    val (ivf8, ivf8Sec, ivf8Straggler, loadIvf8) = searchIvf(8)
+    val Sample(_, ivf1Sec, ivf1Straggler, loadIvf1) = searchIvf(1)
+    val Sample(ivf8, ivf8Sec, ivf8Straggler, loadIvf8) = searchIvf(8)
 
-    val (exact, bruteSec, bruteStraggler, loadBrute) = bestOf("brute") {
+    val Sample(exact, bruteSec, bruteStraggler, loadBrute) = best("brute") {
       val e = Similarity.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = k)
         .localCheckpoint(true)
       e.count()
@@ -226,7 +163,7 @@ object ScaleAnn {
 
     val cb = Similarity.pqCodebook(corpus, "vec_id", "embedding", pqM, pqCodes,
       Some(pqSeedWhere))
-    val (_, pqEncodeSec, pqEncodeStraggler, loadEnc) = bestOf("pq_encode") {
+    val Sample(_, pqEncodeSec, pqEncodeStraggler, loadEnc) = best("pq_encode") {
       Similarity.pqEncode(corpus, "vec_id", "embedding", cb, "match_id")
         .write.mode("overwrite").parquet(s"$work/pq.parquet")
     }
@@ -242,8 +179,8 @@ object ScaleAnn {
     val pqCompression =
       dirBytes(s"$work/embeddings.parquet").toDouble / dirBytes(s"$work/pq_codes.parquet")
 
-    def searchPq(rr: Int, tag: String): (org.apache.spark.sql.DataFrame, Double, Double, Double) =
-      bestOf(tag) {
+    def searchPq(rr: Int, tag: String): Sample[org.apache.spark.sql.DataFrame] =
+      best(tag) {
         val out = Similarity.pqTopK(corpus, queries, "vec_id", "embedding",
           m = pqM, nCodes = pqCodes, k = k, rerank = rr,
           codebook = Some(cb), encTable = Some(encTable))
@@ -259,8 +196,8 @@ object ScaleAnn {
     // marginal cost delta (the re-rank joins queries × depth rows by id) —
     // 600 is where the two-stage search reaches the IVF pruning ceiling.
     val pqRerankN = sys.env.getOrElse("SCALE_PQ_RERANK", (60 * k).toString).toInt
-    val (pqAdc, pqAdcSec, pqAdcStraggler, loadPqAdc) = searchPq(0, "pq_adc")
-    val (pqRr, pqRerankSec, pqRerankStraggler, loadPqRerank) = searchPq(pqRerankN, "pq_rerank")
+    val Sample(pqAdc, pqAdcSec, pqAdcStraggler, loadPqAdc) = searchPq(0, "pq_adc")
+    val Sample(pqRr, pqRerankSec, pqRerankStraggler, loadPqRerank) = searchPq(pqRerankN, "pq_rerank")
 
     // --- TRAINED codebook: 2 per-subspace Lloyd rounds over the strided
     // seeds, then the same encode + pure-ADC search. The r15 verdict flagged
@@ -274,18 +211,18 @@ object ScaleAnn {
     // the codebook itself, so the artifact reports mean squared quantization
     // error trained vs untrained alongside both recalls.
     val pqTrainIters = sys.env.getOrElse("SCALE_PQ_TRAIN_ITERS", "2").toInt
-    val (cbT, pqTrainSec, pqTrainStraggler, loadPqTrain) = bestOf("pq_train") {
+    val Sample(cbT, pqTrainSec, pqTrainStraggler, loadPqTrain) = best("pq_train") {
       Similarity.pqCodebookTrained(corpus, "vec_id", "embedding", pqM, pqCodes,
         pqTrainIters, Some(pqSeedWhere))
     }
-    val (_, pqEncodeTSec, pqEncodeTStraggler, loadEncT) = bestOf("pq_encode_trained") {
+    val Sample(_, pqEncodeTSec, pqEncodeTStraggler, loadEncT) = best("pq_encode_trained") {
       Similarity.pqEncode(corpus, "vec_id", "embedding", cbT, "match_id")
         .write.mode("overwrite").parquet(s"$work/pq_t.parquet")
     }
     val encT = spark.read.parquet(s"$work/pq_t.parquet")
     val pqQuantErr = Similarity.pqQuantErr(corpus, "vec_id", "embedding", cb)
     val pqQuantErrTrained = Similarity.pqQuantErr(corpus, "vec_id", "embedding", cbT)
-    val (pqAdcT, pqAdcTSec, pqAdcTStraggler, loadPqAdcT) = bestOf("pq_adc_trained") {
+    val Sample(pqAdcT, pqAdcTSec, pqAdcTStraggler, loadPqAdcT) = best("pq_adc_trained") {
       val out = Similarity.pqTopK(corpus, queries, "vec_id", "embedding",
         m = pqM, nCodes = pqCodes, k = k, rerank = 0,
         codebook = Some(cbT), encTable = Some(encT))
@@ -298,12 +235,12 @@ object ScaleAnn {
     // lost to brute force; list pruning restricts the ADC scan to each
     // query's probed lists). Index = ONE narrow pass reusing the IVF seeds
     // and the PQ codebook, materialized like the other index artifacts.
-    val (_, pqIvfEncodeSec, pqIvfEncodeStraggler, loadIvfPqEnc) = bestOf("pq_ivf_encode") {
+    val Sample(_, pqIvfEncodeSec, pqIvfEncodeStraggler, loadIvfPqEnc) = best("pq_ivf_encode") {
       Similarity.ivfPqEncode(corpus, "vec_id", "embedding", seeds, cb, "match_id")
         .write.mode("overwrite").parquet(s"$work/ivfpq.parquet")
     }
     val ivfPqEnc = spark.read.parquet(s"$work/ivfpq.parquet")
-    val (pqIvf8, pqIvf8Sec, pqIvf8Straggler, loadPqIvf8) = bestOf("pq_ivf8") {
+    val Sample(pqIvf8, pqIvf8Sec, pqIvf8Straggler, loadPqIvf8) = best("pq_ivf8") {
       val out = Similarity.ivfPqTopK(corpus, queries, "vec_id", "embedding",
         nLists = nLists, m = pqM, nCodes = pqCodes, k = k, nProbe = 8,
         rerank = pqRerankN, seedTable = Some(seeds), codebook = Some(cb),
@@ -332,13 +269,13 @@ object ScaleAnn {
                         mpDf: org.apache.spark.sql.DataFrame)
     val lshSweep = lshSweepPlanes.map { p =>
       val planes = Similarity.randomHyperplanes(64, p, seed = 42L)
-      val (df, sec, st, load) = bestOf(s"lsh_p$p") {
+      val Sample(df, sec, st, load) = best(s"lsh_p$p") {
         val out = Similarity.bucketTopK(corpus, queries, "vec_id", "embedding",
           planes, k = k).localCheckpoint(true)
         out.count()
         out
       }
-      val (mpDf, mpSec, mpSt, mpLoad) = bestOf(s"lsh_mp_p$p") {
+      val Sample(mpDf, mpSec, mpSt, mpLoad) = best(s"lsh_mp_p$p") {
         val out = Similarity.multiProbeTopK(corpus, queries, "vec_id", "embedding",
           planes, k = k).localCheckpoint(true)
         out.count()
@@ -365,7 +302,7 @@ object ScaleAnn {
     // strided seeding. The artifact then reports trained vs untrained
     // flat-ADC recall AND quantization error side by side: if training
     // helps, it must show here or nowhere.
-    val (_, spreadGenSec, _, _) = bestOf("spread_gen") {
+    val Sample(_, spreadGenSec, _, _) = best("spread_gen") {
       val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id").as("bid"), col("embedding").as("bv"))
       val nBase = base.count()
@@ -390,7 +327,7 @@ object ScaleAnn {
     }
     val spreadCorpus = spark.read.parquet(s"$work/spread.parquet")
     val spreadQueries = spreadCorpus.filter(col("vec_id") < nQueries)
-    val (spreadExact, spreadBruteSec, _, loadSpreadBrute) = bestOf("spread_brute") {
+    val Sample(spreadExact, spreadBruteSec, _, loadSpreadBrute) = best("spread_brute") {
       val e = Similarity.bruteForceTopK(spreadCorpus, spreadQueries,
         "vec_id", "embedding", k = k).localCheckpoint(true)
       e.count()
@@ -402,16 +339,16 @@ object ScaleAnn {
       col("vec_id") < spreadStride * pqCodes
     val spreadCb = Similarity.pqCodebook(spreadCorpus, "vec_id", "embedding",
       pqM, pqCodes, Some(spreadSeedWhere))
-    val (spreadCbT, spreadTrainSec, _, loadSpreadTrain) = bestOf("spread_pq_train") {
+    val Sample(spreadCbT, spreadTrainSec, _, loadSpreadTrain) = best("spread_pq_train") {
       Similarity.pqCodebookTrained(spreadCorpus, "vec_id", "embedding",
         pqM, pqCodes, pqTrainIters, Some(spreadSeedWhere))
     }
     def spreadAdc(cbX: Array[Array[Array[Long]]], codes: Int, path: String, tag: String)
-        : (org.apache.spark.sql.DataFrame, Double, Double, Double) = {
+        : Sample[org.apache.spark.sql.DataFrame] = {
       val enc = Similarity.pqEncode(spreadCorpus, "vec_id", "embedding", cbX, "match_id")
       enc.write.mode("overwrite").parquet(path)
       val encRead = spark.read.parquet(path)
-      bestOf(tag) {
+      best(tag) {
         val out = Similarity.pqTopK(spreadCorpus, spreadQueries, "vec_id", "embedding",
           m = pqM, nCodes = codes, k = k, rerank = 0,
           codebook = Some(cbX), encTable = Some(encRead))
@@ -420,9 +357,9 @@ object ScaleAnn {
         out
       }
     }
-    val (spreadAdcU, spreadAdcSec, _, loadSpreadAdc) =
+    val Sample(spreadAdcU, spreadAdcSec, _, loadSpreadAdc) =
       spreadAdc(spreadCb, pqCodes, s"$work/spread_pq.parquet", "spread_adc")
-    val (spreadAdcT, spreadAdcTSec, _, loadSpreadAdcT) =
+    val Sample(spreadAdcT, spreadAdcTSec, _, loadSpreadAdcT) =
       spreadAdc(spreadCbT, pqCodes, s"$work/spread_pq_t.parquet", "spread_adc_trained")
     val spreadQuantErr = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb)
     val spreadQuantErrT = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCbT)
@@ -436,13 +373,13 @@ object ScaleAnn {
     val s2Where = col("vec_id") % s2Stride === 0 && col("vec_id") < s2Stride * spreadCodes2
     val spreadCb2 = Similarity.pqCodebook(spreadCorpus, "vec_id", "embedding",
       pqM, spreadCodes2, Some(s2Where))
-    val (spreadCb2T, spreadTrain2Sec, _, _) = bestOf("spread_pq_train256") {
+    val Sample(spreadCb2T, spreadTrain2Sec, _, _) = best("spread_pq_train256") {
       Similarity.pqCodebookTrained(spreadCorpus, "vec_id", "embedding",
         pqM, spreadCodes2, pqTrainIters, Some(s2Where))
     }
-    val (spreadAdc2U, spreadAdc2Sec, _, _) =
+    val Sample(spreadAdc2U, spreadAdc2Sec, _, _) =
       spreadAdc(spreadCb2, spreadCodes2, s"$work/spread_pq256.parquet", "spread_adc256")
-    val (spreadAdc2T, spreadAdc2TSec, _, _) =
+    val Sample(spreadAdc2T, spreadAdc2TSec, _, _) =
       spreadAdc(spreadCb2T, spreadCodes2, s"$work/spread_pq256_t.parquet", "spread_adc256_trained")
     val spreadQuantErr2 = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb2)
     val spreadQuantErr2T = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb2T)
@@ -470,7 +407,7 @@ object ScaleAnn {
     val densityPoints = densities.map { dn =>
       val sub = spreadCorpus.filter(col("vec_id") < dn).localCheckpoint(true)
       val subQ = sub.filter(col("vec_id") < nQueries)
-      val (subExact, subBruteSec, _, _) = bestOf(s"spread_brute_$dn") {
+      val Sample(subExact, subBruteSec, _, _) = best(s"spread_brute_$dn") {
         val e = Similarity.bruteForceTopK(sub, subQ, "vec_id", "embedding", k = k)
           .localCheckpoint(true)
         e.count()
@@ -513,7 +450,7 @@ object ScaleAnn {
     // scales with the corpus in production; the harness reuses the 64-list
     // IVF artifacts to show the artifact-sharing lifecycle.
     val semTau = sys.env.getOrElse("SCALE_SEM_TAU", "0.7").toDouble
-    val (semKept, semSec, semStraggler, loadSem) = bestOf("semdedup") {
+    val Sample(semKept, semSec, semStraggler, loadSem) = best("semdedup") {
       graft.llm.Dedup.semanticPrune(corpus, "vec_id", "embedding",
         nClusters = nLists, trainIters = 0, threshold = semTau,
         seedTable = Some(seeds),

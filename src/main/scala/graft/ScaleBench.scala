@@ -1,11 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Off-toy scale proof for the dedup cascade (round-3 verdict stretch item):
   * synthesize a corpus `SCALE_COPIES`× the sf0.1 documents table with a
   * controlled near-dup rate, run MinHash+LSH+CC end-to-end, and report wall
@@ -23,32 +17,18 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val copies = sys.env.getOrElse("SCALE_COPIES", "20").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
 
     // --- build the scaled corpus and persist it like a real input table ---
-    val work = java.nio.file.Files.createTempDirectory("graft_scale")
-    TempCleanup.deleteOnExit(work)
+    val work = Harness.workDir("graft_scale")
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val scaled = ScaleCorpus.build(spark, sfDir, copies, n)
     scaled.write.mode("overwrite").parquet(s"$work/documents.parquet")
     val docs = spark.read.parquet(s"$work/documents.parquet")
     val nDocs = docs.count()
 
-    durations.clear()
+    ledger.reset()
     val t0 = System.nanoTime()
     // Scale parameterization, measured on this corpus at 100k docs:
     //  - the toy 8-hash/2-row-band setup (the sf0.1 oracle config) collides
@@ -58,45 +38,6 @@ object ScaleBench {
     //  - maxBucketSize is the skew backstop for whatever hot keys remain.
     val numHashes = sys.env.getOrElse("SCALE_HASHES", "16").toInt
     val cap = sys.env.getOrElse("SCALE_BUCKET_CAP", "64").toInt
-    // SCALE_PROFILE=1: time each cascade stage to its own materialization
-    // (stderr only — the per-stage counts break the one-job exchange reuse,
-    // so the headline pairs_sec is NOT emitted in this mode)
-    if (sys.env.get("SCALE_PROFILE").contains("1")) {
-      import graft.llm.Dedup
-      def stage(name: String)(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        val s = System.nanoTime()
-        val out = df.localCheckpoint(true) // eager: materializes here
-        System.err.println(
-          f"[profile] $name: ${(System.nanoTime() - s) / 1e9}%.1fs (${out.count()} rows)")
-        out
-      }
-      val sets = stage("shingleSets (5-char, distinct)")(
-        Dedup.shingleSets(docs, "text", "doc_id", 5))
-      val sig = stage("minhashSignatures (md5 + per-bin min)")(
-        Dedup.minhashSignatures(sets, "doc_id", numHashes))
-      val cand = stage("band+bucket-join+estimate")(
-        Dedup.lshCandidatesWithEstimate(sig, "doc_id", 4, numHashes / 4,
-          math.ceil((0.9 - 0.15) * numHashes).toInt, cap))
-      stage("exact verify")(
-        Dedup.verifiedJaccardFromSets(cand, sets, "doc_id").filter(col("jaccard") >= 0.9))
-      // same work through the API entry point, same JVM — divergence here
-      // means the fused call plans differently than the staged calls above
-      val tApi = System.nanoTime()
-      val viaApi = Dedup.minhashNearDups(docs, "text", "doc_id",
-        k = 5, numHashes = numHashes, bands = 4, threshold = 0.9, maxBucketSize = cap)
-      val tBuilt = System.nanoTime()
-      val nApi = viaApi.count()
-      System.err.println(f"[profile] API eager build: ${(tBuilt - tApi) / 1e9}%.1fs; " +
-        f"final count: ${(System.nanoTime() - tBuilt) / 1e9}%.1fs ($nApi rows)")
-      spark.stop(); return
-    }
-    // SCALE_PROFILE=explain: dump the one-job plan (does ReuseExchange fire?)
-    if (sys.env.get("SCALE_PROFILE").contains("explain")) {
-      graft.llm.Dedup.minhashNearDups(docs, "text", "doc_id",
-        k = 5, numHashes = numHashes, bands = 4, threshold = 0.9, maxBucketSize = cap)
-        .explain("formatted")
-      spark.stop(); return
-    }
     // checkpoint the pair set so the CC timing below measures CC alone, not a
     // second run of the cascade
     val pairs = graft.llm.Dedup.minhashNearDups(docs, "text", "doc_id",
@@ -110,16 +51,8 @@ object ScaleBench {
     val nClustered = clusters.count()
     val ccSec = (System.nanoTime() - t1) / 1e9
 
-    // straggler ratio per STAGE (max/median within a stage), worst over
-    // parallel stages with ≥ 8 non-trivial tasks — the skew signal that
-    // matters at scale; a cross-stage ratio only compares unlike work
-    val byStage = durations.toArray(Array.empty[(Int, Long)])
-      .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-      .filter(_.length >= 8)
-    val straggler =
-      if (byStage.isEmpty) 1.0
-      else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-    val nTasks = durations.size
+    val nTasks = ledger.taskLog().size
+    val straggler = ledger.straggler()
 
     println(s"""{"metric":"scale_dedup","copies":$copies,"docs":$nDocs,"pairs":$nPairs,""" +
       s""""clustered_docs":$nClustered,"pairs_sec":$pairsSec,"cc_sec":$ccSec,""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Off-toy scale proof for the catalog's BUCKETED layout
@@ -34,21 +34,14 @@ object ScaleBuckets {
   def main(args: Array[String]): Unit = {
     val nRows = sys.env.getOrElse("SCALE_EVENTS", "10000000").toLong
     val nUsers = sys.env.getOrElse("SCALE_USERS", "500000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_buckets")
-    TempCleanup.deleteOnExit(work)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = Harness.cpus
+    val work = Harness.workDir("graft_scale_buckets")
+    val spark = Harness.session(cpus,
       // the comparison is co-location vs shuffle; a broadcast of the
       // aggregated side would measure a different (size-gated) optimization
       // and make the exchange-count assertion nondeterministic
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.warehouse.dir" -> s"$work/warehouse")
 
     val cat = new graft.engine.Catalog(spark, s"$work/cat")
     def fact(seed: Int): DataFrame = spark.range(nRows).select(
@@ -56,7 +49,7 @@ object ScaleBuckets {
       pmod(xxhash64(col("id"), lit(seed)), lit(nUsers)).as("user_id"),
       (pmod(xxhash64(col("id"), lit(seed + 1)), lit(1000)) / lit(100.0)).as(s"v$seed"))
 
-    val nBuckets = cpus.toInt
+    val nBuckets = cpus
     val tW0 = System.nanoTime()
     cat.write(fact(1), "ev_plain"); cat.write(fact(7), "tx_plain")
     val plainWriteSec = (System.nanoTime() - tW0) / 1e9
@@ -79,27 +72,18 @@ object ScaleBuckets {
         .agg(sum(col("v1").cast("decimal(18,2)")).as("ev_total"),
           max("tx_total").as("tx_total"), count(lit(1)).as("ev_n"))
 
-    // bit_xor of row hashes: order-independent and overflow-free (ANSI mode
-    // errors on long-sum overflow), exact across layouts
-    def consume(df: DataFrame): (Long, Long) = {
-      val r = df
-        .select(xxhash64(col("user_id"), col("ev_n"), col("tx_total").cast("string")).as("h"))
-        .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-
     var plainSec = Double.MaxValue; var bucketSec = Double.MaxValue
     var plainRes: (Long, Long) = (-1L, 0L); var bucketRes: (Long, Long) = (-1L, 0L)
     var plainEx = -1; var bucketEx = -1
     for (_ <- 1 to 2) {
       val p = enrich(cat.read("ev_plain"), cat.read("tx_plain"))
       val t0 = System.nanoTime()
-      plainRes = consume(p)
+      plainRes = Harness.consume(p)
       plainSec = math.min(plainSec, (System.nanoTime() - t0) / 1e9)
       plainEx = exchanges(p)
       val b = enrich(cat.readTable("ev_bucketed"), cat.readTable("tx_bucketed"))
       val t1 = System.nanoTime()
-      bucketRes = consume(b)
+      bucketRes = Harness.consume(b)
       bucketSec = math.min(bucketSec, (System.nanoTime() - t1) / 1e9)
       bucketEx = exchanges(b)
     }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared scaled-corpus builder for the off-toy dedup diagnostics
-  * ([[ScaleBench]] measures it, [[Probe]] inspects its bucket distribution —
-  * one recipe, so the diagnostic always probes the corpus the bench measures).
+/** Shared scaled-corpus builder for the off-toy text harnesses
+  * ([[ScaleBench]]'s dedup cascade, [[ScaleDecontam]]'s decontamination) —
+  * one recipe, so both measure the same corpus shape.
   *
   * Copy 0 is the original document; one copy in ten mutates a single token (a
   * true near-dup the cascade must recall); all other copies replace every

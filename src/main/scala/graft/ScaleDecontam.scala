@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{Sample, bestOf}
 
 /** Off-toy scale proof for the decontamination family: does the Bloom gate
   * actually deliver its claimed shuffle reduction when the training corpus is
@@ -49,69 +47,11 @@ object ScaleDecontam {
     // shape the Bloom gate's >99% claim is about.
     val gramN = sys.env.getOrElse("SCALE_GRAM_N", "8").toInt
     val minHits = 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(600000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[scale_decontam][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
-    val phaseSamples = sys.env.getOrElse("SCALE_PHASE_SAMPLES", "2").toInt
-    def bestOf[A](tag: String)(body: => A): (A, Double, Double, Double) = {
-      val runs = (1 to phaseSamples).map { _ =>
-        val load = gateOnLoad(tag)
-        val t = System.nanoTime()
-        val a = body
-        val sec = (System.nanoTime() - t) / 1e9
-        val st = straggler()
-        System.err.println(f"[scale_decontam] $tag sample $sec%.1fs load=$load%.2f")
-        (a, sec, st, load)
-      }
-      runs.minBy(_._2)
-    }
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
 
     // --- scaled corpus, materialized and re-read like a real input table
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_decontam")
-    TempCleanup.deleteOnExit(work)
+    val work = Harness.workDir("graft_scale_decontam")
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     ScaleCorpus.build(spark, sfDir, copies, n)
       .write.mode("overwrite").parquet(s"$work/docs.parquet")
@@ -143,17 +83,17 @@ object ScaleDecontam {
     val prunedFrac = 1.0 - gatedPostings.toDouble / trainPostings.toDouble
 
     // --- timed: the production operator (Bloom-gated exact equi-join)
-    val (bloomOut, bloomSec, bloomStraggler, loadBloom) = bestOf("bloom") {
+    val Sample(bloomOut, bloomSec, bloomStraggler, loadBloom) = bestOf("bloom", ledger) {
       val out = TextAnalysis.contaminationFlags(train, bench, "text", "doc_id",
         n = gramN, minHits = minHits).localCheckpoint(true)
       out.count()
       out
-    }
+    }.head
     val flaggedRows = bloomOut.count()
 
     // --- timed: the identical exact equi-join WITHOUT the gate — every
     // training posting crosses the join shuffle just to (mostly) miss
-    val (nogateOut, nogateSec, nogateStraggler, loadNogate) = bestOf("nogate") {
+    val Sample(nogateOut, nogateSec, nogateStraggler, loadNogate) = bestOf("nogate", ledger) {
       val out = dGrams.join(bGrams, Seq("g"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shared"))
@@ -161,7 +101,7 @@ object ScaleDecontam {
         .localCheckpoint(true)
       out.count()
       out
-    }
+    }.head
 
     // Bloom false positives are discarded by the confirming join, so the two
     // flagged sets must be identical

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Harness.bestOf
 import graft.er.{Blocking, DedupeField, Gazetteer, Pairing}
 
 /** Off-toy scale proof for the ER blocking→pair→score path (round-18 verdict
@@ -29,61 +27,11 @@ import graft.er.{Blocking, DedupeField, Gazetteer, Pairing}
   */
 object ScaleEr {
 
-  private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
-
-  private def gateOnLoad(tag: String): Double = {
-    val gate = sys.env.get("SCALE_PHASE_GATE").map(_.toDouble).getOrElse(8.0)
-    var l = loadavg()
-    var tries = 0
-    while (l > gate && tries < 12) {
-      System.err.println(f"[scale_er][gate] $tag load=$l%.2f > $gate%.1f, waiting 20s")
-      Thread.sleep(20000)
-      tries += 1
-      l = loadavg()
-    }
-    l
-  }
-
   def main(args: Array[String]): Unit = {
     val nMessy = sys.env.getOrElse("SCALE_MESSY", "1000000").toLong
     val nCanon = sys.env.getOrElse("SCALE_CANON", "100000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def drainBus(): Unit =
-      // task-end events are async on the listener bus; drain before reading
-      // (waitUntilEmpty is private[spark] — reflection, bounded fallback)
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .map(_.invoke(bus))
-          .getOrElse(Thread.sleep(1000))
-        ()
-      } catch { case _: Throwable => Thread.sleep(1000) }
-    def straggler(): Double = {
-      drainBus()
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      if (byStage.isEmpty) 1.0
-      else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-    }
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
 
     // --- the messy universe -------------------------------------------------
     // ~2000 ordinary first tokens + ONE stop token: canon entity c carries
@@ -116,25 +64,13 @@ object ScaleEr {
     val (mbCnt, cbCnt) = (messyBlocks.count(), canonBlocks.count())
     System.err.println(s"[scale_er] messy=$mCnt canon=$cCnt blocks=$mbCnt/$cbCnt")
 
-    val phaseSamples = sys.env.getOrElse("SCALE_PHASE_SAMPLES", "2").toInt
-    require(phaseSamples >= 1, s"SCALE_PHASE_SAMPLES must be >= 1, got $phaseSamples")
     val phaseLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def bestOf(tag: String)(body: => Long): (Long, Double, Double) = {
-      val runs = (1 to phaseSamples).map { _ =>
-        val load = gateOnLoad(tag)
-        durations.clear()
-        val t = System.nanoTime()
-        val n = body
-        val sec = (System.nanoTime() - t) / 1e9
-        val st = straggler()
-        System.err.println(f"[scale_er] $tag sample $sec%.1fs straggler=$st%.2f load=$load%.2f")
-        (n, sec, st, load)
-      }
-      require(runs.map(_._1).distinct.size == 1,
-        s"$tag row count varies across samples: ${runs.map(_._1)}")
-      val win = runs.minBy(_._2)
-      phaseLoads(tag) = win._4
-      (win._1, win._2, win._3)
+    def best(tag: String)(body: => Long): (Long, Double, Double) = {
+      val runs = bestOf(tag, ledger)(body)
+      require(runs.map(_.value).distinct.size == 1,
+        s"$tag row count varies across samples: ${runs.map(_.value)}")
+      phaseLoads(tag) = runs.head.load
+      (runs.head.value, runs.head.sec, runs.head.straggler)
     }
 
     val gatePairs = sys.env.getOrElse("SCALE_GAZ_MAX_PAIRS", "250000").toLong
@@ -152,9 +88,9 @@ object ScaleEr {
       .filter(col("__m") * col("__c") > gatePairs).count()
 
     val (gazRowsNogate, gazNogateSec, gazNogateStrag) =
-      bestOf("gaz_nogate")(gazetteer(0L).count())
+      best("gaz_nogate")(gazetteer(0L).count())
     val (gazRowsGated, gazGatedSec, gazGatedStrag) =
-      bestOf("gaz_gated")(gazetteer(gatePairs).count())
+      best("gaz_gated")(gazetteer(gatePairs).count())
     // dropping blocks can only shrink the set of matched messy records — a
     // violation means the cap changed semantics, not just recall
     require(gazRowsGated <= gazRowsNogate,
@@ -163,9 +99,9 @@ object ScaleEr {
     // dedupe-path pair generation over the same messy block table
     val gateBlock = sys.env.getOrElse("SCALE_PAIR_MAX_BLOCK", "1000").toInt
     val (pairsNogate, pairsNogateSec, pairsNogateStrag) =
-      bestOf("pairs_nogate")(Pairing.candidatePairs(messyBlocks, 0).count())
+      best("pairs_nogate")(Pairing.candidatePairs(messyBlocks, 0).count())
     val (pairsGated, pairsGatedSec, pairsGatedStrag) =
-      bestOf("pairs_gated")(Pairing.candidatePairs(messyBlocks, gateBlock).count())
+      best("pairs_gated")(Pairing.candidatePairs(messyBlocks, gateBlock).count())
     require(pairsGated <= pairsNogate,
       s"gated pairing produced MORE pairs: $pairsGated > $pairsNogate")
 

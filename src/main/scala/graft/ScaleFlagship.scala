@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, EtlGroup}
@@ -43,52 +40,8 @@ object ScaleFlagship {
     // ×100 disjoint sf0.01 replicas keep every stage linear in copies — the
     // production shape (more entities, not hotter blocks)
     val sfDir = sys.env.getOrElse("SCALE_FLAGSHIP_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(600000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[scale_flagship][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
 
     case class Point(copies: Int, counts: Map[String, Long],
                      stageSecs: scala.collection.Map[String, Double],
@@ -99,8 +52,7 @@ object ScaleFlagship {
     def runPoint(copies: Int): Point = {
     // --- id-disjoint ×copies corpus, projected to the columns the pipeline
     // reads, materialized and linked like real input tables
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_flagship")
-    TempCleanup.deleteOnExit(work)
+    val work = Harness.workDir("graft_scale_flagship")
     val reps = broadcast(spark.range(copies).select(col("id").as("rep")))
     def base(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")
     // stride derived from the MEASURED max base key (one untimed setup job),
@@ -151,13 +103,14 @@ object ScaleFlagship {
     val stageStragglers = scala.collection.mutable.LinkedHashMap[String, Double]()
     val stageLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
     Flagship.stages.foreach { case (stage, nodes) =>
-      val load = gateOnLoad(stage)
+      val load = Harness.gateOnLoad(stage)
+      ledger.reset()
       val t0 = System.nanoTime()
       new EtlGroup(s"flagship_$stage", nodes, dropIntermediates = false)
         .execute(cat, maxActiveRun = 4)
       val sec = (System.nanoTime() - t0) / 1e9
       stageSecs(stage) = sec
-      stageStragglers(stage) = straggler()
+      stageStragglers(stage) = ledger.straggler()
       stageLoads(stage) = load
       System.err.println(f"[scale_flagship] $stage $sec%.1fs load=$load%.2f")
     }

@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness.{Sample, bestOf}
 
 /** Off-toy scale proof for the graph-analytics family: the shuffle-path
   * PageRank, shuffle-path triangle count, and distributed min-label
@@ -48,84 +46,28 @@ object ScaleGraph {
     val edgesN = sys.env.getOrElse("SCALE_EDGES", "10000000").toLong
     val nodesN = sys.env.getOrElse("SCALE_NODES", "2000000").toLong
     val prIters = sys.env.getOrElse("SCALE_PR_ITERS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(600000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[scale_graph][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
-    val phaseSamples = sys.env.getOrElse("SCALE_PHASE_SAMPLES", "2").toInt
-    def bestOf[A](tag: String)(body: => A): (A, Double, Double, Double) = {
-      val runs = (1 to phaseSamples).map { _ =>
-        // Pay the PREVIOUS phase's GC debt outside the timed window: the
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
+    def best[A](tag: String)(body: => A): Sample[A] =
+      bestOf(tag, ledger, before = {
+        // Pay the PREVIOUS sample's GC debt outside the timed window: the
         // broadcast-path PageRank churns ~100 MB driver arrays per round,
         // and without this the next phase's first mixed-GC pause lands
         // mid-sample and reads as a task-time straggler (observed: the cc
         // phase, which runs last, recording 2x wall + 4.7 max/median in
-        // the SAME code a fresh-JVM probe runs clean). The explicit gc()
-        // also lets the ContextCleaner reap the prior phase's now-
-        // unreachable localCheckpoint blocks before the sample starts —
-        // same hygiene class as the clearCache() below.
+        // the SAME code a fresh-JVM probe runs clean). Persisted
+        // intermediates (edge snapshot, degree table, adjacency) are
+        // per-invocation state — dropping them first makes every sample
+        // start cold and measure the same work, and the explicit gc() lets
+        // the ContextCleaner reap the prior sample's now-unreachable
+        // localCheckpoint blocks.
+        spark.catalog.clearCache()
         System.gc()
         Thread.sleep(2000)
-        val load = gateOnLoad(tag)
-        val t = System.nanoTime()
-        val a = body
-        val sec = (System.nanoTime() - t) / 1e9
-        val st = straggler()
-        // persisted intermediates (edge snapshot, degree table, adjacency)
-        // are per-invocation state — drop them so the next sample starts
-        // cold and samples measure the same work
-        spark.catalog.clearCache()
-        System.err.println(f"[scale_graph] $tag sample $sec%.1fs load=$load%.2f straggler=$st%.2f")
-        (a, sec, st, load)
-      }
-      runs.minBy(_._2)
-    }
+      })(body).head
 
     // --- synthetic power-law graph, materialized and re-read like real input
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_graph")
-    TempCleanup.deleteOnExit(work)
+    val work = Harness.workDir("graft_scale_graph")
     spark.range(edgesN).select(
         floor(pow(rand(7), 2.5) * nodesN).cast("long").as("src"),
         floor(pow(rand(11), 2.5) * nodesN).cast("long").as("dst"))
@@ -152,13 +94,13 @@ object ScaleGraph {
       (0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
     else {
       System.setProperty("graft.tri.broadcastMaxEdges", "0")
-      val (tS, tSSec, tSStr, tSLoad) =
-        bestOf("tri_shuffle") {
+      val Sample(tS, tSSec, tSStr, tSLoad) =
+        best("tri_shuffle") {
           Analytics.triangleCount(edges).head.getLong(0)
         }
       System.setProperty("graft.tri.broadcastMaxEdges", Long.MaxValue.toString)
-      val (tB, tBSec, tBStr, tBLoad) =
-        bestOf("tri_broadcast") {
+      val Sample(tB, tBSec, tBStr, tBLoad) =
+        best("tri_broadcast") {
           Analytics.triangleCount(edges).head.getLong(0)
         }
       System.clearProperty("graft.tri.broadcastMaxEdges")
@@ -179,8 +121,8 @@ object ScaleGraph {
       // cadence the r19 sweep chose (k=2), and the sweep's "1" row must
       // actually measure k=1
       System.setProperty("graft.pr.checkpointEvery", "1")
-      val (pSOut, pSSec, pSStr, pSLoad) =
-        bestOf("pr_shuffle") {
+      val Sample(pSOut, pSSec, pSStr, pSLoad) =
+        best("pr_shuffle") {
           val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
           out.count()
           out
@@ -192,7 +134,7 @@ object ScaleGraph {
       // blockstore writes for deeper plans; ranks must stay bit-equal.
       val cadenceSecs = Seq(2, 3).map { k =>
         System.setProperty("graft.pr.checkpointEvery", k.toString)
-        val (out, sec, _, _) = bestOf(s"pr_shuffle_ck$k") {
+        val Sample(out, sec, _, _) = best(s"pr_shuffle_ck$k") {
           val o = Analytics.pageRank(edges, prIters).localCheckpoint(true)
           o.count()
           o
@@ -208,8 +150,8 @@ object ScaleGraph {
       // by this harness's own crossover probes — so a cleared prop would
       // silently measure the shuffle path twice at this size)
       System.setProperty("graft.pr.broadcastMaxNodes", Long.MaxValue.toString)
-      val (pBOut, pBSec, pBStr, pBLoad) =
-        bestOf("pr_broadcast") {
+      val Sample(pBOut, pBSec, pBStr, pBLoad) =
+        best("pr_broadcast") {
           val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
           out.count()
           out
@@ -233,15 +175,15 @@ object ScaleGraph {
          ccDriverSec, ccDriverStr, ccDriverLoad, ccEqual, ccComponents) = if (!phases("cc"))
       (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false, 0L)
     else {
-      val (cDOut, cDSec, cDStr, cDLoad) =
-        bestOf("cc_distributed") {
+      val Sample(cDOut, cDSec, cDStr, cDLoad) =
+        best("cc_distributed") {
           val out = ConnectedComponents.run(edges, driverThreshold = 0L)
             .localCheckpoint(true)
           out.count()
           out
         }
-      val (cUOut, cUSec, cUStr, cULoad) =
-        bestOf("cc_driver") {
+      val Sample(cUOut, cUSec, cUStr, cULoad) =
+        best("cc_driver") {
           val out = ConnectedComponents.run(edges, driverThreshold = Long.MaxValue)
             .localCheckpoint(true)
           out.count()

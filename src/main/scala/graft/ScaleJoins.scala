@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Off-toy scale proof for the time-series join operators: synthesize
@@ -25,38 +21,12 @@ object ScaleJoins {
   def main(args: Array[String]): Unit = {
     val nEvents = sys.env.getOrElse("SCALE_EVENTS", "10000000").toLong
     val nUsers = sys.env.getOrElse("SCALE_USERS", "50000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
+    val spark = Harness.session()
+    val ledger = new Harness.Ledger(spark)
 
     // deterministic event stream: ~1% of events land on hot user 0 (skew
     // probe), timestamps hash-scattered over ~30 days of microseconds
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_joins")
-    TempCleanup.deleteOnExit(work)
+    val work = Harness.workDir("graft_scale_joins")
     spark.range(nEvents)
       .select(
         col("id").as("event_id"),
@@ -69,7 +39,7 @@ object ScaleJoins {
       .write.mode("overwrite").parquet(s"$work/events.parquet")
     val events = spark.read.parquet(s"$work/events.parquet")
     val total = events.count()
-    durations.clear()
+    ledger.reset()
 
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
@@ -83,7 +53,7 @@ object ScaleJoins {
     val asofRows = asof.count()
     val asofMatched = asof.filter(col("view_value").isNotNull).count()
     val asofSec = (System.nanoTime() - t0) / 1e9
-    val asofStraggler = straggler()
+    val asofStraggler = ledger.straggler()
 
     // the same enrichment through the NATIVE sort-merge operator
     // (AsofJoinExec): identical semantics, so the row counts must agree —
@@ -97,7 +67,7 @@ object ScaleJoins {
     val asofExecRows = asofExec.count()
     val asofExecMatched = asofExec.filter(col("view_value").isNotNull).count()
     val asofExecSec = (System.nanoTime() - tExec) / 1e9
-    val asofExecStraggler = straggler()
+    val asofExecStraggler = ledger.straggler()
     require(asofExecRows == asofRows && asofExecMatched == asofMatched,
       s"native as-of diverged: $asofExecRows/$asofExecMatched vs $asofRows/$asofMatched")
 
@@ -113,7 +83,7 @@ object ScaleJoins {
       .filter(col("rn") <= 5).select("user_id", "value", "event_id")
     val topkWindowRows = topkWindow.count()
     val topkWindowSec = (System.nanoTime() - tTopkW) / 1e9
-    val topkWindowStraggler = straggler()
+    val topkWindowStraggler = ledger.straggler()
 
     val tTopkA = System.nanoTime()
     val topkAgg = events.groupBy("user_id")
@@ -122,7 +92,7 @@ object ScaleJoins {
       .select(col("user_id"), col("t.value"), col("t.event_id"))
     val topkAggRows = topkAgg.count()
     val topkAggSec = (System.nanoTime() - tTopkA) / 1e9
-    val topkAggStraggler = straggler()
+    val topkAggStraggler = ledger.straggler()
     require(topkAggRows == topkWindowRows,
       s"topk agg diverged: $topkAggRows vs $topkWindowRows rows")
 
@@ -135,7 +105,7 @@ object ScaleJoins {
       binWidth = 60L * 1000000L)
     val rangeRows = ranged.count()
     val rangeSec = (System.nanoTime() - t1) / 1e9
-    val rangeStraggler = straggler()
+    val rangeStraggler = ledger.straggler()
 
     // the same attribution through the NATIVE active-set sort-merge
     // operator (RangeJoinExec): identical row set required — the delta is
@@ -149,7 +119,7 @@ object ScaleJoins {
       valCols = Seq("view_id"))
     val rangeExecRows = rangedExec.count()
     val rangeExecSec = (System.nanoTime() - t2) / 1e9
-    val rangeExecStraggler = straggler()
+    val rangeExecStraggler = ledger.straggler()
     require(rangeExecRows == rangeRows,
       s"native range join diverged: $rangeExecRows vs $rangeRows rows")
 

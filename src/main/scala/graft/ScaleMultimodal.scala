@@ -1,11 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
+import graft.Harness.bestOf
 import graft.llm.{GifCodec, JpegCodec, Multimodal, WavCodec}
 
 /** Off-toy scale proof for the multimodal codec tier: the oracle queries
@@ -26,77 +21,19 @@ import graft.llm.{GifCodec, JpegCodec, Multimodal, WavCodec}
   */
 object ScaleMultimodal {
 
-  private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
-
-  private def gateOnLoad(tag: String): Double = {
-    val gate = sys.env.get("SCALE_PHASE_GATE").map(_.toDouble).getOrElse(8.0)
-    var l = loadavg()
-    var tries = 0
-    while (l > gate && tries < 12) {
-      System.err.println(f"[scale_mm][gate] $tag load=$l%.2f > $gate%.1f, waiting 20s")
-      Thread.sleep(20000)
-      tries += 1
-      l = loadavg()
-    }
-    l
-  }
-
   def main(args: Array[String]): Unit = {
     val nImages = sys.env.getOrElse("SCALE_MM_IMAGES", "100000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
+    val ledger = new Harness.Ledger(spark)
 
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def drainBus(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods.find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .map(_.invoke(bus))
-          .getOrElse(Thread.sleep(1000))
-        ()
-      } catch { case _: Throwable => Thread.sleep(1000) }
-    def straggler(): Double = {
-      drainBus()
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      if (byStage.isEmpty) 1.0
-      else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-    }
-
-    val phaseSamples = sys.env.getOrElse("SCALE_PHASE_SAMPLES", "2").toInt
     val phaseLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def bestOf(tag: String)(body: => Long): (Long, Double, Double) = {
-      val runs = (1 to phaseSamples).map { _ =>
-        val load = gateOnLoad(tag)
-        durations.clear()
-        val t = System.nanoTime()
-        val n = body
-        val sec = (System.nanoTime() - t) / 1e9
-        val st = straggler()
-        System.err.println(f"[scale_mm] $tag sample $sec%.1fs straggler=$st%.2f load=$load%.2f")
-        (n, sec, st, load)
-      }
-      require(runs.map(_._1).distinct.size == 1,
-        s"$tag checksum varies across samples: ${runs.map(_._1)}")
-      val win = runs.minBy(_._2)
-      phaseLoads(tag) = win._4
-      (win._1, win._2, win._3)
+    def best(tag: String)(body: => Long): (Long, Double, Double) = {
+      val runs = bestOf(tag, ledger)(body)
+      require(runs.map(_.value).distinct.size == 1,
+        s"$tag checksum varies across samples: ${runs.map(_.value)}")
+      phaseLoads(tag) = runs.head.load
+      (runs.head.value, runs.head.sec, runs.head.straggler)
     }
 
     // --- corpora: 64x64 payloads with per-doc content, generated once ------
@@ -127,22 +64,22 @@ object ScaleMultimodal {
         (f, c) => (((d * 31 + f * 7 + c * 13) % 65536) - 32768).toInt))
 
     // --- decode phases: one mapPartitions pass each, checksum-reduced ------
-    val (pngCs, pngSec, pngStr) = bestOf("png_decode") {
+    val (pngCs, pngSec, pngStr) = best("png_decode") {
       Multimodal.extractPngPixels(pngDs)
         .map(m => { require(m.format == "png"); m.pix_checksum })
         .reduce(_ + _)
     }
-    val (gifCs, gifSec, gifStr) = bestOf("gif_decode") {
+    val (gifCs, gifSec, gifStr) = best("gif_decode") {
       Multimodal.extractGifPixels(gifDs)
         .map(m => { require(m.format == "gif"); m.pix_checksum })
         .reduce(_ + _)
     }
-    val (jpgCs, jpgSec, jpgStr) = bestOf("jpeg_decode") {
+    val (jpgCs, jpgSec, jpgStr) = best("jpeg_decode") {
       Multimodal.extractJpegPixels(jpgDs)
         .map(m => { require(m.format == "jpeg"); m.pix_checksum })
         .reduce(_ + _)
     }
-    val (wavCs, wavSec, wavStr) = bestOf("wav_decode") {
+    val (wavCs, wavSec, wavStr) = best("wav_decode") {
       Multimodal.extractAudio(wavDs)
         .map(m => { require(m.format == "wav"); m.pcm_checksum })
         .reduce(_ + _)

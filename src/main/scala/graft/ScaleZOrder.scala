@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Off-toy scale proof for [[graft.ops.ZOrder]]: the scaladoc promises that a
@@ -86,16 +85,8 @@ object ScaleZOrder {
     val nEvents = sys.env.getOrElse("SCALE_EVENTS", "10000000").toLong
     val nUsers = sys.env.getOrElse("SCALE_USERS", "50000").toLong
     val nFiles = sys.env.getOrElse("SCALE_ZORDER_FILES", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_zorder")
-    TempCleanup.deleteOnExit(work)
+    val spark = Harness.session()
+    val work = Harness.workDir("graft_scale_zorder")
     val tsRange = 2592000000000L // 30 days of microseconds
     spark.range(nEvents)
       .select(

@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner: replicates the driver's flagship check (rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] flagship rows=$n")

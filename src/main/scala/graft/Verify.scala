@@ -1,23 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // comma-separated query-name filter for local iteration (the driver
     // runs unfiltered); oracle_sql.json is always dumped in full
@@ -32,30 +19,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // symmetrized-bench companion (setup tables + timed overrides) so
-    // tools/check.py --bench-sql can pin override ≡ original without a
-    // bench run
-    val setup = SparkEntry.oracleSetupSql
-      .map { case (t, sql) => s"[${q(t)}, ${q(sql)}]" }.mkString("[", ",", "]")
-    val timed = SparkEntry.oracleBenchSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_bench_sql.json"),
-      s"""{"setup": $setup, "timed": $timed}""")
+    // oracle_bench_sql.json rides along so tools/check.py --bench-sql can
+    // pin override ≡ original without a bench run
+    Harness.dumpOracleSql(new java.io.File(outDir))
     spark.stop()
   }
 }

@@ -49,12 +49,18 @@ class EtlGroup(
   }
 
   /** DAG-internal ids consumed by exactly ONE unit (r20): lazily composing
-    * such an id into its single consumer can never duplicate work — the
-    * recompute-per-consumer trade that makes all-in [[execute]]
+    * such an id into its single consumer duplicates no work ACROSS units —
+    * the recompute-per-consumer trade that makes all-in [[execute]]
     * `inDbIntermediates` wrong for fan-out DAGs does not exist here. This is
     * the safe InDb subset for DAGs that mix single-consumer hand-offs
     * (extraction → grouping) with multi-consumer ones (grouping → validators
-    * + export + result), e.g. the metagraph pipeline. */
+    * + export + result), e.g. the metagraph pipeline.
+    *
+    * Caveat: this counts consuming UNITS, not plan references. A sole
+    * consumer whose one action references the input more than once (a
+    * self-join, or a multi-branch union such as
+    * [[graft.graph.Validate.linkIdValidators]]) recomputes the producer's
+    * subtree per reference. Results are unaffected; only the cost is. */
   def singleConsumerIntermediateIds: Seq[String] = {
     val consumerCount = units.flatMap(_.inputIds.distinct)
       .groupBy(identity).map { case (id, xs) => id -> xs.size }

@@ -432,7 +432,7 @@ object Analytics {
     // is sound here — and measured: at sf0.1 the AQE form runs 18 jobs
     // (every exchange its own query stage + re-plan), the static form far
     // fewer, and the per-job floor is most of this query's >2×-of-oracle
-    // excess (Probe graph attribution, r15). Past the gate AQE stays on
+    // excess (Probe per-job attribution, r15). Past the gate AQE stays on
     // for skew splitting and coalescing, which the 10M-edge ScaleGraph
     // records rely on. Every persist() sits INSIDE the
     // scope: CacheManager compiles a cache's physical plan when persist()
@@ -644,6 +644,7 @@ object Validate {
     * failure message, every check evaluated (no short-circuit on the first
     * violation — all bad counts computed before any require fires). */
   def linkIdValidators(checks: Seq[(String, String, String)]): EtlNode = {
+    require(checks.nonEmpty, "linkIdValidators needs at least one (link, node, idType) check")
     val inputs = checks.flatMap { case (l, n, _) => Seq(l, n) }.distinct
     new DfNode("validate_link_ids", inputIds = inputs, outputIds = Seq.empty,
       fn = { dfs =>

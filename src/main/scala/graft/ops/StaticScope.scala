@@ -61,7 +61,8 @@ object StaticScope {
     if (size >= thresholdBytes) body
     else {
       val spark = input.sparkSession
-      val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled").getOrElse("true")
+      val scopedKeys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      val was = spark.conf.getAll
       val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val floor = math.min(confParts.toLong,
@@ -69,11 +70,10 @@ object StaticScope {
       val parts = math.max(floor, math.min(confParts.toLong,
         (size / BytesPerPartition).toLong + 1L)).toInt
       spark.conf.set("spark.sql.shuffle.partitions", parts)
+      // restore each key as it was: unset again when it was unset, so the
+      // scope leaves no conf residue in the session
       try body
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        spark.conf.set("spark.sql.shuffle.partitions", confParts)
-      }
+      finally scopedKeys.foreach(k => was.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
     }
   }
 

@@ -321,11 +321,12 @@ object Streams {
       // batch was ~1.0s of pure state-store commit fan-out (4 stores per
       // partition) for 0 output rows. NOT safe for append-mode aggregations
       // (session/tumbling windows FINALIZE their output in that batch), so
-      // the conf is scoped to exactly this query and restored in finally;
+      // the conf is scoped to exactly this query and restored in finally —
+      // unset again when it was unset, so no session residue is left;
       // results are oracle-checked identical.
-      val noDataWas = spark.conf
-        .getOption("spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+      val noDataWas = spark.conf.getAll.get(noData)
+      spark.conf.set(noData, "false")
       try {
         val q = joined.writeStream
           .format("memory")
@@ -338,7 +339,7 @@ object Streams {
         spark.catalog.dropTempView(name)
         spark.streams.resetTerminated()
         out
-      } finally spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataWas)
+      } finally noDataWas.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
     }
   }
 }

@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the BENCH_FULL narrowing guard ([[Bench.fullRecordAccepts]]): the
-  * full-suite artifact only accepts runs that cover at least as many queries
-  * AND the same SF dir as the record they would replace — both clauses are
-  * postmortems (a 1-query run clobbered the 93-query record in round 10; a
-  * full-count sf0.001 run clobbered the sf0.1 record in round 15).
+  * full-suite artifact only accepts runs that cover at least as many queries,
+  * the same SF dir AND the same core count as the record they would replace
+  * — each clause is a postmortem (a 1-query run clobbered the 93-query record
+  * in round 10; a full-count sf0.001 run clobbered the sf0.1 record in round
+  * 15; an 8-core run replaced the 32-core record in round 20).
   */
 class BenchGuardSpec extends AnyFunSuite {
 
@@ -38,6 +39,18 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("no prior record: anything accepted (first write wins)") {
     assert(Bench.fullRecordAccepts("", 1, "/root/testdata/sf0.001"))
+  }
+
+  test("core-count change: rejected against a cpus-stamped prior (round-20 8-core overwrite)") {
+    val stamped = prior.replace(""""unit":"sec",""", """"unit":"sec","cpus":32,""")
+    assert(Bench.fullRecordAccepts(stamped, 99, "/root/testdata/sf0.1", cpus = 32))
+    assert(!Bench.fullRecordAccepts(stamped, 99, "/root/testdata/sf0.1", cpus = 8))
+    assert(!Bench.fullRecordAccepts(stamped, 120, "/root/testdata/sf0.1", cpus = 8, allowSfChange = true))
+  }
+
+  test("unstamped prior: any core count accepted") {
+    assert(Bench.fullRecordAccepts(prior, 99, "/root/testdata/sf0.1", cpus = 8))
+    assert(Bench.fullRecordAccepts(prior, 99, "/root/testdata/sf0.1", cpus = 32))
   }
 
   test("unparsable prior: accepted rather than wedging the artifact") {

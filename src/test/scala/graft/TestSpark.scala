@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM: the bench
+  * config at a fixed 4 cores, so results never depend on the test box. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

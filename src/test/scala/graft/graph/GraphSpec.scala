@@ -85,6 +85,11 @@ class GraphSpec extends AnyFunSuite {
     assert(ex.getCause.getMessage.contains("1 to_id values in 'gl_x' missing from 'gn_b'"))
   }
 
+  test("Batched link-id validator rejects an empty check set up front") {
+    val ex = intercept[IllegalArgumentException](Validate.linkIdValidators(Seq.empty))
+    assert(ex.getMessage.contains("at least one"))
+  }
+
   test("RedisGraph node CSV: typed headers, quote-nonnumeric, backslash escapes (redisgraph.py:36-50)") {
     val nodes = Seq(
       (11L, "plain", 1.5),

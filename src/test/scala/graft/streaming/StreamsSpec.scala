@@ -131,6 +131,24 @@ class StreamsSpec extends AnyFunSuite {
     assert(out === Set((11L, 10L), (12L, 10L)))
   }
 
+  test("stream-stream interval join leaves no conf residue, whether the no-data toggle was set or unset") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sjoin_conf").toString
+    val t0 = 86400L * 1000000L
+    Seq((10L, t0, 1L, "view", 0.0, "{}"), (11L, t0, 1L, "click", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(dir)
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(!before.contains(key))
+    assert(Streams.streamIntervalJoin(s, dir, windowSec = 60).count() === 1)
+    assert(s.conf.getAll === before)
+    s.conf.set(key, "true")
+    val set = s.conf.getAll
+    Streams.streamIntervalJoin(s, dir, windowSec = 60).count()
+    assert(s.conf.getAll === set)
+  }
+
   test("streamed windowed aggregation equals the batch equivalent on the same files") {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
     // two hours of events, ts in µs (as the driver's events table stores them)
