@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Training-data deduplication operators, designed for the 100 TB case: every
@@ -19,26 +20,15 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("digest"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
 
-  /** Distinct character k-gram shingles: (id, sh). Documents shorter than k
-    * produce no shingles (mirrors the reference's empty-array guard style).
-    * The input is repartitioned by id first: a document table is often a
-    * handful of parquet splits, and without the spread the ~100× explode and
-    * the per-shingle hashing downstream would grind in those few tasks. */
-  def shingles(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    df.filter(length(col(textCol)) >= k)
-      .repartition(col(idCol))
-      .select(col(idCol), col(textCol), explode(sequence(lit(1), length(col(textCol)) - (k - 1))).as("i"))
-      .select(col(idCol), expr(s"substring($textCol, i, $k)").as("sh"))
-      .distinct()
-
   /** Per-document distinct shingle SET as ONE array column — no explode, no
     * shuffle: `transform(sequence(...))` enumerates the k-gram positions and
     * `array_distinct` dedups, all narrow per-row work. This replaces three
     * full shuffles of the ~100×-exploded shingle rows (distinct, signature
     * group-by, verify collect_set) with zero; only doc-level rows ever move.
-    * The input is still repartitioned by id first: a document table arrives in
-    * a handful of parquet splits and the per-row hashing downstream would
-    * otherwise grind in those few tasks. Output: (id, shs: array<string>). */
+    * Documents shorter than k produce no row. The input is still
+    * repartitioned by id first: a document table arrives in a handful of
+    * parquet splits and the per-row hashing downstream would otherwise grind
+    * in those few tasks. Output: (id, shs: array<string>). */
   def shingleSets(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
     // explicit partition count pins the exchange: AQE would coalesce a
     // few-MB text shuffle to 1 partition and serialize the CPU-heavy
@@ -61,22 +51,12 @@ object Dedup {
     * borrow the next non-empty bin's minimum, the standard fix from the
     * follow-up densification literature — so signatures stay total.
     * Input: the [[shingleSets]] shape (idCol, shs: array<string>).
-    * Output: (id, h0..h{numHashes-1}). */
-  def minhashSignatures(sets: DataFrame, idCol: String, numHashes: Int): DataFrame =
-    minhashSignaturesImpl(sets, idCol, numHashes, keepSets = false)
-
-  /** [[minhashSignatures]] with the shingle-set array CARRIED THROUGH:
-    * (id, shs, h0..h{n-1}). One materialization of this table serves both
-    * the LSH banding (signature columns) and the exact-Jaccard verify
-    * (shs) — the cascade previously checkpointed sets and signatures
-    * separately, paying two materialization jobs and two storage passes for
-    * rows that always travel together. Signature values are bit-identical
-    * to [[minhashSignatures]] (same fold, same bins). */
-  def minhashSignaturesWithSets(sets: DataFrame, idCol: String, numHashes: Int): DataFrame =
-    minhashSignaturesImpl(sets, idCol, numHashes, keepSets = true)
-
-  private def minhashSignaturesImpl(sets: DataFrame, idCol: String, numHashes: Int,
-                                    keepSets: Boolean): DataFrame = {
+    * Output: (id, shs, h0..h{numHashes-1}). The shingle-set array is CARRIED
+    * THROUGH, so one materialization of this table serves both the LSH
+    * banding (signature columns) and the exact-Jaccard verify (shs): one
+    * materialization job and one storage pass for rows that always travel
+    * together, not two. Callers that want the signature alone drop `shs`. */
+  def minhashSignatures(sets: DataFrame, idCol: String, numHashes: Int): DataFrame = {
     // NARROW per-document fold: digest the doc's shingle array once, then
     // take each bin's minimum with filter+transform+array_min inside the
     // same projection — no explode, no exchange, no aggregate. The earlier
@@ -87,118 +67,74 @@ object Dedup {
     // Semantics are bit-identical to the DuckDB oracle mirror: bin by the
     // digest's first nibble mod numHashes, min over the remaining 31 hex
     // chars, rotation densification for empty bins.
-    val carry: Seq[Column] = if (keepSets) Seq(col("shs")) else Seq.empty
-    val ds = sets.select(col(idCol) +: carry :+ expr("transform(shs, s -> md5(s))").as("ds"): _*)
-    val raw = ds.select(col(idCol) +: carry ++: (0 until numHashes).map { j =>
+    val ds = sets.select(col(idCol), col("shs"), expr("transform(shs, s -> md5(s))").as("ds"))
+    val raw = ds.select(col(idCol) +: col("shs") +: (0 until numHashes).map { j =>
       array_min(expr(
         s"""transform(
            |  filter(ds, d -> (instr('0123456789abcdef', substring(d, 1, 1)) - 1) % $numHashes = $j),
            |  d -> substring(d, 2, 31))""".stripMargin)).as(s"r$j")
     }: _*)
-    raw.select(col(idCol) +: carry ++: (0 until numHashes).map(j =>
+    raw.select(col(idCol) +: col("shs") +: (0 until numHashes).map(j =>
       coalesce((0 until numHashes).map(i => col(s"r${(j + i) % numHashes}")): _*).as(s"h$j")): _*)
   }
 
-  /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
-    * consecutive hashes; band value = concatenation. Output: (id, band, bv). */
-  def lshBands(sig: DataFrame, idCol: String, bands: Int, rowsPerBand: Int): DataFrame = {
+  /** Signature-agreement prefilter of the cascade: a candidate survives only
+    * if at least this many of its `numHashes` signature positions agree — the
+    * Jaccard estimate at `threshold` minus 0.15 of slack for estimator
+    * variance. It only prunes; exact Jaccard ≥ `threshold` decides. */
+  private def minEstimateMatches(threshold: Double, numHashes: Int): Int =
+    math.ceil((threshold - 0.15) * numHashes).toInt
+
+  /** LSH band table: split the signature into `bands` bands of `rowsPerBand`
+    * consecutive hashes; band value = concatenation. The whole signature
+    * rides each band row as one array, so the bucket join computes the
+    * estimate prefilter inline — no separate re-joins of the signature
+    * table. That is `numHashes` fixed-width strings (~250 bytes) per band
+    * row: constant weight per row, safe in the bucket shuffle at scale.
+    * Output: (id, sig, band, bv). */
+  private def bandTable(sig: DataFrame, idCol: String, bands: Int, rowsPerBand: Int): DataFrame = {
     val bandStructs = (0 until bands).map { b =>
       val bv = concat((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*)
       struct(lit(b).as("band"), bv.as("bv"))
     }
-    sig.select(col(idCol), explode(array(bandStructs: _*)).as("x"))
-      .select(col(idCol), col("x.band").as("band"), col("x.bv").as("bv"))
-  }
-
-  /** Candidate pairs: docs agreeing on any full band — an equi-join on
-    * (band, bv), never a cross join. Cost is Σ_bucket |bucket|²; a hot bucket
-    * (stop-shingle band value) is quadratic in that bucket, so `maxBucketSize`
-    * can drop oversized buckets, the same defense as ER blocking's
-    * maxBlockSize — near-dup *clusters* that big are recalled anyway through
-    * their other, more selective bands. */
-  def lshCandidates(bandTable: DataFrame, idCol: String, maxBucketSize: Int = 0): DataFrame = {
-    val b =
-      if (maxBucketSize <= 0) bandTable
-      else {
-        val ok = bandTable.groupBy("band", "bv").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize).drop("__n")
-        bandTable.join(ok, Seq("band", "bv"), "left_semi")
-      }
-    val l = b.select(col("band"), col("bv"), col(idCol).as("a"))
-    val r = b.select(col("band"), col("bv"), col(idCol).as("b"))
-    l.join(r, Seq("band", "bv"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-  }
-
-  /** Prune candidates by the MinHash Jaccard *estimate* (fraction of agreeing
-    * signature positions ≥ `minMatches`). The signature is a fixed few hundred
-    * bytes, so this join broadcasts and the O(candidates) work touches no
-    * shingle data — the cascade step that makes exact verification affordable
-    * when the corpus is near-dup-dense (candidate sets can be 100-1000× larger
-    * than the true near-dup set). */
-  def estimateFilter(cand: DataFrame, sig: DataFrame, idCol: String,
-                     numHashes: Int, minMatches: Int): DataFrame = {
-    val hs = (0 until numHashes).map(j => s"h$j")
-    val sa = sig.select(col(idCol).as("a") +: hs.map(h => col(h).as(s"a_$h")): _*)
-    val sb = sig.select(col(idCol).as("b") +: hs.map(h => col(h).as(s"b_$h")): _*)
-    val matches = hs.map(h => (col(s"a_$h") === col(s"b_$h")).cast("int"))
-      .reduceLeft(_ + _)
-    cand.join(broadcast(sa), "a").join(broadcast(sb), "b")
-      .withColumn("__m", matches)
-      .filter(col("__m") >= minMatches)
-      .select("a", "b")
-  }
-
-  /** Band + candidate + estimate in ONE pass: the signature array rides the
-    * band table, so the positional-agreement prefilter is computed inline in
-    * the bucket self-join — no separate [[estimateFilter]] re-joins of the
-    * signature table (two broadcast passes saved per pipeline run). Semantics
-    * are identical: count of agreeing signature positions ≥ `minMatches`.
-    * The carried signature is `numHashes` fixed-width strings (~250 bytes) per
-    * band row — constant weight per row, safe in the bucket shuffle at scale. */
-  def lshCandidatesWithEstimate(sig: DataFrame, idCol: String, bands: Int,
-                                rowsPerBand: Int, minMatches: Int,
-                                maxBucketSize: Int = 0): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val bandStructs = (0 until bands).map { b =>
-      val bv = concat((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*)
-      struct(lit(b).as("band"), bv.as("bv"))
-    }
-    val bandTable = sig.select(
-      col(idCol),
-      array((0 until numHashes).map(j => col(s"h$j")): _*).as("sig"),
+    sig.select(col(idCol),
+      array((0 until bands * rowsPerBand).map(j => col(s"h$j")): _*).as("sig"),
       explode(array(bandStructs: _*)).as("x"))
       .select(col(idCol), col("sig"), col("x.band").as("band"), col("x.bv").as("bv"))
-    val b =
-      if (maxBucketSize <= 0) bandTable
-      else {
-        val ok = bandTable.groupBy("band", "bv").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize).drop("__n")
-        bandTable.join(ok, Seq("band", "bv"), "left_semi")
-      }
-    val l = b.select(col("band"), col("bv"), col(idCol).as("a"), col("sig").as("sa"))
-    val r = b.select(col("band"), col("bv"), col(idCol).as("b"), col("sig").as("sb"))
+  }
+
+  /** Bucket-join cost is Σ_bucket |bucket|²; a hot bucket (stop-shingle band
+    * value) is quadratic in that bucket, so `maxBucketSize` > 0 drops
+    * oversized buckets, the same defense as ER blocking's maxBlockSize —
+    * near-dup *clusters* that big are recalled anyway through their other,
+    * more selective bands. 0 keeps every bucket. */
+  private def capBuckets(bandRows: DataFrame, maxBucketSize: Int): DataFrame =
+    if (maxBucketSize <= 0) bandRows
+    else {
+      val ok = bandRows.groupBy("band", "bv").agg(count(lit(1)).as("__n"))
+        .filter(col("__n") <= maxBucketSize).drop("__n")
+      bandRows.join(ok, Seq("band", "bv"), "left_semi")
+    }
+
+  /** Candidate pairs (a from `left`, b from `right`): docs agreeing on a full
+    * band — an equi-join on (band, bv), never a cross join — that satisfy
+    * `pair` and agree on at least `minMatches` signature positions. Not yet
+    * normalized or distinct: a pair meets once per shared band. */
+  private def bucketJoin(left: DataFrame, right: DataFrame, idCol: String,
+                         pair: Column, minMatches: Int): DataFrame = {
+    val l = left.select(col("band"), col("bv"), col(idCol).as("a"), col("sig").as("sa"))
+    val r = right.select(col("band"), col("bv"), col(idCol).as("b"), col("sig").as("sb"))
     val matches = expr("aggregate(zip_with(sa, sb, (x, y) -> CAST(x = y AS INT)), 0, (acc, v) -> acc + v)")
-    l.join(r, Seq("band", "bv"))
-      .filter(col("a") < col("b") && matches >= lit(minMatches))
-      .select("a", "b")
-      .distinct()
+    l.join(r, Seq("band", "bv")).filter(pair && matches >= lit(minMatches))
   }
 
   /** Verify candidates with the true shingle Jaccard (LSH recalls candidates;
-    * the verify pass removes false positives). Each doc's shingle set rides as
-    * one array, so per-candidate cost is O(|set_a| + |set_b|) in a single row —
-    * NOT an exploded join (candidates × shingles would be 10⁸ intermediate rows
-    * at sf0.1 and worse at scale). */
-  def verifiedJaccard(cand: DataFrame, shingleTable: DataFrame, idCol: String): DataFrame =
-    verifiedJaccardFromSets(cand,
-      shingleTable.groupBy(col(idCol)).agg(collect_set(col("sh")).as("shs")), idCol)
-
-  /** As [[verifiedJaccard]] but over pre-built per-doc shingle-set arrays
-    * ([[shingleSets]] shape: (id, shs)). */
-  def verifiedJaccardFromSets(cand: DataFrame, docSets: DataFrame, idCol: String): DataFrame = {
+    * the verify pass removes false positives) over per-doc shingle-set arrays
+    * ([[shingleSets]] shape: (id, shs)). Each doc's set rides as one array,
+    * so per-candidate cost is O(|set_a| + |set_b|) in a single row — NOT an
+    * exploded join (candidates × shingles would be 10⁸ intermediate rows at
+    * sf0.1 and worse at scale). Output: (a, b, jaccard). */
+  def verifiedJaccard(cand: DataFrame, docSets: DataFrame, idCol: String): DataFrame = {
     val inter = size(array_intersect(col("sa"), col("sb")))
     cand
       .join(docSets.select(col(idCol).as("a"), col("shs").as("sa")), "a")
@@ -208,13 +144,11 @@ object Dedup {
   }
 
   /** Full MinHash+LSH near-dup pipeline:
-    * shingle → sign → band → bucket-join → estimate-prune → exact verify.
-    * `minEstMatches` is the signature-agreement prefilter (default ~threshold
-    * minus slack for estimator variance); exact Jaccard ≥ `threshold` decides. */
+    * shingle → sign → band → bucket-join with estimate prune → exact verify.
+    * Exact Jaccard ≥ `threshold` decides; output (a, b, jaccard), a < b. */
   def minhashNearDups(df: DataFrame, textCol: String, idCol: String,
                       k: Int = 5, numHashes: Int = 8, bands: Int = 4,
-                      threshold: Double = 0.9, minEstMatches: Int = -1,
-                      maxBucketSize: Int = 0): DataFrame =
+                      threshold: Double = 0.9, maxBucketSize: Int = 0): DataFrame =
   // statistics-gated static planning (same gate as tokenJaccardPairs): the
   // cascade is ~10 exchanges deep, and on a small corpus AQE's per-stage
   // driver re-planning dominates the actual work (measured at sf0.1: the
@@ -223,8 +157,6 @@ object Dedup {
   // duties. The localCheckpoints below are eager, and materialize() pins
   // the returned plan inside the scope — the soundness rule holds.
   graft.ops.StaticScope.materialize(df) {
-    val minM = if (minEstMatches >= 0) minEstMatches
-               else math.ceil((threshold - 0.15) * numHashes).toInt
     // EXPLICIT materialization of the multiply-consumed intermediate, eager
     // so every consumer reads stored blocks. An earlier formulation
     // relied on Catalyst ReuseExchange to share `sets` via its pinned
@@ -241,32 +173,28 @@ object Dedup {
     // separate sets + signatures materializations (r19: one fewer
     // materialization job and storage pass; values bit-identical).
     // Trade-off (r19 advice): checkpoint block reads are ROW-oriented, so
-    // the signature-only consumer below (ss.drop("shs")) deserializes the
-    // heavy shingle arrays it immediately discards — a measured win at
-    // bench scale (the saved materialization job dominates), but where
-    // shingle arrays dominate row size at large corpora the slim separate
-    // signature checkpoint can win back; columnar stores don't have this
-    // tension (see q_dedup_incremental's fused PARQUET index, which prunes
-    // shs at the scan).
-    val ss = minhashSignaturesWithSets(shingleSets(df, textCol, idCol, k), idCol, numHashes)
+    // the signature-only band-table consumer below deserializes the heavy
+    // shingle arrays it immediately discards — a measured win at bench
+    // scale (the saved materialization job dominates), but where shingle
+    // arrays dominate row size at large corpora the slim separate signature
+    // checkpoint can win back; columnar stores don't have this tension (see
+    // q_dedup_incremental's fused PARQUET index, which prunes shs at the
+    // scan).
+    val ss = minhashSignatures(shingleSets(df, textCol, idCol, k), idCol, numHashes)
       .localCheckpoint(true)
+    val buckets = capBuckets(bandTable(ss, idCol, bands, numHashes / bands), maxBucketSize)
     // the candidate set is tiny (pairs that agree on a band and the
     // signature estimate) — materializing it lets the verify joins broadcast
     // it against the stored shingle sets instead of replanning the whole
     // candidate pipeline as a join input
-    val pruned = lshCandidatesWithEstimate(ss.drop("shs"), idCol, bands, numHashes / bands,
-      minM, maxBucketSize).localCheckpoint(true)
-    verifiedJaccardFromSets(pruned, ss.select(col(idCol), col("shs")), idCol)
+    val pruned = bucketJoin(buckets, buckets, idCol, col("a") < col("b"),
+      minEstimateMatches(threshold, numHashes))
+      .select("a", "b")
+      .distinct()
+      .localCheckpoint(true)
+    verifiedJaccard(pruned, ss.select(col(idCol), col("shs")), idCol)
       .filter(col("jaccard") >= threshold)
   }
-
-  /** Gate for [[incrementalNearDups]]: true when the combined input estimate
-    * is below the static-planning threshold (the tuple return means the
-    * caller-visible materialization has to be decided inline rather than by
-    * `StaticScope.materialize`). */
-  private def smallInputs(dfs: DataFrame*): Boolean =
-    dfs.map(graft.ops.StaticScope.inputBytes).sum <
-      BigInt(graft.ops.StaticScope.DefaultThresholdBytes)
 
   /** INCREMENTAL near-dup check: a new batch against a corpus whose shingle
     * sets and signatures were persisted by a previous run (the reference's
@@ -282,75 +210,62 @@ object Dedup {
     * Emits exactly the pairs with at least one new side (new-new pairs
     * once, normalized a < b) — equal to running the full cascade on the
     * whole corpus and keeping pairs touching the batch, which is how the
-    * oracle replays it. Returns (nearDups, newSets, newSig); callers
-    * persist `existing ∪ new` as the next run's index ([[graft.engine.Catalog]]
-    * cache snapshots in the DAG formulation, q_dedup_incremental).
+    * oracle replays it. Callers persist `existing ∪ new` as the next run's
+    * index ([[graft.engine.Catalog]] cache snapshots in the DAG formulation,
+    * q_dedup_incremental).
     */
   def incrementalNearDups(newDocs: DataFrame, textCol: String, idCol: String,
                           existingSets: DataFrame, existingSig: DataFrame,
                           k: Int = 5, numHashes: Int = 8, bands: Int = 4,
-                          threshold: Double = 0.9, minEstMatches: Int = -1,
-                          maxBucketSize: Int = 0): (DataFrame, DataFrame, DataFrame) = {
-    // same statistics gate as minhashNearDups; the tuple return means the
-    // inside-the-scope materialization is decided inline (soundness rule)
-    val gated = smallInputs(newDocs, existingSets, existingSig)
-    def run(): (DataFrame, DataFrame, DataFrame) = incrementalNearDupsBody(
-      newDocs, textCol, idCol, existingSets, existingSig, k, numHashes, bands,
-      threshold, minEstMatches, maxBucketSize, eager = gated)
-    if (gated) graft.ops.StaticScope.scoped(newDocs)(run()) else run()
+                          threshold: Double = 0.9, maxBucketSize: Int = 0): DataFrame = {
+    def nearDups: DataFrame = {
+      val rowsPerBand = numHashes / bands
+      // one combined batch checkpoint (id, shs, h*), same fusion as
+      // minhashNearDups — the sets/sig views below are cheap projections
+      val newSS = minhashSignatures(
+        shingleSets(newDocs, textCol, idCol, k), idCol, numHashes).localCheckpoint(true)
+      val all = capBuckets(
+        bandTable(existingSig.unionByName(newSS.drop("shs")), idCol, bands, rowsPerBand),
+        maxBucketSize)
+      // a new-new pair meets twice (each side once as the left row) — the
+      // least/greatest normalization + distinct collapses it; new-old pairs
+      // meet only through the new side
+      val pruned = bucketJoin(bandTable(newSS, idCol, bands, rowsPerBand), all, idCol,
+        col("a") =!= col("b"), minEstimateMatches(threshold, numHashes))
+        .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+        .distinct()
+        .localCheckpoint(true)
+      verifiedJaccard(pruned,
+        existingSets.unionByName(newSS.select(col(idCol), col("shs"))), idCol)
+        .filter(col("jaccard") >= threshold)
+    }
+    // the same statistics gate as minhashNearDups, taken on the summed size
+    // of all three inputs; the result is materialized inside the scope
+    // (soundness rule)
+    val gated = Seq(newDocs, existingSets, existingSig)
+      .map(graft.ops.StaticScope.inputBytes).sum < BigInt(graft.ops.StaticScope.DefaultThresholdBytes)
+    if (gated) graft.ops.StaticScope.scoped(newDocs)(nearDups.localCheckpoint(true)) else nearDups
   }
 
-  private def incrementalNearDupsBody(newDocs: DataFrame, textCol: String, idCol: String,
-                          existingSets: DataFrame, existingSig: DataFrame,
-                          k: Int, numHashes: Int, bands: Int,
-                          threshold: Double, minEstMatches: Int,
-                          maxBucketSize: Int, eager: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    val minM = if (minEstMatches >= 0) minEstMatches
-               else math.ceil((threshold - 0.15) * numHashes).toInt
-    val rowsPerBand = numHashes / bands
-    // one combined batch checkpoint (id, shs, h*), same fusion as
-    // minhashNearDups — the separate sets/sig views are cheap projections
-    val newSS = minhashSignaturesWithSets(
-      shingleSets(newDocs, textCol, idCol, k), idCol, numHashes).localCheckpoint(true)
-    val newSets = newSS.select(col(idCol), col("shs"))
-    val newSig = newSS.drop("shs")
-    val allSig = existingSig.unionByName(newSig)
+  /** Near-dup clusters: connected components over the pair edges (a, b),
+    * each labelled by its min doc id. Output: (doc_id, cluster_id) for every
+    * doc with at least one near-dup. */
+  def nearDupClusters(pairs: DataFrame): DataFrame =
+    graft.er.ConnectedComponents.clusterMapping(pairs.select("a", "b"))
+      .select(col("messy_id").as("doc_id"), col("cluster_id"))
 
-    def bandTable(sig: DataFrame): DataFrame = {
-      val bandStructs = (0 until bands).map { b =>
-        val bv = concat((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*)
-        struct(lit(b).as("band"), bv.as("bv"))
-      }
-      sig.select(col(idCol),
-        array((0 until numHashes).map(j => col(s"h$j")): _*).as("sig"),
-        explode(array(bandStructs: _*)).as("x"))
-        .select(col(idCol), col("sig"), col("x.band").as("band"), col("x.bv").as("bv"))
-    }
-
-    val all = bandTable(allSig)
-    val right =
-      if (maxBucketSize <= 0) all
-      else {
-        val ok = all.groupBy("band", "bv").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize).drop("__n")
-        all.join(ok, Seq("band", "bv"), "left_semi")
-      }
-    val l = bandTable(newSig)
-      .select(col("band"), col("bv"), col(idCol).as("a"), col("sig").as("sa"))
-    val r = right.select(col("band"), col("bv"), col(idCol).as("b"), col("sig").as("sb"))
-    val matches = expr("aggregate(zip_with(sa, sb, (x, y) -> CAST(x = y AS INT)), 0, (acc, v) -> acc + v)")
-    // a new-new pair meets twice (each side once as the left row) — the
-    // least/greatest normalization + distinct collapses it; new-old pairs
-    // meet only through the new side
-    val pruned = l.join(r, Seq("band", "bv"))
-      .filter(col("a") =!= col("b") && matches >= lit(minM))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val allSets = existingSets.unionByName(newSets)
-    val nearDups = verifiedJaccardFromSets(pruned, allSets, idCol)
-      .filter(col("jaccard") >= threshold)
-    (if (eager) nearDups.localCheckpoint(true) else nearDups, newSets, newSig)
+  /** The production keep policy: cluster the near-dup `pairs`, then keep the
+    * HIGHEST-QUALITY copy per cluster ([[TextAnalysis.qualityScore]], ties to
+    * the smaller doc_id), not the min id. `docs` carries (doc_id, text).
+    * Output: (doc_id, keep_id) for every clustered doc; a keeper maps to
+    * itself, so the docs to excise are those with doc_id ≠ keep_id. */
+  def keepBest(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val scored = nearDupClusters(pairs).join(
+      docs.select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("q")), "doc_id")
+    val w = Window.partitionBy("cluster_id").orderBy(col("q").desc, col("doc_id").asc)
+    val keep = scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).select(col("cluster_id"), col("doc_id").as("keep_id"))
+    scored.join(keep, "cluster_id").select("doc_id", "keep_id")
   }
 
   /** Span-level exact dedup (the C4/RefinedWeb-style pass: drop sentence

@@ -18,6 +18,11 @@ object LlmQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.read(s, dir, name)
 
+  /** The near-dup cascade every MinHash dedup query runs: 5-char shingles,
+    * 8 hashes in 4 bands, exact Jaccard >= 0.9 (the oracle's parameters). */
+  private def minhashPairs(docs: DataFrame): DataFrame =
+    Dedup.minhashNearDups(docs, "text", "doc_id", k = 5, numHashes = 8, bands = 4, threshold = 0.9)
+
   /** Per-JVM ANN index-artifact cache. The production ANN lifecycle builds
     * the index ONCE per corpus snapshot — kmeans seeds, inverted lists, PQ
     * codes: exactly the `seedTable`/`listTable`/`codebook`/`encTable`
@@ -112,6 +117,71 @@ object LlmQueries {
   private val sqlCand =
     """SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
       |FROM bands l JOIN bands r ON l.band = r.band AND l.bv = r.bv AND l.doc_id < r.doc_id""".stripMargin
+
+  // The MinHash near-dup cascade's CTEs (Dedup.minhashNearDups step for
+  // step), shared by the five MinHash dedup entries: shingles → sig → bands →
+  // cand → pruned (≥ 6 of 8 signature positions agree) → per-doc shingle
+  // counts (sets) → shared-shingle counts per candidate (inter).
+  private val sqlNearDupCtes = {
+    val estSum = (0 to 7).map(j => s"CAST(sa.h$j = sb.h$j AS INT)").mkString(" + ")
+    s"""shingles AS ($sqlShingles5),
+       |sig AS ($sqlSig8),
+       |bands AS ($sqlBands),
+       |cand AS ($sqlCand),
+       |pruned AS (
+       |  SELECT c.a, c.b FROM cand c
+       |  JOIN sig sa ON c.a = sa.doc_id JOIN sig sb ON c.b = sb.doc_id
+       |  WHERE $estSum >= 6),
+       |sets AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
+       |inter AS (
+       |  SELECT c.a, c.b, count(*) AS i
+       |  FROM pruned c JOIN shingles sa ON c.a = sa.doc_id
+       |  JOIN shingles sb ON c.b = sb.doc_id AND sa.sh = sb.sh
+       |  GROUP BY c.a, c.b)""".stripMargin
+  }
+
+  /** The verified pairs (a, b, jaccard ≥ 0.9) over [[sqlNearDupCtes]]. */
+  private val sqlNearDupPairs =
+    """SELECT a, b, jaccard FROM (
+      |  SELECT i.a, i.b,
+      |    CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
+      |  FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
+      |WHERE jaccard >= 0.9""".stripMargin
+
+  /** Near-dup clusters over [[sqlNearDupCtes]] (needs WITH RECURSIVE): the
+    * verified pairs (nd) as symmetric edges, walked to each doc's min
+    * reachable id (comp). */
+  private val sqlClusterCtes =
+    """nd AS (
+      |  SELECT a, b FROM (
+      |    SELECT i.a, i.b,
+      |      CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
+      |    FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
+      |  WHERE jaccard >= 0.9),
+      |edges AS (SELECT a, b FROM nd UNION SELECT b AS a, a AS b FROM nd),
+      |walk AS (
+      |  SELECT DISTINCT a AS id, a AS comp FROM edges
+      |  UNION
+      |  SELECT e.b AS id, w.comp FROM walk w JOIN edges e ON w.id = e.a)""".stripMargin
+
+  private val stopSql = "('the', 'a', 'of', 'and', 'to', 'in', 'is')"
+
+  /** Keep-best ranking over [[sqlClusterCtes]], mirroring Dedup.keepBest:
+    * highest quality per cluster first (tie: min doc_id) — the same float
+    * quality formula as q_text_quality, bit-identical across engines. */
+  private val sqlKeepBestCtes =
+    s"""clusters AS (SELECT id AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY id),
+       |quality AS (
+       |  SELECT doc_id,
+       |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.5
+       |    + least((CAST(length(text) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 5.0, 1.0) * 0.25
+       |    + least(CAST(len(list_filter(string_split(text, ' '), x -> x IN $stopSql)) AS DOUBLE)
+       |            / CAST(len(string_split(text, ' ')) AS DOUBLE) * 4.0, 1.0) * 0.25 AS q
+       |  FROM documents),
+       |ranked AS (
+       |  SELECT c.cluster_id, c.doc_id, q.q,
+       |    row_number() OVER (PARTITION BY c.cluster_id ORDER BY q.q DESC, c.doc_id) AS rn
+       |  FROM clusters c JOIN quality q ON c.doc_id = q.doc_id)""".stripMargin
 
   private val sqlQuantize =
     "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))"
@@ -236,8 +306,6 @@ object LlmQueries {
     """CAST(list_sum(list_transform(generate_series(1, 8),
       |  i -> CASE WHEN CAST(embedding[i] AS DOUBLE) >= 0.0 THEN 1 << (i-1) ELSE 0 END)) AS BIGINT)""".stripMargin
 
-  private val stopSql = "('the', 'a', 'of', 'and', 'to', 'in', 'is')"
-
   /** The scrub regex chain over a SQL column expression — identical patterns
     * and pass order to [[TextAnalysis.scrub]] ('g' flag: DuckDB replaces
     * first-match-only by default, Spark replaces all). */
@@ -279,35 +347,20 @@ object LlmQueries {
 
     // MinHash + LSH banding + bucket join + signature-estimate prune (>= 6/8)
     // + true-Jaccard verify (>= 0.9)
-    "q_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-        k = 5, numHashes = 8, bands = 4, threshold = 0.9)),
+    "q_dedup_minhash" -> ((s, dir) => minhashPairs(t(s, dir, "documents"))),
 
     // the dedup deliverable: near-dup pairs -> connected components ->
     // canonical doc per cluster (keep the min doc_id)
-    "q_dedup_clusters" -> ((s, dir) => {
-      val pairs = Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-        k = 5, numHashes = 8, bands = 4, threshold = 0.9)
-      graft.er.ConnectedComponents.clusterMapping(pairs.select("a", "b"))
-        .select(col("messy_id").as("doc_id"), col("cluster_id").as("canonical_id"))
-    }),
+    "q_dedup_clusters" -> ((s, dir) =>
+      Dedup.nearDupClusters(minhashPairs(t(s, dir, "documents")))
+        .select(col("doc_id"), col("cluster_id").as("canonical_id"))),
 
     // the production dedup policy: cluster near-dups, keep the HIGHEST-
     // QUALITY copy per cluster (not the min id) — clusters x quality
     // scoring x top-1-per-group composed into one mapping (doc -> keeper)
     "q_dedup_keep_best" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashNearDups(docs, "text", "doc_id",
-        k = 5, numHashes = 8, bands = 4, threshold = 0.9)
-      val clusters = graft.er.ConnectedComponents.clusterMapping(pairs.select("a", "b"))
-        .select(col("messy_id").as("doc_id"), col("cluster_id"))
-      val scored = clusters.join(
-        docs.select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("q")), "doc_id")
-      val w = Window.partitionBy("cluster_id").orderBy(col("q").desc, col("doc_id").asc)
-      val keep = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).select(col("cluster_id"), col("doc_id").as("keep_id"))
-      scored.join(keep, "cluster_id").select("doc_id", "keep_id")
+      Dedup.keepBest(docs, minhashPairs(docs))
     }),
 
     // the EXCISION step on top of keep-best: rewrite the corpus with every
@@ -319,37 +372,24 @@ object LlmQueries {
     // the cache, so the snapshot is load-bearing, not decorative.
     "q_dedup_rewrite" -> ((s, dir) => {
       import graft.engine.{Catalog, DfNode, EtlGroup}
-      import org.apache.spark.sql.expressions.Window
       val work = java.nio.file.Files.createTempDirectory("graft_dedup_rw")
       graft.TempCleanup.deleteOnExit(work)
       val cat = new Catalog(s, work.toString)
       cat.link("rw_docs", s"$dir/documents.parquet")
       val mapping = new DfNode("rw_mapping", Seq("rw_docs"), Seq("rw_mapping"),
-        fn = { case Seq(docs) =>
-          val pairs = Dedup.minhashNearDups(docs, "text", "doc_id",
-            k = 5, numHashes = 8, bands = 4, threshold = 0.9)
-          val clusters = graft.er.ConnectedComponents.clusterMapping(pairs.select("a", "b"))
-            .select(col("messy_id").as("doc_id"), col("cluster_id"))
-          val scored = clusters.join(
-            docs.select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("q")), "doc_id")
-          val w = Window.partitionBy("cluster_id").orderBy(col("q").desc, col("doc_id").asc)
-          val keep = scored.withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).select(col("cluster_id"), col("doc_id").as("keep_id"))
-          Seq(scored.join(keep, "cluster_id").select("doc_id", "keep_id"))
-        })
+        fn = { case Seq(docs) => Seq(Dedup.keepBest(docs, minhashPairs(docs))) })
       val rewrite = new DfNode("rw_rewrite", Seq("rw_docs", "rw_mapping"), Seq("rw_corpus"),
         fn = { case Seq(docs, m) =>
           val losers = m.filter(col("doc_id") =!= col("keep_id")).select("doc_id")
           Seq(docs.join(losers, Seq("doc_id"), "left_anti")
             .select(col("doc_id"), md5(col("text").cast("binary")).as("digest")))
         })
-      // rw_mapping has exactly ONE consumer (the rewrite node): the lazy
-      // single-consumer hand-off composes it into the anti-join instead of
-      // paying a parquet write + footer + read hop (r20, same policy as
-      // q_metagraph_whole). rw_corpus stays a durable dataset — the cache
-      // snapshot below reads it, and it is the group's external output.
+      // plain parquet hand-offs: composing the single-consumer rw_mapping
+      // into the anti-join (inDbSingleConsumer) lost 8 of 10 alternating
+      // pairs at sf0.1 on 4 cores (median 6.57 s vs 6.29 s). rw_corpus must
+      // be durable anyway — the cache snapshot below reads it.
       new EtlGroup("dedup_rewrite", Seq(mapping, rewrite))
-        .execute(cat, maxActiveRun = 2, inDbSingleConsumer = true)
+        .execute(cat, maxActiveRun = 2)
       cat.snapshot("rw_corpus")
       cat.loadCache("rw_corpus")
     }),
@@ -379,15 +419,14 @@ object LlmQueries {
         // to its columns at the scan (the sig read never deserializes the
         // heavy shs arrays — unlike a fused localCheckpoint block read).
         // Same signature values (same fold), same pairs out.
-        cat.write(Dedup.minhashSignaturesWithSets(
+        cat.write(Dedup.minhashSignatures(
           Dedup.shingleSets(existing, "text", "doc_id", k = 5), "doc_id", numHashes = 8), "idx")
         val idx = cat.read("idx")
-        val (pairs, _, _) = Dedup.incrementalNearDups(
+        Dedup.incrementalNearDups(
           newBatch, "text", "doc_id",
           existingSets = idx.select(col("doc_id"), col("shs")),
           existingSig = idx.drop("shs"),
           k = 5, numHashes = 8, bands = 4, threshold = 0.9)
-        pairs
       }
     }),
 
@@ -909,178 +948,41 @@ object LlmQueries {
     "q_dedup_exact" ->
       "SELECT md5(text) AS digest, min(doc_id) AS keep_id, count(*) AS dup_cnt FROM documents GROUP BY 1",
 
-    "q_dedup_minhash" -> {
-      val estSum = (0 to 7).map(j => s"CAST(sa.h$j = sb.h$j AS INT)").mkString(" + ")
-      s"""WITH shingles AS ($sqlShingles5),
-         |sig AS ($sqlSig8),
-         |bands AS ($sqlBands),
-         |cand AS ($sqlCand),
-         |pruned AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sig sa ON c.a = sa.doc_id JOIN sig sb ON c.b = sb.doc_id
-         |  WHERE $estSum >= 6),
-         |sets AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT c.a, c.b, count(*) AS i
-         |  FROM pruned c JOIN shingles sa ON c.a = sa.doc_id
-         |  JOIN shingles sb ON c.b = sb.doc_id AND sa.sh = sb.sh
-         |  GROUP BY c.a, c.b)
-         |SELECT a, b, jaccard FROM (
-         |  SELECT i.a, i.b,
-         |    CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
-         |  FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
-         |WHERE jaccard >= 0.9""".stripMargin
-    },
+    "q_dedup_minhash" ->
+      s"""WITH $sqlNearDupCtes
+         |$sqlNearDupPairs""".stripMargin,
 
     // the full cascade restricted to pairs with at least one batch-side doc —
     // what the incremental index path must reproduce exactly
-    "q_dedup_incremental" -> {
-      val estSum = (0 to 7).map(j => s"CAST(sa.h$j = sb.h$j AS INT)").mkString(" + ")
-      s"""WITH shingles AS ($sqlShingles5),
-         |sig AS ($sqlSig8),
-         |bands AS ($sqlBands),
-         |cand AS ($sqlCand),
-         |pruned AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sig sa ON c.a = sa.doc_id JOIN sig sb ON c.b = sb.doc_id
-         |  WHERE $estSum >= 6),
-         |sets AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT c.a, c.b, count(*) AS i
-         |  FROM pruned c JOIN shingles sa ON c.a = sa.doc_id
-         |  JOIN shingles sb ON c.b = sb.doc_id AND sa.sh = sb.sh
-         |  GROUP BY c.a, c.b)
-         |SELECT a, b, jaccard FROM (
-         |  SELECT i.a, i.b,
-         |    CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
-         |  FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
-         |WHERE jaccard >= 0.9 AND (a % 4 = 0 OR b % 4 = 0)""".stripMargin
-    },
+    "q_dedup_incremental" ->
+      s"""WITH $sqlNearDupCtes
+         |$sqlNearDupPairs AND (a % 4 = 0 OR b % 4 = 0)""".stripMargin,
 
-    "q_dedup_clusters" -> {
-      val estSum = (0 to 7).map(j => s"CAST(sa.h$j = sb.h$j AS INT)").mkString(" + ")
-      s"""WITH RECURSIVE shingles AS ($sqlShingles5),
-         |sig AS ($sqlSig8),
-         |bands AS ($sqlBands),
-         |cand AS ($sqlCand),
-         |pruned AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sig sa ON c.a = sa.doc_id JOIN sig sb ON c.b = sb.doc_id
-         |  WHERE $estSum >= 6),
-         |sets AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT c.a, c.b, count(*) AS i
-         |  FROM pruned c JOIN shingles sa ON c.a = sa.doc_id
-         |  JOIN shingles sb ON c.b = sb.doc_id AND sa.sh = sb.sh
-         |  GROUP BY c.a, c.b),
-         |nd AS (
-         |  SELECT a, b FROM (
-         |    SELECT i.a, i.b,
-         |      CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
-         |    FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
-         |  WHERE jaccard >= 0.9),
-         |edges AS (SELECT a, b FROM nd UNION SELECT b AS a, a AS b FROM nd),
-         |walk AS (
-         |  SELECT DISTINCT a AS id, a AS comp FROM edges
-         |  UNION
-         |  SELECT e.b AS id, w.comp FROM walk w JOIN edges e ON w.id = e.a)
-         |SELECT id AS doc_id, min(comp) AS canonical_id FROM walk GROUP BY id""".stripMargin
-    },
+    "q_dedup_clusters" ->
+      s"""WITH RECURSIVE $sqlNearDupCtes,
+         |$sqlClusterCtes
+         |SELECT id AS doc_id, min(comp) AS canonical_id FROM walk GROUP BY id""".stripMargin,
 
     // clusters via the same recursive CTE, then highest quality per cluster
-    // (tie: min doc_id) — the same float quality formula as q_text_quality,
-    // bit-identical across engines
-    "q_dedup_keep_best" -> {
-      val estSum = (0 to 7).map(j => s"CAST(sa.h$j = sb.h$j AS INT)").mkString(" + ")
-      s"""WITH RECURSIVE shingles AS ($sqlShingles5),
-         |sig AS ($sqlSig8),
-         |bands AS ($sqlBands),
-         |cand AS ($sqlCand),
-         |pruned AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sig sa ON c.a = sa.doc_id JOIN sig sb ON c.b = sb.doc_id
-         |  WHERE $estSum >= 6),
-         |sets AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT c.a, c.b, count(*) AS i
-         |  FROM pruned c JOIN shingles sa ON c.a = sa.doc_id
-         |  JOIN shingles sb ON c.b = sb.doc_id AND sa.sh = sb.sh
-         |  GROUP BY c.a, c.b),
-         |nd AS (
-         |  SELECT a, b FROM (
-         |    SELECT i.a, i.b,
-         |      CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
-         |    FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
-         |  WHERE jaccard >= 0.9),
-         |edges AS (SELECT a, b FROM nd UNION SELECT b AS a, a AS b FROM nd),
-         |walk AS (
-         |  SELECT DISTINCT a AS id, a AS comp FROM edges
-         |  UNION
-         |  SELECT e.b AS id, w.comp FROM walk w JOIN edges e ON w.id = e.a),
-         |clusters AS (SELECT id AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY id),
-         |quality AS (
-         |  SELECT doc_id,
-         |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.5
-         |    + least((CAST(length(text) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 5.0, 1.0) * 0.25
-         |    + least(CAST(len(list_filter(string_split(text, ' '), x -> x IN $stopSql)) AS DOUBLE)
-         |            / CAST(len(string_split(text, ' ')) AS DOUBLE) * 4.0, 1.0) * 0.25 AS q
-         |  FROM documents),
-         |ranked AS (
-         |  SELECT c.cluster_id, c.doc_id, q.q,
-         |    row_number() OVER (PARTITION BY c.cluster_id ORDER BY q.q DESC, c.doc_id) AS rn
-         |  FROM clusters c JOIN quality q ON c.doc_id = q.doc_id)
+    "q_dedup_keep_best" ->
+      s"""WITH RECURSIVE $sqlNearDupCtes,
+         |$sqlClusterCtes,
+         |$sqlKeepBestCtes
          |SELECT r.doc_id, k.doc_id AS keep_id
-         |FROM ranked r JOIN ranked k ON r.cluster_id = k.cluster_id AND k.rn = 1""".stripMargin
-    },
+         |FROM ranked r JOIN ranked k ON r.cluster_id = k.cluster_id AND k.rn = 1""".stripMargin,
 
     // keep-best mapping extended one step: the corpus with every non-keeper
     // excised (same CTE chain, final anti-join against the losers)
-    "q_dedup_rewrite" -> {
-      val estSum = (0 to 7).map(j => s"CAST(sa.h$j = sb.h$j AS INT)").mkString(" + ")
-      s"""WITH RECURSIVE shingles AS ($sqlShingles5),
-         |sig AS ($sqlSig8),
-         |bands AS ($sqlBands),
-         |cand AS ($sqlCand),
-         |pruned AS (
-         |  SELECT c.a, c.b FROM cand c
-         |  JOIN sig sa ON c.a = sa.doc_id JOIN sig sb ON c.b = sb.doc_id
-         |  WHERE $estSum >= 6),
-         |sets AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY 1),
-         |inter AS (
-         |  SELECT c.a, c.b, count(*) AS i
-         |  FROM pruned c JOIN shingles sa ON c.a = sa.doc_id
-         |  JOIN shingles sb ON c.b = sb.doc_id AND sa.sh = sb.sh
-         |  GROUP BY c.a, c.b),
-         |nd AS (
-         |  SELECT a, b FROM (
-         |    SELECT i.a, i.b,
-         |      CAST(i.i AS DOUBLE) / CAST(na.n + nb.n - i.i AS DOUBLE) AS jaccard
-         |    FROM inter i JOIN sets na ON i.a = na.doc_id JOIN sets nb ON i.b = nb.doc_id) j
-         |  WHERE jaccard >= 0.9),
-         |edges AS (SELECT a, b FROM nd UNION SELECT b AS a, a AS b FROM nd),
-         |walk AS (
-         |  SELECT DISTINCT a AS id, a AS comp FROM edges
-         |  UNION
-         |  SELECT e.b AS id, w.comp FROM walk w JOIN edges e ON w.id = e.a),
-         |clusters AS (SELECT id AS doc_id, min(comp) AS cluster_id FROM walk GROUP BY id),
-         |quality AS (
-         |  SELECT doc_id,
-         |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) * 0.5
-         |    + least((CAST(length(text) AS DOUBLE) / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 5.0, 1.0) * 0.25
-         |    + least(CAST(len(list_filter(string_split(text, ' '), x -> x IN $stopSql)) AS DOUBLE)
-         |            / CAST(len(string_split(text, ' ')) AS DOUBLE) * 4.0, 1.0) * 0.25 AS q
-         |  FROM documents),
-         |ranked AS (
-         |  SELECT c.cluster_id, c.doc_id, q.q,
-         |    row_number() OVER (PARTITION BY c.cluster_id ORDER BY q.q DESC, c.doc_id) AS rn
-         |  FROM clusters c JOIN quality q ON c.doc_id = q.doc_id)
+    "q_dedup_rewrite" ->
+      s"""WITH RECURSIVE $sqlNearDupCtes,
+         |$sqlClusterCtes,
+         |$sqlKeepBestCtes
          |SELECT d.doc_id, md5(d.text) AS digest
          |FROM documents d
          |WHERE d.doc_id NOT IN (
          |  SELECT r.doc_id FROM ranked r
          |  JOIN ranked k ON r.cluster_id = k.cluster_id AND k.rn = 1
-         |  WHERE r.doc_id <> k.doc_id)""".stripMargin
-    },
+         |  WHERE r.doc_id <> k.doc_id)""".stripMargin,
 
     "q_dedup_spans" ->
       """WITH d AS (SELECT doc_id, string_split(text, '. ') AS sl FROM documents),

@@ -76,8 +76,8 @@ class LlmSpec extends AnyFunSuite {
     val existing = docs.filter(col("doc_id") % 4 =!= 0)
     val newBatch = docs.filter(col("doc_id") % 4 === 0)
     val idxSets = Dedup.shingleSets(existing, "text", "doc_id", 5)
-    val idxSig = Dedup.minhashSignatures(idxSets, "doc_id", 8)
-    val (inc, newSets, newSig) = Dedup.incrementalNearDups(
+    val idxSig = Dedup.minhashSignatures(idxSets, "doc_id", 8).drop("shs")
+    val inc = Dedup.incrementalNearDups(
       newBatch, "text", "doc_id", idxSets, idxSig,
       k = 5, numHashes = 8, bands = 4, threshold = 0.6)
     val full = Dedup.minhashNearDups(docs, "text", "doc_id",
@@ -86,10 +86,30 @@ class LlmSpec extends AnyFunSuite {
     assert(TestSpark.rows(inc.select("a", "b", "jaccard"))
       === TestSpark.rows(full.select("a", "b", "jaccard")))
     assert(inc.count() > 0, "fixture produced no batch-side near-dup pairs")
-    // the returned index increments cover exactly the batch
-    assert(newSets.select("doc_id").as[Long].collect().toSet
-      === (0 until 24 by 4).map(_.toLong).toSet)
-    assert(newSig.columns.toSeq === idxSig.columns.toSeq)
+  }
+
+  test("maxBucketSize drops oversized band buckets on the full and incremental paths") {
+    // three identical docs put all three in every band bucket; the
+    // unrelated doc shares no bucket with them
+    val dup = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val docs = Seq((1L, dup), (2L, dup), (3L, dup),
+      (4L, "completely different content about spark engines and distributed joins")
+    ).toDF("doc_id", "text")
+    val existing = docs.filter(col("doc_id") =!= 3L)
+    val newBatch = docs.filter(col("doc_id") === 3L)
+    val idxSets = Dedup.shingleSets(existing, "text", "doc_id", 5)
+    val idxSig = Dedup.minhashSignatures(idxSets, "doc_id", 8).drop("shs")
+    def full(cap: Int) = TestSpark.rows(Dedup.minhashNearDups(docs, "text", "doc_id",
+      k = 5, numHashes = 8, bands = 4, threshold = 0.9, maxBucketSize = cap).select("a", "b"))
+    def inc(cap: Int) = TestSpark.rows(Dedup.incrementalNearDups(newBatch, "text", "doc_id",
+      idxSets, idxSig, k = 5, numHashes = 8, bands = 4, threshold = 0.9,
+      maxBucketSize = cap).select("a", "b"))
+    assert(full(2) === Set.empty[Seq[Any]])
+    assert(inc(2) === Set.empty[Seq[Any]])
+    assert(full(0) === Set(Seq(1L, 2L), Seq(1L, 3L), Seq(2L, 3L)))
+    assert(inc(0) === Set(Seq(1L, 3L), Seq(2L, 3L)))
+    // a cap at the bucket size keeps the bucket
+    assert(full(3) === full(0))
   }
 
   test("incremental rewrite: a better keeper arriving in the batch replaces the cached survivor") {
@@ -110,8 +130,8 @@ class LlmSpec extends AnyFunSuite {
     assert(q(10L) > q(1L), s"fixture: batch doc must out-score the cached keeper ($q)")
 
     val idxSets = Dedup.shingleSets(cached, "text", "doc_id", 5)
-    val idxSig = Dedup.minhashSignatures(idxSets, "doc_id", 8)
-    val (pairs, _, _) = Dedup.incrementalNearDups(
+    val idxSig = Dedup.minhashSignatures(idxSets, "doc_id", 8).drop("shs")
+    val pairs = Dedup.incrementalNearDups(
       batch, "text", "doc_id", idxSets, idxSig,
       k = 5, numHashes = 8, bands = 4, threshold = 0.4)
     assert(TestSpark.rows(pairs.select("a", "b")).map(_.take(2)) === Set(Seq(1L, 10L)))
@@ -119,23 +139,17 @@ class LlmSpec extends AnyFunSuite {
     // keep-best over the union, then the anti-join excision (the same chain
     // as q_dedup_rewrite, against the merged corpus)
     val all = cached.unionByName(batch)
-    val clusters = graft.er.ConnectedComponents.clusterMapping(pairs.select("a", "b"))
-      .select(col("messy_id").as("doc_id"), col("cluster_id"))
-    val scored = clusters.join(
-      all.select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("q")), "doc_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cluster_id").orderBy(col("q").desc, col("doc_id").asc)
-    val losers = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") > 1).select("doc_id")
+    val losers = Dedup.keepBest(all, pairs)
+      .filter(col("doc_id") =!= col("keep_id")).select("doc_id")
     val corpusOut = all.join(losers, Seq("doc_id"), "left_anti")
       .select("doc_id").as[Long].collect().toSet
     assert(corpusOut === Set(2L, 10L), "cached loser must be excised, batch keeper retained")
   }
 
   test("verified jaccard is exact set arithmetic") {
-    val sh = Dedup.shingles(corpus, "text", "doc_id", 5)
+    val sets = Dedup.shingleSets(corpus, "text", "doc_id", 5)
     val cand = Seq((1L, 4L)).toDF("a", "b")
-    val j = Dedup.verifiedJaccard(cand, sh, "doc_id").select("jaccard").as[Double].head()
+    val j = Dedup.verifiedJaccard(cand, sets, "doc_id").select("jaccard").as[Double].head()
     assert(j === 1.0) // identical texts -> identical shingle sets
   }
 

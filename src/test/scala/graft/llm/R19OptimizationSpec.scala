@@ -21,19 +21,14 @@ class R19OptimizationSpec extends AnyFunSuite {
     (5L, "the quick brown fox jumps over the lazy dog near the river bank today")
   ).toDF("doc_id", "text")
 
-  test("minhashSignaturesWithSets carries shs AND reproduces minhashSignatures bit-for-bit") {
+  test("minhashSignatures carries shs beside the h0..h7 signature columns") {
     val sets = Dedup.shingleSets(corpus, "text", "doc_id", 5)
-    val plain = Dedup.minhashSignatures(sets, "doc_id", 8)
-    val fused = Dedup.minhashSignaturesWithSets(sets, "doc_id", 8)
-    assert(fused.columns.toSeq ===
+    val sig = Dedup.minhashSignatures(sets, "doc_id", 8)
+    assert(sig.columns.toSeq ===
       ("doc_id" +: "shs" +: (0 until 8).map(j => s"h$j")))
-    // signature columns identical to the unfused form
-    val a = plain.orderBy("doc_id").collect().map(_.toSeq)
-    val b = fused.drop("shs").orderBy("doc_id").collect().map(_.toSeq)
-    assert(a.toSeq === b.toSeq)
     // the carried shs column is the shingle-set table's, untouched
     val shsA = sets.orderBy("doc_id").collect().map(_.getSeq[String](1))
-    val shsB = fused.orderBy("doc_id").collect().map(_.getSeq[String](1))
+    val shsB = sig.orderBy("doc_id").collect().map(_.getSeq[String](1))
     assert(shsA.toSeq === shsB.toSeq)
   }
 

@@ -480,6 +480,7 @@ def merge_flagship_points(keep, other):
     by_copies = {p["copies"]: p for p in other.get("points", [])}
     for p in keep.get("points", [])[:-1]:
         o = by_copies.get(p["copies"])
+        # only row-verified points fold, so a both-None graph_rows pair is refused on purpose
         if o and "total_sec" in o and "result_sec" in o \
                 and o.get("graph_rows") is not None \
                 and o["graph_rows"] == p.get("graph_rows") \
