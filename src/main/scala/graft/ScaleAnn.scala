@@ -129,9 +129,8 @@ object ScaleAnn {
 
     def searchIvf(nProbe: Int): Sample[org.apache.spark.sql.DataFrame] =
       best(s"ivf$nProbe") {
-        val out = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding",
-          nLists = nLists, k = k, nProbe = nProbe,
-          seedTable = Some(seeds), listTable = Some(lists))
+        val out = Similarity.ivfTopK(queries, "vec_id", "embedding", seeds, lists,
+          k = k, nProbe = nProbe)
           .localCheckpoint(true)
         out.count()
         out
@@ -181,9 +180,8 @@ object ScaleAnn {
 
     def searchPq(rr: Int, tag: String): Sample[org.apache.spark.sql.DataFrame] =
       best(tag) {
-        val out = Similarity.pqTopK(corpus, queries, "vec_id", "embedding",
-          m = pqM, nCodes = pqCodes, k = k, rerank = rr,
-          codebook = Some(cb), encTable = Some(encTable))
+        val out = Similarity.pqTopK(queries, "vec_id", "embedding", cb, encTable,
+          k = k, rerank = rr)
           .localCheckpoint(true)
         out.count()
         out
@@ -223,9 +221,7 @@ object ScaleAnn {
     val pqQuantErr = Similarity.pqQuantErr(corpus, "vec_id", "embedding", cb)
     val pqQuantErrTrained = Similarity.pqQuantErr(corpus, "vec_id", "embedding", cbT)
     val Sample(pqAdcT, pqAdcTSec, pqAdcTStraggler, loadPqAdcT) = best("pq_adc_trained") {
-      val out = Similarity.pqTopK(corpus, queries, "vec_id", "embedding",
-        m = pqM, nCodes = pqCodes, k = k, rerank = 0,
-        codebook = Some(cbT), encTable = Some(encT))
+      val out = Similarity.pqTopK(queries, "vec_id", "embedding", cbT, encT, k = k)
         .localCheckpoint(true)
       out.count()
       out
@@ -241,10 +237,8 @@ object ScaleAnn {
     }
     val ivfPqEnc = spark.read.parquet(s"$work/ivfpq.parquet")
     val Sample(pqIvf8, pqIvf8Sec, pqIvf8Straggler, loadPqIvf8) = best("pq_ivf8") {
-      val out = Similarity.ivfPqTopK(corpus, queries, "vec_id", "embedding",
-        nLists = nLists, m = pqM, nCodes = pqCodes, k = k, nProbe = 8,
-        rerank = pqRerankN, seedTable = Some(seeds), codebook = Some(cb),
-        encTable = Some(ivfPqEnc))
+      val out = Similarity.ivfPqTopK(queries, "vec_id", "embedding", seeds, cb, ivfPqEnc,
+        k = k, nProbe = 8, rerank = pqRerankN)
         .localCheckpoint(true)
       out.count()
       out
@@ -343,24 +337,22 @@ object ScaleAnn {
       Similarity.pqCodebookTrained(spreadCorpus, "vec_id", "embedding",
         pqM, pqCodes, pqTrainIters, Some(spreadSeedWhere))
     }
-    def spreadAdc(cbX: Array[Array[Array[Long]]], codes: Int, path: String, tag: String)
+    def spreadAdc(cbX: Array[Array[Array[Long]]], path: String, tag: String)
         : Sample[org.apache.spark.sql.DataFrame] = {
       val enc = Similarity.pqEncode(spreadCorpus, "vec_id", "embedding", cbX, "match_id")
       enc.write.mode("overwrite").parquet(path)
       val encRead = spark.read.parquet(path)
       best(tag) {
-        val out = Similarity.pqTopK(spreadCorpus, spreadQueries, "vec_id", "embedding",
-          m = pqM, nCodes = codes, k = k, rerank = 0,
-          codebook = Some(cbX), encTable = Some(encRead))
+        val out = Similarity.pqTopK(spreadQueries, "vec_id", "embedding", cbX, encRead, k = k)
           .localCheckpoint(true)
         out.count()
         out
       }
     }
     val Sample(spreadAdcU, spreadAdcSec, _, loadSpreadAdc) =
-      spreadAdc(spreadCb, pqCodes, s"$work/spread_pq.parquet", "spread_adc")
+      spreadAdc(spreadCb, s"$work/spread_pq.parquet", "spread_adc")
     val Sample(spreadAdcT, spreadAdcTSec, _, loadSpreadAdcT) =
-      spreadAdc(spreadCbT, pqCodes, s"$work/spread_pq_t.parquet", "spread_adc_trained")
+      spreadAdc(spreadCbT, s"$work/spread_pq_t.parquet", "spread_adc_trained")
     val spreadQuantErr = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb)
     val spreadQuantErrT = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCbT)
     // the knob that is SUPPOSED to move flat-ADC recall on a dense corpus is
@@ -378,9 +370,9 @@ object ScaleAnn {
         pqM, spreadCodes2, pqTrainIters, Some(s2Where))
     }
     val Sample(spreadAdc2U, spreadAdc2Sec, _, _) =
-      spreadAdc(spreadCb2, spreadCodes2, s"$work/spread_pq256.parquet", "spread_adc256")
+      spreadAdc(spreadCb2, s"$work/spread_pq256.parquet", "spread_adc256")
     val Sample(spreadAdc2T, spreadAdc2TSec, _, _) =
-      spreadAdc(spreadCb2T, spreadCodes2, s"$work/spread_pq256_t.parquet", "spread_adc256_trained")
+      spreadAdc(spreadCb2T, s"$work/spread_pq256_t.parquet", "spread_adc256_trained")
     val spreadQuantErr2 = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb2)
     val spreadQuantErr2T = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb2T)
     def spreadRecallOf(df: org.apache.spark.sql.DataFrame): Double =
@@ -422,9 +414,7 @@ object ScaleAnn {
       def recallWith(cb: Array[Array[Array[Long]]]): Double = {
         val enc = Similarity.pqEncode(sub, "vec_id", "embedding", cb, "match_id")
           .localCheckpoint(true)
-        Similarity.pqTopK(sub, subQ, "vec_id", "embedding",
-            m = pqM, nCodes = pqCodes, k = k, rerank = 0,
-            codebook = Some(cb), encTable = Some(enc))
+        Similarity.pqTopK(subQ, "vec_id", "embedding", cb, enc, k = k)
           .select("query_id", "match_id")
           .intersect(subExact.select("query_id", "match_id"))
           .count().toDouble / nSubExact

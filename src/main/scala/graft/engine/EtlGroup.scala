@@ -104,8 +104,9 @@ class EtlGroup(
     * Use for DAGs funneling into few terminal outputs whose intermediates
     * are cheap to recompute (measured at sf0.1: the 4-node as-of DAG runs
     * 38% faster composed); leave off — materialize-once — for expensive
-    * multi-consumer intermediates or restartable long pipelines. */
-  /** `inDbSingleConsumer = true` marks only [[singleConsumerIntermediateIds]]
+    * multi-consumer intermediates or restartable long pipelines.
+    *
+    * `inDbSingleConsumer = true` marks only [[singleConsumerIntermediateIds]]
     * — the subset where lazy composition is a pure win (no recompute
     * possible); multi-consumer intermediates stay materialize-once parquet.
     * Subsumed by `inDbIntermediates` when both are set. */

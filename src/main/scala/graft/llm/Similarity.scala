@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
   * scans the corpus once — the right plan when queries ≪ corpus. The LSH path
   * buckets by hyperplane sign bits so candidate generation is an equi-join on
   * the bucket key; at 1000 executors both paths shuffle only the top-k rows.
+  *
+  * Index lifecycle: every index artifact (seed centroids, inverted lists, PQ
+  * codebook, codes) is built by its own call and handed to the search as a
+  * required argument — build once per corpus snapshot, search many batches.
+  * All searches share one score/rank core: the same id/vector/norm prep, the
+  * same `normedCos` pair score and one top-k rank (score desc, match_id asc).
   */
 object Similarity {
 
@@ -30,19 +36,6 @@ object Similarity {
     * bit-identical: exact integer arithmetic, order-independent. */
   def qdot(a: Column, b: Column): Column = graft.expr.LongDotProduct(a, b)
 
-  /** Deterministic cosine from quantized vectors. */
-  def qcosine(a: Column, b: Column): Column =
-    qdot(a, b).cast("double") / (sqrt(qdot(a, a).cast("double")) * sqrt(qdot(b, b).cast("double")))
-
-  /** Sign-bucket key from the first `planes` dimensions — the cheapest
-    * deterministic bucket function (axis planes). On embeddings whose
-    * leading dimensions are correlated (PCA'd/learned embeddings) recall
-    * degrades silently; [[randomHyperplanes]] + [[signBucketPlanes]] is the
-    * production variant (charikar SimHash for cosine, STOC 2002). */
-  def signBucket(c: Column, planes: Int): Column =
-    expr(s"aggregate(transform(slice(${c.toString}, 1, $planes), " +
-      s"(x, i) -> shiftleft(CAST(CAST(x AS DOUBLE) >= 0.0 AS BIGINT), i)), 0L, (acc, v) -> acc + v)")
-
   private def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -51,15 +44,17 @@ object Similarity {
   }
 
   /** `planes` random hyperplane normals over `dims` dimensions, integer
-    * milliunit components — REAL sampled hyperplanes for sign-LSH, not the
-    * axis placeholder. Deterministic from `seed` via splitmix64 (so the
-    * index artifact is reproducible and the oracle can embed the same
-    * constants as literals); each component is a sum of four uniforms
+    * milliunit components — REAL sampled hyperplanes for sign-LSH (charikar
+    * SimHash for cosine, STOC 2002): axis planes degrade silently when the
+    * leading dims are correlated; sampled planes don't care how the
+    * embedding basis is oriented. Deterministic from `seed` via splitmix64
+    * (so the index artifact is reproducible and the oracle can embed the
+    * same constants as literals); each component is a sum of four uniforms
     * recentered to [-2000, 2000] (Irwin-Hall ≈ Gaussian — close enough to
     * rotation-invariant for bucketing, and exactly representable as
     * integers). Bounded driver state (planes × dims longs), same lifecycle
-    * contract as [[pqCodebook]]/`seedTable`: generate once per index, store
-    * alongside it, probe against the stored copy. */
+    * contract as [[pqCodebook]]/[[kmeansSeeds]]: generate once per index,
+    * store alongside it, probe against the stored copy. */
   def randomHyperplanes(dims: Int, planes: Int, seed: Long): Array[Array[Long]] =
     Array.tabulate(planes)(p => Array.tabulate(dims) { d =>
       (0 until 4).map(r => math.floorMod(
@@ -68,133 +63,143 @@ object Similarity {
 
   /** Sign-bucket key over a QUANTIZED vector column `qv` against stored
     * hyperplanes: bit i = (qv · plane_i >= 0) — exact integer dot products,
-    * deterministic in any engine. */
-  def signBucketPlanes(qv: Column, planes: Array[Array[Long]]): Column =
+    * deterministic in any engine. The key is one 64-bit long, so 1 to 64
+    * planes: JVM shifts wrap modulo 64, and a 65th plane would land on bit 0
+    * and make buckets (and multi-probe flips) collide. */
+  def signBucketPlanes(qv: Column, planes: Array[Array[Long]]): Column = {
+    require(planes.length >= 1 && planes.length <= 64,
+      s"signBucketPlanes: the bucket key is 64 bits, so it takes 1 to 64 planes, got ${planes.length}")
     planes.zipWithIndex.map { case (p, i) =>
       shiftleft((qdot(qv, typedLit(p.toSeq)) >= 0).cast("long"), i)
     }.reduce(_ + _)
+  }
 
   /** Cosine from a precomputed-norm pair: `qdot(a,a)`/`qdot(b,b)` are
     * constant per VECTOR, so recomputing them per PAIR (what a literal
-    * `qcosine` in a join does) triples the arithmetic of every candidate
+    * cosine in a join does) triples the arithmetic of every candidate
     * scoring join. Each side carries its norm column instead; the value is
     * bit-identical (same integer self-dot, same IEEE sqrt, evaluated once). */
   private[llm] def normedCos(dot: Column, na: Column, nb: Column): Column =
     dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
 
+  // ---------------------------------------------------------------------
+  // The score/rank core every search shares: a query side (query_id, qv,
+  // qn) and a corpus side (match_id, cv, cn), one pair cosine, one top-k.
+  // ---------------------------------------------------------------------
+
+  /** One search side: (`id`, quantized vector `v`, its self-dot `n`).
+    * `between` adds columns (a bucket key) ahead of the norm. */
+  private def prep(df: DataFrame, idCol: String, embCol: String, id: String, v: String,
+                   n: String, between: DataFrame => DataFrame = d => d): DataFrame =
+    between(df.select(col(idCol).as(id), quantize(col(embCol)).as(v)))
+      .withColumn(n, qdot(col(v), col(v)))
+
+  /** An index table's (v, vn) renamed to one search side's (pv, pn). */
+  private def asSide(index: DataFrame, p: String): DataFrame =
+    index.withColumnRenamed("v", s"${p}v").withColumnRenamed("vn", s"${p}n")
+
+  /** Exact cosine of a joined (qv, qn) × (cv, cn) pair. */
+  private def pairCos: Column = normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn"))
+
+  /** (query_id, match_id, `score` AS `name`) over candidate pairs; a query
+    * never matches itself. */
+  private def scorePairs(joined: DataFrame, score: Column, name: String): DataFrame =
+    joined.filter(col("query_id") =!= col("match_id"))
+      .select(col("query_id"), col("match_id"), score.as(name))
+
+  /** The top `k` rows per query by `score` desc, ties to the smaller match_id. */
+  private def rankTopK(scored: DataFrame, score: String, k: Int): DataFrame =
+    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
+      Seq(col(score).desc, col("match_id").asc), k)
+
+  private def cosTopK(joined: DataFrame, k: Int): DataFrame =
+    rankTopK(scorePairs(joined, pairCos, "cos"), "cos", k)
+
   /** Brute-force cosine top-k: each query row against the whole corpus.
     * `queries` must be small (it is broadcast); ranking ties break on id. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                     embCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("qv"))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    val c = corpus.select(col(idCol).as("match_id"), quantize(col(embCol)).as("cv"))
-      .withColumn("cn", qdot(col("cv"), col("cv")))
-    val scored = broadcast(q).crossJoin(c)
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-      Seq(col("cos").desc, col("match_id").asc), k)
-  }
+                     embCol: String, k: Int): DataFrame =
+    cosTopK(broadcast(prep(queries, idCol, embCol, "query_id", "qv", "qn"))
+      .crossJoin(prep(corpus, idCol, embCol, "match_id", "cv", "cn")), k)
 
-  /** LSH-bucketed top-k: queries only compare against corpus vectors in the
-    * same sign bucket — the 100 TB path (equi-join on bucket, no full scan per
-    * query). Recall < 1 by construction; verify/multiprobe as needed. */
+  /** LSH-bucketed top-k against STORED hyperplanes ([[randomHyperplanes]]):
+    * queries only compare against corpus vectors in the same sign bucket —
+    * the 100 TB path (equi-join on bucket, no full scan per query). Recall
+    * < 1 by construction; verify/multiprobe as needed. */
   def bucketTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 embCol: String, planes: Int, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("qv"),
-      signBucket(col(embCol), planes).as("bucket"))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    val c = corpus.select(col(idCol).as("match_id"), quantize(col(embCol)).as("cv"),
-      signBucket(col(embCol), planes).as("bucket"))
-      .withColumn("cn", qdot(col("cv"), col("cv")))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-      Seq(col("cos").desc, col("match_id").asc), k)
-  }
-
-  /** [[bucketTopK]] against STORED hyperplanes ([[randomHyperplanes]]) —
-    * the production bucket function: axis planes degrade silently when the
-    * leading dims are correlated; sampled planes don't care how the
-    * embedding basis is oriented. Same dataflow: equi-join on the bucket
-    * key, no full scan per query. */
-  def bucketTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 embCol: String, planes: Array[Array[Long]], k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("qv"))
-      .withColumn("bucket", signBucketPlanes(col("qv"), planes))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    val c = corpus.select(col(idCol).as("match_id"), quantize(col(embCol)).as("cv"))
-      .withColumn("bucket", signBucketPlanes(col("cv"), planes))
-      .withColumn("cn", qdot(col("cv"), col("cv")))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-      Seq(col("cos").desc, col("match_id").asc), k)
-  }
+                 embCol: String, planes: Array[Array[Long]], k: Int): DataFrame =
+    lshTopK(corpus, queries, idCol, embCol, planes, k)(
+      _.withColumn("bucket", signBucketPlanes(col("qv"), planes)))
 
   /** Multi-probe LSH top-k: each query probes its own sign bucket PLUS every
-    * 1-bit-flip neighbor bucket (`planes` + 1 probes) — the standard recall
-    * fix for bucketed LSH (multi-probe LSH, Lv et al., VLDB 2007: near
-    * neighbors that fall just across one hyperplane land in a bucket at
-    * Hamming distance 1). Candidates are a strict superset of [[bucketTopK]]'s
-    * (probe-1 is one of the probes), so recall can only improve; cost is
-    * bounded at (planes+1)× the probe-1 candidate set — still an equi-join on
-    * the bucket key, no full scan. A (query, match) pair arises via at most
-    * one probe (a corpus vector has exactly one bucket; the probe set is
-    * distinct), so no dedup step is needed. */
+    * 1-bit-flip neighbor bucket (planes.length + 1 probes) — the standard
+    * recall fix for bucketed LSH (multi-probe LSH, Lv et al., VLDB 2007:
+    * near neighbors that fall just across one hyperplane land in a bucket at
+    * Hamming distance 1). Candidates are a strict superset of
+    * [[bucketTopK]]'s (probe-1 is one of the probes), so recall can only
+    * improve; cost is bounded at (planes+1)× the probe-1 candidate set —
+    * still an equi-join on the bucket key, no full scan. A (query, match)
+    * pair arises via at most one probe (a corpus vector has exactly one
+    * bucket; the probe set is distinct), so no dedup step is needed. */
   def multiProbeTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                     embCol: String, planes: Int, k: Int): DataFrame = {
-    val probeBuckets = {
-      val own = signBucket(col(embCol), planes)
-      explode(array(own +: (0 until planes).map(i => own.bitwiseXOR(lit(1L << i))): _*))
-    }
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("qv"),
-      probeBuckets.as("bucket"))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    val c = corpus.select(col(idCol).as("match_id"), quantize(col(embCol)).as("cv"),
-      signBucket(col(embCol), planes).as("bucket"))
-      .withColumn("cn", qdot(col("cv"), col("cv")))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-      Seq(col("cos").desc, col("match_id").asc), k)
-  }
-
-  /** [[multiProbeTopK]] against STORED hyperplanes: own bucket + every
-    * 1-bit-flip neighbor (planes.length + 1 probes), candidates a strict
-    * superset of the stored-plane [[bucketTopK]]'s. */
-  def multiProbeTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                     embCol: String, planes: Array[Array[Long]], k: Int): DataFrame = {
-    val nb = planes.length
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("qv"))
+                     embCol: String, planes: Array[Array[Long]], k: Int): DataFrame =
+    lshTopK(corpus, queries, idCol, embCol, planes, k)(q => q
       .withColumn("own", signBucketPlanes(col("qv"), planes))
-      .withColumn("bucket",
-        explode(array(col("own") +: (0 until nb).map(i => col("own").bitwiseXOR(lit(1L << i))): _*)))
-      .drop("own")
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    val c = corpus.select(col(idCol).as("match_id"), quantize(col(embCol)).as("cv"))
-      .withColumn("bucket", signBucketPlanes(col("cv"), planes))
-      .withColumn("cn", qdot(col("cv"), col("cv")))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-      Seq(col("cos").desc, col("match_id").asc), k)
-  }
+      .withColumn("bucket", explode(array(
+        col("own") +: planes.indices.map(i => col("own").bitwiseXOR(lit(1L << i))): _*)))
+      .drop("own"))
+
+  /** The LSH search: the corpus side carries its own bucket, the query side
+    * the bucket column(s) `queryBucket` adds, joined on the bucket key. */
+  private def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, embCol: String,
+                      planes: Array[Array[Long]], k: Int)(
+                      queryBucket: DataFrame => DataFrame): DataFrame =
+    cosTopK(prep(queries, idCol, embCol, "query_id", "qv", "qn", queryBucket)
+      .join(prep(corpus, idCol, embCol, "match_id", "cv", "cn",
+        _.withColumn("bucket", signBucketPlanes(col("cv"), planes))), Seq("bucket")), k)
+
+  /** The untrained seed rule every index starts from: the vectors with id <
+    * `n` — or, when given, those `seedWhere` selects — as (list_id, sv) seed
+    * rows. The default is the oracle-verifiable convention, but it is only a
+    * good initialization when low ids are spread across the corpus — on a
+    * corpus where consecutive ids are near-duplicates (replicated or crawled
+    * data) it seeds every list inside one tight neighborhood (and every PQ
+    * subspace codebook collapses to a point). Pass a spread predicate (e.g.
+    * a stride: `id % (n / nLists) == 0`) for such corpora; list ids are the
+    * selected vectors' ids either way. */
+  private[graft] def untrainedSeeds(corpus: DataFrame, idCol: String, embCol: String, n: Int,
+                                    seedWhere: Option[Column] = None): DataFrame =
+    corpus.filter(seedWhere.getOrElse(col(idCol) < n))
+      .select(col(idCol).as("list_id"), quantize(col(embCol)).as("sv"))
+
+  /** [[untrainedSeeds]] on the driver: the first `n` (id, vector) pairs in id order. */
+  private def seedVectors(corpus: DataFrame, idCol: String, embCol: String, n: Int,
+                          seedWhere: Option[Column]): Array[(Long, Array[Long])] =
+    untrainedSeeds(corpus, idCol, embCol, n, seedWhere)
+      .select(col("list_id").cast("long"), col("sv"))
+      .collect().sortBy(_.getLong(0)).take(n)
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+
+  private def sqNorm(v: Array[Long]): Long = v.foldLeft(0L)((a, x) => a + x * x)
+
+  /** The nearest seed list of a quantized vector column `v` with norm `vn`
+    * (argmax seed-cosine, ties → smallest list id) as ONE literal
+    * expression: `array_max` over per-seed (cosine, -list_id) structs picks
+    * the max cosine, ties to the LARGEST negated id = smallest list id —
+    * the same (c desc, list asc) order a join+window formulation uses, on
+    * the same doubles. `seeds` are bounded driver state (nLists rows). */
+  private def nearestList(seeds: Seq[(Long, Array[Long])]): Column =
+    -array_max(array(seeds.map { case (lid, sv) =>
+      struct(
+        normedCos(qdot(col("v"), typedLit(sv.toSeq)), col("vn"), lit(sqNorm(sv))).as("c"),
+        lit(-lid).as("nl"))
+    }: _*)).getField("nl")
 
   /** Deterministic Lloyd-trained coarse quantizer for [[ivfTopK]]: start from
-    * the first `nLists` vectors as seeds and run `iters` fixed k-means rounds.
-    * Every step is cross-engine exact, so the trained index is
-    * oracle-verifiable end-to-end:
+    * [[untrainedSeeds]] (the first `nLists` vectors, or those `seedWhere`
+    * selects) and run `iters` fixed k-means rounds. Every step is
+    * cross-engine exact, so the trained index is oracle-verifiable
+    * end-to-end:
     *  - assignment: argmax seed-cosine over integer vectors (ties → smallest
     *    list id) — integer dot products, deterministic;
     *  - update: element-wise floor(sum / count) back to integer milliunits.
@@ -208,51 +213,26 @@ object Similarity {
     * Execution is the MLlib k-means shape: the centroid table is nLists ×
     * dims integers — driver state, like Spark's broadcast centers — so each
     * round is ONE distributed pass: the argmax over seeds is a literal
-    * expression (`array_max` over (cos, -list) structs, no join, no window),
-    * and the per-list/per-dim sums are a single map-side-combinable
-    * aggregate whose nLists result rows collect back to the driver for the
-    * exact floor(sum/count) update. The previous formulation spent 4
-    * exchanges + an eager checkpoint per round on the same arithmetic
-    * (measured 2.7s vs oracle 0.6s at sf0.1; one-pass rounds halve it). */
+    * expression (no join, no window), and the per-list/per-dim sums are a
+    * single map-side-combinable aggregate whose nLists result rows collect
+    * back to the driver for the exact floor(sum/count) update. The previous
+    * formulation spent 4 exchanges + an eager checkpoint per round on the
+    * same arithmetic (measured 2.7s vs oracle 0.6s at sf0.1; one-pass rounds
+    * halve it). */
   def kmeansSeeds(corpus: DataFrame, idCol: String, embCol: String,
-                  nLists: Int, iters: Int): DataFrame =
-    kmeansSeeds(corpus, idCol, embCol, nLists, iters, None)
-
-  /** [[kmeansSeeds]] with an explicit seed-selection predicate. The default
-    * (`idCol < nLists`) is the oracle-verifiable convention, but it is only
-    * a good initialization when low ids are spread across the corpus — on a
-    * corpus where consecutive ids are near-duplicates (replicated or crawled
-    * data) it seeds every list inside one tight neighborhood and Lloyd
-    * rounds cannot recover balance. Pass a spread predicate (e.g. a stride:
-    * `id % (n / nLists) == 0`) for such corpora; list ids are the selected
-    * vectors' ids either way. */
-  def kmeansSeeds(corpus: DataFrame, idCol: String, embCol: String,
-                  nLists: Int, iters: Int, seedWhere: Option[Column]): DataFrame = {
+                  nLists: Int, iters: Int, seedWhere: Option[Column] = None): DataFrame = {
     val spark = corpus.sparkSession
     val idType = corpus.schema(idCol).dataType
     // seed init: nLists rows — driver state from here on
-    var seeds: Array[(Long, Array[Long])] = corpus
-      .filter(seedWhere.getOrElse(col(idCol) < nLists))
-      .select(col(idCol).cast("long"), quantize(col(embCol)))
-      .collect().sortBy(_.getLong(0)).take(nLists)
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+    var seeds = seedVectors(corpus, idCol, embCol, nLists, seedWhere)
     require(seeds.nonEmpty, s"kmeansSeeds: seed predicate selected no vectors")
 
     val emb = corpus.select(quantize(col(embCol)).as("v"))
       .withColumn("vn", qdot(col("v"), col("v")))
     for (_ <- 1 to iters) {
       val dims = seeds.head._2.length
-      // (cosine, -list_id) structs: array_max picks max cosine, ties to the
-      // LARGEST negated id = smallest list id — the same (c desc, list asc)
-      // order the window formulation used, on the same doubles
-      val scored = seeds.map { case (lid, sv) =>
-        val sn = sv.foldLeft(0L)((acc, x) => acc + x * x) // exact, = qdot(sv,sv)
-        struct(
-          normedCos(qdot(col("v"), typedLit(sv.toSeq)), col("vn"), lit(sn)).as("c"),
-          lit(-lid).as("nl"))
-      }
       val sums = emb
-        .withColumn("list_id", -array_max(array(scored: _*)).getField("nl"))
+        .withColumn("list_id", nearestList(seeds))
         .groupBy("list_id")
         .agg(count(lit(1)).as("n"),
           (0 until dims).map(i => sum(col("v").getItem(i)).as(s"s$i")): _*)
@@ -278,32 +258,23 @@ object Similarity {
     * ties → smallest list id) — the IVF index-build step. Zero shuffle: the
     * seed table is bounded driver state (nLists rows, same contract as MLlib
     * k-means centers and [[kmeansSeeds]]'s own assignment), so the argmax is
-    * a literal `array_max` over per-seed (cosine, -list_id) structs — a
-    * narrow map over the corpus, no join, no window. Arithmetic is identical
-    * to the former join+window formulation (same integer dots, same IEEE
-    * doubles, same tie order), so results are bit-for-bit unchanged.
+    * a literal expression — a narrow map over the corpus, no join, no
+    * window. Arithmetic is identical to the former join+window formulation
+    * (same integer dots, same IEEE doubles, same tie order), so results are
+    * bit-for-bit unchanged.
     *
     * Output: (outId, list_id: long, v, vn) — materialize this once per
-    * corpus snapshot and hand it to [[ivfTopK]] as `listTable` to amortize
-    * the index build across query batches (the production IVF lifecycle).
-    * At 100 TB this is the only corpus-wide pass; per-batch search cost is
-    * then queries × (corpus/nLists) × nProbe. */
+    * corpus snapshot and hand it to [[ivfTopK]] as `lists` to amortize the
+    * index build across query batches (the production IVF lifecycle). At
+    * 100 TB this is the only corpus-wide pass; per-batch search cost is then
+    * queries × (corpus/nLists) × nProbe. */
   def assignToLists(df: DataFrame, idCol: String, embCol: String,
                     seeds: DataFrame, outId: String): DataFrame = {
     val seedArr = seeds.select(col("list_id").cast("long"), col("sv"))
-      .collect().map { r =>
-        val sv = r.getSeq[Long](1).toArray
-        (r.getLong(0), sv, sv.foldLeft(0L)((a, x) => a + x * x))
-      }.sortBy(_._1)
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
     require(seedArr.nonEmpty, "assignToLists needs a non-empty seed table")
-    val scored = seedArr.map { case (lid, sv, sn) =>
-      struct(
-        normedCos(qdot(col("v"), typedLit(sv.toSeq)), col("vn"), lit(sn)).as("c"),
-        lit(-lid).as("nl"))
-    }
-    df.select(col(idCol).as(outId), quantize(col(embCol)).as("v"))
-      .withColumn("vn", qdot(col("v"), col("v")))
-      .withColumn("list_id", -array_max(array(scored.toIndexedSeq: _*)).getField("nl"))
+    prep(df, idCol, embCol, outId, "v", "vn")
+      .withColumn("list_id", nearestList(seedArr.toIndexedSeq))
       .select(col(outId), col("list_id"), col("v"), col("vn"))
   }
 
@@ -317,8 +288,7 @@ object Similarity {
     if (p == 1) assignToLists(df, idCol, embCol, seeds, outId)
     else {
       val withNorm = seeds.withColumn("sn", qdot(col("sv"), col("sv")))
-      val scored = df.select(col(idCol).as(outId), quantize(col(embCol)).as("v"))
-        .withColumn("vn", qdot(col("v"), col("v")))
+      val scored = prep(df, idCol, embCol, outId, "v", "vn")
         .crossJoin(broadcast(withNorm))
         .select(col(outId), col("v"), col("vn"), col("list_id").cast("long").as("list_id"),
           normedCos(qdot(col("v"), col("sv")), col("vn"), col("sn")).as("c"))
@@ -327,33 +297,20 @@ object Similarity {
         .select(col(outId), col("list_id"), col("v"), col("vn"))
     }
 
-  /** IVF-style ANN: a coarse quantizer (the first `nLists` vectors as
-    * deterministic seed centroids, Lloyd-refined for `trainIters` rounds via
-    * [[kmeansSeeds]] when `trainIters` > 0) partitions the corpus into
-    * inverted lists; each query probes its `nProbe` nearest lists (corpus
-    * vectors always live in exactly ONE list, so a (query, match) pair arises
-    * via at most one probe — no dedup step). Against brute force this divides
-    * the scanned corpus by ~nLists/nProbe; nProbe is the standard IVF recall
-    * knob (probe-1 = fastest/lowest recall, nProbe = nLists degenerates to
-    * exact). The dataflow (assign via argmax seed-cosine → equi-join on list
-    * id → local top-k) is identical trained or not, and every step is
-    * integer-exact, so the whole index build + search is oracle-verifiable.
-    *
-    * `seedTable` (schema (list_id, sv: array<bigint>)) and `listTable` (a
-    * materialized [[assignToLists]] result) let a caller train and build
-    * ONCE and amortize both across query batches; without them each call
-    * re-derives seeds and re-assigns the corpus (one narrow corpus pass). */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              embCol: String, nLists: Int, k: Int, nProbe: Int = 1,
-              trainIters: Int = 0, seedTable: Option[DataFrame] = None,
-              listTable: Option[DataFrame] = None): DataFrame = {
-    val seeds = seedTable.getOrElse {
-      if (trainIters > 0) kmeansSeeds(corpus, idCol, embCol, nLists, trainIters)
-      else corpus.filter(col(idCol) < nLists)
-        .select(col(idCol).as("list_id"), quantize(col(embCol)).as("sv"))
-    }
-
-    val lists = listTable.getOrElse(assignToLists(corpus, idCol, embCol, seeds, "match_id"))
+  /** IVF-style ANN: a coarse quantizer (`seeds`, schema (list_id, sv:
+    * array<bigint>) — [[untrainedSeeds]] or Lloyd-trained [[kmeansSeeds]])
+    * partitions the corpus into inverted lists (`lists`, a materialized
+    * [[assignToLists]] result with outId "match_id"); each query probes its
+    * `nProbe` nearest lists (corpus vectors always live in exactly ONE list,
+    * so a (query, match) pair arises via at most one probe — no dedup step).
+    * Against brute force this divides the scanned corpus by ~nLists/nProbe;
+    * nProbe is the standard IVF recall knob (probe-1 = fastest/lowest
+    * recall, nProbe = nLists degenerates to exact). The dataflow (assign via
+    * argmax seed-cosine → equi-join on list id → local top-k) is identical
+    * trained or not, and every step is integer-exact, so the whole index
+    * build + search is oracle-verifiable. */
+  def ivfTopK(queries: DataFrame, idCol: String, embCol: String,
+              seeds: DataFrame, lists: DataFrame, k: Int, nProbe: Int = 1): DataFrame = {
     val probes = probeAssign(queries, idCol, embCol, seeds, "query_id", nProbe)
     // broadcast the probe side: the query batch is small by contract, and a
     // shuffle join would repartition the corpus by list_id — nLists distinct
@@ -361,13 +318,7 @@ object Similarity {
     // nProbe=1 straggler). Broadcasting keeps the corpus in its natural even
     // partitioning; scoring work per task is then proportional to rows
     // scanned, regardless of which lists are probed.
-    val scored = broadcast(probes.withColumnRenamed("v", "qv").withColumnRenamed("vn", "qn"))
-      .join(lists.withColumnRenamed("v", "cv").withColumnRenamed("vn", "cn"), Seq("list_id"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"),
-        normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-    graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-      Seq(col("cos").desc, col("match_id").asc), k)
+    cosTopK(broadcast(asSide(probes, "q")).join(asSide(lists, "c"), Seq("list_id")), k)
   }
 
   // ---------------------------------------------------------------------
@@ -389,35 +340,34 @@ object Similarity {
   // Same determinism contract as the rest of this module: milliunit
   // integer vectors, integer sub-dots, integer ADC scores — bit-identical
   // in any engine, so codebook + encode + search are oracle-verifiable
-  // end-to-end (ties break to the smallest code / match id).
+  // end-to-end (ties break to the smallest code / match id). The codebook
+  // fixes m, nCodes and the subspace width, so the searches read all three
+  // from it.
   // ---------------------------------------------------------------------
 
-  /** Codebook for [[pqEncode]]/[[pqTopK]]: the first `nCodes` corpus
-    * vectors' sub-vectors, per subspace (the deterministic untrained
-    * convention, mirroring [[ivfTopK]]'s seed rule — swap in per-subspace
-    * Lloyd refinement for production recall). Driver state: m × nCodes ×
-    * (d/m) integers. Returns cb(j)(c) = centroid c of subspace j. */
-  def pqCodebook(corpus: DataFrame, idCol: String, embCol: String,
-                 m: Int, nCodes: Int): Array[Array[Array[Long]]] =
-    pqCodebook(corpus, idCol, embCol, m, nCodes, None)
-
-  /** [[pqCodebook]] with an explicit seed predicate — same contract as
-    * [[kmeansSeeds]]' `seedWhere`: on corpora where consecutive ids are
-    * near-duplicates (replicated/crawled data), `id < nCodes` picks nCodes
-    * perturbations of ONE vector and every subspace codebook collapses to a
-    * point; pass a stride predicate to spread the seeds. */
+  /** Codebook for [[pqEncode]]/[[pqTopK]]: the [[untrainedSeeds]] vectors'
+    * (the first `nCodes`, or those `seedWhere` selects) sub-vectors, per
+    * subspace — the deterministic untrained convention; [[pqCodebookTrained]]
+    * adds per-subspace Lloyd refinement for production recall. Driver state:
+    * m × nCodes × (d/m) integers. Returns cb(j)(c) = centroid c of subspace
+    * j. */
   def pqCodebook(corpus: DataFrame, idCol: String, embCol: String, m: Int,
-                 nCodes: Int, seedWhere: Option[Column]): Array[Array[Array[Long]]] = {
-    val seeds = corpus.filter(seedWhere.getOrElse(col(idCol) < nCodes))
-      .select(col(idCol).cast("long"), quantize(col(embCol)))
-      .collect().sortBy(_.getLong(0)).take(nCodes)
-      .map(_.getSeq[Long](1).toArray)
+                 nCodes: Int, seedWhere: Option[Column] = None): Array[Array[Array[Long]]] = {
+    val seeds = seedVectors(corpus, idCol, embCol, nCodes, seedWhere).map(_._2)
     require(seeds.length == nCodes, s"pqCodebook: needs $nCodes seed vectors, got ${seeds.length}")
     val d = seeds.head.length
     require(d % m == 0, s"pqCodebook: dims $d not divisible by m=$m")
     val sub = d / m
     Array.tabulate(m)(j => seeds.map(_.slice(j * sub, j * sub + sub)))
   }
+
+  /** Subspace `j` of the quantized vector column `v`, `sub` dims wide. */
+  private def subSlice(v: String, j: Int, sub: Int): Column = slice(col(v), j * sub + 1, sub)
+
+  /** 2·x_j·c − c·c: the L2 argmin of ||x_j − c||² as an argmax with the
+    * per-row constant ||x_j||² dropped — an exact BIGINT. */
+  private def l2Score(xj: Column, c: Array[Long]): Column =
+    qdot(xj, typedLit(c.toSeq)) * 2 - lit(sqNorm(c))
 
   /** Per-subspace Lloyd refinement of a PQ codebook — [[pqCodebook]] seeds
     * run through `iters` deterministic k-means rounds, one per subspace
@@ -448,7 +398,7 @@ object Similarity {
         .select(explode(array((0 until m).map(j =>
           struct(lit(j).as("j"),
             element_at(col("codes"), j + 1).as("code"),
-            slice(col("v"), j * sub + 1, sub).as("xj"))): _*)).as("e"))
+            subSlice("v", j, sub).as("xj"))): _*)).as("e"))
         .select(col("e.j").as("j"), col("e.code").as("code"), col("e.xj").as("xj"))
       val sums = subRows.groupBy("j", "code")
         .agg(count(lit(1)).as("n"),
@@ -479,14 +429,9 @@ object Similarity {
     * re-rank is for); reconstruction error measures the codebook itself. */
   def pqQuantErr(corpus: DataFrame, idCol: String, embCol: String,
                  cb: Array[Array[Array[Long]]]): Double = {
-    val m = cb.length
     val sub = cb.head.head.length
-    val maxes = (0 until m).map { j =>
-      val xj = slice(col("v"), j * sub + 1, sub)
-      array_max(array(cb(j).map { cv =>
-        val cc = cv.foldLeft(0L)((a, x) => a + x * x)
-        qdot(xj, typedLit(cv.toSeq)) * 2 - lit(cc)
-      }.toIndexedSeq: _*))
+    val maxes = cb.indices.map { j =>
+      array_max(array(cb(j).map(cv => l2Score(subSlice("v", j, sub), cv)).toIndexedSeq: _*))
     }
     corpus.select(quantize(col(embCol)).as("v"))
       .select((qdot(col("v"), col("v")) - maxes.reduce(_ + _)).cast("double").as("err"))
@@ -501,80 +446,19 @@ object Similarity {
     * exact vector (`v`, `vn`) alongside for the optional re-rank. */
   def pqEncode(corpus: DataFrame, idCol: String, embCol: String,
                cb: Array[Array[Array[Long]]], outId: String): DataFrame =
-    corpus.select(col(idCol).as(outId), quantize(col(embCol)).as("v"))
-      .withColumn("vn", qdot(col("v"), col("v")))
-      .withColumn("codes", pqCodesExpr(cb))
+    prep(corpus, idCol, embCol, outId, "v", "vn").withColumn("codes", pqCodesExpr(cb))
 
   /** The m PQ code assignments as ONE literal-codebook array expression over
     * a quantized vector column `v` — the narrow argmax idiom shared by
-    * [[pqEncode]] and [[ivfPqTopK]]'s list-table encoder. */
+    * [[pqEncode]], [[ivfPqEncode]] and [[pqCodebookTrained]]. */
   private def pqCodesExpr(cb: Array[Array[Array[Long]]]): Column = {
-    val m = cb.length
     val sub = cb.head.head.length
-    val codeExprs = (0 until m).map { j =>
-      val xj = slice(col("v"), j * sub + 1, sub)
+    array(cb.indices.map { j =>
       val scored = cb(j).zipWithIndex.map { case (cv, c) =>
-        val cc = cv.foldLeft(0L)((a, x) => a + x * x)
-        struct((qdot(xj, typedLit(cv.toSeq)) * 2 - lit(cc)).as("s"), lit(-c).as("nc"))
+        struct(l2Score(subSlice("v", j, sub), cv).as("s"), lit(-c).as("nc"))
       }
       (-array_max(array(scored.toIndexedSeq: _*)).getField("nc")).cast("int")
-    }
-    array(codeExprs: _*)
-  }
-
-  /** PQ ANN top-k by integer ADC score. Each query row computes its m ×
-    * nCodes lookup table ONCE (a literal-codebook expression — narrow, no
-    * join); scoring a candidate is then m `element_at` lookups summed:
-    * adc(q, x) = Σ_j lut[j][code_j(x)] ≈ q·x, an exact BIGINT. The query
-    * side broadcasts (queries ≪ corpus by contract), the corpus side scans
-    * its codes in natural partitioning — no shuffle of the corpus at all.
-    * `rerank` > 0 re-scores the top-`rerank` ADC short-list per query with
-    * exact cosine over the stored full-precision vectors (output columns
-    * (query_id, match_id, cos)); `rerank` = 0 returns the pure-ADC ranking
-    * (query_id, match_id, adc) — integer-exact and oracle-checkable. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String, embCol: String,
-             m: Int, nCodes: Int, k: Int, rerank: Int = 0,
-             seedWhere: Option[Column] = None,
-             codebook: Option[Array[Array[Array[Long]]]] = None,
-             encTable: Option[DataFrame] = None): DataFrame = {
-    val cb = codebook.getOrElse(pqCodebook(corpus, idCol, embCol, m, nCodes, seedWhere))
-    // `encTable`: a materialized [[pqEncode]] result (outId = "match_id") —
-    // the once-per-snapshot index artifact, amortized across query batches
-    // (same contract as ivfTopK's listTable)
-    val enc = encTable.getOrElse(pqEncode(corpus, idCol, embCol, cb, "match_id"))
-      .withColumnRenamed("v", "cv").withColumnRenamed("vn", "cn")
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("qv"))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-      .withColumn("lut", pqLutExpr(cb))
-    val adcCol = pqAdcExpr(m)
-    // The scan is NARROW on both paths: only (query_id, lut) × (match_id,
-    // codes) flow through the 10^8-pair scoring loop and its top-k window —
-    // column pruning keeps the full-precision vectors out of the hot loop
-    // entirely. (An earlier formulation carried the 64-long vectors of every
-    // scored pair through the window "to have them ready" for re-rank;
-    // measured at 500k×200 that was 380s vs ~20s for this shape.)
-    val scored = broadcast(q.select("query_id", "lut"))
-      .crossJoin(enc.select("match_id", "codes"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"), adcCol.cast("long").as("adc"))
-    if (rerank <= 0)
-      graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-        Seq(col("adc").desc, col("match_id").asc), k)
-    else {
-      // re-rank fetches vectors BY ID for the short-list only (queries ×
-      // rerank rows) — the textbook two-stage design: codes in memory,
-      // full-precision vectors joined back from storage for the candidates
-      val short = graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-        Seq(col("adc").desc, col("match_id").asc), rerank)
-        .select("query_id", "match_id")
-      val exact = broadcast(short)
-        .join(enc.select(col("match_id"), col("cv"), col("cn")), Seq("match_id"))
-        .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))), Seq("query_id"))
-        .select(col("query_id"), col("match_id"),
-          normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-      graft.ops.DistinctOn.topK(exact, Seq(col("query_id")),
-        Seq(col("cos").desc, col("match_id").asc), k)
-    }
+    }: _*)
   }
 
   /** The per-query ADC lookup table over a quantized query column `qv`:
@@ -583,8 +467,7 @@ object Similarity {
   private def pqLutExpr(cb: Array[Array[Array[Long]]]): Column = {
     val sub = cb.head.head.length
     array(cb.indices.map { j =>
-      val qj = slice(col("qv"), j * sub + 1, sub)
-      array(cb(j).indices.map(c => qdot(qj, typedLit(cb(j)(c).toSeq))): _*)
+      array(cb(j).indices.map(c => qdot(subSlice("qv", j, sub), typedLit(cb(j)(c).toSeq))): _*)
     }: _*)
   }
 
@@ -593,7 +476,55 @@ object Similarity {
   private def pqAdcExpr(m: Int): Column =
     (0 until m)
       .map(j => element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
+      .reduce(_ + _).cast("long")
+
+  /** The PQ search tail shared by [[pqTopK]] and [[ivfPqTopK]]: `rerank` <= 0
+    * returns the top-`k` ADC ranking (query_id, match_id, adc) —
+    * integer-exact and oracle-checkable; otherwise the top-`rerank` ADC
+    * short-list per query is re-scored with exact cosine (query_id,
+    * match_id, cos). Re-rank fetches vectors BY ID for the short-list only
+    * (queries × rerank rows) from the corpus side `enc` (match_id, cv, cn)
+    * and the query side `q` (query_id, qv, qn) — the textbook two-stage
+    * design: codes in memory, full-precision vectors joined back from
+    * storage for the candidates. `spread` shapes the joined short-list
+    * before the exact top-k (the IVF×PQ caller repartitions it). */
+  private def pqRerank(scored: DataFrame, enc: DataFrame, q: DataFrame, k: Int, rerank: Int)(
+                       spread: DataFrame => DataFrame): DataFrame =
+    if (rerank <= 0) rankTopK(scored, "adc", k)
+    else {
+      val short = rankTopK(scored, "adc", rerank).select("query_id", "match_id")
+      val exact = broadcast(short)
+        .join(enc.select(col("match_id"), col("cv"), col("cn")), Seq("match_id"))
+        .join(broadcast(q), Seq("query_id"))
+      rankTopK(spread(exact).select(col("query_id"), col("match_id"), pairCos.as("cos")), "cos", k)
+    }
+
+  /** PQ ANN top-k by integer ADC score over a built index: `codebook`
+    * ([[pqCodebook]]/[[pqCodebookTrained]]) and `encTable`, a materialized
+    * [[pqEncode]] result with outId "match_id" — the once-per-snapshot index
+    * artifacts, amortized across query batches. Each query row computes its
+    * m × nCodes lookup table ONCE (a literal-codebook expression — narrow,
+    * no join); scoring a candidate is then m `element_at` lookups summed:
+    * adc(q, x) = Σ_j lut[j][code_j(x)] ≈ q·x, an exact BIGINT. The query
+    * side broadcasts (queries ≪ corpus by contract), the corpus side scans
+    * its codes in natural partitioning — no shuffle of the corpus at all.
+    * `rerank`: see [[pqRerank]]. */
+  def pqTopK(queries: DataFrame, idCol: String, embCol: String,
+             codebook: Array[Array[Array[Long]]], encTable: DataFrame,
+             k: Int, rerank: Int = 0): DataFrame = {
+    val enc = asSide(encTable, "c")
+    val q = prep(queries, idCol, embCol, "query_id", "qv", "qn")
+      .withColumn("lut", pqLutExpr(codebook))
+    // The scan is NARROW on both paths: only (query_id, lut) × (match_id,
+    // codes) flow through the 10^8-pair scoring loop and its top-k window —
+    // column pruning keeps the full-precision vectors out of the hot loop
+    // entirely. (An earlier formulation carried the 64-long vectors of every
+    // scored pair through the window "to have them ready" for re-rank;
+    // measured at 500k×200 that was 380s vs ~20s for this shape.)
+    val scored = scorePairs(broadcast(q.select("query_id", "lut"))
+      .crossJoin(enc.select("match_id", "codes")), pqAdcExpr(codebook.length), "adc")
+    pqRerank(scored, enc, q.select(col("query_id"), col("qv"), col("qn")), k, rerank)(d => d)
+  }
 
   /** The two-level IVF×PQ index in ONE narrow corpus pass: list assignment
     * ([[assignToLists]]) plus PQ codes per vector. Schema (outId, list_id,
@@ -613,87 +544,43 @@ object Similarity {
     * Versus flat-ADC [[pqTopK]] this divides the scored candidate set by
     * ~nLists/nProbe — the round-10 scale record showed flat ADC losing to
     * brute force at 500 k vectors precisely because it scanned every code;
-    * list pruning is what makes PQ pay at scale. Dataflow: one corpus pass
-    * builds (list_id, codes) per vector (amortizable via `encTable`); the
-    * probe side broadcasts (queries ≪ corpus), joins on list_id so the
-    * corpus stays in natural partitioning, and each candidate costs m table
-    * lookups. `rerank` > 0 re-scores the top-`rerank` ADC short-list with
-    * exact cosine over the stored full-precision vectors (output (query_id,
-    * match_id, cos)); `rerank` = 0 returns the integer ADC ranking.
+    * list pruning is what makes PQ pay at scale. Dataflow: the probe side
+    * broadcasts (queries ≪ corpus), joins on list_id so the corpus stays in
+    * natural partitioning, and each candidate costs m table lookups.
+    * `rerank`: see [[pqRerank]].
     *
-    * `encTable`: a materialized `assignToLists(...).withColumn("codes", …)`
-    * snapshot — schema (match_id, list_id, v, vn, codes) — letting a caller
-    * build the two-level index ONCE per corpus snapshot and amortize it
-    * across query batches (same lifecycle contract as [[ivfTopK]]'s
-    * `listTable` / [[pqTopK]]'s `encTable`). */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String, embCol: String,
-                nLists: Int, m: Int, nCodes: Int, k: Int, nProbe: Int = 1,
-                rerank: Int = 0, trainIters: Int = 0,
-                seedTable: Option[DataFrame] = None,
-                codebook: Option[Array[Array[Array[Long]]]] = None,
-                encTable: Option[DataFrame] = None): DataFrame = {
-    val seeds = seedTable.getOrElse {
-      if (trainIters > 0) kmeansSeeds(corpus, idCol, embCol, nLists, trainIters)
-      else corpus.filter(col(idCol) < nLists)
-        .select(col(idCol).as("list_id"), quantize(col(embCol)).as("sv"))
-    }
-    val cb = codebook.getOrElse(pqCodebook(corpus, idCol, embCol, m, nCodes))
-    val enc = encTable.getOrElse(ivfPqEncode(corpus, idCol, embCol, seeds, cb, "match_id"))
-      .withColumnRenamed("v", "cv").withColumnRenamed("vn", "cn")
+    * The index is `seeds` (the coarse quantizer), `codebook` and `encTable`
+    * — a materialized [[ivfPqEncode]] snapshot with outId "match_id",
+    * schema (match_id, list_id, v, vn, codes) — built ONCE per corpus
+    * snapshot and amortized across query batches (same lifecycle as
+    * [[ivfTopK]]'s `lists` / [[pqTopK]]'s `encTable`). */
+  def ivfPqTopK(queries: DataFrame, idCol: String, embCol: String,
+                seeds: DataFrame, codebook: Array[Array[Array[Long]]], encTable: DataFrame,
+                k: Int, nProbe: Int = 1, rerank: Int = 0): DataFrame = {
+    val enc = asSide(encTable, "c")
     // one row per (query, probed list), each carrying the query's ADC LUT
-    val probes = probeAssign(queries, idCol, embCol, seeds, "query_id", nProbe)
-      .withColumnRenamed("v", "qv").withColumnRenamed("vn", "qn")
-      .withColumn("lut", pqLutExpr(cb))
+    val probes = asSide(probeAssign(queries, idCol, embCol, seeds, "query_id", nProbe), "q")
+      .withColumn("lut", pqLutExpr(codebook))
     // equi-join on list_id = the IVF pruning: only probed lists are ADC-
     // scored. A corpus vector lives in exactly ONE list and probes are
     // distinct per query, so each (query, match) pair arises at most once.
-    val scored = broadcast(probes.select("query_id", "list_id", "lut"))
-      .join(enc.select("match_id", "list_id", "codes"), Seq("list_id"))
-      .filter(col("query_id") =!= col("match_id"))
-      .select(col("query_id"), col("match_id"), pqAdcExpr(m).cast("long").as("adc"))
-    if (rerank <= 0)
-      graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-        Seq(col("adc").desc, col("match_id").asc), k)
-    else {
-      val short = graft.ops.DistinctOn.topK(scored, Seq(col("query_id")),
-        Seq(col("adc").desc, col("match_id").asc), rerank)
-        .select("query_id", "match_id")
-      // full-precision vectors joined back BY ID for the short-list only;
-      // repartition by query so the final exact top-k window is spread
-      // evenly instead of inheriting the probed lists' partitioning (the
-      // round-10 flat-PQ re-rank straggler, 2.43×)
-      val q = probes.dropDuplicates("query_id").select("query_id", "qv", "qn")
-      val exact = broadcast(short)
-        .join(enc.select(col("match_id"), col("cv"), col("cn")), Seq("match_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .repartition(col("query_id"))
-        .select(col("query_id"), col("match_id"),
-          normedCos(qdot(col("qv"), col("cv")), col("qn"), col("cn")).as("cos"))
-      graft.ops.DistinctOn.topK(exact, Seq(col("query_id")),
-        Seq(col("cos").desc, col("match_id").asc), k)
-    }
+    val scored = scorePairs(broadcast(probes.select("query_id", "list_id", "lut"))
+      .join(enc.select("match_id", "list_id", "codes"), Seq("list_id")),
+      pqAdcExpr(codebook.length), "adc")
+    // repartition the re-rank by query so the final exact top-k window is
+    // spread evenly instead of inheriting the probed lists' partitioning
+    // (the round-10 flat-PQ re-rank straggler, 2.43×)
+    pqRerank(scored, enc, probes.dropDuplicates("query_id").select("query_id", "qv", "qn"),
+      k, rerank)(_.repartition(col("query_id")))
   }
 
-  /** Embedding near-dup pairs: within-bucket candidate pairs with cosine above
-    * `threshold` (the embedding flavor of LSH dedup). */
-  def nearDupPairs(emb: DataFrame, idCol: String, embCol: String,
-                   planes: Int, threshold: Double): DataFrame = {
-    val v = emb.select(col(idCol), quantize(col(embCol)).as("qv"),
-      signBucket(col(embCol), planes).as("bucket"))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    nearDupScore(v, idCol, threshold)
-  }
-
-  /** [[nearDupPairs]] against STORED hyperplanes. */
+  /** Embedding near-dup pairs: within-bucket candidate pairs (stored-plane
+    * sign buckets, [[signBucketPlanes]]) with cosine above `threshold` (the
+    * embedding flavor of LSH dedup). */
   def nearDupPairs(emb: DataFrame, idCol: String, embCol: String,
                    planes: Array[Array[Long]], threshold: Double): DataFrame = {
-    val v = emb.select(col(idCol), quantize(col(embCol)).as("qv"))
-      .withColumn("bucket", signBucketPlanes(col("qv"), planes))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-    nearDupScore(v, idCol, threshold)
-  }
-
-  private def nearDupScore(v: DataFrame, idCol: String, threshold: Double): DataFrame = {
+    val v = prep(emb, idCol, embCol, idCol, "qv", "qn",
+      _.withColumn("bucket", signBucketPlanes(col("qv"), planes)))
     val l = v.select(col("bucket"), col(idCol).as("a"), col("qv").as("av"), col("qn").as("an"))
     val r = v.select(col("bucket"), col(idCol).as("b"), col("qv").as("bv"), col("qn").as("bn"))
     l.join(r, Seq("bucket"))

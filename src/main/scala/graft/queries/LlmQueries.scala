@@ -23,10 +23,35 @@ object LlmQueries {
   private def minhashPairs(docs: DataFrame): DataFrame =
     Dedup.minhashNearDups(docs, "text", "doc_id", k = 5, numHashes = 8, bands = 4, threshold = 0.9)
 
+  /** Untrained IVF top-5 for the first 10 vectors: 16 first-id seeds, their
+    * inverted lists built in the query (not cached), `nProbe` lists probed. */
+  private def untrainedIvf(emb: DataFrame, nProbe: Int): DataFrame = {
+    val seeds = Similarity.untrainedSeeds(emb, "vec_id", "embedding", 16)
+    Similarity.ivfTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding", seeds,
+      Similarity.assignToLists(emb, "vec_id", "embedding", seeds, "match_id"), k = 5, nProbe = nProbe)
+  }
+
+  /** The untrained PQ codebook (8 subspaces × 16 first-id codes) the flat-PQ
+    * and IVF×PQ queries share, from the [[AnnIndex]] cache. */
+  private def untrainedPqCodebook(dir: String, emb: DataFrame): Array[Array[Array[Long]]] =
+    AnnIndex.codebook(AnnIndex.key(dir, "pq_cb"))(
+      Similarity.pqCodebook(emb, "vec_id", "embedding", m = 8, nCodes = 16))
+
+  /** Flat-PQ top-5 for the first 10 vectors over the cached untrained
+    * codebook and codes; `rerank` as in [[Similarity.pqTopK]]. */
+  private def untrainedPq(s: SparkSession, dir: String, rerank: Int): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val cb = untrainedPqCodebook(dir, emb)
+    val enc = AnnIndex.table(s, AnnIndex.key(dir, "pq_enc"))(
+      Similarity.pqEncode(emb, "vec_id", "embedding", cb, "match_id"))
+    Similarity.pqTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding", cb, enc,
+      k = 5, rerank = rerank)
+  }
+
   /** Per-JVM ANN index-artifact cache. The production ANN lifecycle builds
     * the index ONCE per corpus snapshot — kmeans seeds, inverted lists, PQ
-    * codes: exactly the `seedTable`/`listTable`/`codebook`/`encTable`
-    * amortization contracts of [[graft.llm.Similarity]] — and amortizes it
+    * codes: exactly the `seeds`/`lists`/`codebook`/`encTable` arguments of
+    * the [[graft.llm.Similarity]] searches — and amortizes it
     * across every query batch. The ANN registrations model that lifecycle:
     * the first run of a query in a JVM builds and materializes the index
     * (the bench's un-timed warm-up pass), later runs measure the marginal
@@ -186,6 +211,9 @@ object LlmQueries {
   private val sqlQuantize =
     "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))"
 
+  /** The quantized corpus (vec_id, qv) as CTE `v`. */
+  private val sqlV = s"v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings)"
+
   private def sqlQdot(a: String, b: String) =
     s"CAST(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) AS DOUBLE)"
 
@@ -194,39 +222,34 @@ object LlmQueries {
   private def sqlQdotInt(a: String, b: String) =
     s"CAST(list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i])) AS BIGINT)"
 
-  /** Shared PQ pipeline CTEs (codebook from the first 16 vectors' 8-dim
-    * sub-slices, L2-nearest encode via the constant-free 2·x·c − c·c argmax,
-    * integer ADC scores for the <10 query slice), mirroring
-    * [[Similarity.pqCodebook]]/`pqEncode`/`pqTopK` step for step. `tail` is
-    * the final SELECT (plus an extra CTE when `extraCte`). */
-  private def sqlPqAdc(tail: String, extraCte: Boolean = false) = {
-    val sep = if (extraCte) "," else ""
-    s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-       |cb AS (
-       |  SELECT s.vec_id AS code, t.j AS j,
-       |    list_slice(s.qv, t.j * 8 + 1, t.j * 8 + 8) AS cv
-       |  FROM v s, UNNEST(generate_series(0, 7)) AS t(j)
-       |  WHERE s.vec_id < 16),
-       |enc AS (
-       |  SELECT vec_id, j, code FROM (
-       |    SELECT x.vec_id, cb.j, cb.code,
-       |      row_number() OVER (PARTITION BY x.vec_id, cb.j
-       |        ORDER BY 2 * ${sqlQdotInt("list_slice(x.qv, cb.j * 8 + 1, cb.j * 8 + 8)", "cb.cv")}
-       |          - ${sqlQdotInt("cb.cv", "cb.cv")} DESC, cb.code) AS rn
-       |    FROM v x CROSS JOIN cb) a
-       |  WHERE rn = 1),
-       |adc AS (
-       |  SELECT q.vec_id AS query_id, e.vec_id AS match_id,
-       |    CAST(SUM(${sqlQdotInt("list_slice(q.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
-       |  FROM v q
-       |  JOIN enc e ON q.vec_id < 10 AND q.vec_id <> e.vec_id
-       |  JOIN cb c ON c.j = e.j AND c.code = e.code
-       |  GROUP BY 1, 2)$sep
-       |$tail""".stripMargin
-  }
-
   private def sqlQcos(a: String, b: String) =
     s"${sqlQdot(a, b)} / (sqrt(${sqlQdot(a, a)}) * sqrt(${sqlQdot(b, b)}))"
+
+  // ---- ANN oracle fragments: each mirrors one Similarity step, so every
+  // ANN entry (oracleSql, oracleSetupSql, oracleBenchSql) composes the same
+  // assignment, codebook, encode, ADC and top-k SQL ----
+
+  /** The untrained seed rule (Similarity.untrainedSeeds): the vectors of
+    * `from` that `where` selects, as (list_id, sv). */
+  private def sqlSeeds(from: String, where: String = "vec_id < 16") =
+    s"SELECT vec_id AS list_id, qv AS sv FROM $from WHERE $where"
+
+  /** Seed-list assignment (Similarity.assignToLists, and probeAssign when
+    * `keep` is rn <= p): each vector x of `from` (after `filter`) ranks the
+    * seed lists s of `seeds` by cosine, ties to the smaller list id, and
+    * keeps the ranks `keep` admits. `out` is the outer select list; the
+    * ranked rows carry x.qv only when `out` does. */
+  private def sqlAssign(out: String, from: String, seeds: String, filter: String = "",
+                        keep: String = "rn = 1", alias: String = "a") = {
+    val ranked = if (out.contains("qv")) "x.vec_id, x.qv, s.list_id" else "x.vec_id, s.list_id"
+    val where = if (filter.isEmpty) "" else s" WHERE $filter"
+    s"""  SELECT $out FROM (
+       |    SELECT $ranked,
+       |      row_number() OVER (PARTITION BY x.vec_id
+       |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
+       |    FROM $from x CROSS JOIN $seeds s$where) $alias
+       |  WHERE $keep""".stripMargin
+  }
 
   /** One Lloyd round over a seed CTE `sIn` → `sOut` (expects a `v` CTE of
     * (vec_id, qv)): assign all vectors to their argmax-cosine seed, rebuild
@@ -235,12 +258,7 @@ object LlmQueries {
     * integer arithmetic exactly. */
   private def sqlLloydRound(sIn: String, sOut: String) =
     s"""a_$sOut AS (
-       |  SELECT vec_id, qv, list_id FROM (
-       |    SELECT x.vec_id, x.qv, s.list_id,
-       |      row_number() OVER (PARTITION BY x.vec_id
-       |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-       |    FROM v x CROSS JOIN $sIn s) t
-       |  WHERE rn = 1),
+       |${sqlAssign("vec_id, qv, list_id", "v", sIn, alias = "t")}),
        |u_$sOut AS (
        |  SELECT list_id, i, SUM(qv[i]) AS sm, COUNT(*) AS n
        |  FROM a_$sOut, UNNEST(generate_series(1, 64)) AS t(i)
@@ -252,6 +270,31 @@ object LlmQueries {
        |  SELECT s.list_id, COALESCE(g.sv, s.sv) AS sv
        |  FROM $sIn s LEFT JOIN g_$sOut g USING (list_id))""".stripMargin
 
+  /** The untrained PQ codebook (Similarity.pqCodebook): the first 16
+    * vectors' 8 sub-slices of 8 dims, as (code, j, cv). */
+  private def sqlPqCodebook(from: String) =
+    s"""  SELECT s.vec_id AS code, t.j AS j,
+       |    list_slice(s.qv, t.j * 8 + 1, t.j * 8 + 8) AS cv
+       |  FROM $from s, UNNEST(generate_series(0, 7)) AS t(j)
+       |  WHERE s.vec_id < 16""".stripMargin
+
+  /** PQ code assignment (Similarity.pqEncode): per (vector x of `from`,
+    * subspace j), the code of codebook `cb` (aliased `c`) with the largest
+    * 2·x_j·c − c·c, ties to the smaller code. `withXj` also carries the
+    * sub-vector xj (the Lloyd round's update input). */
+  private def sqlPqAssign(from: String, cb: String, c: String = "cb", withXj: Boolean = false) = {
+    val xj = s"list_slice(x.qv, $c.j * 8 + 1, $c.j * 8 + 8)"
+    val (out, carried) = if (withXj) ("vec_id, j, code, xj", s"\n      $xj AS xj,") else ("vec_id, j, code", "")
+    val ref = if (cb == c) cb else s"$cb $c"
+    s"""  SELECT $out FROM (
+       |    SELECT x.vec_id, $c.j, $c.code,$carried
+       |      row_number() OVER (PARTITION BY x.vec_id, $c.j
+       |        ORDER BY 2 * ${sqlQdotInt(xj, s"$c.cv")}
+       |          - ${sqlQdotInt(s"$c.cv", s"$c.cv")} DESC, $c.code) AS rn
+       |    FROM $from x CROSS JOIN $ref) a
+       |  WHERE rn = 1""".stripMargin
+  }
+
   /** One per-subspace PQ Lloyd round over a codebook CTE `cIn` → `cOut`
     * (expects a `v` CTE of (vec_id, qv)): assign every (vector, subspace)
     * pair to its argmax-(2·x·c − c·c) code, rebuild each code's centroid as
@@ -261,14 +304,7 @@ object LlmQueries {
     * exactly (subspace width 8 = 64 dims / m 8). */
   private def sqlPqLloydRound(cIn: String, cOut: String) =
     s"""e_$cOut AS (
-       |  SELECT vec_id, j, code, xj FROM (
-       |    SELECT x.vec_id, c.j, c.code,
-       |      list_slice(x.qv, c.j * 8 + 1, c.j * 8 + 8) AS xj,
-       |      row_number() OVER (PARTITION BY x.vec_id, c.j
-       |        ORDER BY 2 * ${sqlQdotInt("list_slice(x.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}
-       |          - ${sqlQdotInt("c.cv", "c.cv")} DESC, c.code) AS rn
-       |    FROM v x CROSS JOIN $cIn c) a
-       |  WHERE rn = 1),
+       |${sqlPqAssign("v", cIn, c = "c", withXj = true)}),
        |u_$cOut AS (
        |  SELECT j, code, i, SUM(xj[i]) AS sm, COUNT(*) AS n
        |  FROM e_$cOut, UNNEST(generate_series(1, 8)) AS t(i)
@@ -279,6 +315,111 @@ object LlmQueries {
        |$cOut AS (
        |  SELECT c.code, c.j, COALESCE(g.cv, c.cv) AS cv
        |  FROM $cIn c LEFT JOIN g_$cOut g ON g.j = c.j AND g.code = c.code)""".stripMargin
+
+  /** Lloyd-trained IVF seeds `s2` (Similarity.kmeansSeeds, 16 lists, 2
+    * rounds from the first 16 vectors; expects a `v` CTE). */
+  private val sqlKmeansCtes =
+    s"""s0 AS (${sqlSeeds("v")}),
+       |${sqlLloydRound("s0", "s1")},
+       |${sqlLloydRound("s1", "s2")}""".stripMargin
+
+  /** Lloyd-trained PQ codebook `cb2` (Similarity.pqCodebookTrained, 2
+    * rounds from the untrained codebook; expects a `v` CTE). */
+  private val sqlPqTrainedCtes =
+    s"""cb0 AS (
+       |${sqlPqCodebook("v")}),
+       |${sqlPqLloydRound("cb0", "cb1")},
+       |${sqlPqLloydRound("cb1", "cb2")}""".stripMargin
+
+  /** The `adc` CTE (Similarity.pqTopK's scores): per (query, candidate e),
+    * the sum over the 8 subspaces of the query sub-slice's integer dot with
+    * e's code centroid in codebook `cb`. `ids` selects (query_id,
+    * match_id); `from` joins the query side (vector `qv`) to e. */
+  private def sqlAdc(ids: String, qv: String, from: String, cb: String) =
+    s"""adc AS (
+       |  SELECT $ids,
+       |    CAST(SUM(${sqlQdotInt(s"list_slice($qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
+       |  FROM $from
+       |  JOIN $cb c ON c.j = e.j AND c.code = e.code
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Flat ADC: query rows `q` (vec_id, qv; `queryFilter` restricts them)
+    * against every encoded vector of `enc`. */
+  private def sqlFlatAdc(q: String, enc: String, cb: String, queryFilter: String = "") =
+    sqlAdc("q.vec_id AS query_id, e.vec_id AS match_id", "q.qv",
+      s"$q\n  JOIN $enc e ON ${queryFilter}q.vec_id <> e.vec_id", cb)
+
+  /** IVF×PQ ADC (Similarity.ivfPqTopK): each `probes` row (query_id, qv,
+    * list_id) against the encoded members of its list in `assigned`. */
+  private def sqlIvfAdc(assigned: String, enc: String, cb: String) =
+    sqlAdc("p.query_id, a.vec_id AS match_id", "p.qv",
+      s"""probes p
+         |  JOIN $assigned a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
+         |  JOIN $enc e ON e.vec_id = a.vec_id""".stripMargin, cb)
+
+  /** The flat-PQ pipeline CTEs over the codebook `cb` that `cbCtes` defines
+    * (after `v`): every vector's codes (`enc`) and the first 10 queries'
+    * ADC scores — Similarity.pqEncode/pqTopK step for step. */
+  private def sqlPqAdc(cbCtes: String, cb: String) =
+    s"""WITH $sqlV,
+       |$cbCtes,
+       |enc AS (
+       |${sqlPqAssign("v", cb)}),
+       |${sqlFlatAdc("v q", "enc", cb, "q.vec_id < 10 AND ")}""".stripMargin
+
+  /** The top `k` per query by ADC (score desc, match_id asc) over the `adc`
+    * CTE, selecting `cols`. */
+  private def sqlAdcTopK(cols: String, k: Int) =
+    s"""SELECT $cols FROM (
+       |  SELECT $cols,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
+       |  FROM adc) z
+       |WHERE rn <= $k""".stripMargin
+
+  /** The cosine top-5 (score desc, match id asc) over candidate pairs
+    * `from`: `qid`/`mid` are the query and match id columns (aliased to
+    * query_id/match_id unless already so named), `qv` the query vector and
+    * c.qv the candidate's. */
+  private def sqlCosTopK(qid: String, mid: String, qv: String, from: String,
+                         alias: String = "s") = {
+    def named(e: String, name: String) = if (e.endsWith(s".$name")) e else s"$e AS $name"
+    s"""SELECT query_id, match_id, cos FROM (
+       |  SELECT ${named(qid, "query_id")}, ${named(mid, "match_id")}, ${sqlQcos(qv, "c.qv")} AS cos,
+       |    row_number() OVER (PARTITION BY $qid ORDER BY ${sqlQcos(qv, "c.qv")} DESC, $mid) AS rn
+       |  FROM $from) $alias
+       |WHERE rn <= 5""".stripMargin
+  }
+
+  /** The 50 → 5 re-rank tail over the `adc` CTE: the top-50 ADC short-list
+    * `sl`, re-scored by exact cosine with query vectors from `q` and
+    * candidate vectors from `c` (Similarity.pqTopK's re-rank). */
+  private def sqlRerankTail(q: String, c: String) =
+    s"""sl AS (
+       |${sqlAdcTopK("query_id, match_id", 50)})
+       |${sqlCosTopK("s.query_id", "s.match_id", "q.qv",
+         s"sl s JOIN $q ON q.vec_id = s.query_id\n    JOIN $c c ON c.vec_id = s.match_id", "z")}""".stripMargin
+
+  /** Probe-1 IVF top-5 for the first 10 vectors, every vector assigned to
+    * its nearest list of `seeds`, which `seedCtes` defines after `v`. */
+  private def sqlIvfProbe1(seedCtes: String, seeds: String) =
+    s"""WITH $sqlV,
+       |$seedCtes,
+       |assigned AS (
+       |${sqlAssign("vec_id, qv, list_id", "v", seeds)})
+       |${sqlCosTopK("q.vec_id", "c.vec_id", "q.qv",
+         "assigned q JOIN assigned c ON q.list_id = c.list_id\n    AND q.vec_id < 10 AND q.vec_id <> c.vec_id")}""".stripMargin
+
+  /** The SemDeDup prune over a `scored` CTE (vec_id, qv, list_id, ccos): a
+    * row survives unless a same-cluster near-dup (cos >= 0.35) is strictly
+    * more prototypical (higher centroid-cosine, ties to smaller id). */
+  private val sqlSemanticPrune =
+    s"""pruned AS (
+       |  SELECT DISTINCT x.vec_id
+       |  FROM scored x JOIN scored u ON u.list_id = x.list_id AND u.vec_id <> x.vec_id
+       |  WHERE ${sqlQcos("u.qv", "x.qv")} >= 0.35
+       |    AND (u.ccos > x.ccos OR (u.ccos = x.ccos AND u.vec_id < x.vec_id)))
+       |SELECT s.vec_id, s.list_id, s.ccos FROM scored s
+       |ANTI JOIN pruned p ON p.vec_id = s.vec_id""".stripMargin
 
   /** Stored LSH hyperplanes for the bucketed ANN/near-dup queries: 8 real
     * sampled planes over the 64-dim embeddings, deterministic from the seed
@@ -301,10 +442,6 @@ object LlmQueries {
   private val sqlPlanesV =
     s"""v0 AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
        |v AS (SELECT vec_id, qv, ${sqlPlanesBucket("qv")} AS bucket FROM v0)""".stripMargin
-
-  private val sqlBucket =
-    """CAST(list_sum(list_transform(generate_series(1, 8),
-      |  i -> CASE WHEN CAST(embedding[i] AS DOUBLE) >= 0.0 THEN 1 << (i-1) ELSE 0 END)) AS BIGINT)""".stripMargin
 
   /** The scrub regex chain over a SQL column expression — identical patterns
     * and pass order to [[TextAnalysis.scrub]] ('g' flag: DuckDB replaces
@@ -472,8 +609,7 @@ object LlmQueries {
 
     // LSH-bucketed top-5 (the scale path; same queries, bucket-bounded)
     // against the STORED random hyperplanes — the production bucket
-    // function (axis planes degrade silently on basis-correlated
-    // embeddings; Similarity.signBucket remains the cheap variant)
+    // function (axis planes degrade silently on basis-correlated embeddings)
     "q_ann_lsh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.bucketTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -489,19 +625,11 @@ object LlmQueries {
     }),
 
     // IVF-style top-5: 16 seed centroids -> inverted lists -> probe own list
-    "q_ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        nLists = 16, k = 5)
-    }),
+    "q_ann_ivf" -> ((s, dir) => untrainedIvf(t(s, dir, "embeddings"), nProbe = 1)),
 
     // IVF multi-probe: each query searches its 4 nearest inverted lists
     // (the IVF recall knob; candidates strictly superset probe-1's)
-    "q_ann_ivf_multiprobe" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        nLists = 16, k = 5, nProbe = 4)
-    }),
+    "q_ann_ivf_multiprobe" -> ((s, dir) => untrainedIvf(t(s, dir, "embeddings"), nProbe = 4)),
 
     // IVF with a TRAINED coarse quantizer: 2 deterministic Lloyd rounds
     // refine the seed centroids before the lists are built (the oracle
@@ -515,9 +643,8 @@ object LlmQueries {
         Similarity.kmeansSeeds(emb, "vec_id", "embedding", nLists = 16, iters = 2))
       val lists = AnnIndex.table(s, AnnIndex.key(dir, "ivfk_lists"))(
         Similarity.assignToLists(emb, "vec_id", "embedding", seeds, "match_id"))
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        nLists = 16, k = 5, nProbe = 1,
-        seedTable = Some(seeds), listTable = Some(lists))
+      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
+        seeds, lists, k = 5)
     }),
 
     // Product-quantization top-5 by integer ADC score: 8 subspaces x 16
@@ -527,15 +654,7 @@ object LlmQueries {
     // NOTE: q_ann_pq / q_ann_pq_rerank are the FLAT-ADC baselines — every
     // code is scanned per query. The recommended scale path is the composed
     // q_ann_ivfpq below, which prunes the ADC scan to the probed lists.
-    "q_ann_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = AnnIndex.codebook(AnnIndex.key(dir, "pq_cb"))(
-        Similarity.pqCodebook(emb, "vec_id", "embedding", m = 8, nCodes = 16))
-      val enc = AnnIndex.table(s, AnnIndex.key(dir, "pq_enc"))(
-        Similarity.pqEncode(emb, "vec_id", "embedding", cb, "match_id"))
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        m = 8, nCodes = 16, k = 5, codebook = Some(cb), encTable = Some(enc))
-    }),
+    "q_ann_pq" -> ((s, dir) => untrainedPq(s, dir, rerank = 0)),
 
     // PQ over a TRAINED codebook: 2 deterministic per-subspace Lloyd rounds
     // refine the first-16-vectors seeds before encode (the oracle replays
@@ -547,22 +666,12 @@ object LlmQueries {
         Similarity.pqCodebookTrained(emb, "vec_id", "embedding", m = 8, nCodes = 16, iters = 2))
       val enc = AnnIndex.table(s, AnnIndex.key(dir, "pq_enc_t2"))(
         Similarity.pqEncode(emb, "vec_id", "embedding", cb, "match_id"))
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        m = 8, nCodes = 16, k = 5, codebook = Some(cb), encTable = Some(enc))
+      Similarity.pqTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding", cb, enc, k = 5)
     }),
 
     // PQ with exact re-rank: ADC short-list of 50, then full-precision
     // cosine re-ranking to top-5 (the standard two-stage PQ recall fix)
-    "q_ann_pq_rerank" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = AnnIndex.codebook(AnnIndex.key(dir, "pq_cb"))(
-        Similarity.pqCodebook(emb, "vec_id", "embedding", m = 8, nCodes = 16))
-      val enc = AnnIndex.table(s, AnnIndex.key(dir, "pq_enc"))(
-        Similarity.pqEncode(emb, "vec_id", "embedding", cb, "match_id"))
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        m = 8, nCodes = 16, k = 5, rerank = 50,
-        codebook = Some(cb), encTable = Some(enc))
-    }),
+    "q_ann_pq_rerank" -> ((s, dir) => untrainedPq(s, dir, rerank = 50)),
 
     // Composed IVF×PQ (the FAISS IndexIVFPQ shape): 16 inverted lists prune
     // the scan to each query's 4 nearest lists, PQ ADC scores the survivors,
@@ -572,15 +681,12 @@ object LlmQueries {
       // seeds re-derive per run (a pushed-down `vec_id < 16` scan — cheap);
       // the codebook and the two-level (list_id, codes) table are the
       // once-per-snapshot artifacts and come from the AnnIndex cache
-      val seeds = emb.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("list_id"), Similarity.quantize(col("embedding")).as("sv"))
-      val cb = AnnIndex.codebook(AnnIndex.key(dir, "pq_cb"))(
-        Similarity.pqCodebook(emb, "vec_id", "embedding", m = 8, nCodes = 16))
+      val seeds = Similarity.untrainedSeeds(emb, "vec_id", "embedding", 16)
+      val cb = untrainedPqCodebook(dir, emb)
       val enc = AnnIndex.table(s, AnnIndex.key(dir, "ivfpq_enc"))(
         Similarity.ivfPqEncode(emb, "vec_id", "embedding", seeds, cb, "match_id"))
-      Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        nLists = 16, m = 8, nCodes = 16, k = 5, nProbe = 4, rerank = 50,
-        seedTable = Some(seeds), codebook = Some(cb), encTable = Some(enc))
+      Similarity.ivfPqTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
+        seeds, cb, enc, k = 5, nProbe = 4, rerank = 50)
     }),
 
     // INCREMENTAL ANN index maintenance (the ANN twin of q_dedup_incremental):
@@ -600,9 +706,7 @@ object LlmQueries {
       // future batch) and the existing corpus' list assignments — stored
       // index artifacts with the usual AnnIndex lifecycle
       val storedSeeds = AnnIndex.table(s, AnnIndex.key(dir, "inc_seeds"))(
-        existing.filter(col("vec_id") < 22)
-          .select(col("vec_id").as("list_id"),
-            Similarity.quantize(col("embedding")).as("sv")))
+        Similarity.untrainedSeeds(existing, "vec_id", "embedding", 22))
       val storedLists = AnnIndex.table(s, AnnIndex.key(dir, "inc_lists"))(
         Similarity.assignToLists(existing, "vec_id", "embedding",
           storedSeeds, "match_id"))
@@ -611,9 +715,8 @@ object LlmQueries {
       // stored ∪ delta lists
       val delta = Similarity.assignToLists(newBatch, "vec_id", "embedding",
         storedSeeds, "match_id")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-        nLists = 16, k = 5, nProbe = 1,
-        seedTable = Some(storedSeeds), listTable = Some(storedLists.unionByName(delta)))
+      Similarity.ivfTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
+        storedSeeds, storedLists.unionByName(delta), k = 5)
     }),
 
     // token counting: whitespace + BPE-ish regex subword count
@@ -1027,46 +1130,26 @@ object LlmQueries {
          |WHERE cos >= 0.25""".stripMargin,
 
     // same Lloyd rounds + assignment as q_ann_ivf_kmeans, then the SemDeDup
-    // prune: a row survives unless a same-cluster near-dup (cos >= 0.35) is
-    // strictly more prototypical (higher centroid-cosine, ties to smaller id)
+    // prune
     "q_dedup_semantic" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |s0 AS (SELECT vec_id AS list_id, qv AS sv FROM v WHERE vec_id < 16),
-         |${sqlLloydRound("s0", "s1")},
-         |${sqlLloydRound("s1", "s2")},
+      s"""WITH $sqlV,
+         |$sqlKmeansCtes,
          |assigned AS (
-         |  SELECT vec_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN s2 s) a
-         |  WHERE rn = 1),
+         |${sqlAssign("vec_id, qv, list_id", "v", "s2")}),
          |scored AS (
          |  SELECT a.vec_id, a.qv, a.list_id, ${sqlQcos("a.qv", "s.sv")} AS ccos
          |  FROM assigned a JOIN s2 s USING (list_id)),
-         |pruned AS (
-         |  SELECT DISTINCT x.vec_id
-         |  FROM scored x JOIN scored u ON u.list_id = x.list_id AND u.vec_id <> x.vec_id
-         |  WHERE ${sqlQcos("u.qv", "x.qv")} >= 0.35
-         |    AND (u.ccos > x.ccos OR (u.ccos = x.ccos AND u.vec_id < x.vec_id)))
-         |SELECT s.vec_id, s.list_id, s.ccos FROM scored s
-         |ANTI JOIN pruned p ON p.vec_id = s.vec_id""".stripMargin,
+         |$sqlSemanticPrune""".stripMargin,
 
     "q_ann_topk" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+      s"""WITH $sqlV
+         |${sqlCosTopK("q.vec_id", "c.vec_id", "q.qv",
+           "v q JOIN v c ON q.vec_id < 10 AND q.vec_id <> c.vec_id")}""".stripMargin,
 
     "q_ann_lsh" ->
       s"""WITH $sqlPlanesV
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM v q JOIN v c ON q.bucket = c.bucket AND q.vec_id < 10 AND q.vec_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+         |${sqlCosTopK("q.vec_id", "c.vec_id", "q.qv",
+           "v q JOIN v c ON q.bucket = c.bucket AND q.vec_id < 10 AND q.vec_id <> c.vec_id")}""".stripMargin,
 
     "q_ann_multiprobe" ->
       s"""WITH $sqlPlanesV,
@@ -1074,198 +1157,56 @@ object LlmQueries {
          |  SELECT vec_id AS query_id, qv,
          |    unnest([bucket] || list_transform(generate_series(0, 7), i -> xor(bucket, 1::BIGINT << i))) AS bucket
          |  FROM v WHERE vec_id < 10)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM probes q JOIN v c ON q.bucket = c.bucket AND q.query_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+         |${sqlCosTopK("q.query_id", "c.vec_id", "q.qv",
+           "probes q JOIN v c ON q.bucket = c.bucket AND q.query_id <> c.vec_id")}""".stripMargin,
 
-    "q_ann_ivf" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |seeds AS (SELECT vec_id AS list_id, qv AS sv FROM v WHERE vec_id < 16),
-         |assigned AS (
-         |  SELECT vec_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN seeds s) a
-         |  WHERE rn = 1)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM assigned q JOIN assigned c ON q.list_id = c.list_id
-         |    AND q.vec_id < 10 AND q.vec_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+    "q_ann_ivf" -> sqlIvfProbe1(s"seeds AS (${sqlSeeds("v")})", "seeds"),
 
-    "q_ann_ivf_kmeans" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |s0 AS (SELECT vec_id AS list_id, qv AS sv FROM v WHERE vec_id < 16),
-         |${sqlLloydRound("s0", "s1")},
-         |${sqlLloydRound("s1", "s2")},
-         |assigned AS (
-         |  SELECT vec_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN s2 s) a
-         |  WHERE rn = 1)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM assigned q JOIN assigned c ON q.list_id = c.list_id
-         |    AND q.vec_id < 10 AND q.vec_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+    "q_ann_ivf_kmeans" -> sqlIvfProbe1(sqlKmeansCtes, "s2"),
 
     // full rebuild with the SAME seed rule the Spark side persisted — equal
     // to stored ∪ delta because per-row assignment is seed-deterministic
     "q_ann_incremental" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |seeds AS (SELECT vec_id AS list_id, qv AS sv FROM v
-         |  WHERE vec_id % 4 <> 0 AND vec_id < 22),
-         |assigned AS (
-         |  SELECT vec_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN seeds s) a
-         |  WHERE rn = 1)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM assigned q JOIN assigned c ON q.list_id = c.list_id
-         |    AND q.vec_id < 10 AND q.vec_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+      sqlIvfProbe1(s"seeds AS (${sqlSeeds("v", "vec_id % 4 <> 0 AND vec_id < 22")})", "seeds"),
 
-    "q_ann_pq" -> sqlPqAdc(
-      """SELECT query_id, match_id, adc FROM (
-        |  SELECT query_id, match_id, adc,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-        |  FROM adc) z
-        |WHERE rn <= 5""".stripMargin),
+    "q_ann_pq" ->
+      s"""${sqlPqAdc(s"cb AS (\n${sqlPqCodebook("v")})", "cb")}
+         |${sqlAdcTopK("query_id, match_id, adc", 5)}""".stripMargin,
 
     "q_ann_pq_trained" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |cb0 AS (
-         |  SELECT s.vec_id AS code, t.j AS j,
-         |    list_slice(s.qv, t.j * 8 + 1, t.j * 8 + 8) AS cv
-         |  FROM v s, UNNEST(generate_series(0, 7)) AS t(j)
-         |  WHERE s.vec_id < 16),
-         |${sqlPqLloydRound("cb0", "cb1")},
-         |${sqlPqLloydRound("cb1", "cb2")},
-         |enc AS (
-         |  SELECT vec_id, j, code FROM (
-         |    SELECT x.vec_id, cb.j, cb.code,
-         |      row_number() OVER (PARTITION BY x.vec_id, cb.j
-         |        ORDER BY 2 * ${sqlQdotInt("list_slice(x.qv, cb.j * 8 + 1, cb.j * 8 + 8)", "cb.cv")}
-         |          - ${sqlQdotInt("cb.cv", "cb.cv")} DESC, cb.code) AS rn
-         |    FROM v x CROSS JOIN cb2 cb) a
-         |  WHERE rn = 1),
-         |adc AS (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS match_id,
-         |    CAST(SUM(${sqlQdotInt("list_slice(q.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
-         |  FROM v q
-         |  JOIN enc e ON q.vec_id < 10 AND q.vec_id <> e.vec_id
-         |  JOIN cb2 c ON c.j = e.j AND c.code = e.code
-         |  GROUP BY 1, 2)
-         |SELECT query_id, match_id, adc FROM (
-         |  SELECT query_id, match_id, adc,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |  FROM adc) z
-         |WHERE rn <= 5""".stripMargin,
+      s"""${sqlPqAdc(sqlPqTrainedCtes, "cb2")}
+         |${sqlAdcTopK("query_id, match_id, adc", 5)}""".stripMargin,
 
-    "q_ann_pq_rerank" -> sqlPqAdc(
-      s"""sl AS (
-         |  SELECT query_id, match_id FROM (
-         |    SELECT query_id, match_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |    FROM adc) z
-         |  WHERE rn <= 50)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT s.query_id, s.match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY s.query_id
-         |      ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, s.match_id) AS rn
-         |  FROM sl s JOIN v q ON q.vec_id = s.query_id
-         |    JOIN v c ON c.vec_id = s.match_id) z
-         |WHERE rn <= 5""".stripMargin, extraCte = true),
+    "q_ann_pq_rerank" ->
+      s"""${sqlPqAdc(s"cb AS (\n${sqlPqCodebook("v")})", "cb")},
+         |${sqlRerankTail("v q", "v")}""".stripMargin,
 
     // IVF pruning + PQ ADC + exact re-rank: the probes/assigned CTEs are
-    // q_ann_ivf_multiprobe's, the cb/enc CTEs are sqlPqAdc's — composed so
+    // q_ann_ivf_multiprobe's, the cb/enc CTEs are q_ann_pq's — composed so
     // only vectors in probed lists are ADC-scored
     "q_ann_ivfpq" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |seeds AS (SELECT vec_id AS list_id, qv AS sv FROM v WHERE vec_id < 16),
+      s"""WITH $sqlV,
+         |seeds AS (${sqlSeeds("v")}),
          |assigned AS (
-         |  SELECT vec_id, list_id FROM (
-         |    SELECT x.vec_id, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN seeds s) a
-         |  WHERE rn = 1),
+         |${sqlAssign("vec_id, list_id", "v", "seeds")}),
          |probes AS (
-         |  SELECT vec_id AS query_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN seeds s WHERE x.vec_id < 10) a
-         |  WHERE rn <= 4),
+         |${sqlAssign("vec_id AS query_id, qv, list_id", "v", "seeds", "x.vec_id < 10", "rn <= 4")}),
          |cb AS (
-         |  SELECT s.vec_id AS code, t.j AS j,
-         |    list_slice(s.qv, t.j * 8 + 1, t.j * 8 + 8) AS cv
-         |  FROM v s, UNNEST(generate_series(0, 7)) AS t(j)
-         |  WHERE s.vec_id < 16),
+         |${sqlPqCodebook("v")}),
          |enc AS (
-         |  SELECT vec_id, j, code FROM (
-         |    SELECT x.vec_id, cb.j, cb.code,
-         |      row_number() OVER (PARTITION BY x.vec_id, cb.j
-         |        ORDER BY 2 * ${sqlQdotInt("list_slice(x.qv, cb.j * 8 + 1, cb.j * 8 + 8)", "cb.cv")}
-         |          - ${sqlQdotInt("cb.cv", "cb.cv")} DESC, cb.code) AS rn
-         |    FROM v x CROSS JOIN cb) a
-         |  WHERE rn = 1),
-         |adc AS (
-         |  SELECT p.query_id, a.vec_id AS match_id,
-         |    CAST(SUM(${sqlQdotInt("list_slice(p.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
-         |  FROM probes p
-         |  JOIN assigned a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-         |  JOIN enc e ON e.vec_id = a.vec_id
-         |  JOIN cb c ON c.j = e.j AND c.code = e.code
-         |  GROUP BY 1, 2),
-         |sl AS (
-         |  SELECT query_id, match_id FROM (
-         |    SELECT query_id, match_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |    FROM adc) z
-         |  WHERE rn <= 50)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT s.query_id, s.match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY s.query_id
-         |      ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, s.match_id) AS rn
-         |  FROM sl s JOIN v q ON q.vec_id = s.query_id
-         |    JOIN v c ON c.vec_id = s.match_id) z
-         |WHERE rn <= 5""".stripMargin,
+         |${sqlPqAssign("v", "cb")}),
+         |${sqlIvfAdc("assigned", "enc", "cb")},
+         |${sqlRerankTail("v q", "v")}""".stripMargin,
 
     "q_ann_ivf_multiprobe" ->
-      s"""WITH v AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings),
-         |seeds AS (SELECT vec_id AS list_id, qv AS sv FROM v WHERE vec_id < 16),
+      s"""WITH $sqlV,
+         |seeds AS (${sqlSeeds("v")}),
          |assigned AS (
-         |  SELECT vec_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN seeds s) a
-         |  WHERE rn = 1),
+         |${sqlAssign("vec_id, qv, list_id", "v", "seeds")}),
          |probes AS (
-         |  SELECT vec_id AS query_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM v x CROSS JOIN seeds s WHERE x.vec_id < 10) a
-         |  WHERE rn <= 4)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT q.query_id, c.vec_id AS match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY q.query_id ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, c.vec_id) AS rn
-         |  FROM probes q JOIN assigned c ON q.list_id = c.list_id
-         |    AND q.query_id <> c.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+         |${sqlAssign("vec_id AS query_id, qv, list_id", "v", "seeds", "x.vec_id < 10", "rn <= 4")})
+         |${sqlCosTopK("q.query_id", "c.vec_id", "q.qv",
+           "probes q JOIN assigned c ON q.list_id = c.list_id\n    AND q.query_id <> c.vec_id")}""".stripMargin,
 
     "q_text_tokens" ->
       """SELECT doc_id,
@@ -1616,84 +1557,40 @@ object LlmQueries {
 
     "ann_ivfk_seeds" ->
       s"""WITH v AS (SELECT vec_id, qv FROM ann_qv),
-         |s0 AS (SELECT vec_id AS list_id, qv AS sv FROM v WHERE vec_id < 16),
-         |${sqlLloydRound("s0", "s1")},
-         |${sqlLloydRound("s1", "s2")}
+         |$sqlKmeansCtes
          |SELECT list_id, sv FROM s2""".stripMargin,
 
-    "ann_ivfk_lists" ->
-      s"""SELECT vec_id, list_id FROM (
-         |  SELECT x.vec_id, s.list_id,
-         |    row_number() OVER (PARTITION BY x.vec_id
-         |      ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |  FROM ann_qv x CROSS JOIN ann_ivfk_seeds s) a
-         |WHERE rn = 1""".stripMargin,
+    "ann_ivfk_lists" -> sqlAssign("vec_id, list_id", "ann_qv", "ann_ivfk_seeds"),
 
-    "ann_pq_cb" ->
-      """SELECT s.vec_id AS code, t.j AS j,
-        |  list_slice(s.qv, t.j * 8 + 1, t.j * 8 + 8) AS cv
-        |FROM ann_qv s, UNNEST(generate_series(0, 7)) AS t(j)
-        |WHERE s.vec_id < 16""".stripMargin,
+    "ann_pq_cb" -> sqlPqCodebook("ann_qv"),
 
-    "ann_pq_enc" ->
-      s"""SELECT vec_id, j, code FROM (
-         |  SELECT x.vec_id, cb.j, cb.code,
-         |    row_number() OVER (PARTITION BY x.vec_id, cb.j
-         |      ORDER BY 2 * ${sqlQdotInt("list_slice(x.qv, cb.j * 8 + 1, cb.j * 8 + 8)", "cb.cv")}
-         |        - ${sqlQdotInt("cb.cv", "cb.cv")} DESC, cb.code) AS rn
-         |  FROM ann_qv x CROSS JOIN ann_pq_cb cb) a
-         |WHERE rn = 1""".stripMargin,
+    "ann_pq_enc" -> sqlPqAssign("ann_qv", "ann_pq_cb"),
 
     "ann_pq_cb_t" ->
       s"""WITH v AS (SELECT vec_id, qv FROM ann_qv),
-         |cb0 AS (
-         |  SELECT s.vec_id AS code, t.j AS j,
-         |    list_slice(s.qv, t.j * 8 + 1, t.j * 8 + 8) AS cv
-         |  FROM v s, UNNEST(generate_series(0, 7)) AS t(j)
-         |  WHERE s.vec_id < 16),
-         |${sqlPqLloydRound("cb0", "cb1")},
-         |${sqlPqLloydRound("cb1", "cb2")}
+         |$sqlPqTrainedCtes
          |SELECT code, j, cv FROM cb2""".stripMargin,
 
-    "ann_pq_enc_t" ->
-      s"""SELECT vec_id, j, code FROM (
-         |  SELECT x.vec_id, cb.j, cb.code,
-         |    row_number() OVER (PARTITION BY x.vec_id, cb.j
-         |      ORDER BY 2 * ${sqlQdotInt("list_slice(x.qv, cb.j * 8 + 1, cb.j * 8 + 8)", "cb.cv")}
-         |        - ${sqlQdotInt("cb.cv", "cb.cv")} DESC, cb.code) AS rn
-         |  FROM ann_qv x CROSS JOIN ann_pq_cb_t cb) a
-         |WHERE rn = 1""".stripMargin,
+    "ann_pq_enc_t" -> sqlPqAssign("ann_qv", "ann_pq_cb_t"),
 
     "ann_ivfpq_assigned" ->
-      s"""WITH seeds AS (SELECT vec_id AS list_id, qv AS sv FROM ann_qv WHERE vec_id < 16)
-         |SELECT vec_id, list_id FROM (
-         |  SELECT x.vec_id, s.list_id,
-         |    row_number() OVER (PARTITION BY x.vec_id
-         |      ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |  FROM ann_qv x CROSS JOIN seeds s) a
-         |WHERE rn = 1""".stripMargin,
+      s"""WITH seeds AS (${sqlSeeds("ann_qv")})
+         |${sqlAssign("vec_id, list_id", "ann_qv", "seeds")}""".stripMargin,
 
-    "ann_inc_seeds" ->
-      """SELECT vec_id AS list_id, qv AS sv FROM ann_qv
-        |WHERE vec_id % 4 <> 0 AND vec_id < 22""".stripMargin,
+    "ann_inc_seeds" -> sqlSeeds("ann_qv", "vec_id % 4 <> 0 AND vec_id < 22"),
 
-    "ann_inc_lists" ->
-      s"""SELECT vec_id, list_id FROM (
-         |  SELECT x.vec_id, s.list_id,
-         |    row_number() OVER (PARTITION BY x.vec_id
-         |      ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |  FROM ann_qv x CROSS JOIN ann_inc_seeds s
-         |  WHERE x.vec_id % 4 <> 0) a
-         |WHERE rn = 1""".stripMargin)
+    "ann_inc_lists" -> sqlAssign("vec_id, list_id", "ann_qv", "ann_inc_seeds", "x.vec_id % 4 <> 0"))
 
-  private val sqlBenchAdc =
-    s"""adc AS (
-       |  SELECT q.vec_id AS query_id, e.vec_id AS match_id,
-       |    CAST(SUM(${sqlQdotInt("list_slice(q.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
-       |  FROM q
-       |  JOIN ann_pq_enc e ON q.vec_id <> e.vec_id
-       |  JOIN ann_pq_cb c ON c.j = e.j AND c.code = e.code
-       |  GROUP BY 1, 2)""".stripMargin
+  /** The bench's query batch: the first 10 vectors, quantized, as CTE `q`. */
+  private val sqlBenchQ = s"q AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings WHERE vec_id < 10)"
+
+  /** Probe-1 IVF over stored artifacts: each `q` row's nearest list of
+    * `seeds`, scored against that list's members in `lists`. */
+  private def sqlBenchProbe1(seeds: String, lists: String) =
+    s"""probes AS (
+       |${sqlAssign("vec_id AS query_id, qv, list_id", "q", seeds)})
+       |${sqlCosTopK("p.query_id", "l.vec_id", "p.qv",
+         s"probes p\n  JOIN $lists l ON l.list_id = p.list_id AND l.vec_id <> p.query_id\n  JOIN ann_qv c ON c.vec_id = l.vec_id")}""".stripMargin
 
   /** Timed statements for the symmetrized bench, keyed like `oracleSql`.
     * What stays inside the timer matches the Spark side exactly: query
@@ -1702,127 +1599,43 @@ object LlmQueries {
     * pre-materialized artifact tables, as they come from AnnIndex there. */
   val oracleBenchSql: Map[String, String] = Map(
     "q_ann_ivf_kmeans" ->
-      s"""WITH q AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings WHERE vec_id < 10),
-         |probes AS (
-         |  SELECT vec_id AS query_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM q x CROSS JOIN ann_ivfk_seeds s) a
-         |  WHERE rn = 1)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT p.query_id, l.vec_id AS match_id, ${sqlQcos("p.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY p.query_id
-         |      ORDER BY ${sqlQcos("p.qv", "c.qv")} DESC, l.vec_id) AS rn
-         |  FROM probes p
-         |  JOIN ann_ivfk_lists l ON l.list_id = p.list_id AND l.vec_id <> p.query_id
-         |  JOIN ann_qv c ON c.vec_id = l.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+      s"""WITH $sqlBenchQ,
+         |${sqlBenchProbe1("ann_ivfk_seeds", "ann_ivfk_lists")}""".stripMargin,
 
     "q_ann_pq" ->
-      s"""WITH q AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings WHERE vec_id < 10),
-         |$sqlBenchAdc
-         |SELECT query_id, match_id, adc FROM (
-         |  SELECT query_id, match_id, adc,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |  FROM adc) z
-         |WHERE rn <= 5""".stripMargin,
+      s"""WITH $sqlBenchQ,
+         |${sqlFlatAdc("q", "ann_pq_enc", "ann_pq_cb")}
+         |${sqlAdcTopK("query_id, match_id, adc", 5)}""".stripMargin,
 
     "q_ann_pq_trained" ->
-      s"""WITH q AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings WHERE vec_id < 10),
-         |adc AS (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS match_id,
-         |    CAST(SUM(${sqlQdotInt("list_slice(q.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
-         |  FROM q
-         |  JOIN ann_pq_enc_t e ON q.vec_id <> e.vec_id
-         |  JOIN ann_pq_cb_t c ON c.j = e.j AND c.code = e.code
-         |  GROUP BY 1, 2)
-         |SELECT query_id, match_id, adc FROM (
-         |  SELECT query_id, match_id, adc,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |  FROM adc) z
-         |WHERE rn <= 5""".stripMargin,
+      s"""WITH $sqlBenchQ,
+         |${sqlFlatAdc("q", "ann_pq_enc_t", "ann_pq_cb_t")}
+         |${sqlAdcTopK("query_id, match_id, adc", 5)}""".stripMargin,
 
     "q_ann_pq_rerank" ->
-      s"""WITH q AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings WHERE vec_id < 10),
-         |$sqlBenchAdc,
-         |sl AS (
-         |  SELECT query_id, match_id FROM (
-         |    SELECT query_id, match_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |    FROM adc) z
-         |  WHERE rn <= 50)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT s.query_id, s.match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY s.query_id
-         |      ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, s.match_id) AS rn
-         |  FROM sl s JOIN q ON q.vec_id = s.query_id
-         |    JOIN ann_qv c ON c.vec_id = s.match_id) z
-         |WHERE rn <= 5""".stripMargin,
+      s"""WITH $sqlBenchQ,
+         |${sqlFlatAdc("q", "ann_pq_enc", "ann_pq_cb")},
+         |${sqlRerankTail("q", "ann_qv")}""".stripMargin,
 
     "q_ann_ivfpq" ->
       s"""WITH v16 AS (SELECT vec_id, $sqlQuantize AS qv FROM embeddings WHERE vec_id < 16),
          |q AS (SELECT vec_id, qv FROM v16 WHERE vec_id < 10),
          |seeds AS (SELECT vec_id AS list_id, qv AS sv FROM v16),
          |probes AS (
-         |  SELECT vec_id AS query_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM q x CROSS JOIN seeds s) a
-         |  WHERE rn <= 4),
-         |adc AS (
-         |  SELECT p.query_id, a.vec_id AS match_id,
-         |    CAST(SUM(${sqlQdotInt("list_slice(p.qv, c.j * 8 + 1, c.j * 8 + 8)", "c.cv")}) AS BIGINT) AS adc
-         |  FROM probes p
-         |  JOIN ann_ivfpq_assigned a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-         |  JOIN ann_pq_enc e ON e.vec_id = a.vec_id
-         |  JOIN ann_pq_cb c ON c.j = e.j AND c.code = e.code
-         |  GROUP BY 1, 2),
-         |sl AS (
-         |  SELECT query_id, match_id FROM (
-         |    SELECT query_id, match_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY adc DESC, match_id) AS rn
-         |    FROM adc) z
-         |  WHERE rn <= 50)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT s.query_id, s.match_id, ${sqlQcos("q.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY s.query_id
-         |      ORDER BY ${sqlQcos("q.qv", "c.qv")} DESC, s.match_id) AS rn
-         |  FROM sl s JOIN q ON q.vec_id = s.query_id
-         |    JOIN ann_qv c ON c.vec_id = s.match_id) z
-         |WHERE rn <= 5""".stripMargin,
+         |${sqlAssign("vec_id AS query_id, qv, list_id", "q", "seeds", keep = "rn <= 4")}),
+         |${sqlIvfAdc("ann_ivfpq_assigned", "ann_pq_enc", "ann_pq_cb")},
+         |${sqlRerankTail("q", "ann_qv")}""".stripMargin,
 
     // the timer holds exactly the Spark side's maintenance work: the NEW
     // batch's assignment, the union with the stored lists, the probe
     "q_ann_incremental" ->
       s"""WITH delta AS (
-         |  SELECT vec_id, list_id FROM (
-         |    SELECT x.vec_id, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM ann_qv x CROSS JOIN ann_inc_seeds s
-         |    WHERE x.vec_id % 4 = 0) a
-         |  WHERE rn = 1),
+         |${sqlAssign("vec_id, list_id", "ann_qv", "ann_inc_seeds", "x.vec_id % 4 = 0")}),
          |lists AS (
          |  SELECT vec_id, list_id FROM ann_inc_lists
          |  UNION ALL SELECT vec_id, list_id FROM delta),
          |q AS (SELECT vec_id, qv FROM ann_qv WHERE vec_id < 10),
-         |probes AS (
-         |  SELECT vec_id AS query_id, qv, list_id FROM (
-         |    SELECT x.vec_id, x.qv, s.list_id,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${sqlQcos("x.qv", "s.sv")} DESC, s.list_id) AS rn
-         |    FROM q x CROSS JOIN ann_inc_seeds s) a
-         |  WHERE rn = 1)
-         |SELECT query_id, match_id, cos FROM (
-         |  SELECT p.query_id, l.vec_id AS match_id, ${sqlQcos("p.qv", "c.qv")} AS cos,
-         |    row_number() OVER (PARTITION BY p.query_id
-         |      ORDER BY ${sqlQcos("p.qv", "c.qv")} DESC, l.vec_id) AS rn
-         |  FROM probes p
-         |  JOIN lists l ON l.list_id = p.list_id AND l.vec_id <> p.query_id
-         |  JOIN ann_qv c ON c.vec_id = l.vec_id) s
-         |WHERE rn <= 5""".stripMargin,
+         |${sqlBenchProbe1("ann_inc_seeds", "lists")}""".stripMargin,
 
     // the timer holds the SemDeDup marginal work: centroid-cosine scoring +
     // the within-cluster prune (clustering comes from the stored artifacts,
@@ -1833,11 +1646,5 @@ object LlmQueries {
          |  FROM ann_ivfk_lists l
          |  JOIN ann_qv q ON q.vec_id = l.vec_id
          |  JOIN ann_ivfk_seeds s ON s.list_id = l.list_id),
-         |pruned AS (
-         |  SELECT DISTINCT x.vec_id
-         |  FROM scored x JOIN scored u ON u.list_id = x.list_id AND u.vec_id <> x.vec_id
-         |  WHERE ${sqlQcos("u.qv", "x.qv")} >= 0.35
-         |    AND (u.ccos > x.ccos OR (u.ccos = x.ccos AND u.vec_id < x.vec_id)))
-         |SELECT s.vec_id, s.list_id, s.ccos FROM scored s
-         |ANTI JOIN pruned p ON p.vec_id = s.vec_id""".stripMargin)
+         |$sqlSemanticPrune""".stripMargin)
 }

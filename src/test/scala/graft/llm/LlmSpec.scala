@@ -208,14 +208,16 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("multi-probe recalls across one flipped hyperplane; candidates are a superset of probe-1") {
-    // 0 and 1 agree on every axis sign; 4 differs from 0 only in the sign of
-    // dim 2 (one hyperplane) -> missed by probe-1, recalled by multi-probe
+    // stored planes = the three axis normals: 0 and 1 agree on every axis
+    // sign; 4 differs from 0 only in the sign of dim 2 (one hyperplane) ->
+    // missed by probe-1, recalled by multi-probe
+    val axes = Array(Array(1000L, 0L, 0L), Array(0L, 1000L, 0L), Array(0L, 0L, 1000L))
     val withBoundary = vecs.union(Seq((4L, Array(0.9f, 0.1f, -0.05f))).toDF("vec_id", "embedding"))
     val queries = withBoundary.filter(col("vec_id") === 0)
     def matches(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("match_id").as[Long].collect().toSet
-    val probe1 = matches(Similarity.bucketTopK(withBoundary, queries, "vec_id", "embedding", planes = 3, k = 5))
-    val multi = matches(Similarity.multiProbeTopK(withBoundary, queries, "vec_id", "embedding", planes = 3, k = 5))
+    val probe1 = matches(Similarity.bucketTopK(withBoundary, queries, "vec_id", "embedding", axes, k = 5))
+    val multi = matches(Similarity.multiProbeTopK(withBoundary, queries, "vec_id", "embedding", axes, k = 5))
     assert(probe1.subsetOf(multi), "multi-probe must never lose a probe-1 match")
     assert(!probe1.contains(4L) && multi.contains(4L), "1-bit neighbor recalled only by multi-probe")
   }
@@ -230,8 +232,10 @@ class LlmSpec extends AnyFunSuite {
       (6L, Array(0.7f, 0.1f, 0.7f)), (7L, Array(0.95f, 0.05f, 0.0f))
     ).toDF("vec_id", "embedding")
     val queries = corpus.filter(col("vec_id") === 0)
+    val seeds = Similarity.untrainedSeeds(corpus, "vec_id", "embedding", 4)
+    val lists = Similarity.assignToLists(corpus, "vec_id", "embedding", seeds, "match_id")
     def matches(p: Int): Set[Long] =
-      Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", nLists = 4, k = 8, nProbe = p)
+      Similarity.ivfTopK(queries, "vec_id", "embedding", seeds, lists, k = 8, nProbe = p)
         .select("match_id").as[Long].collect().toSet
     val brute = Similarity.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = 8)
       .select("match_id").as[Long].collect().toSet
@@ -286,8 +290,8 @@ class LlmSpec extends AnyFunSuite {
     assert(err1 <= err0, s"training must not raise quantization error: $err1 > $err0")
     assert(err1 < err0 * 0.75, s"training should measurably reduce error here: $err1 vs $err0")
     // trained codebook flows through the same encode/search path
-    val out = Similarity.pqTopK(data, data.filter(col("vec_id") < 2), "vec_id", "embedding",
-      m = 2, nCodes = 2, k = 2, codebook = Some(cb1))
+    val enc1 = Similarity.pqEncode(data, "vec_id", "embedding", cb1, "match_id")
+    val out = Similarity.pqTopK(data.filter(col("vec_id") < 2), "vec_id", "embedding", cb1, enc1, k = 2)
     assert(out.count() === 4)
   }
 
@@ -301,18 +305,18 @@ class LlmSpec extends AnyFunSuite {
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
     val queries = data.filter(col("vec_id") < 3)
+    val cb = Similarity.pqCodebook(data, "vec_id", "embedding", m = 2, nCodes = 4)
+    val enc = Similarity.pqEncode(data, "vec_id", "embedding", cb, "match_id")
     // shortlist >= corpus => the exact re-rank sees every candidate, so the
     // two-stage PQ search must reproduce brute force bit-for-bit
-    val pq = Similarity.pqTopK(data, queries, "vec_id", "embedding",
-      m = 2, nCodes = 4, k = 5, rerank = 24)
+    val pq = Similarity.pqTopK(queries, "vec_id", "embedding", cb, enc, k = 5, rerank = 24)
       .select("query_id", "match_id", "cos").as[(Long, Long, Double)].collect().toSet
     val brute = Similarity.bruteForceTopK(data, queries, "vec_id", "embedding", k = 5)
       .select("query_id", "match_id", "cos").as[(Long, Long, Double)].collect().toSet
     assert(pq === brute)
     // pure ADC: integer scores, k rows per query, and the top ADC match for
     // each query lives in the query's own cluster (codes separate the axes)
-    val adc = Similarity.pqTopK(data, queries, "vec_id", "embedding",
-      m = 2, nCodes = 4, k = 5)
+    val adc = Similarity.pqTopK(queries, "vec_id", "embedding", cb, enc, k = 5)
       .select("query_id", "match_id", "adc").as[(Long, Long, Long)].collect()
     assert(adc.groupBy(_._1).forall(_._2.length == 5))
     val top = adc.groupBy(_._1).map { case (q, rows) => q -> rows.maxBy(_._3)._2 }
@@ -328,21 +332,21 @@ class LlmSpec extends AnyFunSuite {
       (i.toLong, base)
     }.toDF("vec_id", "embedding")
     val queries = data.filter(col("vec_id") < 3)
+    val seeds = Similarity.untrainedSeeds(data, "vec_id", "embedding", 4)
+    val cb = Similarity.pqCodebook(data, "vec_id", "embedding", m = 2, nCodes = 4)
+    val enc = Similarity.ivfPqEncode(data, "vec_id", "embedding", seeds, cb, "match_id")
     // nProbe = nLists and shortlist >= corpus: nothing is pruned, so the
     // composed index must reproduce brute force bit-for-bit
-    val full = Similarity.ivfPqTopK(data, queries, "vec_id", "embedding",
-      nLists = 4, m = 2, nCodes = 4, k = 5, nProbe = 4, rerank = 24)
+    val full = Similarity.ivfPqTopK(queries, "vec_id", "embedding", seeds, cb, enc,
+      k = 5, nProbe = 4, rerank = 24)
       .select("query_id", "match_id", "cos").as[(Long, Long, Double)].collect().toSet
     val brute = Similarity.bruteForceTopK(data, queries, "vec_id", "embedding", k = 5)
       .select("query_id", "match_id", "cos").as[(Long, Long, Double)].collect().toSet
     assert(full === brute)
     // probe-1 ADC: candidates come only from the query's own inverted list
-    val seeds = data.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("list_id"), Similarity.quantize(col("embedding")).as("sv"))
     val lists = Similarity.assignToLists(data, "vec_id", "embedding", seeds, "id")
       .select(col("id"), col("list_id")).as[(Long, Long)].collect().toMap
-    val p1 = Similarity.ivfPqTopK(data, queries, "vec_id", "embedding",
-      nLists = 4, m = 2, nCodes = 4, k = 5)
+    val p1 = Similarity.ivfPqTopK(queries, "vec_id", "embedding", seeds, cb, enc, k = 5)
       .select("query_id", "match_id", "adc").as[(Long, Long, Long)].collect()
     assert(p1.nonEmpty)
     p1.foreach { case (q, m, _) =>
@@ -350,11 +354,18 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
-  test("sign-bucket LSH co-buckets aligned vectors and separates opposites") {
-    val b = vecs.select(col("vec_id"), Similarity.signBucket(col("embedding"), 3).as("bk"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(b(0L) === b(1L))
-    assert(b(0L) !== b(3L))
+  test("sign-bucket keys fail fast outside 1 to 64 planes") {
+    // the key is one 64-bit long: a 65th plane would wrap onto bit 0
+    val tooMany = Similarity.randomHyperplanes(3, 65, seed = 7L)
+    val e = intercept[IllegalArgumentException](
+      Similarity.signBucketPlanes(Similarity.quantize(col("embedding")), tooMany))
+    assert(e.getMessage.contains("1 to 64 planes"))
+    intercept[IllegalArgumentException](
+      Similarity.multiProbeTopK(vecs, vecs, "vec_id", "embedding", tooMany, k = 1))
+    intercept[IllegalArgumentException](
+      Similarity.bucketTopK(vecs, vecs, "vec_id", "embedding", Array.empty[Array[Long]], k = 1))
+    // 64 planes is the widest key and still builds
+    Similarity.signBucketPlanes(Similarity.quantize(col("embedding")), tooMany.take(64))
   }
 
   test("stored hyperplanes: deterministic, co-bucket near-dups, complement opposites") {
@@ -390,8 +401,7 @@ class LlmSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val existing = emb.filter(col("vec_id") % 4 =!= 0)
     val batch = emb.filter(col("vec_id") % 4 === 0)
-    val seeds = existing.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("list_id"), Similarity.quantize(col("embedding")).as("sv"))
+    val seeds = Similarity.untrainedSeeds(existing, "vec_id", "embedding", 8)
     def assignments(df: org.apache.spark.sql.DataFrame) =
       Similarity.assignToLists(df, "vec_id", "embedding", seeds, "id")
         .select("id", "list_id").as[(Long, Long)].collect().toSet
@@ -639,8 +649,9 @@ class LlmSpec extends AnyFunSuite {
     assert(seeds.toSeq.map(_.toSeq) === again.toSeq.map(_.toSeq))
 
     // with separated centroids, probe-1 IVF recalls the exact top-1 everywhere
-    val trained = Similarity.ivfTopK(data, data, "vec_id", "embedding",
-      nLists = 2, k = 1, nProbe = 1, trainIters = 3)
+    val seedTable = Similarity.kmeansSeeds(data, "vec_id", "embedding", nLists = 2, iters = 3)
+    val lists = Similarity.assignToLists(data, "vec_id", "embedding", seedTable, "match_id")
+    val trained = Similarity.ivfTopK(data, "vec_id", "embedding", seedTable, lists, k = 1)
       .select("query_id", "match_id").as[(Long, Long)].collect().toMap
     val exact = Similarity.bruteForceTopK(data, data, "vec_id", "embedding", k = 1)
       .select("query_id", "match_id").as[(Long, Long)].collect().toMap

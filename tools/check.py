@@ -6,7 +6,7 @@ then executes each oracle SQL in DuckDB over the same parquet tables and
 compares: columns sorted by name, rows sorted, values compared exactly
 (floats to 1e-12 relative for reporting, but exact mismatches are flagged).
 
-Usage: python3 tools/check.py [sfdir] [--only q_name,...]
+Usage: python3 tools/check.py [sfdir] [--only q_name,...] [--bench-sql]
 """
 import sys, os, json, glob, subprocess
 
@@ -27,7 +27,7 @@ def classpath():
     jars = glob.glob("/opt/spark/jars/*.jar")
     return ":".join([classes] + jars)
 
-def run_verify():
+def run_verify(only=None):
     add_opens = []
     for p in ["java.base/java.lang","java.base/java.lang.invoke","java.base/java.lang.reflect",
               "java.base/java.io","java.base/java.net","java.base/java.nio","java.base/java.util",
@@ -39,6 +39,8 @@ def run_verify():
         "-Xmx8g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", classpath(), "graft.Verify", SF, OUT]
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    if only is not None:
+        env["GRAFT_VERIFY_ONLY"] = only
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:])
@@ -57,16 +59,13 @@ def bench_sql_check():
     """Pin the symmetrized-bench overrides: after building the untimed
     artifact tables, each oracleBenchSql statement must return EXACTLY the
     rows of its oracleSql counterpart (else the bench times a different
-    query). DuckDB-only — no Spark run needed beyond the JSON dumps."""
+    query). The JSON dumps are always re-made from the built classes first
+    (GRAFT_VERIFY_ONLY=none runs no query, a few seconds), so a stale dump
+    from an earlier build can never stand in for the current SQL."""
     import duckdb, pandas as pd
-    src = None
-    for cand in (OUT, "/tmp/graft_oracle_bench"):
-        if os.path.exists(os.path.join(cand, "oracle_bench_sql.json")):
-            src = cand; break
-    if src is None:
-        run_verify(); src = OUT
-    oracle = json.load(open(os.path.join(src, "oracle_sql.json")))
-    bench = json.load(open(os.path.join(src, "oracle_bench_sql.json")))
+    run_verify(only="none")
+    oracle = json.load(open(os.path.join(OUT, "oracle_sql.json")))
+    bench = json.load(open(os.path.join(OUT, "oracle_bench_sql.json")))
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
