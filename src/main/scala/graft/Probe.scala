@@ -40,7 +40,7 @@ object Probe {
 
     val ledger = new Harness.Ledger(spark)
     val t = System.nanoTime()
-    val out = graft.er.ConnectedComponents.run(edges, driverThreshold = 0L)
+    val out = graft.er.ConnectedComponents.distributedPath(edges)
       .localCheckpoint(true)
     out.count()
     val sec = (System.nanoTime() - t) / 1e9

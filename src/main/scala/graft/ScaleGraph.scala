@@ -8,9 +8,11 @@ import graft.Harness.{Sample, bestOf}
   * PageRank, shuffle-path triangle count, and distributed min-label
   * connected components are the engine's beyond-gate (100 TB) formulations,
   * and before this harness they had only ever run on toy property-test
-  * graphs. The gate overrides (`graft.pr.broadcastMaxNodes`,
-  * `graft.tri.broadcastMaxEdges`, CC's `driverThreshold` parameter) force
-  * each engine down BOTH paths on the SAME ≥10M-edge graph, so the artifact
+  * graphs. The package-private path defs (`Analytics.pageRankShuffle`/
+  * `pageRankBroadcast`, `Analytics.triangleCountShuffle`/
+  * `triangleCountBroadcast`, `ConnectedComponents.distributedPath`/
+  * `driverPath`) run each engine down BOTH paths on the SAME ≥10M-edge
+  * graph, so the artifact
   * records (a) that the far paths complete at real size with bounded
   * stragglers, (b) what the gated (broadcast/driver) paths cost at the same
   * size, and (c) that the two strategies agree bit-for-bit — the same
@@ -23,11 +25,11 @@ import graft.Harness.{Sample, bestOf}
   * materialized to parquet and re-read like a real input table.
   *
   * Also measured: the broadcast-path PageRank's driver-memory envelope —
-  * the per-round collected contribution table (`collectS` in
-  * [[graft.graph.Analytics.pageRank]]) as actual `SizeEstimator` bytes at
-  * this node count, with the ×2 live-during-swap factor called out, so the
-  * 10M-node gate default is justified by a measurement instead of an
-  * estimate.
+  * the per-round contribution table the rank-broadcast rounds hold on the
+  * driver (see [[graft.graph.Analytics.pageRank]]) as actual
+  * `SizeEstimator` bytes at this node count, with the ×2 live-during-swap
+  * factor called out, so the 100k-node gate (`PrBroadcastMaxNodes`) is
+  * justified by a measurement instead of an estimate.
   */
 object ScaleGraph {
 
@@ -93,17 +95,14 @@ object ScaleGraph {
          triBroadcastSec, triBroadcastStr, triBroadcastLoad) = if (!phases("tri"))
       (0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
     else {
-      System.setProperty("graft.tri.broadcastMaxEdges", "0")
       val Sample(tS, tSSec, tSStr, tSLoad) =
         best("tri_shuffle") {
-          Analytics.triangleCount(edges).head.getLong(0)
+          Analytics.triangleCountShuffle(edges).head.getLong(0)
         }
-      System.setProperty("graft.tri.broadcastMaxEdges", Long.MaxValue.toString)
       val Sample(tB, tBSec, tBStr, tBLoad) =
         best("tri_broadcast") {
-          Analytics.triangleCount(edges).head.getLong(0)
+          Analytics.triangleCountBroadcast(edges).head.getLong(0)
         }
-      System.clearProperty("graft.tri.broadcastMaxEdges")
       require(tS == tB,
         s"triangle paths disagree: shuffle=$tS broadcast=$tB")
       (tS, tSSec, tSStr, tSLoad, tBSec, tBStr, tBLoad)
@@ -116,47 +115,42 @@ object ScaleGraph {
          prBroadcastSec, prBroadcastStr, prBroadcastLoad, prEqual, prCadenceJson) = if (!phases("pr"))
       (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false, "{}")
     else {
-      System.setProperty("graft.pr.broadcastMaxNodes", "0")
       // pin per-round cuts for the base run: the production default is the
       // cadence the r19 sweep chose (k=2), and the sweep's "1" row must
       // actually measure k=1
-      System.setProperty("graft.pr.checkpointEvery", "1")
       val Sample(pSOut, pSSec, pSStr, pSLoad) =
         best("pr_shuffle") {
-          val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
+          val out = Analytics.pageRankShuffle(edges, prIters, checkpointEvery = 1)
+            .localCheckpoint(true)
           out.count()
           out
         }
-      System.clearProperty("graft.pr.checkpointEvery")
       // checkpoint-cadence probe (round-18 advice #7): the shuffle path cuts
       // lineage every round — 9 materializations over 10 rounds at this node
       // count. Sparser cuts (k rounds composed into one job) trade
       // blockstore writes for deeper plans; ranks must stay bit-equal.
       val cadenceSecs = Seq(2, 3).map { k =>
-        System.setProperty("graft.pr.checkpointEvery", k.toString)
         val Sample(out, sec, _, _) = best(s"pr_shuffle_ck$k") {
-          val o = Analytics.pageRank(edges, prIters).localCheckpoint(true)
+          val o = Analytics.pageRankShuffle(edges, prIters, checkpointEvery = k)
+            .localCheckpoint(true)
           o.count()
           o
         }
-        System.clearProperty("graft.pr.checkpointEvery")
         require(out.except(pSOut).isEmpty && pSOut.except(out).isEmpty,
           s"cadence-$k ranks diverged from per-round checkpointing")
         k -> sec
       }
       val cadenceJson = ((1 -> pSSec) +: cadenceSecs)
         .map { case (k, s) => s""""$k":$s""" }.mkString("{", ",", "}")
-      // FORCE the broadcast path (the default gate is 100k nodes — measured
-      // by this harness's own crossover probes — so a cleared prop would
-      // silently measure the shuffle path twice at this size)
-      System.setProperty("graft.pr.broadcastMaxNodes", Long.MaxValue.toString)
+      // FORCE the broadcast path (the gate is 100k nodes — measured by this
+      // harness's own crossover probes — so pageRank itself would measure
+      // the shuffle path twice at this size)
       val Sample(pBOut, pBSec, pBStr, pBLoad) =
         best("pr_broadcast") {
-          val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
+          val out = Analytics.pageRankBroadcast(edges, prIters).localCheckpoint(true)
           out.count()
           out
         }
-      System.clearProperty("graft.pr.broadcastMaxNodes")
       val eq = pSOut.except(pBOut).isEmpty && pBOut.except(pSOut).isEmpty
       (pSSec, pSStr, pSLoad, pBSec, pBStr, pBLoad, eq, cadenceJson)
     }
@@ -177,14 +171,14 @@ object ScaleGraph {
     else {
       val Sample(cDOut, cDSec, cDStr, cDLoad) =
         best("cc_distributed") {
-          val out = ConnectedComponents.run(edges, driverThreshold = 0L)
+          val out = ConnectedComponents.distributedPath(edges)
             .localCheckpoint(true)
           out.count()
           out
         }
       val Sample(cUOut, cUSec, cUStr, cULoad) =
         best("cc_driver") {
-          val out = ConnectedComponents.run(edges, driverThreshold = Long.MaxValue)
+          val out = ConnectedComponents.driverPath(edges)
             .localCheckpoint(true)
           out.count()
           out
@@ -195,7 +189,7 @@ object ScaleGraph {
     }
 
     // --- driver-memory envelope of the broadcast path (untimed): build the
-    // round-1 contribution table exactly as pageRank's collectS does and
+    // round-1 contribution table the rank-broadcast path holds and
     // measure the LIVE array with SizeEstimator. Two generations are alive
     // during each round's swap (cur + nxt), so the gate-edge envelope is
     // 2× this figure scaled to the gate's node count.

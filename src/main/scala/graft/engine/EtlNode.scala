@@ -81,9 +81,7 @@ class SqlNode(
     // flipped a 685M-row stream from BroadcastHashJoin to SortMergeJoin and
     // cost 568s where ~75s is linear. 64 MB parquet ≈ a few hundred MB
     // hashed — routine broadcast traffic on a production cluster, and the
-    // conf is scoped to this node's session, never the caller's. Small-heap
-    // deployments (a 64 MB parquet side can hash to several hundred MB on
-    // the driver) lower it without a code change via the sys prop.
+    // conf is scoped to this node's session, never the caller's.
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", SqlNode.broadcastThreshold)
     inputIds.foreach(id => cat.readAny(id, s).createOrReplaceTempView(id))
     outputIds.foreach { out =>
@@ -104,11 +102,8 @@ class SqlNode(
 }
 
 object SqlNode {
-  /** Node-session broadcast ceiling, overridable per deployment via sys prop
-    * `graft.sql.nodeBroadcastThreshold` (bytes, or -1 to disable auto
-    * broadcast) — small-heap drivers lower it without a code change. */
-  private[graft] def broadcastThreshold: String =
-    sys.props.getOrElse("graft.sql.nodeBroadcastThreshold", (64L << 20).toString)
+  /** Node-session broadcast ceiling in bytes: 64 MB (the reason is in `run`). */
+  private[graft] val broadcastThreshold: String = (64L << 20).toString
 
   sealed trait Materialize
   /** Outputs written as parquet datasets (the default FS-output config). */

@@ -1,7 +1,12 @@
 package graft.er
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Entity-resolution pipeline (SURVEY §2.9) — the reference's ML/dataflow heart,
   * re-expressed as block-bounded DataFrame dataflow:
@@ -193,25 +198,36 @@ object ConnectedComponents {
     * union-find instead of the distributed label-propagation loop. Same
     * philosophy as Spark's own `autoBroadcastJoinThreshold`: pick the physical
     * strategy from the measured size of the data, here the exact count already
-    * taken for loop-partition sizing. 2M edges = 32 MB of (long, long) on the
-    * driver and a few ms of union-find, vs a fixed ~0.3-0.5s *per round* of
+    * taken for loop-partition sizing. 2M edges (400k distinct ids in the
+    * ScaleGraph power-law shape) = ~200 MB of collected rows plus a ~40 MB
+    * id index on the driver (Spark `SizeEstimator`) and ~1s of union-find,
+    * vs a fixed ~0.3-0.5s *per round* of
     * stage-scheduling overhead in the distributed loop — which is the correct
     * cost structure at 100 TB (where the edge set can't fit a driver) but pure
     * floor on the small, already-aggregated pair sets ER blocking emits.
     * Measured at 5× the gate (ScaleGraph, 10M edges, giant component through
     * a 10^4-degree hub): forced driver union-find 11.6s incl. the collect vs
     * distributed 27.2s, labels bit-equal — so like the triangle broadcast
-    * gate, this default is a DRIVER-MEMORY bound (~560 MB of collected rows
-    * at 10M edges), not a wall-time crossover. */
-  val DriverPathMaxEdges: Long = 2L * 1000 * 1000
+    * gate, this default is a DRIVER-MEMORY bound (~1 GB of collected rows
+    * plus a ~200 MB id index at 10M edges), not a wall-time crossover. */
+  private[graft] val DriverPathMaxEdges: Long = 2L * 1000 * 1000
 
-  /** Last salted-jump physical plan, captured only when the
-    * `graft.cc.capturePlan` system property is set (test hook — see the
-    * inline note at the capture site). */
-  @volatile private[er] var lastSaltedJumpPlan: String = ""
+  /** Edge count from which the distributed loop runs skew-safe pointer
+    * jumping (see the loop body). It costs two extra jobs per round, so it is
+    * engaged only where rounds are expensive enough to hide the floor AND
+    * label concentration can actually hurt (a key needs more rows than a
+    * partition's fair share). Measured at the ScaleGraph 10M-edge point
+    * (SCALE_r16 → SCALE_r18): `cc_dist` 32.96s with a 4.94 max/median task
+    * straggler → 19.43s / 1.59. */
+  private[graft] val SkewSafeMinEdges: Long = 1000L * 1000
 
-  /** @param edges two-column DataFrame (src, dst); integral or string ids
-    * @return (id, component) where component = min id reachable — deterministic. */
+  /** Follower count below which a label is never hot, whatever the fair
+    * share (the census ships at most total/HotFloor candidates back). */
+  private[graft] val HotFloor: Long = 50000L
+
+  /** Edge rows per loop partition (the static stand-in for AQE coalescing). */
+  private[graft] val RowsPerPartition: Long = 100000L
+
   /** True when `plan` is a narrow wrapper over an ALREADY-materialized
     * table (a checkpoint `LogicalRDD` or a driver `LocalRelation`):
     * re-evaluating such a plan re-reads stored blocks, so the defensive
@@ -232,10 +248,33 @@ object ConnectedComponents {
       case _ => false
     }
 
-  def run(edges: DataFrame, maxIter: Int = 50,
-          driverThreshold: Long = DriverPathMaxEdges): DataFrame = {
-    val spark = edges.sparkSession
-    val tE = System.nanoTime()
+  /** @param edges two-column DataFrame (src, dst); integral or string ids
+    * @return (id, component) where component = min id reachable — deterministic.
+    * Graphs up to [[DriverPathMaxEdges]] edges run the driver union-find;
+    * larger ones (and id types the union-find cannot order) run the
+    * distributed loop. */
+  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    val (s, edgeCount) = pairs(edges)
+    if (edgeCount <= DriverPathMaxEdges && unionFindable(s)) unionFind(s)
+    else propagate(s, edgeCount, maxIter, SkewSafeMinEdges, HotFloor, RowsPerPartition, _ => ())
+  }
+
+  /** The driver union-find path whatever the edge count. */
+  private[graft] def driverPath(edges: DataFrame): DataFrame = unionFind(pairs(edges)._1)
+
+  /** The distributed loop whatever the edge count. `onSaltedJump` receives
+    * each round's salted-jump plan when the hot-label branch engages. */
+  private[graft] def distributedPath(edges: DataFrame,
+                                     skewSafeMinEdges: Long = SkewSafeMinEdges,
+                                     hotFloor: Long = HotFloor,
+                                     rowsPerPartition: Long = RowsPerPartition,
+                                     onSaltedJump: DataFrame => Unit = _ => ()): DataFrame = {
+    val (s, edgeCount) = pairs(edges)
+    propagate(s, edgeCount, 50, skewSafeMinEdges, hotFloor, rowsPerPartition, onSaltedJump)
+  }
+
+  /** The raw (src, dst) pairs, materialized once, and their count. */
+  private def pairs(edges: DataFrame): (DataFrame, Long) = {
     // Checkpoint the RAW pairs first: the symmetrizing union below references
     // its input twice, and without this the whole upstream edge-producing
     // pipeline (e.g. the MinHash cascade) would run twice inside one job.
@@ -252,6 +291,13 @@ object ConnectedComponents {
     val s =
       if (isMaterializedScan(edges.queryExecution.optimizedPlan)) edges.toDF("src", "dst")
       else edges.toDF("src", "dst").localCheckpoint(true)
+    (s, s.count())
+  }
+
+  private def propagate(s: DataFrame, edgeCount: Long, maxIter: Int,
+                        skewSafeMinEdges: Long, hotFloor: Long, rowsPerPartition: Long,
+                        onSaltedJump: DataFrame => Unit): DataFrame = {
+    val spark = s.sparkSession
     // undirected: symmetrize LAZILY over the checkpointed blocks — narrow
     // (block read, no shuffle), so re-evaluating it each round costs
     // nothing and a second eager checkpoint would only re-write the whole
@@ -266,9 +312,6 @@ object ConnectedComponents {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
-    if (verbose)
-      System.err.println(f"[cc] edges checkpoint ${(System.nanoTime() - tE) / 1e9}%.2fs")
     // The loop runs with AQE off (restored afterwards): each round is a chain
     // of small exchanges over already-checkpointed inputs, and AQE turns every
     // one into a separately-materialized query stage with driver re-planning
@@ -280,58 +323,38 @@ object ConnectedComponents {
     // Size the loop's exchanges to the graph, not the session default: with
     // AQE off every round would otherwise run its 4-5 stages at the full
     // configured partition count even for a few hundred label rows — pure
-    // task-scheduling overhead that dominates toy/medium graphs. One count
-    // over the checkpointed blocks (cheap: no recompute) picks ~100k edge
-    // rows per partition, clamped to the session setting, so a cluster-scale
-    // edge set still uses every configured partition. This is the static
-    // stand-in for exactly the coalescing AQE would have done.
-    // Both the count and the conf reads happen BEFORE any conf mutation, so
-    // a failure here (executor loss mid-count) can never leak a mutated
-    // session conf past the finally below. The mutations themselves are
-    // session-global for the loop's duration — the engine runs one query at
-    // a time per session (DagExecutor parallelism is across *sessions*-safe
-    // node work, not concurrent actions on this one), which is the stated
-    // concurrency contract for CC.
+    // task-scheduling overhead that dominates toy/medium graphs. The edge
+    // count picks ~RowsPerPartition edge rows per partition, clamped to the
+    // session setting, so a cluster-scale edge set still uses every
+    // configured partition.
+    // The conf reads happen BEFORE any conf mutation, so a failure here can
+    // never leak a mutated session conf past the finally below. The
+    // mutations themselves are session-global for the loop's duration — the
+    // engine runs one query at a time per session (DagExecutor parallelism
+    // is across *sessions*-safe node work, not concurrent actions on this
+    // one), which is the stated concurrency contract for CC.
     val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edgeCount = s.count()
-    if (edgeCount <= driverThreshold) {
-      driverUnionFind(s, verbose) match {
-        case Some(labels) => return labels
-        case None         => () // unsupported id type: distributed loop below
-      }
-    }
-    val rowsPerPart = sys.props.get("graft.cc.rowsPerPartition").map(_.toLong).getOrElse(100000L)
-    val loopParts = math.max(1L, math.min(confParts.toLong, edgeCount / rowsPerPart + 1L)).toInt
-    // Skew-safe pointer jumping (see the loop body) costs two extra jobs per
-    // round — engage it only where rounds are expensive enough to hide the
-    // floor AND label concentration can actually hurt (a key needs more rows
-    // than a partition's fair share). Tests force it with the property.
-    val skewSafe = edgeCount >= sys.props.get("graft.cc.skewSafeMinEdges")
-      .map(_.toLong).getOrElse(1000000L)
+    val loopParts = math.max(1L, math.min(confParts.toLong, edgeCount / rowsPerPartition + 1L)).toInt
+    val skewSafe = edgeCount >= skewSafeMinEdges
     val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled").getOrElse("true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", loopParts)
     try {
-    var t0 = System.nanoTime()
     var labels: DataFrame = null
 
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      t0 = System.nanoTime()
       // candidate labels arriving over edges, merged with current labels; the
       // old label rides along (tagged `own`) so convergence detection needs no
       // extra labels-vs-labels join afterwards — every id has exactly one own
       // row, recovered by max(when(own, component)) (max ignores the nulls).
       // Round 1 is join-free: the initial label of every node is its own id,
       // so the message over edge (src,dst) is literally (dst, src) and the
-      // own-row is (src, src) — two narrow projections of the checkpointed
-      // edge blocks. The groupBy absorbs the duplicate own-rows (min/max over
-      // identical values), so the former distinct()+eager-checkpoint labels
-      // init was a whole extra shuffle + materialization job that round 1
-      // normalized anyway — a fixed ~0.3-0.5s floor on toy graphs. (A lazy
-      // `labels = projection of e` init would NOT work: joining e against a
-      // per-endpoint labels table multiplies to Σdeg² message rows.)
+      // own-row is (src, src). The groupBy absorbs the duplicate own-rows
+      // (min/max over identical values). (A lazy `labels = projection of e`
+      // init would NOT work: joining e against a per-endpoint labels table
+      // multiplies to Σdeg² message rows.)
       // Round 1's seed is a single 4-way explode over the RAW checkpointed
       // pairs (own-rows + messages in both directions) rather than two
       // projections of the symmetrized view — one task wave over 32 blocks
@@ -394,8 +417,7 @@ object ConnectedComponents {
         // cure goes undetected. The census already aggregates per-label
         // counts, so the table total is a free sum alongside it; candidates
         // above the fixed floor ride back in the SAME action (bounded:
-        // ≤ total/50k entries), and the census is never collected whole.
-        val hotFloor = sys.props.get("graft.cc.hotFloor").map(_.toLong).getOrElse(50000L)
+        // ≤ total/hotFloor entries), and the census is never collected whole.
         val censusRow = propagated.groupBy("component").agg(count(lit(1)).as("__n"))
           .agg(sum("__n").as("__total"),
             collect_list(when(col("__n") >= hotFloor,
@@ -405,8 +427,6 @@ object ConnectedComponents {
         val hotT = math.max(hotFloor, propagatedRows / loopParts)
         val hotVals = censusRow.getSeq[org.apache.spark.sql.Row](1)
           .filter(_.getLong(1) >= hotT).map(_.get(0))
-        if (verbose)
-          System.err.println(s"[cc] hot labels: ${hotVals.size} (>=$hotT of $propagatedRows rows)")
         if (hotVals.isEmpty) plainJump() else {
           // parent row OF a hot label c = the propagated row with id == c;
           // every label is a node id present in `propagated`, so exactly one
@@ -427,7 +447,10 @@ object ConnectedComponents {
           // (verified via .explain: SMJ `Left keys [component]`, `Join
           // condition: (__salt = 0)`). pmod(xxhash64(__pid), 1) is always 0
           // but hangs off an attribute, so it survives as a genuine second
-          // key pair and the shuffle is hash(component, __salt).
+          // key pair and the shuffle is hash(component, __salt). A future
+          // `x mod 1 -> 0` simplification would collapse the keys with no
+          // functional failure, which is why `onSaltedJump` exposes this plan
+          // to the spec that asserts the salt is still a shuffle key.
           val saltedJump = salted
             .join(broadcast(hotParents), col("component") === col("__hpid"), "left")
             .join(parents.withColumn("__pz", pmod(xxhash64(col("__pid")), lit(1)).cast("int")),
@@ -435,16 +458,7 @@ object ConnectedComponents {
             .select(col("id"),
               coalesce(col("__hpcomp"), col("__pcomp"), col("component")).as("component"),
               col("old"))
-          // Test hook: the salt's skew-spreading depends on Catalyst NOT
-          // folding pmod(xxhash64(__pid), 1) to a literal 0 — a future
-          // `x mod 1 -> 0` simplification rule would silently collapse the
-          // equi keys back to hash(component) with no functional failure.
-          // Publishing the physical plan (behind a debug prop; planning a
-          // throwaway copy costs real time per round) lets the spec assert
-          // the shuffle keys still carry the salt, so an optimizer upgrade
-          // trips a test instead of reinstating the straggler unnoticed.
-          if (sys.props.contains("graft.cc.capturePlan"))
-            lastSaltedJumpPlan = saltedJump.queryExecution.executedPlan.toString
+          onSaltedJump(saltedJump)
           saltedJump
         }
       }
@@ -458,8 +472,6 @@ object ConnectedComponents {
       labels = next.select("id", "component")
       converged = changed == 0
       iter += 1
-      if (verbose)
-        System.err.println(f"[cc] iter=$iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     require(converged, s"connected components did not converge in $maxIter iterations")
     labels
@@ -469,99 +481,72 @@ object ConnectedComponents {
     }
   }
 
+  private def unionFindable(s: DataFrame): Boolean = s.schema("src").dataType match {
+    case ByteType | ShortType | IntegerType | LongType | StringType => true
+    case _                                                          => false
+  }
+
   /** Small-graph fast path: exact union-find on the driver over the already-
     * checkpointed edge blocks. Result is identical to the distributed loop —
     * one row per distinct endpoint, component = min reachable id, input's
-    * integral type preserved. Union-by-min keeps every tree's root equal to
-    * its component minimum, so the output cannot depend on union order.
-    * This replaces 3-5 whole Spark jobs (label init + one per round) whose
-    * stage-scheduling floor dominates graphs this small; the upstream
-    * pair-generation cascade still ran fully distributed inside the
+    * id type preserved. String ids are ordered the way Spark's min() orders
+    * them: UTF8String compares UTF-8 bytes unsigned (= code-point order),
+    * which Java's UTF-16 compareTo does NOT match for supplementary
+    * characters. This replaces 3-5 whole Spark jobs (label init + one per
+    * round) whose stage-scheduling floor dominates graphs this small; the
+    * upstream pair-generation cascade still ran fully distributed inside the
     * checkpoint that produced `s`. */
-  private def driverUnionFind(s: DataFrame, verbose: Boolean): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
+  private def unionFind(s: DataFrame): DataFrame = {
     val spark = s.sparkSession
-    val t0 = System.nanoTime()
-    val idType = s.schema("src").dataType
-    val integral = idType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case StringType                                    => false
-      case _                                             => return None
-    }
     import spark.implicits._
-    val out = if (integral) {
-      val pairs = s.select(col("src").cast("long"), col("dst").cast("long")).collect()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x0: Long): Long = {
-        var r = x0
-        while (parent(r) != r) r = parent(r)
-        var c = x0
-        while (c != r) { val n = parent(c); parent(c) = r; c = n } // path compression
-        r
-      }
-      pairs.foreach { row =>
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val a = row.getLong(0); val b = row.getLong(1)
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      }
-      // snapshot keys first: find() path-compresses into the same map, and
-      // mutating a collection mid-iteration is undefined even for value-only
-      // writes
-      val ks = parent.keys.toArray
-      ks.map(id => (id, find(id))).toSeq.sorted
+    val idType = s.schema("src").dataType
+    require(unionFindable(s), s"driver union-find needs integral or string ids, got $idType")
+    if (idType == StringType)
+      minLabels(s.collect(), (r, i) => UTF8String.fromString(r.getString(i)))(_ binaryCompare _)
+        .map { case (id, c) => (id.toString, c.toString) }
+        .toDF("id", "component")
+    else
+      minLabels(s.select(col("src").cast("long"), col("dst").cast("long")).collect(),
+                (r, i) => r.getLong(i))(Ordering.Long)
         .toDF("id", "component")
         .select(col("id").cast(idType).as("id"), col("component").cast(idType).as("component"))
-    } else {
-      // String ids must be ordered the way Spark's min() orders them:
-      // UTF8String compares UTF-8 bytes unsigned (= code-point order), which
-      // Java's UTF-16 compareTo does NOT match for supplementary characters.
-      def lt(a: String, b: String): Boolean = {
-        val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val n = math.min(x.length, y.length)
-        var i = 0
-        while (i < n) {
-          val c = (x(i) & 0xff) - (y(i) & 0xff)
-          if (c != 0) return c < 0
-          i += 1
-        }
-        x.length < y.length
-      }
-      val pairs = s.collect()
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x0: String): String = {
-        var r = x0
-        while (parent(r) != r) r = parent(r)
-        var c = x0
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.foreach { row =>
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val a = row.getString(0); val b = row.getString(1)
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-        }
-      }
-      val ks = parent.keys.toArray // snapshot: find() mutates during labeling
-      ks.map(id => (id, find(id))).toSeq.sorted
-        .toDF("id", "component")
+  }
+
+  /** (id, min id of its component) for every distinct endpoint of the
+    * non-null (src, dst) `rows`, ascending in `ord`; `id(row, i)` reads
+    * endpoint i. The ids are sorted once, so union-by-min-INDEX keeps every
+    * tree's root equal to its component minimum under `ord`, and the output
+    * cannot depend on union order. */
+  private def minLabels[T: ClassTag](rows: Array[Row], id: (Row, Int) => T)
+                                    (ord: Ordering[T]): Seq[(T, T)] = {
+    val edges = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    // id -> rank in `ord`, in a java HashMap: filled with the distinct ids
+    // first, then re-pointed at their ranks once those are sorted
+    val index = new java.util.HashMap[T, Integer]()
+    val unranked = Integer.valueOf(-1)
+    edges.foreach { r => index.putIfAbsent(id(r, 0), unranked); index.putIfAbsent(id(r, 1), unranked) }
+    val ids = index.keySet.asScala.toArray.sorted(ord)
+    ids.indices.foreach(i => index.put(ids(i), i))
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n } // path compression
+      r
     }
-    if (verbose)
-      System.err.println(f"[cc] driver union-find ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    Some(out)
+    edges.foreach { r =>
+      val ra = find(index.get(id(r, 0))); val rb = find(index.get(id(r, 1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.indices.map(i => (ids(i), ids(find(i))))
   }
 
   /** Reference output shape (messy.py:432-448): (messy_id, cluster_id) where
     * cluster_id is the stable hash of the component (F13). `hashed=false` keeps
     * the raw min-id component (deterministic across engines, oracle-friendly). */
-  def clusterMapping(edges: DataFrame, hashed: Boolean = false, maxIter: Int = 50,
-                     driverThreshold: Long = DriverPathMaxEdges): DataFrame = {
-    val comp = run(edges, maxIter, driverThreshold)
+  def clusterMapping(edges: DataFrame, hashed: Boolean = false, maxIter: Int = 50): DataFrame = {
+    val comp = run(edges, maxIter)
     val cid = if (hashed) graft.ops.Ids.clusterId(col("component")) else col("component")
     comp.select(col("id").as("messy_id"), cid.as("cluster_id"))
   }

@@ -144,17 +144,20 @@ object Corpus {
     *
     * Scale shape: explode + map-side-combinable count (one shuffle), then a
     * distributed take-ordered for the top N (Spark's TakeOrdered — each
-    * partition contributes its local top N, no global sort); the final
-    * rank window runs over N rows only. */
+    * partition contributes its local top N, no global sort); the rank is
+    * the position in ONE sorted array of those N rows, since an
+    * unpartitioned rank window would pull them through WindowExec's
+    * single-partition fallback (and its "No Partition Defined" warning). */
   def vocabulary(df: DataFrame, textCol: String, topN: Int,
-                 minCount: Long = 1L): DataFrame = {
-    val counts = df
-      .select(explode(split(col(textCol), " ")).as("token"))
+                 minCount: Long = 1L): DataFrame =
+    df.select(explode(split(col(textCol), " ")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
       .orderBy(col("cnt").desc, col("token").asc)
       .limit(topN)
-    counts.withColumn("rank",
-      row_number().over(Window.orderBy(col("cnt").desc, col("token").asc)).cast("long"))
-  }
+      // ascending (-cnt, token) = cnt desc, token asc
+      .agg(sort_array(collect_list(struct((-col("cnt")).as("k"), col("token")))).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("t.token").as("token"), (-col("t.k")).as("cnt"),
+        (col("pos") + 1).cast("long").as("rank"))
 }

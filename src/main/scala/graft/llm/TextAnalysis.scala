@@ -184,6 +184,16 @@ object TextAnalysis {
                          idCol: String, n: Int, minHits: Int): DataFrame =
     contaminationFlagsBloom(docs, bench, textCol, idCol, n, minHits)
 
+  /** Benchmark gram estimate past which the Bloom gate is skipped: past ~8M
+    * grams Spark's filter binary saturates its 64M-bit cap, so every task
+    * would pay an 8MB broadcast literal (plus the driver collect that builds
+    * it) for a filter whose false-positive rate is already degrading — a
+    * benchmark that large has left the MB-against-TB shape the Bloom
+    * prefilter exists for, and the plain exact equi-join (no driver state at
+    * all) is the right plan. Same output either way: the equi-join confirms
+    * every row on both paths. */
+  private[llm] val MaxBloomGrams: Long = 8000000L
+
   /** [[contaminationFlags]] with a Bloom-filter gate: the benchmark gram set
     * is compiled into ONE filter binary (Spark's own runtime-filter sketch,
     * surfaced as `bloom_agg`/`bloom_contains`) that ships to every executor
@@ -204,8 +214,8 @@ object TextAnalysis {
     *
     * The driver collects the filter binary once (the benchmark is the SMALL
     * side — the same bounded statistics pass as IVF seeding). When the
-    * benchmark-side estimate exceeds `graft.decontam.maxBloomGrams` (default
-    * 8M grams — where Spark's 64M-bit filter cap saturates), the gate is
+    * benchmark-side estimate exceeds [[MaxBloomGrams]] (8M grams — where
+    * Spark's 64M-bit filter cap saturates), the gate is
     * skipped and the operator degrades to the plain exact equi-join with no
     * driver-held state and no extension-function dependency. */
   def contaminationFlagsBloom(docs: DataFrame, bench: DataFrame, textCol: String,
@@ -217,15 +227,6 @@ object TextAnalysis {
     // the aggregate). Reject the ambiguity at the API edge.
     require(minHits >= 1, s"contaminationFlags: minHits must be >= 1, got $minHits")
     val dGrams = docs.select(col(idCol), explode(gramsArray(textCol, n)).as("g"))
-    // Gate the GATE: past ~8M benchmark grams Spark's filter binary saturates
-    // its 64M-bit cap, so every task would pay an 8MB broadcast literal (plus
-    // the driver collect that builds it) for a filter whose false-positive
-    // rate is already degrading — a benchmark that large has left the
-    // MB-against-TB shape the Bloom prefilter exists for, and the plain
-    // exact equi-join (no driver state at all) is the right plan. Same
-    // output either way: the equi-join confirms every row on both paths.
-    val maxBloomGrams = sys.props.get("graft.decontam.maxBloomGrams")
-      .map(_.toLong).getOrElse(8000000L)
     // benchmark-side prep (distinct gram set + filter binary) is gated on
     // the BENCH estimate — the side that is small by contract — and every
     // returned value is materialized inside the scope (checkpointed table,
@@ -238,7 +239,7 @@ object TextAnalysis {
       // a megabyte literal to every task for a kilobyte-scale gram set
       val est = if (expectedGrams > 0) expectedGrams
                 else math.max(1024L, 2L * bg.count())
-      if (est > maxBloomGrams) (bg, None)
+      if (est > MaxBloomGrams) (bg, None)
       else (bg, Some(bg
         .agg(call_function("bloom_agg", xxhash64(col("g")), lit(est)).as("bf"))
         .head.getAs[Array[Byte]](0)))

@@ -39,10 +39,9 @@ object Spread {
   /** Default per-task byte target for [[bySize]]. Chosen by A/B at sf0.1
     * (see OPTIMIZATION_r20.md): orders (2.6 MB) → ~8 tasks matches the
     * measured KMV sweet spot; lineitem (11 MB) still saturates 32 cores,
-    * keeping the r19 Expand-aggregate wins intact. Env-tunable for other
-    * hardware, never affects results (aggregates are order-independent). */
-  val DefaultBytesPerTask: Long =
-    sys.env.get("GRAFT_SPREAD_BYTES_PER_TASK").map(_.toLong).getOrElse(320L * 1024)
+    * keeping the r19 Expand-aggregate wins intact. Never affects results
+    * (aggregates are order-independent). */
+  val DefaultBytesPerTask: Long = 320L * 1024
 
   private def hasOwnShuffle(df: DataFrame): Boolean =
     df.queryExecution.sparkPlan.exists(

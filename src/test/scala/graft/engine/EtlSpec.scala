@@ -50,12 +50,8 @@ class EtlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("SELECT nope FROM in1"))
   }
 
-  test("node broadcast ceiling defaults to 64MB and honors the deployment override") {
+  test("node broadcast ceiling is 64MB") {
     assert(SqlNode.broadcastThreshold === (64L << 20).toString)
-    try {
-      sys.props("graft.sql.nodeBroadcastThreshold") = "-1"
-      assert(SqlNode.broadcastThreshold === "-1")
-    } finally sys.props -= "graft.sql.nodeBroadcastThreshold"
   }
 
   test("DfNode validates transform arity (reference etl.py:445-449)") {

@@ -143,14 +143,11 @@ class GraphSpec extends AnyFunSuite {
       val edges = (for (a <- 0 until n; b <- 0 until n
                         if a != b && rnd.nextDouble() < 0.15) yield (a.toLong, b.toLong)).toSeq
       if (edges.nonEmpty) {
-        val viaBroadcast = Analytics.pageRank(edges.toDF("src", "dst"), iters = 10)
+        val viaBroadcast = Analytics.pageRankBroadcast(edges.toDF("src", "dst"), iters = 10)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        System.setProperty("graft.pr.broadcastMaxNodes", "0")
-        try {
-          val viaShuffle = Analytics.pageRank(edges.toDF("src", "dst"), iters = 10)
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          assert(viaBroadcast === viaShuffle, s"trial $trial")
-        } finally System.clearProperty("graft.pr.broadcastMaxNodes")
+        val viaShuffle = Analytics.pageRankShuffle(edges.toDF("src", "dst"), iters = 10)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(viaBroadcast === viaShuffle, s"trial $trial")
       }
     }
   }
@@ -181,24 +178,20 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("Triangle count: shuffle path agrees with broadcast path on noisy input") {
-    // force the far side of the broadcast gate and replay the invariance
+    // run the far side of the broadcast gate and replay the invariance
     // cases: the wedge formulation counts multiplicities, so its
     // unconditional dedup is what this protects
-    System.setProperty("graft.tri.broadcastMaxEdges", "0")
-    try {
-      def tri(edges: Seq[(Long, Long)]): Long =
-        Analytics.triangleCount(edges.toDF("src", "dst")).collect().head.getLong(0)
-      val k4 = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
-      assert(tri(k4) === 4L)
-      val noisy = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L), (0L, 2L),
-        (0L, 2L), (2L, 2L), (1L, 1L))
-      assert(tri(noisy) === 1L)
-      // duplicates under assumeCanonical must not over-count either
-      val dupCanon = Seq((0L, 1L), (0L, 1L), (1L, 2L), (0L, 2L)).toDF("src", "dst")
-      assert(Analytics.triangleCount(dupCanon, assumeCanonical = true)
-        .collect().head.getLong(0) === 1L)
-    } finally System.clearProperty("graft.tri.broadcastMaxEdges")
-    ()
+    def tri(edges: Seq[(Long, Long)]): Long =
+      Analytics.triangleCountShuffle(edges.toDF("src", "dst")).collect().head.getLong(0)
+    val k4 = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
+    assert(tri(k4) === 4L)
+    val noisy = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L), (0L, 2L),
+      (0L, 2L), (2L, 2L), (1L, 1L))
+    assert(tri(noisy) === 1L)
+    // duplicates under assumeCanonical must not over-count either
+    val dupCanon = Seq((0L, 1L), (0L, 1L), (1L, 2L), (0L, 2L)).toDF("src", "dst")
+    assert(Analytics.triangleCountShuffle(dupCanon, assumeCanonical = true)
+      .collect().head.getLong(0) === 1L)
   }
 
   test("Triangle count: distributed-degree branch agrees with local-relation branch") {
@@ -210,14 +203,10 @@ class GraphSpec extends AnyFunSuite {
       (3L, 4L), (4L, 5L), (3L, 5L))
     val local = Analytics.triangleCount(k4Plus.toDF("src", "dst"))
       .collect().head.getLong(0)
-    System.setProperty("graft.tri.localDegreeMaxVertices", "0")
-    try {
-      val dist = Analytics.triangleCount(k4Plus.toDF("src", "dst"))
-        .collect().head.getLong(0)
-      assert(dist === local)
-      assert(dist === 5L) // K4 has 4 triangles + the (3,4,5) triangle
-    } finally System.clearProperty("graft.tri.localDegreeMaxVertices")
-    ()
+    val dist = Analytics.triangleCountBroadcast(k4Plus.toDF("src", "dst"), localDegreeMaxVertices = 0L)
+      .collect().head.getLong(0)
+    assert(dist === local)
+    assert(dist === 5L) // K4 has 4 triangles + the (3,4,5) triangle
   }
 
   test("Triangle count matches driver-side brute force on random graphs, both paths") {
@@ -239,12 +228,9 @@ class GraphSpec extends AnyFunSuite {
       val broadcastPath = Analytics.triangleCount(noisy.toDF("src", "dst"))
         .collect().head.getLong(0)
       assert(broadcastPath === expected, s"broadcast path, trial $trial")
-      System.setProperty("graft.tri.broadcastMaxEdges", "0")
-      try {
-        val shufflePath = Analytics.triangleCount(noisy.toDF("src", "dst"))
-          .collect().head.getLong(0)
-        assert(shufflePath === expected, s"shuffle path, trial $trial")
-      } finally System.clearProperty("graft.tri.broadcastMaxEdges")
+      val shufflePath = Analytics.triangleCountShuffle(noisy.toDF("src", "dst"))
+        .collect().head.getLong(0)
+      assert(shufflePath === expected, s"shuffle path, trial $trial")
     }
   }
 

@@ -582,7 +582,7 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("oversized-benchmark fallback (bloom skipped) matches the bloom-gated output") {
-    // when the benchmark gram estimate exceeds graft.decontam.maxBloomGrams,
+    // when the benchmark gram estimate exceeds TextAnalysis.MaxBloomGrams,
     // the operator must skip the filter build (no driver-held binary) and run
     // the plain exact equi-join — identical flagged set either way
     val rnd = new scala.util.Random(47)
@@ -592,11 +592,9 @@ class LlmSpec extends AnyFunSuite {
     val docs = (0L until 60L).map(i => (i, doc(20))).toDF("doc_id", "text")
     val gated = TextAnalysis.contaminationFlags(docs, bench, "text", "doc_id", n = 3, minHits = 2)
     val gatedRows = TestSpark.rows(gated)
-    System.setProperty("graft.decontam.maxBloomGrams", "1")
-    try {
-      val fallback = TextAnalysis.contaminationFlags(docs, bench, "text", "doc_id", n = 3, minHits = 2)
-      assert(TestSpark.rows(fallback) === gatedRows)
-    } finally System.clearProperty("graft.decontam.maxBloomGrams")
+    val fallback = TextAnalysis.contaminationFlagsBloom(docs, bench, "text", "doc_id", n = 3,
+      minHits = 2, expectedGrams = TextAnalysis.MaxBloomGrams + 1)
+    assert(TestSpark.rows(fallback) === gatedRows)
   }
 
   test("langId picks the profile with the most stopword hits") {
