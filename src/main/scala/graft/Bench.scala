@@ -114,6 +114,8 @@ object Bench {
     // is per-job scheduling floor, not a plan defect, and the job count says
     // so without anyone re-reading the plan
     val jobsOf = scala.collection.mutable.Map[String, (Int, Int)]()
+    // stolen CPU share of each query's best sample (see Harness.stealShare)
+    val stealOf = scala.collection.mutable.Map[String, Double]()
 
     // The driver's artifact keeps only the LAST ~2000 chars of stdout (the
     // full line has never survived: sbt appends its own lines after ours, so
@@ -178,6 +180,7 @@ object Bench {
       // (preserved whole in BENCH_FULL.json)
       val jobsJson = jobsOf.toSeq.sortBy(_._1)
         .map { case (k, (j, st)) => "\"" + k + s"""\":[$j,$st]""" }.mkString("{", ",", "}")
+      val stealJson = Harness.json(Harness.obj(stealOf.toSeq.sortBy(_._1).map { case (k, v) => k -> r3(v) }: _*))
       val summary = oracle match {
         case Some((oTotal, _)) =>
           val ratio = if (oTotal > 0) total / oTotal else -1.0
@@ -188,7 +191,7 @@ object Bench {
       // full line (everything, as every round before) → BENCH_FULL.json;
       // compact line (summary only) → stdout for the driver's tail capture
       val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""load_gate":$loadGate,${conditions(cpus)}"samples":$ss,$oracleRaw"jobs":$jobsJson,"ratios":$ratiosJson,""" +
+        s""""load_gate":$loadGate,${conditions(cpus)}"samples":$ss,$oracleRaw"jobs":$jobsJson,"steal":$stealJson,"ratios":$ratiosJson,""" +
         s""""queries":$qs,"slowest":$slowest,"worst_ratio":$worstRatio,"worst_jobs":$worstJobs,""" +
         s"""$summary,"failed":$failed,"n_queries":${best.size}}"""
       val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
@@ -229,20 +232,20 @@ object Bench {
     }
 
     def measure(pass: String, name: String, fn: (SparkSession, String) => DataFrame): Unit = {
-      val load = Harness.gateOnLoad(name)
       val ledger = new Harness.Ledger(spark)
-      val t0 = System.nanoTime()
-      val sec =
-        try { Harness.consume(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+      val s = Harness.sample(name, ledger) {
+        try { Harness.consume(fn(spark, sfDir)); true }
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            -1.0
+            false
         }
+      }
+      val (sec, load) = (if (s.value) s.sec else -1.0, s.load)
       val jobLog = ledger.jobLog()
       ledger.close()
       val (jobs, stages) = (jobLog.size, jobLog.map(_.stages.size).sum)
-      System.err.println(f"[bench][$pass] $name $sec%.2fs load=$load%.2f " +
+      System.err.println(f"[bench][$pass] $name $sec%.2fs load=$load%.2f steal=${s.steal}%.3f " +
         s"jobs=$jobs stages=$stages")
       if (sec >= 0) {
         samples(name) = (sec, load) :: samples(name)
@@ -250,6 +253,7 @@ object Bench {
         if (prev < 0 || sec < prev) {
           best(name) = (sec, load)
           jobsOf(name) = (jobs, stages)
+          stealOf(name) = s.steal
         }
       }
       restart()

@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Plan auditor: prints the formatted physical plan for the named queries
   * (all queries if none named) so shuffle/broadcast/pushdown decisions can be
-  * reviewed. Usage: graft.Explain [sfDir] [q1,q2,...] */
+  * reviewed. Above each plan, `jobs=N stages=M` counts the Spark jobs run
+  * while the query was built and explained: the eager graph and ER operators
+  * finish their rounds there, and their plan is then only a scan of the
+  * result. Usage: graft.Explain [sfDir] [q1,q2,...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
@@ -10,12 +15,18 @@ object Explain {
       if (args.length > 1) args(1).split(",").toSet else Set.empty
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
+    val ledger = new Harness.Ledger(spark)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+        ledger.reset()
+        val plan =
+          try fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+          catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+        val jobs = ledger.jobLog()
+        println(s"jobs=${jobs.size} stages=${jobs.map(_.stages.size).sum}")
+        println(plan)
       }
     spark.stop()
   }

@@ -4,18 +4,22 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeoutException}
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.immutable.VectorMap
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSql
 
 /** The measurement core every main shares (Bench, Verify, Smoke, Explain,
   * Probe, the `Scale*` harnesses) and the test session: one session factory,
-  * one result reduction, one load gate, one task/job ledger, one min-of-K
-  * sampler and one oracle-SQL dump — so plan dumps, scale records and bench
-  * samples are all taken under the conditions the bench measures.
+  * one result reduction, one load gate, one task/job ledger, one timed
+  * sample, one phase recorder, one JSON renderer and one oracle-SQL dump —
+  * so plan dumps, scale records and bench samples are all taken under the
+  * conditions the bench measures.
   */
 object Harness {
 
@@ -76,14 +80,14 @@ object Harness {
   lazy val loadGate: Double = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
     .getOrElse(math.max(2.0, 0.5 * cpus))
 
-  private val waitBudgetMs = new AtomicLong(
+  private[graft] val waitBudgetMs = new AtomicLong(
     sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong).getOrElse(900000L))
 
   /** Wait (at most 10 naps, and within one JVM-wide budget) until the 1-min
     * loadavg drops to [[loadGate]]; returns the load the sample starts
     * under, which callers record so an inflated sample identifies itself.
     * A busy box degrades to "measure anyway, record the load". */
-  def gateOnLoad(tag: String): Double = {
+  private def gateOnLoad(tag: String): Double = {
     var l = loadavg()
     var tries = 0
     while (l > loadGate && tries < 10 && waitBudgetMs.get > 0) {
@@ -149,15 +153,8 @@ object Harness {
 
     def reset(): Unit = { drain(); tasks.clear(); jobs.clear() }
 
-    /** Tasks finished since the last reset/straggler. */
+    /** Tasks finished since the last reset. */
     def taskLog(): Seq[Task] = { drain(); tasks.asScala.toSeq }
-
-    /** [[Harness.straggler]] over the tasks since the last reset/straggler. */
-    def straggler(): Double = {
-      val r = Harness.straggler(taskLog().map(t => (t.stage, t.ms)))
-      tasks.clear()
-      r
-    }
 
     /** Jobs started since the last reset, by id. */
     def jobLog(): Seq[Job] = { drain(); jobs.values.asScala.toSeq.sortBy(_.id) }
@@ -165,7 +162,52 @@ object Harness {
     def close(): Unit = spark.sparkContext.removeSparkListener(this)
   }
 
-  final case class Sample[A](value: A, sec: Double, straggler: Double, load: Double)
+  /** The aggregate `cpu` line of `/proc/stat`; "" when unreadable. */
+  private def cpuLine(): String =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try src.getLines().next() finally src.close()
+    } catch { case _: Throwable => "" }
+
+  /** Share of all CPU time between two `/proc/stat` `cpu` lines that the
+    * host stole (the `steal` column over user..steal); -1 when either line
+    * is unreadable. A co-tenant on the host shows here, not in loadavg,
+    * which counts only this machine's own runnable tasks. */
+  private[graft] def stealShare(before: String, after: String): Double = {
+    def ticks(line: String): Option[Seq[Long]] = line.trim.split("\\s+").toSeq match {
+      case "cpu" +: xs if xs.length >= 8 && xs.take(8).forall(_.forall(_.isDigit)) =>
+        Some(xs.take(8).map(_.toLong))
+      case _ => None
+    }
+    (ticks(before), ticks(after)) match {
+      case (Some(a), Some(b)) =>
+        val total = b.sum - a.sum
+        if (total > 0) (b(7) - a(7)).toDouble / total else 0.0
+      case _ => -1.0
+    }
+  }
+
+  /** One timed sample: its straggler ratio, the load it started under, the
+    * stolen CPU share of its window and the tasks it ran. */
+  final case class Sample[+A](value: A, sec: Double, straggler: Double, load: Double,
+                              steal: Double, tasks: Int)
+
+  /** One gated, timed sample of `body`: wait on the load gate, reset the
+    * ledger, time `body`, then read the straggler ratio of its tasks and the
+    * CPU share the host stole while it ran. */
+  def sample[A](tag: String, ledger: Ledger)(body: => A): Sample[A] = {
+    val load = gateOnLoad(tag)
+    ledger.reset()
+    val cpu0 = cpuLine()
+    val t = System.nanoTime()
+    val a = body
+    val sec = (System.nanoTime() - t) / 1e9
+    val steal = stealShare(cpu0, cpuLine())
+    val tasks = ledger.taskLog()
+    val st = straggler(tasks.map(t => (t.stage, t.ms)))
+    System.err.println(f"[sample] $tag $sec%.1fs straggler=$st%.2f load=$load%.2f steal=$steal%.3f")
+    Sample(a, sec, st, load, steal, tasks.size)
+  }
 
   private lazy val phaseSamples: Int = {
     val k = sys.env.get("SCALE_PHASE_SAMPLES").map(_.toInt).getOrElse(2)
@@ -173,23 +215,45 @@ object Harness {
     k
   }
 
-  /** Min-of-K (`SCALE_PHASE_SAMPLES`, default 2) timing of `body`: co-tenant
-    * bursts outlast a phase-start gate, and phase outputs are deterministic,
-    * so the fastest sample is the clean-window estimate. Each sample runs
-    * `before` untimed, is load-gated, and reads its own straggler ratio.
-    * Returns every sample, fastest first. */
-  def bestOf[A](tag: String, ledger: Ledger, before: => Unit = ())(body: => A): Seq[Sample[A]] =
-    (1 to phaseSamples).map { _ =>
-      before
-      val load = gateOnLoad(tag)
-      ledger.reset()
-      val t = System.nanoTime()
-      val a = body
-      val sec = (System.nanoTime() - t) / 1e9
-      val st = ledger.straggler()
-      System.err.println(f"[sample] $tag $sec%.1fs straggler=$st%.2f load=$load%.2f")
-      Sample(a, sec, st, load)
-    }.sortBy(_.sec)
+  /** One harness run's phases, each the fastest of its samples, by tag — the
+    * one way a `Scale*` main times a phase and the source of its record's
+    * straggler and load maps. `before` runs untimed ahead of every sample. */
+  final class Recorder(spark: SparkSession, before: () => Unit = () => ()) {
+    private val ledger = new Ledger(spark)
+    private val won = mutable.LinkedHashMap[String, Sample[Any]]()
+
+    /** Min-of-`k` [[sample]]s of `body` (default `SCALE_PHASE_SAMPLES`, 2):
+      * co-tenant bursts outlast a phase-start gate, and phase outputs are
+      * deterministic, so the fastest sample is the clean-window estimate.
+      * `same` keys each sample's value; the keys must all agree. Losing
+      * samples' Datasets are released so they pin no block-manager memory:
+      * a localCheckpoint's blocks belong to its RDD, which
+      * `Dataset.unpersist` (the cache manager's entry) leaves in place.
+      * Records and returns the fastest sample under `tag`. */
+    def phase[A](tag: String, k: Int = phaseSamples, same: Any => Any = _ => ())(body: => A): Sample[A] = {
+      val runs = (1 to k).map { _ => before(); sample(tag, ledger)(body) }.sortBy(_.sec)
+      val keys = runs.map(r => same(r.value))
+      require(keys.distinct.size == 1, s"$tag output varies across samples: ${keys.mkString(", ")}")
+      runs.tail.map(_.value).foreach {
+        case ds: Dataset[_] if ds != runs.head.value =>
+          ds.unpersist()
+          ds.queryExecution.logical match {
+            case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+            case _ => ()
+          }
+        case _ => ()
+      }
+      won(tag) = runs.head
+      runs.head
+    }
+
+    /** Seconds of `tag`'s fastest sample; 0.0 for a phase that did not run. */
+    def sec(tag: String): Double = won.get(tag).fold(0.0)(_.sec)
+    def secs: VectorMap[String, Double] = of(_.sec)
+    def stragglers: VectorMap[String, Double] = of(_.straggler)
+    def loads: VectorMap[String, Double] = of(_.load)
+    private def of(f: Sample[Any] => Double) = VectorMap.from(won.view.mapValues(f))
+  }
 
   /** A fresh temp work dir, deleted at JVM exit. */
   def workDir(prefix: String): java.nio.file.Path = {
@@ -214,6 +278,24 @@ object Harness {
     }
     b.append('"').toString
   }
+
+  /** An insertion-ordered JSON object for [[json]]. */
+  def obj(fields: (String, Any)*): VectorMap[String, Any] = VectorMap(fields: _*)
+
+  /** JSON text of nested maps (insertion order kept) and sequences of Long,
+    * Int, Double, Boolean and String. */
+  def json(v: Any): String = v match {
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => jsonString(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(json).mkString("[", ",", "]")
+    case s: String => jsonString(s)
+    case x @ (_: Long | _: Int | _: Double | _: Boolean) => x.toString
+    case x => throw new IllegalArgumentException(s"json: unsupported value $x")
+  }
+
+  /** Print one scale record: a `{"metric": metric, ...fields}` line on stdout. */
+  def emit(metric: String, fields: (String, Any)*): Unit =
+    println(json(obj(("metric" -> metric) +: fields: _*)))
 
   /** Dump [[SparkEntry.oracleSql]] to `outDir/oracle_sql.json`, and its bench
     * companion (untimed setup tables, ordered, plus per-query timed

@@ -30,13 +30,7 @@ object Probe {
     val edgesN = sys.env.getOrElse("SCALE_EDGES", "10000000").toLong
     val nodesN = sys.env.getOrElse("SCALE_NODES", "2000000").toLong
     val spark = Harness.session()
-    val work = Harness.workDir("graft_ccskew")
-    spark.range(edgesN).select(
-        floor(pow(rand(7), 2.5) * nodesN).cast("long").as("src"),
-        floor(pow(rand(11), 2.5) * nodesN).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .write.mode("overwrite").parquet(s"$work/edges.parquet")
-    val edges = spark.read.parquet(s"$work/edges.parquet")
+    val edges = ScaleCorpus.powerLawEdges(spark, edgesN, nodesN, Harness.workDir("graft_ccskew").toString)
 
     val ledger = new Harness.Ledger(spark)
     val t = System.nanoTime()

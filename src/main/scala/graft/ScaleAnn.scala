@@ -1,8 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.Harness.{Sample, bestOf}
 
 /** Off-toy scale proof for the ANN layer: synthesize `SCALE_COPIES`× the
   * sf0.1 embeddings table with deterministic per-copy perturbations, then
@@ -49,7 +48,7 @@ object ScaleAnn {
     val nQueries = sys.env.getOrElse("SCALE_NQUERIES", "200").toInt
     val k = 10
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
+    val rec = new Harness.Recorder(spark)
 
     // --- scaled corpus: copy 0 original; copy i>0 perturbs every dimension
     // by a deterministic hash-derived offset in [-0.1, 0.1] (xxhash64 % 101
@@ -83,42 +82,36 @@ object ScaleAnn {
 
     import graft.llm.Similarity
 
-    // strided seed predicate: one seed per (nVecs / nLists)-id stride, so
-    // seeds are spread across base vectors instead of nLists perturbations
-    // of base vector 0 (vec_id = base*copies + copy ⇒ id < 64 is all base 0)
-    val stride = math.max(1L, nVecs / nLists)
-    val seedWhere = col("vec_id") % stride === 0 && col("vec_id") < stride * nLists
+    // strided seed predicate: one seed per (n / seeds)-id stride over the
+    // first n vectors, so seeds are spread across base vectors instead of
+    // `seeds` perturbations of base vector 0 (vec_id = base*copies + copy ⇒
+    // id < 64 is all base 0)
+    def stridedSeeds(n: Long, seeds: Int) = {
+      val stride = math.max(1L, n / seeds)
+      col("vec_id") % stride === 0 && col("vec_id") < stride * seeds
+    }
+    val seedWhere = stridedSeeds(nVecs, nLists)
 
-    // Per-phase min-of-K (Harness.bestOf): co-tenant load bursts outlast
+    // Per-phase min-of-K (Harness.Recorder): co-tenant load bursts outlast
     // both the wrapper's settle and a phase-start gate (observed: pq_encode
     // 18s and 135s in back-to-back runs, the SLOW one at the lower
-    // phase-start load).
-    def best[A](tag: String)(body: => A): Sample[A] = {
-      val runs = bestOf(tag, ledger)(body)
-      // losing samples' localCheckpoints would otherwise pin block-manager
-      // memory for the rest of the run (unpersist is a no-op on plain reads)
-      runs.tail.foreach {
-        case Sample(ds: org.apache.spark.sql.Dataset[_], _, _, _) => ds.unpersist(); ()
-        case _ => ()
-      }
-      runs.head
+    // phase-start load). A search phase's sample is its materialized output.
+    def materialized(df: => DataFrame): DataFrame = {
+      val out = df.localCheckpoint(true)
+      out.count()
+      out
     }
 
-    val Sample(seeds, trainSec, trainStraggler, loadTrain) = best("train") {
-      val s = Similarity.kmeansSeeds(corpus, "vec_id", "embedding", nLists,
-          iters = 1, seedWhere = Some(seedWhere))
-        .localCheckpoint(true)
-      s.count()
-      s
-    }
+    val seeds = rec.phase("train")(materialized(Similarity.kmeansSeeds(corpus, "vec_id", "embedding",
+      nLists, iters = 1, seedWhere = Some(seedWhere)))).value
 
     // index build: one narrow corpus pass, materialized like any index
-    // artifact. Write-then-read phases return UNIT from bestOf and read the
+    // artifact. Write-then-read phases return UNIT from a phase and read the
     // dataset fresh afterwards: a DataFrame created inside a losing sample
     // captures that sample's file listing, which the winning (or later)
     // sample's overwrite replaces — deferred reads then fail with
     // FileNotFoundException on part files that no longer exist.
-    val Sample(_, buildSec, buildStraggler, loadBuild) = best("build") {
+    rec.phase("build") {
       Similarity.assignToLists(corpus, "vec_id", "embedding", seeds, "match_id")
         .write.mode("overwrite").parquet(s"$work/lists.parquet")
     }
@@ -127,28 +120,18 @@ object ScaleAnn {
     val listSkew = if (sizes.isEmpty) -1.0
       else sizes.max.toDouble / (sizes.sum.toDouble / sizes.length)
 
-    def searchIvf(nProbe: Int): Sample[org.apache.spark.sql.DataFrame] =
-      best(s"ivf$nProbe") {
-        val out = Similarity.ivfTopK(queries, "vec_id", "embedding", seeds, lists,
-          k = k, nProbe = nProbe)
-          .localCheckpoint(true)
-        out.count()
-        out
-      }
-    val Sample(_, ivf1Sec, ivf1Straggler, loadIvf1) = searchIvf(1)
-    val Sample(ivf8, ivf8Sec, ivf8Straggler, loadIvf8) = searchIvf(8)
+    def searchIvf(nProbe: Int): DataFrame = rec.phase(s"ivf$nProbe")(materialized(
+      Similarity.ivfTopK(queries, "vec_id", "embedding", seeds, lists, k = k, nProbe = nProbe))).value
+    searchIvf(1)
+    val ivf8 = searchIvf(8)
 
-    val Sample(exact, bruteSec, bruteStraggler, loadBrute) = best("brute") {
-      val e = Similarity.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = k)
-        .localCheckpoint(true)
-      e.count()
-      e
-    }
+    val exact = rec.phase("brute")(materialized(
+      Similarity.bruteForceTopK(corpus, queries, "vec_id", "embedding", k = k))).value
     val nExact = exact.count()
-
-    val hits = ivf8.select("query_id", "match_id")
-      .intersect(exact.select("query_id", "match_id")).count()
-    val recall8 = hits.toDouble / nExact
+    def recallOf(df: DataFrame): Double =
+      df.select("query_id", "match_id")
+        .intersect(exact.select("query_id", "match_id")).count().toDouble / nExact
+    val recall8 = recallOf(ivf8)
 
     // --- product quantization: the memory-compression path. Codebook from
     // STRIDED seeds (same replicated-corpus lesson as the IVF seeds), codes
@@ -157,12 +140,11 @@ object ScaleAnn {
     // two-stage variant re-ranks its ADC short-list with exact cosine.
     val pqM = 8
     val pqCodes = sys.env.getOrElse("SCALE_PQ_CODES", "64").toInt
-    val pqStride = math.max(1L, nVecs / pqCodes)
-    val pqSeedWhere = col("vec_id") % pqStride === 0 && col("vec_id") < pqStride * pqCodes
+    val pqSeedWhere = stridedSeeds(nVecs, pqCodes)
 
     val cb = Similarity.pqCodebook(corpus, "vec_id", "embedding", pqM, pqCodes,
       Some(pqSeedWhere))
-    val Sample(_, pqEncodeSec, pqEncodeStraggler, loadEnc) = best("pq_encode") {
+    rec.phase("pq_encode") {
       Similarity.pqEncode(corpus, "vec_id", "embedding", cb, "match_id")
         .write.mode("overwrite").parquet(s"$work/pq.parquet")
     }
@@ -178,14 +160,8 @@ object ScaleAnn {
     val pqCompression =
       dirBytes(s"$work/embeddings.parquet").toDouble / dirBytes(s"$work/pq_codes.parquet")
 
-    def searchPq(rr: Int, tag: String): Sample[org.apache.spark.sql.DataFrame] =
-      best(tag) {
-        val out = Similarity.pqTopK(queries, "vec_id", "embedding", cb, encTable,
-          k = k, rerank = rr)
-          .localCheckpoint(true)
-        out.count()
-        out
-      }
+    def searchPq(rr: Int, tag: String): DataFrame = rec.phase(tag)(materialized(
+      Similarity.pqTopK(queries, "vec_id", "embedding", cb, encTable, k = k, rerank = rr))).value
     // ADC short-list depth for the exact re-rank: recall is capped by how
     // many candidates survive to the exact stage (composed and flat PQ
     // score identically here — the IVF pruning is lossless), so this is
@@ -194,8 +170,8 @@ object ScaleAnn {
     // marginal cost delta (the re-rank joins queries × depth rows by id) —
     // 600 is where the two-stage search reaches the IVF pruning ceiling.
     val pqRerankN = sys.env.getOrElse("SCALE_PQ_RERANK", (60 * k).toString).toInt
-    val Sample(pqAdc, pqAdcSec, pqAdcStraggler, loadPqAdc) = searchPq(0, "pq_adc")
-    val Sample(pqRr, pqRerankSec, pqRerankStraggler, loadPqRerank) = searchPq(pqRerankN, "pq_rerank")
+    val pqAdc = searchPq(0, "pq_adc")
+    val pqRr = searchPq(pqRerankN, "pq_rerank")
 
     // --- TRAINED codebook: 2 per-subspace Lloyd rounds over the strided
     // seeds, then the same encode + pure-ADC search. The r15 verdict flagged
@@ -209,40 +185,31 @@ object ScaleAnn {
     // the codebook itself, so the artifact reports mean squared quantization
     // error trained vs untrained alongside both recalls.
     val pqTrainIters = sys.env.getOrElse("SCALE_PQ_TRAIN_ITERS", "2").toInt
-    val Sample(cbT, pqTrainSec, pqTrainStraggler, loadPqTrain) = best("pq_train") {
+    val cbT = rec.phase("pq_train") {
       Similarity.pqCodebookTrained(corpus, "vec_id", "embedding", pqM, pqCodes,
         pqTrainIters, Some(pqSeedWhere))
-    }
-    val Sample(_, pqEncodeTSec, pqEncodeTStraggler, loadEncT) = best("pq_encode_trained") {
+    }.value
+    rec.phase("pq_encode_trained") {
       Similarity.pqEncode(corpus, "vec_id", "embedding", cbT, "match_id")
         .write.mode("overwrite").parquet(s"$work/pq_t.parquet")
     }
     val encT = spark.read.parquet(s"$work/pq_t.parquet")
     val pqQuantErr = Similarity.pqQuantErr(corpus, "vec_id", "embedding", cb)
     val pqQuantErrTrained = Similarity.pqQuantErr(corpus, "vec_id", "embedding", cbT)
-    val Sample(pqAdcT, pqAdcTSec, pqAdcTStraggler, loadPqAdcT) = best("pq_adc_trained") {
-      val out = Similarity.pqTopK(queries, "vec_id", "embedding", cbT, encT, k = k)
-        .localCheckpoint(true)
-      out.count()
-      out
-    }
+    val pqAdcT = rec.phase("pq_adc_trained")(materialized(
+      Similarity.pqTopK(queries, "vec_id", "embedding", cbT, encT, k = k))).value
 
     // --- composed IVF×PQ (the round-10 fix: flat ADC scanned every code and
     // lost to brute force; list pruning restricts the ADC scan to each
     // query's probed lists). Index = ONE narrow pass reusing the IVF seeds
     // and the PQ codebook, materialized like the other index artifacts.
-    val Sample(_, pqIvfEncodeSec, pqIvfEncodeStraggler, loadIvfPqEnc) = best("pq_ivf_encode") {
+    rec.phase("pq_ivf_encode") {
       Similarity.ivfPqEncode(corpus, "vec_id", "embedding", seeds, cb, "match_id")
         .write.mode("overwrite").parquet(s"$work/ivfpq.parquet")
     }
     val ivfPqEnc = spark.read.parquet(s"$work/ivfpq.parquet")
-    val Sample(pqIvf8, pqIvf8Sec, pqIvf8Straggler, loadPqIvf8) = best("pq_ivf8") {
-      val out = Similarity.ivfPqTopK(queries, "vec_id", "embedding", seeds, cb, ivfPqEnc,
-        k = k, nProbe = 8, rerank = pqRerankN)
-        .localCheckpoint(true)
-      out.count()
-      out
-    }
+    val pqIvf8 = rec.phase("pq_ivf8")(materialized(Similarity.ivfPqTopK(queries, "vec_id", "embedding",
+      seeds, cb, ivfPqEnc, k = k, nProbe = 8, rerank = pqRerankN))).value
 
     // --- stored-plane LSH (replaces the axis-plane caveat with a measured
     // recall): real sampled hyperplanes, generated deterministically and
@@ -257,29 +224,19 @@ object ScaleAnn {
     // sweep list it is added, never silently substituted by another point
     val lshSweepPlanes = (sys.env.getOrElse("SCALE_LSH_SWEEP", "8,12,16")
       .split(",").map(_.trim.toInt).toSeq :+ lshNPlanes).distinct.sorted
-    case class LshPoint(planes: Int, sec: Double, straggler: Double, load: Double,
-                        mpSec: Double, mpStraggler: Double, mpLoad: Double,
-                        df: org.apache.spark.sql.DataFrame,
-                        mpDf: org.apache.spark.sql.DataFrame)
-    val lshSweep = lshSweepPlanes.map { p =>
+    // {planes: {sec, recall, mp_sec, mp_recall}}; the headline plane count's
+    // phases carry the record's `lsh` / `lsh_multiprobe` tags
+    val lshSweep = Harness.obj(lshSweepPlanes.map { p =>
       val planes = Similarity.randomHyperplanes(64, p, seed = 42L)
-      val Sample(df, sec, st, load) = best(s"lsh_p$p") {
-        val out = Similarity.bucketTopK(corpus, queries, "vec_id", "embedding",
-          planes, k = k).localCheckpoint(true)
-        out.count()
-        out
-      }
-      val Sample(mpDf, mpSec, mpSt, mpLoad) = best(s"lsh_mp_p$p") {
-        val out = Similarity.multiProbeTopK(corpus, queries, "vec_id", "embedding",
-          planes, k = k).localCheckpoint(true)
-        out.count()
-        out
-      }
-      LshPoint(p, sec, st, load, mpSec, mpSt, mpLoad, df, mpDf)
-    }
-    val atHeadline = lshSweep.find(_.planes == lshNPlanes).get // present by construction
-    val (lshSec, lshStraggler, loadLsh) = (atHeadline.sec, atHeadline.straggler, atHeadline.load)
-    val (lshMpSec, lshMpStraggler, loadLshMp) = (atHeadline.mpSec, atHeadline.mpStraggler, atHeadline.mpLoad)
+      val (tag, mpTag) = if (p == lshNPlanes) ("lsh", "lsh_multiprobe") else (s"lsh_p$p", s"lsh_mp_p$p")
+      val df = rec.phase(tag)(materialized(Similarity.bucketTopK(corpus, queries, "vec_id", "embedding",
+        planes, k = k))).value
+      val mp = rec.phase(mpTag)(materialized(Similarity.multiProbeTopK(corpus, queries, "vec_id",
+        "embedding", planes, k = k))).value
+      p.toString -> Harness.obj("sec" -> rec.sec(tag), "recall" -> recallOf(df),
+        "mp_sec" -> rec.sec(mpTag), "mp_recall" -> recallOf(mp))
+    }: _*)
+    val lshHeadline = lshSweep(lshNPlanes.toString).asInstanceOf[Map[String, Any]]
 
     // --- SPREAD corpus: the falsification experiment the r16 verdict asked
     // for (What's wrong #1/#2). On the replicated corpus above, flat-ADC
@@ -296,7 +253,7 @@ object ScaleAnn {
     // strided seeding. The artifact then reports trained vs untrained
     // flat-ADC recall AND quantization error side by side: if training
     // helps, it must show here or nowhere.
-    val Sample(_, spreadGenSec, _, _) = best("spread_gen") {
+    rec.phase("spread_gen") {
       val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id").as("bid"), col("embedding").as("bv"))
       val nBase = base.count()
@@ -321,67 +278,41 @@ object ScaleAnn {
     }
     val spreadCorpus = spark.read.parquet(s"$work/spread.parquet")
     val spreadQueries = spreadCorpus.filter(col("vec_id") < nQueries)
-    val Sample(spreadExact, spreadBruteSec, _, loadSpreadBrute) = best("spread_brute") {
-      val e = Similarity.bruteForceTopK(spreadCorpus, spreadQueries,
-        "vec_id", "embedding", k = k).localCheckpoint(true)
-      e.count()
-      e
-    }
+    val spreadExact = rec.phase("spread_brute")(materialized(Similarity.bruteForceTopK(spreadCorpus,
+      spreadQueries, "vec_id", "embedding", k = k))).value
     val nSpreadExact = spreadExact.count()
-    val spreadStride = math.max(1L, nVecs / pqCodes)
-    val spreadSeedWhere = col("vec_id") % spreadStride === 0 &&
-      col("vec_id") < spreadStride * pqCodes
-    val spreadCb = Similarity.pqCodebook(spreadCorpus, "vec_id", "embedding",
-      pqM, pqCodes, Some(spreadSeedWhere))
-    val Sample(spreadCbT, spreadTrainSec, _, loadSpreadTrain) = best("spread_pq_train") {
-      Similarity.pqCodebookTrained(spreadCorpus, "vec_id", "embedding",
-        pqM, pqCodes, pqTrainIters, Some(spreadSeedWhere))
-    }
-    def spreadAdc(cbX: Array[Array[Array[Long]]], path: String, tag: String)
-        : Sample[org.apache.spark.sql.DataFrame] = {
-      val enc = Similarity.pqEncode(spreadCorpus, "vec_id", "embedding", cbX, "match_id")
-      enc.write.mode("overwrite").parquet(path)
-      val encRead = spark.read.parquet(path)
-      best(tag) {
-        val out = Similarity.pqTopK(spreadQueries, "vec_id", "embedding", cbX, encRead, k = k)
-          .localCheckpoint(true)
-        out.count()
-        out
+    def spreadRecallOf(df: DataFrame): Double =
+      df.select("query_id", "match_id")
+        .intersect(spreadExact.select("query_id", "match_id")).count().toDouble / nSpreadExact
+    // untrained vs trained (timed as spread_pq_train<sfx>) `codes`-entry
+    // codebook on the spread corpus, each encoded once and searched by pure
+    // ADC (timed as spread_adc<sfx>[_trained]): (recall, recall trained,
+    // quant err, quant err trained)
+    def spreadPq(codes: Int, sfx: String): (Double, Double, Double, Double) = {
+      val where = stridedSeeds(nVecs, codes)
+      val cbU = Similarity.pqCodebook(spreadCorpus, "vec_id", "embedding", pqM, codes, Some(where))
+      val cbT = rec.phase(s"spread_pq_train$sfx")(Similarity.pqCodebookTrained(spreadCorpus,
+        "vec_id", "embedding", pqM, codes, pqTrainIters, Some(where))).value
+      def adcRecall(cbX: Array[Array[Array[Long]]], tag: String): Double = {
+        Similarity.pqEncode(spreadCorpus, "vec_id", "embedding", cbX, "match_id")
+          .write.mode("overwrite").parquet(s"$work/$tag.parquet")
+        val enc = spark.read.parquet(s"$work/$tag.parquet")
+        spreadRecallOf(rec.phase(tag)(materialized(
+          Similarity.pqTopK(spreadQueries, "vec_id", "embedding", cbX, enc, k = k))).value)
       }
+      (adcRecall(cbU, s"spread_adc$sfx"), adcRecall(cbT, s"spread_adc${sfx}_trained"),
+        Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", cbU),
+        Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", cbT))
     }
-    val Sample(spreadAdcU, spreadAdcSec, _, loadSpreadAdc) =
-      spreadAdc(spreadCb, s"$work/spread_pq.parquet", "spread_adc")
-    val Sample(spreadAdcT, spreadAdcTSec, _, loadSpreadAdcT) =
-      spreadAdc(spreadCbT, s"$work/spread_pq_t.parquet", "spread_adc_trained")
-    val spreadQuantErr = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb)
-    val spreadQuantErrT = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCbT)
+    val (spreadAdcRecall, spreadAdcTrainedRecall, spreadQuantErr, spreadQuantErrT) = spreadPq(pqCodes, "")
     // the knob that is SUPPOSED to move flat-ADC recall on a dense corpus is
     // codebook CAPACITY (finer cells → per-subspace distortion below the
     // neighbor gaps), not Lloyd polish of a too-coarse codebook — measure
     // 4× the codes (256) trained and untrained on the same spread corpus so
     // the negative result above has its positive control next to it
     val spreadCodes2 = sys.env.getOrElse("SCALE_SPREAD_CODES2", "256").toInt
-    val s2Stride = math.max(1L, nVecs / spreadCodes2)
-    val s2Where = col("vec_id") % s2Stride === 0 && col("vec_id") < s2Stride * spreadCodes2
-    val spreadCb2 = Similarity.pqCodebook(spreadCorpus, "vec_id", "embedding",
-      pqM, spreadCodes2, Some(s2Where))
-    val Sample(spreadCb2T, spreadTrain2Sec, _, _) = best("spread_pq_train256") {
-      Similarity.pqCodebookTrained(spreadCorpus, "vec_id", "embedding",
-        pqM, spreadCodes2, pqTrainIters, Some(s2Where))
-    }
-    val Sample(spreadAdc2U, spreadAdc2Sec, _, _) =
-      spreadAdc(spreadCb2, s"$work/spread_pq256.parquet", "spread_adc256")
-    val Sample(spreadAdc2T, spreadAdc2TSec, _, _) =
-      spreadAdc(spreadCb2T, s"$work/spread_pq256_t.parquet", "spread_adc256_trained")
-    val spreadQuantErr2 = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb2)
-    val spreadQuantErr2T = Similarity.pqQuantErr(spreadCorpus, "vec_id", "embedding", spreadCb2T)
-    def spreadRecallOf(df: org.apache.spark.sql.DataFrame): Double =
-      df.select("query_id", "match_id")
-        .intersect(spreadExact.select("query_id", "match_id")).count().toDouble / nSpreadExact
-    val spreadAdcRecall = spreadRecallOf(spreadAdcU)
-    val spreadAdcTrainedRecall = spreadRecallOf(spreadAdcT)
-    val spreadAdc2Recall = spreadRecallOf(spreadAdc2U)
-    val spreadAdc2TrainedRecall = spreadRecallOf(spreadAdc2T)
+    val (spreadAdc2Recall, spreadAdc2TrainedRecall, spreadQuantErr2, spreadQuantErr2T) =
+      spreadPq(spreadCodes2, "256")
 
     // --- DENSITY-crossover sweep: the density explanation for flat-ADC
     // recall rested on two points (20k lifts, 500k flat); sweep the SAME
@@ -392,22 +323,19 @@ object ScaleAnn {
     // the same nQueries rows at every density, so recall is comparable down
     // the column. The largest (full) point is the headline spread
     // experiment above — copied into the sweep, not recomputed.
-    case class DensityPoint(n: Long, bruteSec: Double, adcRecall: Double,
-                            adcTrainedRecall: Double, quantErr: Double, quantErrT: Double)
+    def densityPoint(bruteSec: Double, adcRecall: Double, adcTrainedRecall: Double,
+                     quantErr: Double, quantErrT: Double) =
+      Harness.obj("brute_sec" -> bruteSec, "adc_recall" -> adcRecall,
+        "adc_trained_recall" -> adcTrainedRecall, "quant_err" -> quantErr, "quant_err_trained" -> quantErrT)
     val densities = sys.env.getOrElse("SCALE_SPREAD_DENSITIES", "20000,100000,250000")
       .split(",").map(_.trim.toLong).toSeq.filter(_ < nVecs).sorted
     val densityPoints = densities.map { dn =>
       val sub = spreadCorpus.filter(col("vec_id") < dn).localCheckpoint(true)
       val subQ = sub.filter(col("vec_id") < nQueries)
-      val Sample(subExact, subBruteSec, _, _) = best(s"spread_brute_$dn") {
-        val e = Similarity.bruteForceTopK(sub, subQ, "vec_id", "embedding", k = k)
-          .localCheckpoint(true)
-        e.count()
-        e
-      }
-      val nSubExact = subExact.count()
-      val stride = math.max(1L, dn / pqCodes)
-      val where = col("vec_id") % stride === 0 && col("vec_id") < stride * pqCodes
+      val subExact = rec.phase(s"spread_brute_$dn")(materialized(
+        Similarity.bruteForceTopK(sub, subQ, "vec_id", "embedding", k = k)))
+      val nSubExact = subExact.value.count()
+      val where = stridedSeeds(dn, pqCodes)
       val cbU = Similarity.pqCodebook(sub, "vec_id", "embedding", pqM, pqCodes, Some(where))
       val cbT = Similarity.pqCodebookTrained(sub, "vec_id", "embedding",
         pqM, pqCodes, pqTrainIters, Some(where))
@@ -416,17 +344,16 @@ object ScaleAnn {
           .localCheckpoint(true)
         Similarity.pqTopK(subQ, "vec_id", "embedding", cb, enc, k = k)
           .select("query_id", "match_id")
-          .intersect(subExact.select("query_id", "match_id"))
+          .intersect(subExact.value.select("query_id", "match_id"))
           .count().toDouble / nSubExact
       }
-      val p = DensityPoint(dn, subBruteSec, recallWith(cbU), recallWith(cbT),
-        Similarity.pqQuantErr(sub, "vec_id", "embedding", cbU),
+      val (adc, adcT) = (recallWith(cbU), recallWith(cbT))
+      val (qerr, qerrT) = (Similarity.pqQuantErr(sub, "vec_id", "embedding", cbU),
         Similarity.pqQuantErr(sub, "vec_id", "embedding", cbT))
-      System.err.println(f"[scale_ann] density $dn: adc ${p.adcRecall}%.3f" +
-        f" trained ${p.adcTrainedRecall}%.3f qerr ${p.quantErr}%.0f/${p.quantErrT}%.0f")
-      p
-    } :+ DensityPoint(nVecs, spreadBruteSec, spreadAdcRecall, spreadAdcTrainedRecall,
-      spreadQuantErr, spreadQuantErrT)
+      System.err.println(f"[scale_ann] density $dn: adc $adc%.3f trained $adcT%.3f qerr $qerr%.0f/$qerrT%.0f")
+      dn.toString -> densityPoint(subExact.sec, adc, adcT, qerr, qerrT)
+    } :+ (nVecs.toString -> densityPoint(rec.sec("spread_brute"), spreadAdcRecall, spreadAdcTrainedRecall,
+      spreadQuantErr, spreadQuantErrT))
 
     // --- SemDeDup semantic prune over the SAME index artifacts (seeds +
     // inverted lists): within-cluster anti join keeps one representative per
@@ -440,80 +367,45 @@ object ScaleAnn {
     // scales with the corpus in production; the harness reuses the 64-list
     // IVF artifacts to show the artifact-sharing lifecycle.
     val semTau = sys.env.getOrElse("SCALE_SEM_TAU", "0.7").toDouble
-    val Sample(semKept, semSec, semStraggler, loadSem) = best("semdedup") {
+    val semKept = rec.phase("semdedup") {
       graft.llm.Dedup.semanticPrune(corpus, "vec_id", "embedding",
         nClusters = nLists, trainIters = 0, threshold = semTau,
         seedTable = Some(seeds),
         assignedTable = Some(lists.withColumnRenamed("match_id", "vec_id")))
         .count()
-    }
+    }.value
 
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double =
-      df.select("query_id", "match_id")
-        .intersect(exact.select("query_id", "match_id")).count().toDouble / nExact
-    // (sec, recall, mp_sec, mp_recall) per swept plane count; the headline
-    // lsh_recall/lsh_mp_recall reuse the sweep's values (same DataFrames —
-    // recomputing would just re-run the intersect jobs)
-    val lshSweepResults: Seq[(Int, (Double, Double, Double, Double))] =
-      lshSweep.map(pt => pt.planes ->
-        ((pt.sec, recallOf(pt.df), pt.mpSec, recallOf(pt.mpDf))))
-    val headlineLsh = lshSweepResults.find(_._1 == lshNPlanes).get._2
-    val lshRecall = headlineLsh._2
-    val lshMpRecall = headlineLsh._4
-    val pqAdcRecall = recallOf(pqAdc)
-    val pqAdcTrainedRecall = recallOf(pqAdcT)
-    val pqRerankRecall = recallOf(pqRr)
-    val pqIvf8Recall = recallOf(pqIvf8)
-
-    println(s"""{"metric":"scale_ann","copies":$copies,"vectors":$nVecs,"n_lists":$nLists,""" +
-      s""""queries":$nQueries,"k":$k,"train_sec":$trainSec,"build_sec":$buildSec,""" +
-      s""""ivf1_sec":$ivf1Sec,"ivf8_sec":$ivf8Sec,"brute_sec":$bruteSec,""" +
-      s""""recall8":$recall8,"list_skew":$listSkew,""" +
-      s""""pq_m":$pqM,"pq_codes":$pqCodes,"pq_rerank_n":$pqRerankN,"pq_encode_sec":$pqEncodeSec,""" +
-      s""""pq_adc_sec":$pqAdcSec,"pq_rerank_sec":$pqRerankSec,""" +
-      s""""pq_compression":$pqCompression,""" +
-      s""""pq_adc_recall":$pqAdcRecall,"pq_rerank_recall":$pqRerankRecall,""" +
-      s""""pq_train_iters":$pqTrainIters,"pq_train_sec":$pqTrainSec,""" +
-      s""""pq_encode_trained_sec":$pqEncodeTSec,"pq_adc_trained_sec":$pqAdcTSec,""" +
-      s""""pq_adc_trained_recall":$pqAdcTrainedRecall,""" +
-      s""""pq_quant_err":$pqQuantErr,"pq_quant_err_trained":$pqQuantErrTrained,""" +
-      s""""lsh_planes":$lshNPlanes,"lsh_sec":$lshSec,"lsh_recall":$lshRecall,""" +
-      s""""lsh_mp_sec":$lshMpSec,"lsh_mp_recall":$lshMpRecall,""" +
-      s""""lsh_sweep":{""" + lshSweepResults.map { case (p, r) =>
-        s""""$p":{"sec":${r._1},"recall":${r._2},"mp_sec":${r._3},"mp_recall":${r._4}}"""
-      }.mkString(",") + "}," +
-      s""""spread_gen_sec":$spreadGenSec,"spread_brute_sec":$spreadBruteSec,""" +
-      s""""spread_pq_train_sec":$spreadTrainSec,""" +
-      s""""spread_adc_sec":$spreadAdcSec,"spread_adc_trained_sec":$spreadAdcTSec,""" +
-      s""""spread_adc_recall":$spreadAdcRecall,"spread_adc_trained_recall":$spreadAdcTrainedRecall,""" +
-      s""""spread_quant_err":$spreadQuantErr,"spread_quant_err_trained":$spreadQuantErrT,""" +
-      s""""spread_codes2":$spreadCodes2,"spread_pq_train256_sec":$spreadTrain2Sec,""" +
-      s""""spread_adc256_sec":$spreadAdc2Sec,"spread_adc256_trained_sec":$spreadAdc2TSec,""" +
-      s""""spread_adc256_recall":$spreadAdc2Recall,"spread_adc256_trained_recall":$spreadAdc2TrainedRecall,""" +
-      s""""spread_quant_err256":$spreadQuantErr2,"spread_quant_err256_trained":$spreadQuantErr2T,""" +
-      s""""spread_density_sweep":{""" + densityPoints.map(p =>
-        s""""${p.n}":{"brute_sec":${p.bruteSec},"adc_recall":${p.adcRecall},""" +
-        s""""adc_trained_recall":${p.adcTrainedRecall},""" +
-        s""""quant_err":${p.quantErr},"quant_err_trained":${p.quantErrT}}""").mkString(",") + "}," +
-      s""""pq_ivf_encode_sec":$pqIvfEncodeSec,"pq_ivf8_sec":$pqIvf8Sec,""" +
-      s""""pq_ivf8_recall":$pqIvf8Recall,""" +
-      s""""semdedup_tau":$semTau,"semdedup_sec":$semSec,"semdedup_kept":$semKept,""" +
-      s""""stragglers":{"train":$trainStraggler,"build":$buildStraggler,"ivf1":$ivf1Straggler,""" +
-      s""""ivf8":$ivf8Straggler,"brute":$bruteStraggler,"pq_encode":$pqEncodeStraggler,""" +
-      s""""pq_adc":$pqAdcStraggler,"pq_rerank":$pqRerankStraggler,""" +
-      s""""pq_train":$pqTrainStraggler,"pq_encode_trained":$pqEncodeTStraggler,""" +
-      s""""pq_adc_trained":$pqAdcTStraggler,""" +
-      s""""lsh":$lshStraggler,"lsh_multiprobe":$lshMpStraggler,""" +
-      s""""semdedup":$semStraggler,""" +
-      s""""pq_ivf_encode":$pqIvfEncodeStraggler,"pq_ivf8":$pqIvf8Straggler},""" +
-      s""""loads":{"train":$loadTrain,"build":$loadBuild,"ivf1":$loadIvf1,""" +
-      s""""ivf8":$loadIvf8,"brute":$loadBrute,"pq_encode":$loadEnc,""" +
-      s""""pq_adc":$loadPqAdc,"pq_rerank":$loadPqRerank,""" +
-      s""""pq_train":$loadPqTrain,"pq_encode_trained":$loadEncT,""" +
-      s""""pq_adc_trained":$loadPqAdcT,""" +
-      s""""lsh":$loadLsh,"lsh_multiprobe":$loadLshMp,""" +
-      s""""semdedup":$loadSem,""" +
-      s""""pq_ivf_encode":$loadIvfPqEnc,"pq_ivf8":$loadPqIvf8}}""")
+    def sec(tag: String) = rec.sec(tag)
+    Harness.emit("scale_ann", "copies" -> copies, "vectors" -> nVecs, "n_lists" -> nLists,
+      "queries" -> nQueries, "k" -> k, "train_sec" -> sec("train"), "build_sec" -> sec("build"),
+      "ivf1_sec" -> sec("ivf1"), "ivf8_sec" -> sec("ivf8"), "brute_sec" -> sec("brute"),
+      "recall8" -> recall8, "list_skew" -> listSkew,
+      "pq_m" -> pqM, "pq_codes" -> pqCodes, "pq_rerank_n" -> pqRerankN, "pq_encode_sec" -> sec("pq_encode"),
+      "pq_adc_sec" -> sec("pq_adc"), "pq_rerank_sec" -> sec("pq_rerank"),
+      "pq_compression" -> pqCompression,
+      "pq_adc_recall" -> recallOf(pqAdc), "pq_rerank_recall" -> recallOf(pqRr),
+      "pq_train_iters" -> pqTrainIters, "pq_train_sec" -> sec("pq_train"),
+      "pq_encode_trained_sec" -> sec("pq_encode_trained"), "pq_adc_trained_sec" -> sec("pq_adc_trained"),
+      "pq_adc_trained_recall" -> recallOf(pqAdcT),
+      "pq_quant_err" -> pqQuantErr, "pq_quant_err_trained" -> pqQuantErrTrained,
+      "lsh_planes" -> lshNPlanes, "lsh_sec" -> sec("lsh"), "lsh_recall" -> lshHeadline("recall"),
+      "lsh_mp_sec" -> sec("lsh_multiprobe"), "lsh_mp_recall" -> lshHeadline("mp_recall"),
+      "lsh_sweep" -> lshSweep,
+      "spread_gen_sec" -> sec("spread_gen"), "spread_brute_sec" -> sec("spread_brute"),
+      "spread_pq_train_sec" -> sec("spread_pq_train"),
+      "spread_adc_sec" -> sec("spread_adc"), "spread_adc_trained_sec" -> sec("spread_adc_trained"),
+      "spread_adc_recall" -> spreadAdcRecall, "spread_adc_trained_recall" -> spreadAdcTrainedRecall,
+      "spread_quant_err" -> spreadQuantErr, "spread_quant_err_trained" -> spreadQuantErrT,
+      "spread_codes2" -> spreadCodes2, "spread_pq_train256_sec" -> sec("spread_pq_train256"),
+      "spread_adc256_sec" -> sec("spread_adc256"),
+      "spread_adc256_trained_sec" -> sec("spread_adc256_trained"),
+      "spread_adc256_recall" -> spreadAdc2Recall, "spread_adc256_trained_recall" -> spreadAdc2TrainedRecall,
+      "spread_quant_err256" -> spreadQuantErr2, "spread_quant_err256_trained" -> spreadQuantErr2T,
+      "spread_density_sweep" -> Harness.obj(densityPoints: _*),
+      "pq_ivf_encode_sec" -> sec("pq_ivf_encode"), "pq_ivf8_sec" -> sec("pq_ivf8"),
+      "pq_ivf8_recall" -> recallOf(pqIvf8),
+      "semdedup_tau" -> semTau, "semdedup_sec" -> sec("semdedup"), "semdedup_kept" -> semKept,
+      "stragglers" -> rec.stragglers, "loads" -> rec.loads)
     spark.stop()
   }
 }

@@ -18,7 +18,7 @@ object ScaleBench {
     val copies = sys.env.getOrElse("SCALE_COPIES", "20").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
+    val rec = new Harness.Recorder(spark)
 
     // --- build the scaled corpus and persist it like a real input table ---
     val work = Harness.workDir("graft_scale")
@@ -28,8 +28,6 @@ object ScaleBench {
     val docs = spark.read.parquet(s"$work/documents.parquet")
     val nDocs = docs.count()
 
-    ledger.reset()
-    val t0 = System.nanoTime()
     // Scale parameterization, measured on this corpus at 100k docs:
     //  - the toy 8-hash/2-row-band setup (the sf0.1 oracle config) collides
     //    bands with probability J^2 - ordinary vocabulary overlap (J~0.5)
@@ -40,23 +38,20 @@ object ScaleBench {
     val cap = sys.env.getOrElse("SCALE_BUCKET_CAP", "64").toInt
     // checkpoint the pair set so the CC timing below measures CC alone, not a
     // second run of the cascade
-    val pairs = graft.llm.Dedup.minhashNearDups(docs, "text", "doc_id",
-      k = 5, numHashes = numHashes, bands = 4, threshold = 0.9, maxBucketSize = cap)
-      .localCheckpoint(true)
-    val nPairs = pairs.count()
-    val pairsSec = (System.nanoTime() - t0) / 1e9
+    val pairs = rec.phase("pairs", k = 1) {
+      val p = graft.llm.Dedup.minhashNearDups(docs, "text", "doc_id",
+        k = 5, numHashes = numHashes, bands = 4, threshold = 0.9, maxBucketSize = cap)
+        .localCheckpoint(true)
+      (p, p.count())
+    }
+    val cc = rec.phase("cc", k = 1) {
+      graft.er.ConnectedComponents.clusterMapping(pairs.value._1.select("a", "b")).count()
+    }
 
-    val t1 = System.nanoTime()
-    val clusters = graft.er.ConnectedComponents.clusterMapping(pairs.select("a", "b"))
-    val nClustered = clusters.count()
-    val ccSec = (System.nanoTime() - t1) / 1e9
-
-    val nTasks = ledger.taskLog().size
-    val straggler = ledger.straggler()
-
-    println(s"""{"metric":"scale_dedup","copies":$copies,"docs":$nDocs,"pairs":$nPairs,""" +
-      s""""clustered_docs":$nClustered,"pairs_sec":$pairsSec,"cc_sec":$ccSec,""" +
-      s""""tasks":$nTasks,"straggler_ratio":$straggler}""")
+    Harness.emit("scale_dedup", "copies" -> copies, "docs" -> nDocs, "pairs" -> pairs.value._2,
+      "clustered_docs" -> cc.value, "pairs_sec" -> pairs.sec, "cc_sec" -> cc.sec,
+      "tasks" -> (pairs.tasks + cc.tasks), "straggler_ratio" -> (pairs.straggler max cc.straggler),
+      "loads" -> rec.loads)
     spark.stop()
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * session's shuffle partitions), run the identical join+aggregate on both
   * layouts, and record
   *
-  *  - wall time per layout (interleaved two-sample min, matching the other
-  *    harnesses' burst defense);
+  *  - wall time per layout (min-of-K per layout, the other harnesses'
+  *    burst defense);
   *  - the EXCHANGE COUNT read from each executed plan — the structural
   *    proof (0 for bucketed vs 2 for plain), not just a faster clock;
   *  - result row count + checksum equality across layouts, so the faster
@@ -49,14 +49,15 @@ object ScaleBuckets {
       pmod(xxhash64(col("id"), lit(seed)), lit(nUsers)).as("user_id"),
       (pmod(xxhash64(col("id"), lit(seed + 1)), lit(1000)) / lit(100.0)).as(s"v$seed"))
 
+    val rec = new Harness.Recorder(spark)
     val nBuckets = cpus
-    val tW0 = System.nanoTime()
-    cat.write(fact(1), "ev_plain"); cat.write(fact(7), "tx_plain")
-    val plainWriteSec = (System.nanoTime() - tW0) / 1e9
-    val tW1 = System.nanoTime()
-    cat.writeBucketed(fact(1), "ev_bucketed", Seq("user_id"), nBuckets)
-    cat.writeBucketed(fact(7), "tx_bucketed", Seq("user_id"), nBuckets)
-    val bucketWriteSec = (System.nanoTime() - tW1) / 1e9
+    val plainWrite = rec.phase("plain_write", k = 1) {
+      cat.write(fact(1), "ev_plain"); cat.write(fact(7), "tx_plain")
+    }
+    val bucketWrite = rec.phase("bucket_write", k = 1) {
+      cat.writeBucketed(fact(1), "ev_bucketed", Seq("user_id"), nBuckets)
+      cat.writeBucketed(fact(7), "tx_bucketed", Seq("user_id"), nBuckets)
+    }
 
     // per-user join+aggregate: every click joined to every tx of its user
     // would explode, so both sides pre-aggregate per user first — except
@@ -71,33 +72,23 @@ object ScaleBuckets {
         .groupBy("user_id")
         .agg(sum(col("v1").cast("decimal(18,2)")).as("ev_total"),
           max("tx_total").as("tx_total"), count(lit(1)).as("ev_n"))
-
-    var plainSec = Double.MaxValue; var bucketSec = Double.MaxValue
-    var plainRes: (Long, Long) = (-1L, 0L); var bucketRes: (Long, Long) = (-1L, 0L)
-    var plainEx = -1; var bucketEx = -1
-    for (_ <- 1 to 2) {
-      val p = enrich(cat.read("ev_plain"), cat.read("tx_plain"))
-      val t0 = System.nanoTime()
-      plainRes = Harness.consume(p)
-      plainSec = math.min(plainSec, (System.nanoTime() - t0) / 1e9)
-      plainEx = exchanges(p)
-      val b = enrich(cat.readTable("ev_bucketed"), cat.readTable("tx_bucketed"))
-      val t1 = System.nanoTime()
-      bucketRes = Harness.consume(b)
-      bucketSec = math.min(bucketSec, (System.nanoTime() - t1) / 1e9)
-      bucketEx = exchanges(b)
-    }
-    require(plainRes == bucketRes,
-      s"layouts disagree: plain $plainRes vs bucketed $bucketRes")
+    // min-of-K join per layout: (rows, checksum) and the plan's exchanges
+    def join(tag: String, df: DataFrame) = (rec.phase(tag)(Harness.consume(df)), exchanges(df))
+    val (plain, plainEx) = join("plain_join", enrich(cat.read("ev_plain"), cat.read("tx_plain")))
+    val (bucket, bucketEx) =
+      join("bucket_join", enrich(cat.readTable("ev_bucketed"), cat.readTable("tx_bucketed")))
+    require(plain.value == bucket.value,
+      s"layouts disagree: plain ${plain.value} vs bucketed ${bucket.value}")
     require(bucketEx == 0,
       s"bucketed join should be exchange-free, plan has $bucketEx exchanges")
     require(plainEx > 0, "plain join unexpectedly planned no exchange")
 
-    println(s"""{"metric":"scale_buckets","rows":$nRows,"users":$nUsers,""" +
-      s""""buckets":$nBuckets,"result_rows":${plainRes._1},""" +
-      s""""plain_join_sec":$plainSec,"plain_exchanges":$plainEx,""" +
-      s""""bucket_join_sec":$bucketSec,"bucket_exchanges":$bucketEx,""" +
-      s""""plain_write_sec":$plainWriteSec,"bucket_write_sec":$bucketWriteSec}""")
+    Harness.emit("scale_buckets", "rows" -> nRows, "users" -> nUsers,
+      "buckets" -> nBuckets, "result_rows" -> plain.value._1,
+      "plain_join_sec" -> plain.sec, "plain_exchanges" -> plainEx,
+      "bucket_join_sec" -> bucket.sec, "bucket_exchanges" -> bucketEx,
+      "plain_write_sec" -> plainWrite.sec, "bucket_write_sec" -> bucketWrite.sec,
+      "loads" -> rec.loads)
     spark.stop()
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.Harness.{Sample, bestOf}
-
 /** Off-toy scale proof for the decontamination family: does the Bloom gate
   * actually deliver its claimed shuffle reduction when the training corpus is
   * 1M+ documents and the benchmark is small?
@@ -48,7 +46,7 @@ object ScaleDecontam {
     val gramN = sys.env.getOrElse("SCALE_GRAM_N", "8").toInt
     val minHits = 3
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
+    val rec = new Harness.Recorder(spark)
 
     // --- scaled corpus, materialized and re-read like a real input table
     val work = Harness.workDir("graft_scale_decontam")
@@ -83,17 +81,17 @@ object ScaleDecontam {
     val prunedFrac = 1.0 - gatedPostings.toDouble / trainPostings.toDouble
 
     // --- timed: the production operator (Bloom-gated exact equi-join)
-    val Sample(bloomOut, bloomSec, bloomStraggler, loadBloom) = bestOf("bloom", ledger) {
+    val bloom = rec.phase("bloom") {
       val out = TextAnalysis.contaminationFlags(train, bench, "text", "doc_id",
         n = gramN, minHits = minHits).localCheckpoint(true)
       out.count()
       out
-    }.head
-    val flaggedRows = bloomOut.count()
+    }
+    val flaggedRows = bloom.value.count()
 
     // --- timed: the identical exact equi-join WITHOUT the gate — every
     // training posting crosses the join shuffle just to (mostly) miss
-    val Sample(nogateOut, nogateSec, nogateStraggler, loadNogate) = bestOf("nogate", ledger) {
+    val nogate = rec.phase("nogate") {
       val out = dGrams.join(bGrams, Seq("g"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shared"))
@@ -101,22 +99,21 @@ object ScaleDecontam {
         .localCheckpoint(true)
       out.count()
       out
-    }.head
+    }
 
     // Bloom false positives are discarded by the confirming join, so the two
     // flagged sets must be identical
-    val outputsEqual =
-      bloomOut.except(nogateOut).isEmpty && nogateOut.except(bloomOut).isEmpty
+    val (b, g) = (bloom.value, nogate.value)
+    val outputsEqual = b.except(g).isEmpty && g.except(b).isEmpty
 
-    println(s"""{"metric":"scale_decontam","docs":$nDocs,"copies":$copies,""" +
-      s""""bench_docs":$benchBases,"bench_bytes":$benchBytes,"bench_grams":$benchGrams,""" +
-      s""""gram_n":$gramN,"min_hits":$minHits,""" +
-      s""""train_postings":$trainPostings,"gated_postings":$gatedPostings,""" +
-      s""""postings_pruned_frac":$prunedFrac,""" +
-      s""""bloom_sec":$bloomSec,"nogate_sec":$nogateSec,"flagged_rows":$flaggedRows,""" +
-      s""""outputs_equal":$outputsEqual,""" +
-      s""""stragglers":{"bloom":$bloomStraggler,"nogate":$nogateStraggler},""" +
-      s""""loads":{"bloom":$loadBloom,"nogate":$loadNogate}}""")
+    Harness.emit("scale_decontam", "docs" -> nDocs, "copies" -> copies,
+      "bench_docs" -> benchBases, "bench_bytes" -> benchBytes, "bench_grams" -> benchGrams,
+      "gram_n" -> gramN, "min_hits" -> minHits,
+      "train_postings" -> trainPostings, "gated_postings" -> gatedPostings,
+      "postings_pruned_frac" -> prunedFrac,
+      "bloom_sec" -> bloom.sec, "nogate_sec" -> nogate.sec, "flagged_rows" -> flaggedRows,
+      "outputs_equal" -> outputsEqual,
+      "stragglers" -> rec.stragglers, "loads" -> rec.loads)
     spark.stop()
   }
 }

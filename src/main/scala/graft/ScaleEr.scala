@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Harness.bestOf
 import graft.er.{Blocking, DedupeField, Gazetteer, Pairing}
 
 /** Off-toy scale proof for the ER blocking→pair→score path (round-18 verdict
@@ -31,7 +30,7 @@ object ScaleEr {
     val nMessy = sys.env.getOrElse("SCALE_MESSY", "1000000").toLong
     val nCanon = sys.env.getOrElse("SCALE_CANON", "100000").toLong
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
+    val rec = new Harness.Recorder(spark)
 
     // --- the messy universe -------------------------------------------------
     // ~2000 ordinary first tokens + ONE stop token: canon entity c carries
@@ -64,15 +63,6 @@ object ScaleEr {
     val (mbCnt, cbCnt) = (messyBlocks.count(), canonBlocks.count())
     System.err.println(s"[scale_er] messy=$mCnt canon=$cCnt blocks=$mbCnt/$cbCnt")
 
-    val phaseLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def best(tag: String)(body: => Long): (Long, Double, Double) = {
-      val runs = bestOf(tag, ledger)(body)
-      require(runs.map(_.value).distinct.size == 1,
-        s"$tag row count varies across samples: ${runs.map(_.value)}")
-      phaseLoads(tag) = runs.head.load
-      (runs.head.value, runs.head.sec, runs.head.straggler)
-    }
-
     val gatePairs = sys.env.getOrElse("SCALE_GAZ_MAX_PAIRS", "250000").toLong
     def gazetteer(cap: Long): DataFrame =
       Gazetteer.matchTables(messyBlocks, canonBlocks, messy, canon,
@@ -87,36 +77,33 @@ object ScaleEr {
       .join(canonB.groupBy("block_key").agg(count(lit(1)).as("__c")), Seq("block_key"))
       .filter(col("__m") * col("__c") > gatePairs).count()
 
-    val (gazRowsNogate, gazNogateSec, gazNogateStrag) =
-      best("gaz_nogate")(gazetteer(0L).count())
-    val (gazRowsGated, gazGatedSec, gazGatedStrag) =
-      best("gaz_gated")(gazetteer(gatePairs).count())
+    // row counts are deterministic: every sample of a phase must agree
+    val gazNogate = rec.phase("gaz_nogate", same = identity)(gazetteer(0L).count())
+    val gazGated = rec.phase("gaz_gated", same = identity)(gazetteer(gatePairs).count())
     // dropping blocks can only shrink the set of matched messy records — a
     // violation means the cap changed semantics, not just recall
-    require(gazRowsGated <= gazRowsNogate,
-      s"gated gazetteer matched MORE messy records: $gazRowsGated > $gazRowsNogate")
+    require(gazGated.value <= gazNogate.value,
+      s"gated gazetteer matched MORE messy records: ${gazGated.value} > ${gazNogate.value}")
 
     // dedupe-path pair generation over the same messy block table
     val gateBlock = sys.env.getOrElse("SCALE_PAIR_MAX_BLOCK", "1000").toInt
-    val (pairsNogate, pairsNogateSec, pairsNogateStrag) =
-      best("pairs_nogate")(Pairing.candidatePairs(messyBlocks, 0).count())
-    val (pairsGated, pairsGatedSec, pairsGatedStrag) =
-      best("pairs_gated")(Pairing.candidatePairs(messyBlocks, gateBlock).count())
-    require(pairsGated <= pairsNogate,
-      s"gated pairing produced MORE pairs: $pairsGated > $pairsNogate")
+    val pairsNogate =
+      rec.phase("pairs_nogate", same = identity)(Pairing.candidatePairs(messyBlocks, 0).count())
+    val pairsGated =
+      rec.phase("pairs_gated", same = identity)(Pairing.candidatePairs(messyBlocks, gateBlock).count())
+    require(pairsGated.value <= pairsNogate.value,
+      s"gated pairing produced MORE pairs: ${pairsGated.value} > ${pairsNogate.value}")
 
-    val loadsJson = phaseLoads.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_er","messy":$mCnt,"canon":$cCnt,""" +
-      s""""messy_block_rows":$mbCnt,"canon_block_rows":$cbCnt,""" +
-      s""""cand_nogate":$candNogate,"hot_keys_over_gate":$hotKeys,""" +
-      s""""gaz_max_pairs":$gatePairs,"pair_max_block":$gateBlock,""" +
-      s""""phase_loads":$loadsJson,""" +
-      s""""gaz_nogate_sec":$gazNogateSec,"gaz_nogate_matched":$gazRowsNogate,""" +
-      s""""gaz_gated_sec":$gazGatedSec,"gaz_gated_matched":$gazRowsGated,""" +
-      s""""pairs_nogate_sec":$pairsNogateSec,"pairs_nogate":$pairsNogate,""" +
-      s""""pairs_gated_sec":$pairsGatedSec,"pairs_gated":$pairsGated,""" +
-      s""""stragglers":{"gaz_nogate":$gazNogateStrag,"gaz_gated":$gazGatedStrag,""" +
-      s""""pairs_nogate":$pairsNogateStrag,"pairs_gated":$pairsGatedStrag}}""")
+    Harness.emit("scale_er", "messy" -> mCnt, "canon" -> cCnt,
+      "messy_block_rows" -> mbCnt, "canon_block_rows" -> cbCnt,
+      "cand_nogate" -> candNogate, "hot_keys_over_gate" -> hotKeys,
+      "gaz_max_pairs" -> gatePairs, "pair_max_block" -> gateBlock,
+      "phase_loads" -> rec.loads,
+      "gaz_nogate_sec" -> gazNogate.sec, "gaz_nogate_matched" -> gazNogate.value,
+      "gaz_gated_sec" -> gazGated.sec, "gaz_gated_matched" -> gazGated.value,
+      "pairs_nogate_sec" -> pairsNogate.sec, "pairs_nogate" -> pairsNogate.value,
+      "pairs_gated_sec" -> pairsGated.sec, "pairs_gated" -> pairsGated.value,
+      "stragglers" -> rec.stragglers)
     spark.stop()
   }
 }

@@ -41,12 +41,11 @@ object ScaleFlagship {
     // production shape (more entities, not hotter blocks)
     val sfDir = sys.env.getOrElse("SCALE_FLAGSHIP_SF_DIR", "/root/testdata/sf0.01")
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
+    // one sample per stage; a later point's stages overwrite the earlier
+    // point's under the same tags, so the recorder ends holding the headline
+    val rec = new Harness.Recorder(spark)
 
-    case class Point(copies: Int, counts: Map[String, Long],
-                     stageSecs: scala.collection.Map[String, Double],
-                     stageStragglers: scala.collection.Map[String, Double],
-                     stageLoads: scala.collection.Map[String, Double],
+    case class Point(copies: Int, counts: Map[String, Long], stageSecs: Map[String, Double],
                      graphRows: Long, mappingRows: Long)
 
     def runPoint(copies: Int): Point = {
@@ -99,21 +98,13 @@ object ScaleFlagship {
     }.toMap
 
     // --- the pipeline, stage family by stage family
-    val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val stageStragglers = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val stageLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
     Flagship.stages.foreach { case (stage, nodes) =>
-      val load = Harness.gateOnLoad(stage)
-      ledger.reset()
-      val t0 = System.nanoTime()
-      new EtlGroup(s"flagship_$stage", nodes, dropIntermediates = false)
-        .execute(cat, maxActiveRun = 4)
-      val sec = (System.nanoTime() - t0) / 1e9
-      stageSecs(stage) = sec
-      stageStragglers(stage) = ledger.straggler()
-      stageLoads(stage) = load
-      System.err.println(f"[scale_flagship] $stage $sec%.1fs load=$load%.2f")
+      rec.phase(stage, k = 1) {
+        new EtlGroup(s"flagship_$stage", nodes, dropIntermediates = false)
+          .execute(cat, maxActiveRun = 4)
+      }
     }
+    val stageSecs = rec.secs
 
     val graph = cat.read("flagship_graph")
     val graphRows = graph.count()
@@ -131,29 +122,22 @@ object ScaleFlagship {
     // exit stacks ~13 GB (×100) + ~34 GB (×250) + ~55 GB (×400) of parquet
     // on one disk — eager deletion caps peak usage at the largest point
     TempCleanup.deleteNow(work)
-    Point(copies, counts, stageSecs, stageStragglers, stageLoads, graphRows, mappingRows)
+    Point(copies, counts, stageSecs, graphRows, mappingRows)
     } // runPoint
 
     val points = copiesList.map(runPoint)
     val p = points.last
 
-    def jmap(m: scala.collection.Map[String, Double], f: Double => String): String =
-      m.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    val pointsJson = points.map { pt =>
-      s"""{"copies":${pt.copies},"total_sec":${f"${pt.stageSecs.values.sum}%.3f"},""" +
-        s""""result_sec":${f"${pt.stageSecs.getOrElse("result", 0.0)}%.3f"},""" +
-        s""""graph_rows":${pt.graphRows}}"""
-    }.mkString("[", ",", "]")
-    println(s"""{"metric":"scale_flagship","copies":${p.copies},""" +
-      s""""customers":${p.counts("customer")},"orders":${p.counts("orders")},""" +
-      s""""lineitems":${p.counts("lineitem")},"parts":${p.counts("part")},""" +
-      s""""points":$pointsJson,""" +
-      s""""stage_secs":${jmap(p.stageSecs, v => f"$v%.3f")},""" +
-      s""""total_sec":${f"${p.stageSecs.values.sum}%.3f"},""" +
-      s""""graph_rows":${p.graphRows},"er_mapping_rows":${p.mappingRows},""" +
-      s""""messy_left":0,"validators_pass":true,""" +
-      s""""stage_stragglers":${jmap(p.stageStragglers, v => f"$v%.2f")},""" +
-      s""""loads":${jmap(p.stageLoads, v => f"$v%.2f")}}""")
+    Harness.emit("scale_flagship", "copies" -> p.copies,
+      "customers" -> p.counts("customer"), "orders" -> p.counts("orders"),
+      "lineitems" -> p.counts("lineitem"), "parts" -> p.counts("part"),
+      "points" -> points.map(pt => Harness.obj("copies" -> pt.copies,
+        "total_sec" -> pt.stageSecs.values.sum, "result_sec" -> pt.stageSecs.getOrElse("result", 0.0),
+        "graph_rows" -> pt.graphRows)),
+      "stage_secs" -> p.stageSecs, "total_sec" -> p.stageSecs.values.sum,
+      "graph_rows" -> p.graphRows, "er_mapping_rows" -> p.mappingRows,
+      "messy_left" -> 0, "validators_pass" -> true,
+      "stage_stragglers" -> rec.stragglers, "loads" -> rec.loads)
     spark.stop()
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.Harness.{Sample, bestOf}
 
 /** Off-toy scale proof for the graph-analytics family: the shuffle-path
   * PageRank, shuffle-path triangle count, and distributed min-label
@@ -18,11 +17,10 @@ import graft.Harness.{Sample, bestOf}
   * size, and (c) that the two strategies agree bit-for-bit — the same
   * "measure the claim" discipline as [[ScaleDecontam]].
   *
-  * Workload: a power-law random graph (`floor(N·u^2.5)` endpoints, u
-  * uniform) — node 0 collects ~0.3% of all endpoint draws (a 10^4-degree
-  * hub at the default size), which is exactly the skew the degree-ordered
-  * orientation and the Pregel aggregate must survive. Edges are
-  * materialized to parquet and re-read like a real input table.
+  * Workload: [[ScaleCorpus.powerLawEdges]] — node 0 collects ~0.3% of all
+  * endpoint draws (a 10^4-degree hub at the default size), which is exactly
+  * the skew the degree-ordered orientation and the Pregel aggregate must
+  * survive.
   *
   * Also measured: the broadcast-path PageRank's driver-memory envelope —
   * the per-round contribution table the rank-broadcast rounds hold on the
@@ -49,33 +47,33 @@ object ScaleGraph {
     val nodesN = sys.env.getOrElse("SCALE_NODES", "2000000").toLong
     val prIters = sys.env.getOrElse("SCALE_PR_ITERS", "10").toInt
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
-    def best[A](tag: String)(body: => A): Sample[A] =
-      bestOf(tag, ledger, before = {
-        // Pay the PREVIOUS sample's GC debt outside the timed window: the
-        // broadcast-path PageRank churns ~100 MB driver arrays per round,
-        // and without this the next phase's first mixed-GC pause lands
-        // mid-sample and reads as a task-time straggler (observed: the cc
-        // phase, which runs last, recording 2x wall + 4.7 max/median in
-        // the SAME code a fresh-JVM probe runs clean). Persisted
-        // intermediates (edge snapshot, degree table, adjacency) are
-        // per-invocation state — dropping them first makes every sample
-        // start cold and measure the same work, and the explicit gc() lets
-        // the ContextCleaner reap the prior sample's now-unreachable
-        // localCheckpoint blocks.
-        spark.catalog.clearCache()
-        System.gc()
-        Thread.sleep(2000)
-      })(body).head
+    val rec = new Harness.Recorder(spark, before = () => {
+      // Pay the PREVIOUS sample's GC debt outside the timed window: the
+      // broadcast-path PageRank churns ~100 MB driver arrays per round,
+      // and without this the next phase's first mixed-GC pause lands
+      // mid-sample and reads as a task-time straggler (observed: the cc
+      // phase, which runs last, recording 2x wall + 4.7 max/median in
+      // the SAME code a fresh-JVM probe runs clean). Persisted
+      // intermediates (edge snapshot, degree table, adjacency) are
+      // per-invocation state — dropping them first makes every sample
+      // start cold and measure the same work, and the explicit gc() lets
+      // the ContextCleaner reap the prior sample's now-unreachable
+      // localCheckpoint blocks.
+      spark.catalog.clearCache()
+      System.gc()
+      Thread.sleep(2000)
+    })
+    // one materialized output per sample, so the paths can be compared
+    def materialized(df: => DataFrame): DataFrame = {
+      val out = df.localCheckpoint(true)
+      out.count()
+      out
+    }
+    def equal(a: DataFrame, b: DataFrame): Boolean = a.except(b).isEmpty && b.except(a).isEmpty
 
     // --- synthetic power-law graph, materialized and re-read like real input
-    val work = Harness.workDir("graft_scale_graph")
-    spark.range(edgesN).select(
-        floor(pow(rand(7), 2.5) * nodesN).cast("long").as("src"),
-        floor(pow(rand(11), 2.5) * nodesN).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .write.mode("overwrite").parquet(s"$work/edges.parquet")
-    val edges = spark.read.parquet(s"$work/edges.parquet")
+    val edges =
+      ScaleCorpus.powerLawEdges(spark, edgesN, nodesN, Harness.workDir("graft_scale_graph").toString)
 
     // untimed shape diagnostics: the skew the far paths must survive
     val rawEdges = edges.count()
@@ -91,69 +89,39 @@ object ScaleGraph {
     import graft.graph.Analytics
 
     // --- triangles: far (shuffle) path, then the gated (broadcast) path
-    val (triShuffle, triShuffleSec, triShuffleStr, triShuffleLoad,
-         triBroadcastSec, triBroadcastStr, triBroadcastLoad) = if (!phases("tri"))
-      (0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    else {
-      val Sample(tS, tSSec, tSStr, tSLoad) =
-        best("tri_shuffle") {
-          Analytics.triangleCountShuffle(edges).head.getLong(0)
-        }
-      val Sample(tB, tBSec, tBStr, tBLoad) =
-        best("tri_broadcast") {
-          Analytics.triangleCountBroadcast(edges).head.getLong(0)
-        }
-      require(tS == tB,
-        s"triangle paths disagree: shuffle=$tS broadcast=$tB")
-      (tS, tSSec, tSStr, tSLoad, tBSec, tBStr, tBLoad)
+    val triangles = if (!phases("tri")) 0L else {
+      val tS = rec.phase("tri_shuffle")(Analytics.triangleCountShuffle(edges).head.getLong(0)).value
+      val tB =
+        rec.phase("tri_broadcast")(Analytics.triangleCountBroadcast(edges).head.getLong(0)).value
+      require(tS == tB, s"triangle paths disagree: shuffle=$tS broadcast=$tB")
+      tS
     }
 
     // --- PageRank: far (shuffle Pregel) path, then the gated (driver-held
     // contribution table) path — identical integer arithmetic, so the two
     // rank tables must be bit-equal
-    val (prShuffleSec, prShuffleStr, prShuffleLoad,
-         prBroadcastSec, prBroadcastStr, prBroadcastLoad, prEqual, prCadenceJson) = if (!phases("pr"))
-      (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false, "{}")
-    else {
+    val prEqual = phases("pr") && {
       // pin per-round cuts for the base run: the production default is the
       // cadence the r19 sweep chose (k=2), and the sweep's "1" row must
       // actually measure k=1
-      val Sample(pSOut, pSSec, pSStr, pSLoad) =
-        best("pr_shuffle") {
-          val out = Analytics.pageRankShuffle(edges, prIters, checkpointEvery = 1)
-            .localCheckpoint(true)
-          out.count()
-          out
-        }
+      def shuffle(k: Int, tag: String) = rec.phase(tag)(
+        materialized(Analytics.pageRankShuffle(edges, prIters, checkpointEvery = k))).value
+      val pS = shuffle(1, "pr_shuffle")
       // checkpoint-cadence probe (round-18 advice #7): the shuffle path cuts
       // lineage every round — 9 materializations over 10 rounds at this node
       // count. Sparser cuts (k rounds composed into one job) trade
       // blockstore writes for deeper plans; ranks must stay bit-equal.
-      val cadenceSecs = Seq(2, 3).map { k =>
-        val Sample(out, sec, _, _) = best(s"pr_shuffle_ck$k") {
-          val o = Analytics.pageRankShuffle(edges, prIters, checkpointEvery = k)
-            .localCheckpoint(true)
-          o.count()
-          o
-        }
-        require(out.except(pSOut).isEmpty && pSOut.except(out).isEmpty,
+      Seq(2, 3).foreach { k =>
+        require(equal(shuffle(k, s"pr_shuffle_ck$k"), pS),
           s"cadence-$k ranks diverged from per-round checkpointing")
-        k -> sec
       }
-      val cadenceJson = ((1 -> pSSec) +: cadenceSecs)
-        .map { case (k, s) => s""""$k":$s""" }.mkString("{", ",", "}")
       // FORCE the broadcast path (the gate is 100k nodes — measured by this
       // harness's own crossover probes — so pageRank itself would measure
       // the shuffle path twice at this size)
-      val Sample(pBOut, pBSec, pBStr, pBLoad) =
-        best("pr_broadcast") {
-          val out = Analytics.pageRankBroadcast(edges, prIters).localCheckpoint(true)
-          out.count()
-          out
-        }
-      val eq = pSOut.except(pBOut).isEmpty && pBOut.except(pSOut).isEmpty
-      (pSSec, pSStr, pSLoad, pBSec, pBStr, pBLoad, eq, cadenceJson)
+      equal(pS, rec.phase("pr_broadcast")(materialized(Analytics.pageRankBroadcast(edges, prIters))).value)
     }
+    val cadence = if (!phases("pr")) Harness.obj() else Harness.obj("1" -> rec.sec("pr_shuffle"),
+      "2" -> rec.sec("pr_shuffle_ck2"), "3" -> rec.sec("pr_shuffle_ck3"))
 
     // --- connected components: far (distributed min-label + pointer
     // jumping) path, then the gated (driver union-find) path FORCED at the
@@ -165,27 +133,10 @@ object ScaleGraph {
     // plain min-label propagation would need O(diameter) rounds and the
     // pointer-jumping compression has to do real work.
     import graft.er.ConnectedComponents
-    val (ccDistSec, ccDistStr, ccDistLoad,
-         ccDriverSec, ccDriverStr, ccDriverLoad, ccEqual, ccComponents) = if (!phases("cc"))
-      (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false, 0L)
-    else {
-      val Sample(cDOut, cDSec, cDStr, cDLoad) =
-        best("cc_distributed") {
-          val out = ConnectedComponents.distributedPath(edges)
-            .localCheckpoint(true)
-          out.count()
-          out
-        }
-      val Sample(cUOut, cUSec, cUStr, cULoad) =
-        best("cc_driver") {
-          val out = ConnectedComponents.driverPath(edges)
-            .localCheckpoint(true)
-          out.count()
-          out
-        }
-      val eq = cDOut.except(cUOut).isEmpty && cUOut.except(cDOut).isEmpty
-      val nComp = cDOut.select("component").distinct().count()
-      (cDSec, cDStr, cDLoad, cUSec, cUStr, cULoad, eq, nComp)
+    val (ccEqual, ccComponents) = if (!phases("cc")) (false, 0L) else {
+      val cD = rec.phase("cc_dist")(materialized(ConnectedComponents.distributedPath(edges))).value
+      val cU = rec.phase("cc_driver")(materialized(ConnectedComponents.driverPath(edges))).value
+      (equal(cD, cU), cD.select("component").distinct().count())
     }
 
     // --- driver-memory envelope of the broadcast path (untimed): build the
@@ -203,23 +154,18 @@ object ScaleGraph {
       (sArr.length.toLong, org.apache.spark.util.SizeEstimator.estimate(sArr))
     }
 
-    val metric = if (allPhases) "scale_graph" else "scale_graph_partial"
-    println(s"""{"metric":"$metric","edges":$rawEdges,"edges_param":$edgesN,"nodes_param":$nodesN,""" +
-      s""""distinct_und_edges":$distinctUnd,"vertices":$vertices,"max_degree":$maxDegree,""" +
-      s""""pr_iters":$prIters,"triangles":$triShuffle,""" +
-      s""""tri_shuffle_sec":$triShuffleSec,"tri_broadcast_sec":$triBroadcastSec,""" +
-      s""""pr_shuffle_sec":$prShuffleSec,"pr_broadcast_sec":$prBroadcastSec,""" +
-      s""""pr_ckpt_cadence":$prCadenceJson,""" +
-      s""""cc_dist_sec":$ccDistSec,"cc_driver_sec":$ccDriverSec,""" +
-      s""""cc_components":$ccComponents,""" +
-      s""""tri_paths_equal":${phases("tri")},"pr_paths_equal":$prEqual,"cc_paths_equal":$ccEqual,""" +
-      s""""pr_driver_s_rows":$sRows,"pr_driver_s_bytes":$sBytes,""" +
-      s""""stragglers":{"tri_shuffle":$triShuffleStr,"tri_broadcast":$triBroadcastStr,""" +
-      s""""pr_shuffle":$prShuffleStr,"pr_broadcast":$prBroadcastStr,""" +
-      s""""cc_dist":$ccDistStr,"cc_driver":$ccDriverStr},""" +
-      s""""loads":{"tri_shuffle":$triShuffleLoad,"tri_broadcast":$triBroadcastLoad,""" +
-      s""""pr_shuffle":$prShuffleLoad,"pr_broadcast":$prBroadcastLoad,""" +
-      s""""cc_dist":$ccDistLoad,"cc_driver":$ccDriverLoad}}""")
+    Harness.emit(if (allPhases) "scale_graph" else "scale_graph_partial",
+      "edges" -> rawEdges, "edges_param" -> edgesN, "nodes_param" -> nodesN,
+      "distinct_und_edges" -> distinctUnd, "vertices" -> vertices, "max_degree" -> maxDegree,
+      "pr_iters" -> prIters, "triangles" -> triangles,
+      "tri_shuffle_sec" -> rec.sec("tri_shuffle"), "tri_broadcast_sec" -> rec.sec("tri_broadcast"),
+      "pr_shuffle_sec" -> rec.sec("pr_shuffle"), "pr_broadcast_sec" -> rec.sec("pr_broadcast"),
+      "pr_ckpt_cadence" -> cadence,
+      "cc_dist_sec" -> rec.sec("cc_dist"), "cc_driver_sec" -> rec.sec("cc_driver"),
+      "cc_components" -> ccComponents,
+      "tri_paths_equal" -> phases("tri"), "pr_paths_equal" -> prEqual, "cc_paths_equal" -> ccEqual,
+      "pr_driver_s_rows" -> sRows, "pr_driver_s_bytes" -> sBytes,
+      "stragglers" -> rec.stragglers, "loads" -> rec.loads)
     spark.stop()
   }
 }

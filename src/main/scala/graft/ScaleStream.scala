@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Harness.bestOf
-
 /** Off-toy scale proof for the Structured Streaming pillar: drain a 10 M-event
   * backlog through the SAME transforms the oracle-checked queries use
   * ([[graft.streaming.Streams.windowedAggPlan]] / `sessionWindowPlan` /
@@ -49,19 +47,11 @@ object ScaleStream {
     val nFiles = 64
     val filesPerTrigger = 16 // => 4 micro-batches for the multi-batch phases
     val spark = Harness.session()
-    val ledger = new Harness.Ledger(spark)
+    val rec = new Harness.Recorder(spark)
 
     val work = Harness.workDir("graft_scale_stream")
-    val tsRange = 2592000000000L // 30 days of microseconds
-    val events = spark.range(nEvents)
-      .select(
-        col("id").as("event_id"),
-        pmod(xxhash64(col("id"), lit(3)), lit(tsRange)).as("ts"),
-        pmod(xxhash64(col("id"), lit(2)), lit(nUsers)).as("user_id"),
-        when(pmod(xxhash64(col("id"), lit(4)), lit(2)) === 0, lit("click"))
-          .otherwise(lit("view")).as("event_type"),
-        (pmod(xxhash64(col("id"), lit(5)), lit(1000)) / lit(100.0)).as("value"),
-        lit("{}").as("props"))
+    val events = ScaleCorpus.events(spark, nEvents, nUsers).select(col("event_id"),
+      col("ts_us").as("ts"), col("user_id"), col("event_type"), col("value"), lit("{}").as("props"))
     // TIME-ORDERED replay (range-partitioned files + mtime stamp): a
     // CORRECTNESS requirement for the multi-batch stateful phases — see
     // writeTimeOrderedFeed's scaladoc; without the stamp, 45% of the
@@ -77,14 +67,13 @@ object ScaleStream {
       r.parquet(s"$work/events")
     }
 
-    // Per-phase min-of-K (Harness.bestOf): co-tenant load bursts (1-min load
-    // 20-30 for minutes at a time) outlast the phase gate — observed 312s
-    // vs 31s for the SAME phase in back-to-back runs. Output counts are
-    // deterministic and asserted equal across samples; only the clock
-    // varies. phase_loads keeps the load of the sample that WON.
-    val phaseLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // Per-phase min-of-K: co-tenant load bursts (1-min load 20-30 for
+    // minutes at a time) outlast the phase gate — observed 312s vs 31s for
+    // the SAME phase in back-to-back runs. Output counts are deterministic
+    // and asserted equal across samples; only the clock varies. phase_loads
+    // keeps the load of the sample that WON.
     def drain(name: String, out: => DataFrame, mode: String): (Double, StreamingQuery, Long) = {
-      val runs = bestOf(name, ledger) {
+      val win = rec.phase(name, same = { case (_, sink) => sink }) {
         var sink = 0L
         val q = out.writeStream
           .outputMode(mode)
@@ -102,10 +91,6 @@ object ScaleStream {
         spark.streams.resetTerminated()
         (q, sink)
       }
-      require(runs.map(_.value._2).distinct.size == 1,
-        s"$name sink count varies across samples: ${runs.map(_.value._2)}")
-      val win = runs.head
-      phaseLoads(name) = win.load
       (win.sec, win.value._1, win.value._2)
     }
 
@@ -210,21 +195,19 @@ object ScaleStream {
       s"stream interval join diverged from batch range join: $joinRows vs $batchJoinRows")
 
     def rate(sec: Double): Long = math.round(total / sec)
-    val loadsJson = phaseLoads.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_stream","events":$total,"users":$nUsers,""" +
-      s""""phase_loads":$loadsJson,""" +
-      s""""windowed":{"drain_sec":$winSec,"batches":${batches(winQ)},""" +
-      s""""rows_per_sec":${rate(winSec)},"state_rows_peak":${peakState(winQ)},""" +
-      s""""result_rows":$winRows},""" +
-      s""""sessions":{"drain_sec":$sesSec,"rocksdb_drain_sec":$sesRocksSec,""" +
-      s""""batches":${batches(sesQ)},""" +
-      s""""rows_per_sec":${rate(sesSec)},"state_rows_peak":${peakState(sesQ)},""" +
-      s""""emitted":$sesRows,"batch_total":$sesBatchRows,""" +
-      s""""open_tail":${sesBatchRows - sesRows}},""" +
-      s""""interval_join":{"drain_sec":$joinSec,"rocksdb_drain_sec":$joinRocksSec,""" +
-      s""""batches":${batches(joinQ)},""" +
-      s""""rows_per_sec":${rate(joinSec)},"state_rows_peak":${peakState(joinQ)},""" +
-      s""""joined_rows":$joinRows}}""")
+    Harness.emit("scale_stream", "events" -> total, "users" -> nUsers, "phase_loads" -> rec.loads,
+      "windowed" -> Harness.obj("drain_sec" -> winSec, "batches" -> batches(winQ),
+        "rows_per_sec" -> rate(winSec), "state_rows_peak" -> peakState(winQ),
+        "result_rows" -> winRows),
+      "sessions" -> Harness.obj("drain_sec" -> sesSec, "rocksdb_drain_sec" -> sesRocksSec,
+        "batches" -> batches(sesQ),
+        "rows_per_sec" -> rate(sesSec), "state_rows_peak" -> peakState(sesQ),
+        "emitted" -> sesRows, "batch_total" -> sesBatchRows,
+        "open_tail" -> (sesBatchRows - sesRows)),
+      "interval_join" -> Harness.obj("drain_sec" -> joinSec, "rocksdb_drain_sec" -> joinRocksSec,
+        "batches" -> batches(joinQ),
+        "rows_per_sec" -> rate(joinSec), "state_rows_peak" -> peakState(joinQ),
+        "joined_rows" -> joinRows))
     spark.stop()
   }
 }

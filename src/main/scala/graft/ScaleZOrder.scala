@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * data — this harness measures that skipping instead of asserting it.
   *
   * Method: synthesize `SCALE_EVENTS` events (hash-scattered user ids and
-  * timestamps, the [[ScaleJoins]] generator), write them twice at the same
+  * timestamps, [[ScaleCorpus.events]]), write them twice at the same
   * file/row-group granularity —
   *
   *  - `plain`: range-partitioned + sorted by `ts_us` (the natural ingest
@@ -86,14 +86,10 @@ object ScaleZOrder {
     val nUsers = sys.env.getOrElse("SCALE_USERS", "50000").toLong
     val nFiles = sys.env.getOrElse("SCALE_ZORDER_FILES", "64").toInt
     val spark = Harness.session()
+    val rec = new Harness.Recorder(spark)
     val work = Harness.workDir("graft_scale_zorder")
-    val tsRange = 2592000000000L // 30 days of microseconds
-    spark.range(nEvents)
-      .select(
-        col("id").as("event_id"),
-        pmod(xxhash64(col("id"), lit(2)), lit(nUsers)).as("user_id"),
-        pmod(xxhash64(col("id"), lit(3)), lit(tsRange)).as("ts_us"),
-        (pmod(xxhash64(col("id"), lit(5)), lit(1000)) / lit(100.0)).as("value"))
+    val tsRange = ScaleCorpus.TsRangeUs
+    ScaleCorpus.events(spark, nEvents, nUsers).select("event_id", "user_id", "ts_us", "value")
       .write.mode("overwrite").parquet(s"$work/events.parquet")
     val events = spark.read.parquet(s"$work/events.parquet")
     val total = events.count()
@@ -101,19 +97,19 @@ object ScaleZOrder {
     // small row groups => many pruning units at harness scale (see scaladoc)
     val rgBytes = (1 << 20).toString
 
-    val tPlain = System.nanoTime()
-    events.repartitionByRange(nFiles, col("ts_us"))
-      .sortWithinPartitions("ts_us")
-      .write.mode("overwrite").option("parquet.block.size", rgBytes)
-      .parquet(s"$work/plain")
-    val plainWriteSec = (System.nanoTime() - tPlain) / 1e9
+    val plainWrite = rec.phase("plain_write", k = 1) {
+      events.repartitionByRange(nFiles, col("ts_us"))
+        .sortWithinPartitions("ts_us")
+        .write.mode("overwrite").option("parquet.block.size", rgBytes)
+        .parquet(s"$work/plain")
+    }
 
-    val tZ = System.nanoTime()
-    // session-conf entries are copied into the write job's Hadoop conf, so
-    // this caps clusteredWrite's internal writer the same way .option does
-    spark.conf.set("parquet.block.size", rgBytes)
-    graft.ops.ZOrder.clusteredWrite(events, Seq("user_id", "ts_us"), s"$work/zorder", nFiles)
-    val zWriteSec = (System.nanoTime() - tZ) / 1e9
+    val zWrite = rec.phase("zorder_write", k = 1) {
+      // session-conf entries are copied into the write job's Hadoop conf, so
+      // this caps clusteredWrite's internal writer the same way .option does
+      spark.conf.set("parquet.block.size", rgBytes)
+      graft.ops.ZOrder.clusteredWrite(events, Seq("user_id", "ts_us"), s"$work/zorder", nFiles)
+    }
 
     // probe: 1% of users x 10% of the time range ~ 0.1% of rows
     val userLo = 1000L; val userHi = userLo + nUsers / 100 - 1
@@ -123,54 +119,36 @@ object ScaleZOrder {
       col("ts_us").between(tsLo, tsHi)
     val probeUser = col("user_id").between(userLo, userHi)
 
-    def timedScan(path: String, pred: org.apache.spark.sql.Column): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val r = spark.read.parquet(path).filter(pred)
-        .agg(count(lit(1)).as("n"), sum("value")).collect()(0)
-      ((System.nanoTime() - t0) / 1e9, r.getLong(0))
-    }
-
-    // interleaved two-sample min per layout: same defense as Bench's
-    // min-of-interleaved against a one-off burst landing on one layout
-    var plainSec = Double.MaxValue; var zSec = Double.MaxValue
-    var plainUserSec = Double.MaxValue; var zUserSec = Double.MaxValue
-    var plainRows = -1L; var zRows = -1L
-    var plainUserRows = -1L; var zUserRows = -1L
-    for (_ <- 1 to 2) {
-      val (ps, pr) = timedScan(s"$work/plain", probe2d)
-      plainSec = math.min(plainSec, ps); plainRows = pr
-      val (zs, zr) = timedScan(s"$work/zorder", probe2d)
-      zSec = math.min(zSec, zs); zRows = zr
-      val (pus, pur) = timedScan(s"$work/plain", probeUser)
-      plainUserSec = math.min(plainUserSec, pus); plainUserRows = pur
-      val (zus, zur) = timedScan(s"$work/zorder", probeUser)
-      zUserSec = math.min(zUserSec, zus); zUserRows = zur
-    }
-    require(plainRows == zRows, s"layouts disagree: plain $plainRows vs zorder $zRows rows")
-    require(plainUserRows == zUserRows,
-      s"layouts disagree on user probe: $plainUserRows vs $zUserRows rows")
-
-    val (pRgs, pRgsSkip, pRows, pRowsSkip, pRowsSkipUser, pFiles, pFilesSkip) =
-      auditFooters(s"$work/plain", userLo, userHi, tsLo, tsHi)
-    val (zRgs, zRgsSkip, zRowsT, zRowsSkip, zRowsSkipUser, zFiles, zFilesSkip) =
-      auditFooters(s"$work/zorder", userLo, userHi, tsLo, tsHi)
-    require(pRows == total && zRowsT == total, s"footer row counts diverge: $pRows/$zRowsT vs $total")
+    // min-of-K per layout and probe: the filtered scan's result rows
+    def scan(tag: String, layout: String, pred: org.apache.spark.sql.Column) =
+      rec.phase(tag)(spark.read.parquet(s"$work/$layout").filter(pred)
+        .agg(count(lit(1)).as("n"), sum("value")).collect()(0).getLong(0))
+    val plain = scan("plain_scan", "plain", probe2d)
+    val z = scan("zorder_scan", "zorder", probe2d)
+    val plainUser = scan("plain_scan_user", "plain", probeUser)
+    val zUser = scan("zorder_scan_user", "zorder", probeUser)
+    require(plain.value == z.value, s"layouts disagree: plain ${plain.value} vs zorder ${z.value} rows")
+    require(plainUser.value == zUser.value,
+      s"layouts disagree on user probe: ${plainUser.value} vs ${zUser.value} rows")
 
     def frac(num: Long, den: Long): Double =
       if (den == 0) 0.0 else num.toDouble / den.toDouble
+    // per layout: the footer audit's skip fractions plus its timed phases
+    def layout(dir: String, scanSec: Double, userSec: Double, writeSec: Double) = {
+      val (rgs, rgsSkip, rows, rowsSkip, rowsSkipUser, files, filesSkip) =
+        auditFooters(s"$work/$dir", userLo, userHi, tsLo, tsHi)
+      require(rows == total, s"$dir footer row count $rows diverges from $total")
+      Harness.obj("rgs" -> rgs, "rg_skip_frac" -> frac(rgsSkip, rgs),
+        "row_skip_frac" -> frac(rowsSkip, rows), "row_skip_frac_user" -> frac(rowsSkipUser, rows),
+        "files_skipped" -> filesSkip, "n_files" -> files,
+        "scan_sec" -> scanSec, "scan_user_sec" -> userSec, "write_sec" -> writeSec)
+    }
 
-    println(s"""{"metric":"scale_zorder","events":$total,"files":$nFiles,""" +
-      s""""probe_rows":$plainRows,"probe_rows_user":$plainUserRows,""" +
-      s""""plain":{"rgs":$pRgs,"rg_skip_frac":${frac(pRgsSkip, pRgs)},""" +
-      s""""row_skip_frac":${frac(pRowsSkip, pRows)},""" +
-      s""""row_skip_frac_user":${frac(pRowsSkipUser, pRows)},""" +
-      s""""files_skipped":$pFilesSkip,"n_files":$pFiles,""" +
-      s""""scan_sec":$plainSec,"scan_user_sec":$plainUserSec,"write_sec":$plainWriteSec},""" +
-      s""""zorder":{"rgs":$zRgs,"rg_skip_frac":${frac(zRgsSkip, zRgs)},""" +
-      s""""row_skip_frac":${frac(zRowsSkip, zRowsT)},""" +
-      s""""row_skip_frac_user":${frac(zRowsSkipUser, zRowsT)},""" +
-      s""""files_skipped":$zFilesSkip,"n_files":$zFiles,""" +
-      s""""scan_sec":$zSec,"scan_user_sec":$zUserSec,"write_sec":$zWriteSec}}""")
+    Harness.emit("scale_zorder", "events" -> total, "files" -> nFiles,
+      "probe_rows" -> plain.value, "probe_rows_user" -> plainUser.value,
+      "plain" -> layout("plain", plain.sec, plainUser.sec, plainWrite.sec),
+      "zorder" -> layout("zorder", z.sec, zUser.sec, zWrite.sec),
+      "loads" -> rec.loads)
     spark.stop()
   }
 }

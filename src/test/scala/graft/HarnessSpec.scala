@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,5 +60,90 @@ class HarnessSpec extends AnyFunSuite {
       assert(json.startsWith("{") && json.endsWith("}"), f)
     }
     TempCleanup.deleteNow(out)
+  }
+
+  test("record renderer: nested objects, escapes and scalar types parse back in order") {
+    val rec = Harness.obj("metric" -> "scale_x", "n" -> 12345678901L, "i" -> 7, "sec" -> 1.5,
+      "ok" -> true, "name" -> "a\"b\\c\td", "loads" -> Harness.obj("z" -> 0.25, "a" -> -1.0),
+      "points" -> Seq(Harness.obj("copies" -> 2), Harness.obj("copies" -> 3)))
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Harness.json(rec))
+    assert(node.fieldNames().asScala.toSeq === rec.keys.toSeq)
+    assert(node.get("n").isLong && node.get("n").asLong === 12345678901L)
+    assert(node.get("i").asInt === 7)
+    assert(node.get("sec").isDouble && node.get("sec").asDouble === 1.5)
+    assert(node.get("ok").isBoolean && node.get("ok").asBoolean)
+    assert(node.get("name").asText === "a\"b\\c\td")
+    assert(node.get("loads").fieldNames().asScala.toSeq === Seq("z", "a"))
+    assert(node.get("loads").get("a").asDouble === -1.0)
+    assert(node.get("points").get(1).get("copies").asInt === 3)
+    intercept[IllegalArgumentException](Harness.json(Harness.obj("bad" -> None)))
+  }
+
+  /** Run `f` with the load gate's wait budget spent, so a busy test box
+    * measures at once instead of napping. */
+  private def ungated[A](f: => A): A = {
+    val budget = Harness.waitBudgetMs.getAndSet(0L)
+    try f finally Harness.waitBudgetMs.set(budget)
+  }
+
+  test("a phase whose samples disagree fails fast and names its tag") {
+    ungated {
+      val rec = new Harness.Recorder(spark)
+      var n = 0L
+      val e = intercept[IllegalArgumentException] {
+        rec.phase("drifting_phase", k = 2, same = identity) { n += 1; n }
+      }
+      assert(e.getMessage.contains("drifting_phase"))
+      // agreeing samples pass, and the record holds the fastest under the tag
+      val ok = rec.phase("steady_phase", k = 2, same = identity)(Seq(1, 2, 3).toDF("x").count())
+      assert(ok.value === 3L && ok.tasks >= 0)
+      assert(rec.stragglers.keySet === Set("steady_phase"))
+      assert(rec.loads("steady_phase") === ok.load && rec.sec("steady_phase") === ok.sec)
+    }
+  }
+
+  test("a phase releases its losing samples' localCheckpoint blocks and keeps the winner's") {
+    ungated {
+      val rec = new Harness.Recorder(spark)
+      def blocks(df: org.apache.spark.sql.DataFrame): Int = {
+        val rdd = df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+        spark.sparkContext.getRDDStorageInfo.filter(_.id == rdd.id).map(_.numCachedPartitions).sum
+      }
+      val outs = scala.collection.mutable.Buffer[org.apache.spark.sql.DataFrame]()
+      val won = rec.phase("checkpointed", k = 2) {
+        val out = spark.range(1000).toDF().repartition(4).localCheckpoint(true)
+        outs += out
+        out
+      }
+      val lost = outs.filterNot(_ eq won.value)
+      assert(outs.size === 2 && lost.size === 1)
+      assert(blocks(won.value) === 4 && won.value.count() === 1000L)
+      // the release is asynchronous: poll for it
+      val deadline = System.currentTimeMillis() + 10000L
+      while (blocks(lost.head) > 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(blocks(lost.head) === 0)
+    }
+  }
+
+  test("a one-sample phase runs its body exactly once") {
+    ungated {
+      val rec = new Harness.Recorder(spark)
+      var runs = 0
+      val s = rec.phase("once", k = 1) { runs += 1; runs }
+      assert(runs === 1 && s.value === 1)
+      assert(rec.secs.keySet === Set("once"))
+    }
+  }
+
+  test("steal share: stolen ticks over all ticks between two /proc/stat cpu lines") {
+    // user nice system idle iowait irq softirq steal guest guest_nice
+    val before = "cpu  1000 0 500 8000 100 0 50 350 0 0"
+    val after = "cpu  1600 0 700 8800 100 0 100 750 40 0"
+    // delta: 600 + 200 + 800 + 50 + 400 = 2050 ticks, 400 of them stolen;
+    // guest time is already inside user and is not counted twice
+    assert(Harness.stealShare(before, after) === 400.0 / 2050.0)
+    assert(Harness.stealShare(before, before) === 0.0)
+    assert(Harness.stealShare("", after) === -1.0)
+    assert(Harness.stealShare(before, "cpu0 1 2 3") === -1.0)
   }
 }
