@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graft.GraftSql
 
 /** Named-dataset catalog: object id <-> parquet dataset under a base directory.
   *
@@ -58,70 +59,40 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  // cached in-session tables (RDB-only outputs, reference etl.py:390-394 S4);
-  // the cache itself lives in SharedState, so any session can consume them
+  // lazy in-session tables (the RDB-only storage configuration, reference
+  // etl.py:390-394 S4), held as their plans: see [[write]] and [[readAny]]
   private val tables = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  // catalog-scoped global-temp-view name for an in-db table: global temp
-  // views live in one JVM-wide namespace, so two Catalogs registering the
-  // same id must not collide
-  private val uid = java.lang.Long.toHexString(System.nanoTime())
-  private def gtvName(id: String) = s"graft_${uid}_$id"
-
-  /** Keep a result as a cached table instead of a parquet dataset. Also
-    * publishes it as a catalog-scoped GLOBAL temp view: a consumer session
-    * resolving the view gets the same analyzed plan, so the shared
-    * CacheManager substitutes the materialized InMemoryRelation — accurate
-    * size stats (broadcast decisions keep working) and columnar reads, where
-    * an RDD rebind would deserialize row-by-row and report unknown size. */
-  def registerTable(df: DataFrame, id: String): Unit = {
-    df.persist()
-    df.count() // materialize eagerly so downstream nodes read the cache
-    df.createOrReplaceGlobalTempView(gtvName(id))
-    tables.put(id, df)
-    ()
-  }
-
-  /** LAZY in-db hand-off (the [[markInDb]] write path): the plan is
-    * published but NOT materialized — downstream nodes compose over it, so a
-    * whole DAG of intermediates fuses into its terminal actions, each one
-    * Catalyst-optimized end-to-end. Deliberately no persist(): measured at
-    * sf0.1 on the 4-node as-of DAG, pure composition beat the parquet
-    * hand-off 1.42s vs 2.30s while BOTH cached variants (eager count, lazy
-    * persist-marked) were SLOWER than parquet (3.3-4.1s) — building the
-    * columnar cache costs more than recomputing cheap intermediates. The
-    * trade is per-node failure attribution: a runtime error surfaces at the
-    * terminal node (analysis errors still surface at their own node). */
-  private def registerLazyTable(df: DataFrame, id: String): Unit = {
-    df.createOrReplaceGlobalTempView(gtvName(id))
-    tables.put(id, df)
-    ()
-  }
 
   def read(id: String): DataFrame = readAny(id, spark)
 
-  /** Read an id for an arbitrary session (in-db table or parquet dataset).
-    * A known schema (recorded at write time, or inferred once by the first
+  /** Read an id for an arbitrary session (in-session table or parquet
+    * dataset). Another session reads an in-session table through its
+    * analyzed plan, so nothing is published in a shared namespace. A known
+    * schema (recorded at write time, or inferred once by the first
     * schemaless read) skips the per-read footer-inference job. */
   def readAny(id: String, s: SparkSession): DataFrame =
     Option(tables.get(id)) match {
       case Some(df) if df.sparkSession eq s => df
-      case Some(_) => s.table(s"global_temp.`${gtvName(id)}`") // same plan -> cache hit
+      case Some(df) => GraftSql.ofRows(s, df.queryExecution.analyzed)
+      case None => readParquet(s, id, path(id))
+    }
+
+  /** Read the parquet dataset at `p` with the schema memoized under
+    * `memoId`, else infer it once and memoize it. */
+  private def readParquet(s: SparkSession, memoId: String, p: String): DataFrame =
+    Option(schemas.get(memoId)) match {
+      case Some(sch) => s.read.schema(sch).parquet(p)
       case None =>
-        Option(schemas.get(id)) match {
-          case Some(sch) => s.read.schema(sch).parquet(path(id))
-          case None =>
-            val df = s.read.parquet(path(id))
-            schemas.put(id, df.schema)
-            df
-        }
+        val df = s.read.parquet(p)
+        schemas.put(memoId, df.schema)
+        df
     }
 
   // ids whose write() lands as a lazy in-session plan instead of parquet —
   // DAG-internal intermediates that exist only to hand rows to the next
   // node pay a parquet encode + commit + footer-read + job-boundary floor
-  // per hop for no durability benefit. See [[EtlGroup.execute]]'s
-  // inDbIntermediates and [[registerLazyTable]] for the measured trade.
+  // per hop for no durability benefit. See [[EtlGroup.lazyIds]] for which
+  // ids an EtlGroup marks, and [[write]] for the measured trade.
   // REFCOUNTED, not a flat set: two concurrent EtlGroup runs over one
   // catalog may mark overlapping ids, and the first run's finally-unmark
   // must not flip the second run's remaining intermediate writes back to
@@ -176,7 +147,12 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
       // after a crash is covered by the [[markInDb]] durability contract —
       // marked ids are DAG-recomputable intermediates by definition, so
       // "recompute from the DAG" is the recovery path, not the stale rows.
-      registerLazyTable(df, id)
+      // Deliberately no persist(): measured at sf0.1 on the 4-node as-of
+      // DAG, pure composition beat the parquet hand-off 1.42s vs 2.30s while
+      // both cached variants (eager count, lazy persist-marked) were SLOWER
+      // than parquet (3.3-4.1s) — building the columnar cache costs more
+      // than recomputing cheap intermediates.
+      tables.put(id, df)
       val stale = new Path(path(id))
       val sf = fs(stale)
       if (sf.exists(stale)) sf.delete(stale, true)
@@ -205,16 +181,13 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
 
   /** Every overwrite path must retire the id's previous identity first: the
     * external link (writes never target linked inputs), the schema memo (the
-    * new dataset may have a new schema), and a cached in-session table (which
-    * readAny would otherwise serve forever, shadowing the new files). */
-  private def retire(id: String): Unit = {
-    external.remove(id)
+    * new dataset may have a new schema), and an in-session table (which
+    * readAny would otherwise serve forever, shadowing the new files).
+    * Returns whether the id was linked. */
+  private def retire(id: String): Boolean = {
     schemas.remove(id)
-    Option(tables.remove(id)).foreach { df =>
-      spark.catalog.dropGlobalTempView(gtvName(id))
-      df.unpersist()
-    }
-    ()
+    tables.remove(id)
+    external.remove(id) != null
   }
 
   /** Hive-style partitioned overwrite: one directory per partition value, so
@@ -268,15 +241,10 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     }
 
   def drop(id: String): Unit = {
-    Option(tables.remove(id)).foreach { df =>
-      spark.catalog.dropGlobalTempView(gtvName(id))
-      df.unpersist()
-    }
-    schemas.remove(id)
     // a LINKED id is unlinked, never deleted: the catalog must not destroy
     // data it didn't write (path(id) would resolve to the external location,
     // so the delete below would remove someone else's input files)
-    if (external.remove(id) != null) return
+    if (retire(id)) return
     val p = new Path(path(id))
     val f = fs(p)
     if (f.exists(p)) f.delete(p, true)
@@ -297,8 +265,8 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     val dst = new Path(path(toId))
     Option(tables.get(fromId)) match {
       case Some(df) =>
-        // an in-session source (InDb output / registerTable) has no files to
-        // copy — write the cached rows, the same rule as snapshot()
+        // an in-session source (a marked id's lazy plan) has no files to
+        // copy — write its rows, the same rule as snapshot()
         df.write.mode(SaveMode.Overwrite).parquet(dst.toString)
         schemas.put(toId, asReadSchema(df.schema).asInstanceOf[org.apache.spark.sql.types.StructType])
       case None =>
@@ -459,15 +427,15 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     * CACHE-side filesystem (the cache always lives under baseDir) — a
     * linked id whose source files sit on a different store must not pick
     * the publication protocol from the source's capabilities. An id held
-    * as an in-session table (InDb outputs) has no source files to copy;
-    * its snapshot writes the cached rows into the same temp-then-publish
+    * as an in-session table (a marked id) has no source files to copy;
+    * its snapshot writes the table's rows into the same temp-then-publish
     * discipline. */
   def snapshot(id: String): Unit = {
     val cid = cacheId(id)
     val dst = new Path(s"$baseDir/$cid.parquet")
     val cf = fs(dst)
     // materialize the snapshot bytes into `target` (unpublished), whatever
-    // the source kind: cached in-session rows or a durable file copy
+    // the source kind: in-session rows or a durable file copy
     def materialize(target: Path): Unit = Option(tables.get(id)) match {
       case Some(df) => df.write.mode(SaveMode.Overwrite).parquet(target.toString)
       case None =>
@@ -518,13 +486,7 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
   }
 
   def loadCache(id: String): DataFrame =
-    Option(schemas.get(cacheId(id))) match {
-      case Some(sch) => spark.read.schema(sch).parquet(cachePath(id).toString)
-      case None =>
-        val df = spark.read.parquet(cachePath(id).toString)
-        schemas.put(cacheId(id), df.schema)
-        df
-    }
+    readParquet(spark, cacheId(id), cachePath(id).toString)
 
   // --- small JSON objects (configs / model artifacts; reference storage.py:77-112) ---
   def jsonPath(id: String): String = s"$baseDir/$id.json"

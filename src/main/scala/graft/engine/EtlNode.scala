@@ -50,18 +50,16 @@ trait EtlNode {
   * As in the reference (etl.py:345-349), output ids and SQL keys must agree —
   * enforced here by construction (`outputIds = sqls.keys`).
   *
-  * `materialize = InDb` keeps outputs as *cached session tables* instead of
-  * parquet — the reference's RDB-only storage configuration (`CREATE TABLE {id}
-  * AS`, etl.py:390-394, S4), for short-lived intermediates that never need to
-  * hit the filesystem. Such outputs live in [[Catalog.registerTable]]'s table
-  * registry rather than on disk.
+  * The reference's RDB-only storage configuration (`CREATE TABLE {id} AS`,
+  * etl.py:390-394, S4) is a property of the id, not of the node: an output id
+  * marked with [[Catalog.markInDb]] (as [[EtlGroup.execute]] does for its
+  * composed intermediates) lands as a lazy in-session table, never on disk.
   */
 class SqlNode(
     override val name: String,
     val inputIds: Seq[String],
     sqls: Map[String, String],
-    override val doCache: Boolean = false,
-    val materialize: SqlNode.Materialize = SqlNode.ToFs)
+    override val doCache: Boolean = false)
   extends EtlNode {
 
   val outputIds: Seq[String] = sqls.keys.toSeq.sorted
@@ -87,11 +85,7 @@ class SqlNode(
     outputIds.foreach { out =>
       val sql = sqls(out)
       try {
-        val df = s.sql(s"SELECT * FROM ($sql)")
-        materialize match {
-          case SqlNode.ToFs => cat.write(df, out)
-          case SqlNode.InDb => cat.registerTable(df, out)
-        }
+        cat.write(s.sql(s"SELECT * FROM ($sql)"), out)
       } catch {
         case e: Throwable =>
           // error context = node name + SQL text (reference etl.py:218-232)
@@ -104,12 +98,6 @@ class SqlNode(
 object SqlNode {
   /** Node-session broadcast ceiling in bytes: 64 MB (the reason is in `run`). */
   private[graft] val broadcastThreshold: String = (64L << 20).toString
-
-  sealed trait Materialize
-  /** Outputs written as parquet datasets (the default FS-output config). */
-  case object ToFs extends Materialize
-  /** Outputs kept as cached in-session tables (RDB-only config, S4). */
-  case object InDb extends Materialize
 }
 
 /** Whole-table transform node: `Seq[DataFrame] => Seq[DataFrame]`.

@@ -522,7 +522,7 @@ object LlmQueries {
             .select(col("doc_id"), md5(col("text").cast("binary")).as("digest")))
         })
       // plain parquet hand-offs: composing the single-consumer rw_mapping
-      // into the anti-join (inDbSingleConsumer) lost 8 of 10 alternating
+      // into the anti-join (composeIntermediates) lost 8 of 10 alternating
       // pairs at sf0.1 on 4 cores (median 6.57 s vs 6.29 s). rw_corpus must
       // be durable anyway — the cache snapshot below reads it.
       new EtlGroup("dedup_rewrite", Seq(mapping, rewrite))

@@ -306,7 +306,8 @@ object MiscQueries {
             |  coalesce(a.n_windows, CAST(0 AS BIGINT)) AS n_windows
             |FROM dag_clicks_enriched e
             |LEFT JOIN dag_click_attribution a ON e.event_id = a.event_id""".stripMargin))
-      // DAG-internal hand-offs compose lazily (inDbIntermediates): with ONE
+      // DAG-internal hand-offs compose lazily (composeIntermediates): every
+      // intermediate feeds the one result write, so all four compose. With ONE
       // terminal action the whole 4-node DAG collapses into a single
       // Catalyst-optimized query — the same shape the DuckDB oracle runs its
       // CTE formulation as. Measured A/B at sf0.1: 1.42s composed vs 2.30s
@@ -314,7 +315,7 @@ object MiscQueries {
       // SLOWER than parquet (3.3-4.1s) — materialization, not parquet,
       // was the floor.
       new EtlGroup("asof_dag", Seq(extract, enrich, attrib, result))
-        .execute(cat, maxActiveRun = 2, inDbIntermediates = true)
+        .execute(cat, maxActiveRun = 2, composeIntermediates = true)
       cat.read("asof_dag_result")
     }),
 

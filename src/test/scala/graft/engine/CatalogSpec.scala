@@ -134,8 +134,10 @@ class CatalogSpec extends AnyFunSuite {
 
   test("write over a registered table evicts the cached table, not serves it stale") {
     val cat = freshCat()
-    cat.registerTable(Seq((1, "old")).toDF("k", "v"), "m4")
+    cat.markInDb(Seq("m4"))
+    cat.write(Seq((1, "old")).toDF("k", "v"), "m4")
     assert(TestSpark.rows(cat.read("m4")) === Set(Seq(1, "old")))
+    cat.unmarkInDb(Seq("m4"))
     cat.write(Seq((2, "new")).toDF("k", "v"), "m4")
     assert(TestSpark.rows(cat.read("m4")) === Set(Seq(2, "new")))
   }
@@ -211,7 +213,8 @@ class CatalogSpec extends AnyFunSuite {
 
   test("snapshot of an in-session (InDb) table writes the cached rows") {
     val cat = freshCat()
-    cat.registerTable(Seq((1, "a"), (2, "b")).toDF("k", "v"), "mem")
+    cat.markInDb(Seq("mem"))
+    cat.write(Seq((1, "a"), (2, "b")).toDF("k", "v"), "mem")
     cat.snapshot("mem")
     assert(cat.existsCache("mem"))
     assert(TestSpark.rows(cat.loadCache("mem")) === Set(Seq(1, "a"), Seq(2, "b")))
@@ -224,12 +227,13 @@ class CatalogSpec extends AnyFunSuite {
     System.setProperty("graft.fs.atomicRename", "false")
     try {
       val cat = freshCat()
-      cat.registerTable(Seq(1, 2).toDF("v"), "mem")
+      cat.markInDb(Seq("mem"))
+      cat.write(Seq(1, 2).toDF("v"), "mem")
       cat.snapshot("mem")
       val ptr = new java.io.File(s"${cat.baseDir}/mem_cache.ptr")
       assert(ptr.exists(), "in-session snapshot must pointer-publish on a non-atomic store")
       val ver1 = scala.io.Source.fromFile(ptr).mkString.trim
-      cat.registerTable(Seq(9).toDF("v"), "mem")
+      cat.write(Seq(9).toDF("v"), "mem")
       cat.snapshot("mem")
       assert(TestSpark.rows(cat.loadCache("mem")) === Set(Seq(9)))
       assert(!new java.io.File(ver1.stripPrefix("file:")).exists(),

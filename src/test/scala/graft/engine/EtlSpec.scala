@@ -148,7 +148,7 @@ class EtlSpec extends AnyFunSuite {
     assert(!cat.exists("mid"))
   }
 
-  test("inDbIntermediates: DAG-internal hand-offs never hit the filesystem, results identical") {
+  test("composeIntermediates: DAG-internal hand-offs never hit the filesystem, results identical") {
     val cat = freshCat()
     cat.write(Seq((1, "a"), (2, "b"), (3, "a")).toDF("k", "tag"), "src")
     val g = new EtlGroup("g_indb", Seq(
@@ -156,7 +156,7 @@ class EtlSpec extends AnyFunSuite {
       new DfNode("n2", Seq("mid1"), Seq("mid2"),
         fn = { case Seq(m) => Seq(m.filter(col("tag") === "a")) }),
       new SqlNode("n3", Seq("mid2"), Map("fin_indb" -> "SELECT k FROM mid2"))))
-    g.execute(cat, maxActiveRun = 2, inDbIntermediates = true)
+    g.execute(cat, maxActiveRun = 2, composeIntermediates = true)
     assert(TestSpark.rows(cat.read("fin_indb")) === Set(Seq(3)))
     // intermediates exist as in-session tables, not as parquet datasets
     assert(cat.exists("mid1") && cat.exists("mid2"))
@@ -165,6 +165,11 @@ class EtlSpec extends AnyFunSuite {
     assert(!new java.io.File(s"${cat.baseDir}/mid2.parquet").exists())
     // the group output IS durable parquet
     assert(new java.io.File(s"${cat.baseDir}/fin_indb.parquet").exists())
+    // nothing is published JVM-wide: another session reads a composed
+    // intermediate through its plan, and no global temp view is left behind
+    assert(spark.catalog.listTables("global_temp").collect().forall(!_.name.startsWith("graft_")),
+      "a composed run must leave no global temp view")
+    assert(TestSpark.rows(cat.readAny("mid2", spark.newSession())) === Set(Seq(3, "a")))
     // the mark is per-RUN: after the group returns, a write of the same id
     // (this group re-run with the default flag, or any other producer) is
     // durable parquet again
@@ -195,11 +200,11 @@ class EtlSpec extends AnyFunSuite {
       new SqlNode("b3", Seq("mid"), Map("out_b" -> "SELECT k FROM mid"))))
     val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val bThread = new Thread(() =>
-      try gB.execute(cat, maxActiveRun = 2, inDbIntermediates = true)
+      try gB.execute(cat, maxActiveRun = 2, composeIntermediates = true)
       catch { case t: Throwable => bErr.set(t) })
     bThread.start()
     assert(bStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    gA.execute(cat, maxActiveRun = 2, inDbIntermediates = true) // marks, runs, unmarks
+    gA.execute(cat, maxActiveRun = 2, composeIntermediates = true) // marks, runs, unmarks
     aFinished.countDown()
     bThread.join(120000)
     assert(!bThread.isAlive && bErr.get() == null, s"group B failed: ${bErr.get()}")
@@ -220,7 +225,7 @@ class EtlSpec extends AnyFunSuite {
       new SqlNode("n1", Seq("base"), Map("mid" -> "SELECT v FROM base")),
       new SqlNode("n2", Seq("mid"), Map("out_f" -> "SELECT no_such FROM mid"))))
     intercept[RuntimeException](
-      g.execute(cat, maxActiveRun = 2, inDbIntermediates = true))
+      g.execute(cat, maxActiveRun = 2, composeIntermediates = true))
     // the finally-unmark ran: the same catalog is durable for the next run
     assert(!cat.isInDb("mid"))
     cat.write(Seq(7).toDF("v"), "mid")
@@ -250,13 +255,46 @@ class EtlSpec extends AnyFunSuite {
     assert((1 to 6).forall(i => cat.exists(s"o$i")))
   }
 
+  test("an intermediate composes lazily iff exactly one materializing action reads it") {
+    def unit(id: String, in: Seq[String], out: Seq[String]): EtlNode = new EtlNode {
+      override val name = id
+      val inputIds = in
+      val outputIds = out
+      def run(c: Catalog): Unit = ()
+    }
+    def lazyIds(units: EtlNode*) = new EtlGroup("g", units).lazyIds(composeIntermediates = true).toSet
+    val chain = Seq(unit("a", Seq("src"), Seq("m1")), unit("b", Seq("m1"), Seq("m2")),
+      unit("c", Seq("m2"), Seq("fin")))
+    assert(lazyIds(chain: _*) === Set("m1", "m2"))
+    // the as-of DAG shape: two outputs, both readers of both, one result write
+    assert(lazyIds(
+      unit("extract", Seq("src"), Seq("clicks", "views")),
+      unit("enrich", Seq("clicks", "views"), Seq("enriched")),
+      unit("attrib", Seq("clicks", "views"), Seq("attribution")),
+      unit("result", Seq("enriched", "attribution"), Seq("fin"))) ===
+      Set("clicks", "views", "enriched", "attribution"))
+    // one id read by two actions: a durable write and a sink
+    assert(lazyIds(
+      unit("a", Seq("src"), Seq("m")), unit("b", Seq("m"), Seq("fin")),
+      unit("sink", Seq("m"), Seq.empty)) === Set.empty)
+    // one consumer writing two durable outputs runs two actions over its input
+    assert(lazyIds(
+      unit("a", Seq("src"), Seq("m")), unit("b", Seq("m"), Seq("fin1", "fin2"))) === Set.empty)
+    assert(new EtlGroup("off", chain).lazyIds(composeIntermediates = false).isEmpty)
+  }
+
+  test("execute rejects a non-positive maxActiveRun, naming the group and the value") {
+    val e = intercept[IllegalArgumentException](
+      new EtlGroup("g_cap0", Seq.empty).execute(freshCat(), maxActiveRun = 0))
+    assert(e.getMessage.contains("g_cap0") && e.getMessage.contains("got 0"))
+  }
+
   test("RDB-only SqlNode chain: outputs live as cached tables, never on disk (test_executor.py RDB config / S4)") {
     val cat = freshCat()
     cat.write(Seq(1, 2, 3).toDF("v"), "base")
-    val mid = new SqlNode("mid", Seq("base"), Map("doubled" -> "SELECT v * 2 AS v FROM base"),
-      materialize = SqlNode.InDb)
+    val mid = new SqlNode("mid", Seq("base"), Map("doubled" -> "SELECT v * 2 AS v FROM base"))
     val fin = new SqlNode("fin", Seq("doubled"), Map("final_out" -> "SELECT sum(v) AS s FROM doubled"))
-    new EtlGroup("rdb", Seq(mid, fin)).execute(cat, maxActiveRun = 1)
+    new EtlGroup("rdb", Seq(mid, fin)).execute(cat, maxActiveRun = 1, composeIntermediates = true)
     assert(cat.exists("doubled"))
     assert(!new java.io.File(cat.path("doubled")).exists()) // in-db only, no parquet
     assert(cat.read("final_out").as[Long].head() === 12L)

@@ -185,7 +185,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
       new DfNode("n2", Seq("mid_obj"), Seq("mid2_obj"),
         fn = { case Seq(m) => Seq(m.filter(org.apache.spark.sql.functions.col("tag") === "a")) }),
       new SqlNode("n3", Seq("mid2_obj"), Map("fin_obj" -> "SELECT k FROM mid2_obj"))))
-    g.execute(cat, maxActiveRun = 2, inDbIntermediates = true)
+    g.execute(cat, maxActiveRun = 2, composeIntermediates = true)
     assert(TestSpark.rows(cat.read("fin_obj")) === Set(Seq(3)))
     // intermediates never touched the store; the output is durable on it
     assert(!new java.io.File(localDir(cat), "mid_obj.parquet").exists())
@@ -202,7 +202,8 @@ class ObjectStoreFsSpec extends AnyFunSuite {
 
   test("in-session (InDb) snapshot follows the same rename-free pointer discipline") {
     val cat = freshObjCat()
-    cat.registerTable(Seq((1, "m")).toDF("k", "s"), "mem")
+    cat.markInDb(Seq("mem"))
+    cat.write(Seq((1, "m")).toDF("k", "s"), "mem")
     NonAtomicTestFs.renames.set(0)
     cat.snapshot("mem")
     // the cached-rows write goes through Spark's committer (which may rename
