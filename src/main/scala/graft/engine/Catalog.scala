@@ -28,7 +28,8 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
   // linked input's schema is immutable for the catalog's lifetime). Measured
   // on the 4-node as-of DAG at sf0.1: ~6 such jobs × 0.1-0.3s each. The map
   // is advisory: entries are dropped on link/drop, copied on copy/snapshot,
-  // and normalized to the all-nullable form a parquet read reports.
+  // and normalized to the all-nullable form a parquet read reports. An id is
+  // inferred once even under concurrent readers (see [[readParquet]]).
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
@@ -78,15 +79,12 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     }
 
   /** Read the parquet dataset at `p` with the schema memoized under
-    * `memoId`, else infer it once and memoize it. */
+    * `memoId`, else infer it once and memoize it. Concurrent first readers
+    * of one id (an EtlGroup's sibling nodes over a linked input) wait for
+    * the one inference in flight instead of each running its own footer
+    * job: on the flagship pipeline, 4 inferences instead of 16. */
   private def readParquet(s: SparkSession, memoId: String, p: String): DataFrame =
-    Option(schemas.get(memoId)) match {
-      case Some(sch) => s.read.schema(sch).parquet(p)
-      case None =>
-        val df = s.read.parquet(p)
-        schemas.put(memoId, df.schema)
-        df
-    }
+    s.read.schema(schemas.computeIfAbsent(memoId, _ => s.read.parquet(p).schema)).parquet(p)
 
   // ids whose write() lands as a lazy in-session plan instead of parquet —
   // DAG-internal intermediates that exist only to hand rows to the next
@@ -158,19 +156,25 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
       if (sf.exists(stale)) sf.delete(stale, true)
     }
     else {
-      // Statistics-gated static write (r19): a small intermediate (the
-      // planner's own estimate, free) is written with AQE off and a handful
+      // Statistics-gated static write (r19): a write that reads little (the
+      // planner's own leaf estimates, free) runs with AQE off and a handful
       // of shuffle partitions — an EtlGroup DAG hand-off otherwise pays
       // per-stage driver re-planning and a 32-wide final stage for a few MB
       // of rows, multiplied by every node in the DAG (q_metagraph_whole: 55
-      // jobs). Large writes (the flagship's extraction outputs) sail past
-      // the gate untouched — AQE keeps its skew/coalesce duties. Scoped
-      // ONLY for plans bound to a per-node private session (SqlNode/DfNode
-      // isolation): mutating the SHARED session's conf here would race
-      // sibling nodes that EtlGroup runs concurrently. Shared-session
-      // callers (query builders) wrap their own StaticScope when it pays.
+      // jobs). The gate reads input bytes, not the output estimate: a join's
+      // estimate is the product of its children's, so the flagship's 4-way
+      // link_ordered_material join over a few MB claimed far more than the
+      // gate, kept AQE, and AQE coalesced its DISTINCT to 2 partitions that
+      // every map-only hand-off after it inherited (2 tasks on 4 cores).
+      // Writes that really read past the gate, or read a leaf the planner
+      // cannot size (a relation over a bare RDD), keep AQE for its
+      // skew/coalesce duties. Scoped ONLY for plans bound to a per-node
+      // private session (SqlNode/DfNode isolation): mutating the SHARED
+      // session's conf here would race sibling nodes that EtlGroup runs
+      // concurrently. Shared-session callers (query builders) wrap their own
+      // StaticScope when it pays.
       if (df.sparkSession ne spark)
-        graft.ops.StaticScope.scoped(df, minParts = 4) {
+        graft.ops.StaticScope.scoped(df, minParts = 4, estimate = graft.ops.StaticScope.readBytes) {
           df.write.mode(SaveMode.Overwrite).parquet(path(id))
         }
       else df.write.mode(SaveMode.Overwrite).parquet(path(id))

@@ -44,10 +44,20 @@ object StaticScope {
   def inputBytes(input: DataFrame): BigInt =
     input.queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** Planner-estimated bytes a plan reads: the sum of its leaf relations'
+    * estimates, blind to what the operators above them claim (a join's
+    * estimate is the product of its children's sizes). A leaf the planner
+    * cannot size (a relation over a bare RDD) reports
+    * `spark.sql.defaultSizeInBytes`, which no gate passes; a checkpoint
+    * carries the estimate of the plan it checkpointed. */
+  def readBytes(plan: DataFrame): BigInt =
+    plan.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+
   /** Run `body` under static planning (AQE off, shuffle partitions sized to
     * the input) iff the input estimate is below the threshold; otherwise run
     * it untouched. `body` MUST materialize everything it returns — see the
-    * soundness rule above.
+    * soundness rule above. `estimate` sizes `input`: [[inputBytes]] by
+    * default, [[readBytes]] for a plan whose own estimate a join inflates.
     *
     * `minParts`: the partition floor. Default (0) floors at the executor
     * parallelism — right for CPU-bound per-row work (see BytesPerPartition).
@@ -55,9 +65,9 @@ object StaticScope {
     * merge) passes an explicit small floor instead: near-empty tasks buy it
     * nothing and every output part file is a downstream copy cost. */
   def scoped[T](input: DataFrame, thresholdBytes: Long = DefaultThresholdBytes,
-                minParts: Int = 0)
+                minParts: Int = 0, estimate: DataFrame => BigInt = inputBytes)
                (body: => T): T = {
-    val size = inputBytes(input)
+    val size = estimate(input)
     if (size >= thresholdBytes) body
     else {
       val spark = input.sparkSession

@@ -2,8 +2,13 @@ package graft.engine
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSql
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -330,6 +335,42 @@ class CatalogSpec extends AnyFunSuite {
       assert(!ptr.exists() && !young.exists() && !freshLegacy.exists(),
         "drop must GC all version directories including young ones")
     } finally System.clearProperty("graft.fs.atomicRename")
+  }
+
+  test("concurrent first reads of one linked id infer its schema once") {
+    val cat = freshCat()
+    val ext = s"${Files.createTempDirectory("graft_ext")}/linked.parquet"
+    spark.range(8).select(col("id"), lit("k").as("s")).write.parquet(ext)
+    cat.link("linked", ext)
+    val tag = s"infer-${System.nanoTime()}"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val reads = (1 to 4).map { _ =>
+        pool.submit(new Callable[StructType] {
+          def call(): StructType = {
+            spark.sparkContext.setLocalProperty("graft.test.tag", tag)
+            val s = spark.newSession()
+            go.await()
+            cat.readAny("linked", s).schema
+          }
+        })
+      }
+      go.countDown()
+      val schemas = reads.map(_.get(60, TimeUnit.SECONDS))
+      GraftSql.drainListenerBus(spark.sparkContext, 10000L)
+      assert(jobs.get() === 1, "four concurrent first readers must share one footer-inference job")
+      assert(schemas.distinct.size === 1)
+    } finally {
+      pool.shutdownNow()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("link reads an external dataset without copying; write stays internal") {

@@ -1,13 +1,17 @@
 package graft.engine
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.GraftSql
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.ops.StaticScope
 
 // top-level so spark.implicits can derive encoders (local case classes can't)
 case class TypedIn(id: Long, s: String)
@@ -253,6 +257,61 @@ class EtlSpec extends AnyFunSuite {
     new EtlGroup("cap", (1 to 6).map(probe)).execute(cat, maxActiveRun = 2)
     assert(maxSeen.get() <= 2)
     assert((1 to 6).forall(i => cat.exists(s"o$i")))
+  }
+
+  test("ready units run longest remaining chain first, equal ranks in declaration order") {
+    val cat = freshCat()
+    val ran = new ConcurrentLinkedQueue[String]()
+    def unit(id: String, in: Seq[String]): EtlNode = new EtlNode {
+      override val name = id
+      val inputIds = in
+      val outputIds = Seq(id)
+      def run(c: Catalog): Unit = {
+        ran.add(id)
+        c.write(spark.range(1).toDF("v"), id)
+      }
+    }
+    // three independent leaves declared before the head of a three-unit chain
+    val units = Seq(unit("leaf1", Nil), unit("leaf2", Nil), unit("leaf3", Nil),
+      unit("head", Nil), unit("mid", Seq("head")), unit("tail", Seq("mid")))
+    new EtlGroup("order", units).execute(cat, maxActiveRun = 1)
+    // the chain runs while it is the longest; its last unit ties the leaves
+    // (rank 1) and, declared after them, runs after them
+    assert(ran.toArray.toSeq === Seq("head", "mid", "leaf1", "leaf2", "leaf3", "tail"))
+  }
+
+  test("a node write gates static planning on the bytes it reads, not a join's product estimate") {
+    val cat = freshCat()
+    (1 to 4).foreach(i => cat.write((1 to 200).map(k => (k, k % 7)).toDF("k", s"v$i"), s"j$i"))
+    val fileBytes = (1 to 4).map(i => new java.io.File(cat.path(s"j$i")).listFiles().map(_.length).sum)
+    assert(fileBytes.forall(_ < 8192), s"inputs must be a few KB: $fileBytes")
+    // the link_ordered_material shape: a DISTINCT over a 4-way join
+    val sql = "SELECT DISTINCT j1.k, v1, v2, v3, v4 FROM j1 JOIN j2 ON j1.k = j2.k " +
+      "JOIN j3 ON j1.k = j3.k JOIN j4 ON j1.k = j4.k"
+    val joined = Seq("j2", "j3", "j4").foldLeft(cat.read("j1"))((l, id) => l.join(cat.read(id), "k"))
+      .select(col("k"), col("v1"), col("v2"), col("v3"), col("v4")).distinct()
+    assert(StaticScope.inputBytes(joined) > StaticScope.DefaultThresholdBytes,
+      "the join's own estimate must claim more than the gate")
+
+    val tag = s"gate-${System.nanoTime()}"
+    val aqe = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag)
+          aqe.add(String.valueOf(e.properties.getProperty("spark.sql.adaptive.enabled")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty("graft.test.tag", tag)
+    try new SqlNode("material", Seq("j1", "j2", "j3", "j4"), Map("material" -> sql)).execute(cat)
+    finally {
+      spark.sparkContext.setLocalProperty("graft.test.tag", null)
+      GraftSql.drainListenerBus(spark.sparkContext, 10000L)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(!aqe.isEmpty && aqe.toArray.forall(_ == "false"), s"the write must run with AQE off: $aqe")
+    val parts = new java.io.File(cat.path("material")).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(parts === 4, "a static write lands minParts part files")
+    assert(cat.read("material").count() === 200L)
   }
 
   test("an intermediate composes lazily iff exactly one materializing action reads it") {
