@@ -89,8 +89,8 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
   // ids whose write() lands as a lazy in-session plan instead of parquet —
   // DAG-internal intermediates that exist only to hand rows to the next
   // node pay a parquet encode + commit + footer-read + job-boundary floor
-  // per hop for no durability benefit. See [[EtlGroup.lazyIds]] for which
-  // ids an EtlGroup marks, and [[write]] for the measured trade.
+  // per hop for no durability benefit. Every EtlGroup run marks its
+  // [[EtlGroup.lazyIds]]; see [[write]] for the measured trade.
   // REFCOUNTED, not a flat set: two concurrent EtlGroup runs over one
   // catalog may mark overlapping ids, and the first run's finally-unmark
   // must not flip the second run's remaining intermediate writes back to
@@ -101,8 +101,8 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
   /** Route future [[write]]s of `ids` to lazy in-session plans (the
     * RDB-storage configuration applied per-id rather than per-node). Marked
     * ids stay readable through [[read]]/[[readAny]] like any other id.
-    * Callers that mark per-run (EtlGroup) must [[unmarkInDb]] when the run
-    * ends — the mark is catalog state, and leaving it set would silently
+    * [[EtlGroup.execute]] marks per run and must [[unmarkInDb]] when the
+    * run ends — the mark is catalog state, and leaving it set would silently
     * make every FUTURE write of the same id non-durable. Marks are
     * refcounted per id: concurrent runs marking the same id each hold an
     * independent mark, and the id reverts to durable only when the LAST
@@ -113,7 +113,7 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     * same id by an earlier run, and the lazy replacement only ever
     * materializes inside this session's terminal actions — so a crash
     * mid-run leaves the id with no files, by design (see [[write]]). */
-  def markInDb(ids: Seq[String]): Unit = {
+  private[engine] def markInDb(ids: Seq[String]): Unit = {
     ids.foreach(id => inDbIds.merge(id, 1, (a, b) => a + b))
     ()
   }
@@ -122,13 +122,13 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     * writes of it are durable parquet again only when no other marker
     * remains. Already-registered in-session tables stay readable until
     * overwritten. Unmarking an id that was never marked is a no-op. */
-  def unmarkInDb(ids: Seq[String]): Unit = {
+  private[engine] def unmarkInDb(ids: Seq[String]): Unit = {
     ids.foreach(id => inDbIds.computeIfPresent(id, (_, n) => if (n <= 1) null else n - 1))
     ()
   }
 
   /** True while at least one caller holds an in-db mark on `id`. */
-  def isInDb(id: String): Boolean = inDbIds.containsKey(id)
+  private[engine] def isInDb(id: String): Boolean = inDbIds.containsKey(id)
 
   /** Full overwrite per run — the reference has no updates (storage.py:151-155).
     * Always writes into the catalog's own namespace, never over a linked input. */

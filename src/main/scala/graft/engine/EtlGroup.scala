@@ -15,7 +15,9 @@ import scala.collection.mutable
   * scheduler already parallelizes across all executor cores, so the cap only
   * governs how many concurrent Spark jobs compete for the cluster. Ready units
   * run longest remaining chain first (see [[execute]]), so the chain that bounds
-  * the run's wall time never queues behind short side branches.
+  * the run's wall time never queues behind short side branches. An
+  * intermediate that one action reads is handed off as a lazy in-session
+  * plan, every other id as parquet (see [[lazyIds]]).
   *
   * `dropIntermediates` deletes datasets that are neither group inputs nor group
   * outputs after the run (reference `drop_internal_objs`, etl.py:288-314).
@@ -91,36 +93,39 @@ class EtlGroup(
     Ordering.by[EtlNode, (Int, Int)](u => (-rank(u), declared(u)))
   }
 
-  /** The intermediates [[execute]] hands off as lazy in-session plans when
-    * `composeIntermediates` is set (none otherwise): an intermediate composes
-    * iff exactly ONE materializing action reads it, so composing it into
-    * that action repeats no work across actions. An action is the write of
-    * a durable id, or a consumer with no outputs (a sink that runs its own
-    * action); a lazy id is no action itself — its actions are its readers'.
-    * Walking units in reverse topological order settles every consumer's
-    * outputs before the id it reads. So a chain, or a diamond funneling into
-    * one write, composes whole; an id read by two actions (a fan-out, or one
-    * consumer writing two durable outputs) stays materialize-once parquet.
+  /** The intermediates [[execute]] hands off as lazy in-session plans
+    * instead of parquet (the reference's RDB-only storage, etl.py:390-394,
+    * decided per id from the DAG): an intermediate composes iff exactly ONE
+    * materializing action reads it, so composing it into that action repeats
+    * no work across actions. An action is the write of a durable id, or a
+    * consumer with no outputs (a sink that runs its own action); a lazy id
+    * is no action itself — its actions are its readers'. Walking units in
+    * reverse topological order settles every consumer's outputs before the
+    * id it reads. So a chain, or a diamond funneling into one write,
+    * composes whole; an id read by two actions (a fan-out, or one consumer
+    * writing two durable outputs) stays materialize-once parquet.
     *
-    * Caveat: this counts actions, not plan references. One action that
-    * references a lazy id more than once (a self-join, or a multi-branch
-    * union such as [[graft.graph.Validate.linkIdValidators]]) recomputes the
-    * producer's subtree per reference. Results are unaffected; only the
-    * cost is. */
-  private[engine] def lazyIds(composeIntermediates: Boolean): Seq[String] =
-    if (!composeIntermediates) Seq.empty
-    else {
-      val intermediate = intermediateIds.toSet
-      // id -> the actions that read it (Left: a sink unit, Right: a write)
-      val actions = mutable.Map[String, Set[Either[EtlNode, String]]]()
-      def isLazy(id: String) = intermediate(id) && actions(id).size == 1
-      for (u <- topo.reverse; id <- u.outputIds)
-        actions(id) = consumers(id).flatMap { c =>
-          if (c.outputIds.isEmpty) Seq(Left(c))
-          else c.outputIds.flatMap(o => if (isLazy(o)) actions(o) else Seq(Right(o)))
-        }.toSet
-      intermediateIds.filter(isLazy)
-    }
+    * One action that references a lazy id more than once runs its producer
+    * once per reference. In the union of
+    * [[graft.graph.Validate.linkIdValidators]], Catalyst pushes each
+    * branch's anti-join below the producer's DISTINCT, so the branches
+    * differ and no exchange is reused (pinned in EtlSpec). Measured on the flagship at sf0.1 (4 cores, 6 pairs):
+    * composing `glink_has_license` adds about 0.6 s to `validate_link_ids`
+    * but removes a 1.3-2.0 s write, with fewer tasks and less executor time
+    * in every pair and group wall within noise, so references are not
+    * counted. */
+  private[engine] val lazyIds: Seq[String] = {
+    val intermediate = intermediateIds.toSet
+    // id -> the actions that read it (Left: a sink unit, Right: a write)
+    val actions = mutable.Map[String, Set[Either[EtlNode, String]]]()
+    def isLazy(id: String) = intermediate(id) && actions(id).size == 1
+    for (u <- topo.reverse; id <- u.outputIds)
+      actions(id) = consumers(id).flatMap { c =>
+        if (c.outputIds.isEmpty) Seq(Left(c))
+        else c.outputIds.flatMap(o => if (isLazy(o)) actions(o) else Seq(Right(o)))
+      }.toSet
+    intermediateIds.filter(isLazy)
+  }
 
   def run(cat: Catalog): Unit = execute(cat, maxActiveRun = 1)
 
@@ -133,25 +138,24 @@ class EtlGroup(
     * order started the heads of the two longest chains (er_resolution,
     * extract_link_ordered_material) about 2 s late.
     *
-    * `composeIntermediates = true` routes [[lazyIds]] through
-    * [[Catalog.markInDb]] for this run: those hand-offs become lazy
-    * in-session plans instead of parquet datasets, so each reading action
-    * runs as one Catalyst-optimized query across the old node boundaries.
-    * Group inputs and outputs are untouched — externally the group behaves
-    * identically. The trade is failure attribution: a runtime error surfaces
-    * at the reading node rather than the node that declared the failing
-    * transform (analysis errors still surface at their own node). Measured
-    * at sf0.1 on the 4-node as-of DAG, where every intermediate composes:
-    * 38% faster than parquet hand-offs. */
-  def execute(cat: Catalog, maxActiveRun: Int, composeIntermediates: Boolean = false): Unit = {
+    * Every run marks [[lazyIds]] through [[Catalog.markInDb]]: those
+    * hand-offs become lazy in-session plans instead of parquet datasets, so
+    * each reading action runs as one Catalyst-optimized query across the old
+    * node boundaries. Group inputs and outputs stay durable parquet —
+    * externally the group behaves identically. The trade is failure
+    * attribution: a runtime error surfaces at the reading node rather than
+    * the node that declared the failing transform (analysis errors still
+    * surface at their own node). Measured at sf0.1 on the 4-node as-of DAG,
+    * where every intermediate composes: 38% faster than parquet hand-offs.
+    * The flagship composes 9 of its 13 intermediates. */
+  def execute(cat: Catalog, maxActiveRun: Int): Unit = {
     require(maxActiveRun >= 1, s"EtlGroup '$name': maxActiveRun must be >= 1, got $maxActiveRun")
-    // marks are PER-RUN state: unmark on every exit path, else the next run
-    // of any group writing a colliding id on this catalog — including this
-    // group re-run without composition — silently loses durability
-    val marked = lazyIds(composeIntermediates)
-    cat.markInDb(marked)
+    // marks are PER-RUN state: unmark on every exit path, else the next
+    // write of a colliding id on this catalog by any other producer
+    // silently loses durability
+    cat.markInDb(lazyIds)
     try executeInner(cat, maxActiveRun)
-    finally cat.unmarkInDb(marked)
+    finally cat.unmarkInDb(lazyIds)
   }
 
   private def executeInner(cat: Catalog, maxActiveRun: Int): Unit = {

@@ -52,8 +52,8 @@ trait EtlNode {
   *
   * The reference's RDB-only storage configuration (`CREATE TABLE {id} AS`,
   * etl.py:390-394, S4) is a property of the id, not of the node: an output id
-  * marked with [[Catalog.markInDb]] (as [[EtlGroup.execute]] does for its
-  * composed intermediates) lands as a lazy in-session table, never on disk.
+  * that [[EtlGroup.execute]] marks (its [[EtlGroup.lazyIds]], always) lands
+  * as a lazy in-session table, never on disk.
   */
 class SqlNode(
     override val name: String,

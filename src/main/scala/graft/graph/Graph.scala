@@ -640,16 +640,6 @@ object Validate {
     link.join(node, link(idType) === node("node_id"), "left_anti").select(col(idType))
   }
 
-  /** Engine node asserting containment for one link×endpoint (no outputs). */
-  def linkIdValidator(linkId: String, nodeId: String, idType: String): EtlNode =
-    new DfNode(s"validate_${linkId}_${idType}_in_$nodeId",
-      inputIds = Seq(linkId, nodeId), outputIds = Seq.empty,
-      fn = { case Seq(link, node) =>
-        val bad = violations(link, node, idType).count()
-        require(bad == 0, s"$bad $idType values in '$linkId' missing from '$nodeId'")
-        Seq.empty
-      })
-
   /** ONE engine node asserting containment for MANY (link, node, idType)
     * checks in a single union'd aggregate action (r20, guide §1.2): separate
     * validator nodes paid one child session + one count() job each for

@@ -175,18 +175,11 @@ object GraphQueries {
       // critical path is the extraction->grouping->result chain, not the
       // wave count — kept because it matches the reference's concurrency
       // shape with no downside on 32 cores.
-      // MIXED hand-off policy (r20): the grouped node/link tables feed three
-      // terminal actions (CSV export, validators, result) and stay
-      // materialize-once PARQUET — composing them too would re-derive the
-      // extraction joins once per action (measured r19 A/B: 3.69s composed
-      // vs 3.61s parquet, and recompute-per-consumer is the wrong trade at
-      // 100 TB). The EXTRACTION outputs each feed exactly ONE grouping
-      // write, so those hand-offs compose lazily into their consumer
-      // (composeIntermediates derives exactly that set) — no recompute, and each
-      // extraction→grouping pair becomes one Catalyst query instead of a
-      // parquet write + footer + read per table.
+      // each extraction output feeds one grouping write and composes into it;
+      // the grouped tables feed three actions (CSV export, validators,
+      // result) and stay parquet (EtlGroup.lazyIds)
       new graft.engine.EtlGroup("metagraph_whole", nodes, dropIntermediates = false)
-        .execute(cat, maxActiveRun = 8, composeIntermediates = true)
+        .execute(cat, maxActiveRun = 8)
       cat.read("metagraph_result")
     }),
 

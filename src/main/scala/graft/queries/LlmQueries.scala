@@ -521,10 +521,8 @@ object LlmQueries {
           Seq(docs.join(losers, Seq("doc_id"), "left_anti")
             .select(col("doc_id"), md5(col("text").cast("binary")).as("digest")))
         })
-      // plain parquet hand-offs: composing the single-consumer rw_mapping
-      // into the anti-join (composeIntermediates) lost 8 of 10 alternating
-      // pairs at sf0.1 on 4 cores (median 6.57 s vs 6.29 s). rw_corpus must
-      // be durable anyway — the cache snapshot below reads it.
+      // rw_mapping composes into the anti-join (EtlGroup.lazyIds); rw_corpus
+      // is the group output, durable parquet that the snapshot below reads
       new EtlGroup("dedup_rewrite", Seq(mapping, rewrite))
         .execute(cat, maxActiveRun = 2)
       cat.snapshot("rw_corpus")

@@ -306,16 +306,10 @@ object MiscQueries {
             |  coalesce(a.n_windows, CAST(0 AS BIGINT)) AS n_windows
             |FROM dag_clicks_enriched e
             |LEFT JOIN dag_click_attribution a ON e.event_id = a.event_id""".stripMargin))
-      // DAG-internal hand-offs compose lazily (composeIntermediates): every
-      // intermediate feeds the one result write, so all four compose. With ONE
-      // terminal action the whole 4-node DAG collapses into a single
-      // Catalyst-optimized query — the same shape the DuckDB oracle runs its
-      // CTE formulation as. Measured A/B at sf0.1: 1.42s composed vs 2.30s
-      // parquet hand-off (-38%); eager per-edge caching variants measured
-      // SLOWER than parquet (3.3-4.1s) — materialization, not parquet,
-      // was the floor.
+      // every intermediate feeds the one result write, so the 4-node DAG
+      // composes into one Catalyst query, the shape of the oracle's CTEs
       new EtlGroup("asof_dag", Seq(extract, enrich, attrib, result))
-        .execute(cat, maxActiveRun = 2, composeIntermediates = true)
+        .execute(cat, maxActiveRun = 2)
       cat.read("asof_dag_result")
     }),
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.GraftSql
@@ -152,7 +152,7 @@ class EtlSpec extends AnyFunSuite {
     assert(!cat.exists("mid"))
   }
 
-  test("composeIntermediates: DAG-internal hand-offs never hit the filesystem, results identical") {
+  test("DAG-internal hand-offs never hit the filesystem and results stay identical") {
     val cat = freshCat()
     cat.write(Seq((1, "a"), (2, "b"), (3, "a")).toDF("k", "tag"), "src")
     val g = new EtlGroup("g_indb", Seq(
@@ -160,7 +160,7 @@ class EtlSpec extends AnyFunSuite {
       new DfNode("n2", Seq("mid1"), Seq("mid2"),
         fn = { case Seq(m) => Seq(m.filter(col("tag") === "a")) }),
       new SqlNode("n3", Seq("mid2"), Map("fin_indb" -> "SELECT k FROM mid2"))))
-    g.execute(cat, maxActiveRun = 2, composeIntermediates = true)
+    g.execute(cat, maxActiveRun = 2)
     assert(TestSpark.rows(cat.read("fin_indb")) === Set(Seq(3)))
     // intermediates exist as in-session tables, not as parquet datasets
     assert(cat.exists("mid1") && cat.exists("mid2"))
@@ -175,8 +175,7 @@ class EtlSpec extends AnyFunSuite {
       "a composed run must leave no global temp view")
     assert(TestSpark.rows(cat.readAny("mid2", spark.newSession())) === Set(Seq(3, "a")))
     // the mark is per-RUN: after the group returns, a write of the same id
-    // (this group re-run with the default flag, or any other producer) is
-    // durable parquet again
+    // by any other producer is durable parquet again
     cat.write(Seq((9, "z")).toDF("k", "tag"), "mid1")
     assert(new java.io.File(s"${cat.baseDir}/mid1.parquet").exists(),
       "inDb mark must not outlive the group run")
@@ -204,11 +203,11 @@ class EtlSpec extends AnyFunSuite {
       new SqlNode("b3", Seq("mid"), Map("out_b" -> "SELECT k FROM mid"))))
     val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val bThread = new Thread(() =>
-      try gB.execute(cat, maxActiveRun = 2, composeIntermediates = true)
+      try gB.execute(cat, maxActiveRun = 2)
       catch { case t: Throwable => bErr.set(t) })
     bThread.start()
     assert(bStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    gA.execute(cat, maxActiveRun = 2, composeIntermediates = true) // marks, runs, unmarks
+    gA.execute(cat, maxActiveRun = 2) // marks, runs, unmarks
     aFinished.countDown()
     bThread.join(120000)
     assert(!bThread.isAlive && bErr.get() == null, s"group B failed: ${bErr.get()}")
@@ -229,7 +228,7 @@ class EtlSpec extends AnyFunSuite {
       new SqlNode("n1", Seq("base"), Map("mid" -> "SELECT v FROM base")),
       new SqlNode("n2", Seq("mid"), Map("out_f" -> "SELECT no_such FROM mid"))))
     intercept[RuntimeException](
-      g.execute(cat, maxActiveRun = 2, composeIntermediates = true))
+      g.execute(cat, maxActiveRun = 2))
     // the finally-unmark ran: the same catalog is durable for the next run
     assert(!cat.isInDb("mid"))
     cat.write(Seq(7).toDF("v"), "mid")
@@ -321,7 +320,7 @@ class EtlSpec extends AnyFunSuite {
       val outputIds = out
       def run(c: Catalog): Unit = ()
     }
-    def lazyIds(units: EtlNode*) = new EtlGroup("g", units).lazyIds(composeIntermediates = true).toSet
+    def lazyIds(units: EtlNode*) = new EtlGroup("g", units).lazyIds.toSet
     val chain = Seq(unit("a", Seq("src"), Seq("m1")), unit("b", Seq("m1"), Seq("m2")),
       unit("c", Seq("m2"), Seq("fin")))
     assert(lazyIds(chain: _*) === Set("m1", "m2"))
@@ -339,7 +338,45 @@ class EtlSpec extends AnyFunSuite {
     // one consumer writing two durable outputs runs two actions over its input
     assert(lazyIds(
       unit("a", Seq("src"), Seq("m")), unit("b", Seq("m"), Seq("fin1", "fin2"))) === Set.empty)
-    assert(new EtlGroup("off", chain).lazyIds(composeIntermediates = false).isEmpty)
+  }
+
+  test("the flagship DAG composes every intermediate but the four that two actions read") {
+    val g = new EtlGroup("flagship", graft.Flagship.stages.flatMap(_._2))
+    assert(g.intermediateIds.size === 13)
+    val durable = Set("er_mapping", "gnode_customer", "gnode_product", "glink_ordered_material")
+    assert(g.lazyIds === g.intermediateIds.filterNot(durable))
+  }
+
+  test("a sink unioning two anti-joins over one composed id reads the producer's input once per branch") {
+    // the validate_link_ids shape: one union'd action checks both endpoints
+    // of a lazy link table, so the producer's plan appears in two branches.
+    // Catalyst pushes each branch's anti-join below the producer's DISTINCT,
+    // so the branches differ and no exchange of the producer is reused
+    val cat = freshCat()
+    val rawRows = 1000
+    cat.write((0 until rawRows).map(i => (i % 10, (i + 1) % 10)).toDF("from_id", "to_id"), "raw_links")
+    cat.write((0 until 10).toDF("node_id"), "nodes")
+    val links = new SqlNode("dedup_links", Seq("raw_links"),
+      Map("links" -> "SELECT DISTINCT from_id, to_id FROM raw_links"))
+    val check = graft.graph.Validate.linkIdValidators(
+      Seq(("links", "nodes", "from_id"), ("links", "nodes", "to_id")))
+    val g = new EtlGroup("g_union", Seq(links, check))
+    assert(g.lazyIds === Seq("links"))
+    val recordsRead = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead.toInt)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try g.execute(cat, maxActiveRun = 1)
+    finally {
+      GraftSql.drainListenerBus(spark.sparkContext, 10000L)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(!new java.io.File(cat.path("links")).exists())
+    // both branches scan raw_links; the 10 node ids are read once or twice
+    assert(recordsRead.get >= 2 * rawRows && recordsRead.get <= 2 * rawRows + 20,
+      s"records read: ${recordsRead.get}")
   }
 
   test("execute rejects a non-positive maxActiveRun, naming the group and the value") {
@@ -353,7 +390,7 @@ class EtlSpec extends AnyFunSuite {
     cat.write(Seq(1, 2, 3).toDF("v"), "base")
     val mid = new SqlNode("mid", Seq("base"), Map("doubled" -> "SELECT v * 2 AS v FROM base"))
     val fin = new SqlNode("fin", Seq("doubled"), Map("final_out" -> "SELECT sum(v) AS s FROM doubled"))
-    new EtlGroup("rdb", Seq(mid, fin)).execute(cat, maxActiveRun = 1, composeIntermediates = true)
+    new EtlGroup("rdb", Seq(mid, fin)).execute(cat, maxActiveRun = 1)
     assert(cat.exists("doubled"))
     assert(!new java.io.File(cat.path("doubled")).exists()) // in-db only, no parquet
     assert(cat.read("final_out").as[Long].head() === 12L)

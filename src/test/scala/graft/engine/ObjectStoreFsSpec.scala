@@ -185,7 +185,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
       new DfNode("n2", Seq("mid_obj"), Seq("mid2_obj"),
         fn = { case Seq(m) => Seq(m.filter(org.apache.spark.sql.functions.col("tag") === "a")) }),
       new SqlNode("n3", Seq("mid2_obj"), Map("fin_obj" -> "SELECT k FROM mid2_obj"))))
-    g.execute(cat, maxActiveRun = 2, composeIntermediates = true)
+    g.execute(cat, maxActiveRun = 2)
     assert(TestSpark.rows(cat.read("fin_obj")) === Set(Seq(3)))
     // intermediates never touched the store; the output is durable on it
     assert(!new java.io.File(localDir(cat), "mid_obj.parquet").exists())

@@ -7,6 +7,8 @@ compares: columns sorted by name, rows sorted, values compared exactly
 (floats to 1e-12 relative for reporting, but exact mismatches are flagged).
 
 Usage: python3 tools/check.py [sfdir] [--only q_name,...] [--bench-sql]
+
+graft.Verify runs on SPARK_GRAFT_CPUS cores when it is set, else on 8.
 """
 import sys, os, json, glob, subprocess
 
@@ -38,7 +40,8 @@ def run_verify(only=None):
     cmd = ["java"] + add_opens + [
         "-Xmx8g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", classpath(), "graft.Verify", SF, OUT]
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ)
+    env.setdefault("SPARK_GRAFT_CPUS", "8")
     if only is not None:
         env["GRAFT_VERIFY_ONLY"] = only
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
