@@ -1,71 +1,134 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: one JSON line with per-query wall times.
+/** Benchmark main: per-query wall times as one JSON line on stdout, and the
+  * full record in `BENCH_FULL_c{cpus}.json`.
   *
-  * Measurement discipline (accumulated round 1-8 verdict fixes):
-  *  - results are reduced with xxhash64 over ALL columns + a bit_xor, so every
-  *    projected expression is actually computed (a bare `.count()` lets Catalyst
-  *    prune unreferenced projections and would partially measure scans);
-  *  - one un-timed warm-up pass absorbs first-touch codegen / classloading /
-  *    parquet footer caching, so per-query numbers measure the query;
+  * Measurement discipline (each item a past postmortem):
+  *  - results are reduced by [[Harness.consume]] (xxhash64 over ALL columns
+  *    + bit_xor), so every projected expression is actually computed;
+  *  - one un-timed warm-up pass absorbs first-touch codegen, classloading
+  *    and parquet footer caching;
   *  - each query runs on a FRESH SparkSession (rounds 2-5: in-session decay
-  *    inflated heavy queries 10-25× in ways no isolated rerun reproduced);
-  *  - the two timed passes are INTERLEAVED suite-wide so a load burst hits at
-  *    most one sample per query (round 6), plus an adaptive third sample when
-  *    the two disagree by >1.5×;
-  *  - every timed sample is LOAD-GATED (round 7: sustained ambient load inflated
-  *    four records 5-36× — BOTH interleaved samples agreed under it, so
-  *    min-of-2 and the instability trigger were all blind): before starting
-  *    the timer, wait (bounded) until 1-min /proc/loadavg drops below
-  *    ~0.5× the worker thread count, and record the per-sample load in the
-  *    artifact so any still-inflated record is self-identifying in the JSON,
-  *    not just the driver log;
-  *  - the DuckDB oracle total for the same queries is measured right after
-  *    the Spark suite (tools/oracle_bench.py) and merged into the SAME JSON
-  *    line with the spark/oracle ratio, so the 2× gate is auditable from the
-  *    artifact alone;
-  *  - failures are recorded per query (negative sentinel + stderr), never
-  *    silently swallowed into a plausible wall time.
+  *    inflated heavy queries 10-25×);
+  *  - the two timed passes are INTERLEAVED suite-wide, so a load burst hits
+  *    at most one sample per query, plus a third sample where the two
+  *    disagree by >1.5× and a last one where the best sample ran loaded;
+  *  - every timed sample is LOAD-GATED ([[Harness.sample]]) and records the
+  *    load it started under, so an inflated sample identifies itself;
+  *  - the DuckDB oracle total for the same queries is merged into the same
+  *    record with the spark/oracle ratio, so the 2× gate is auditable;
+  *  - failures are recorded per query (-1 + stderr), never swallowed into a
+  *    plausible wall time.
   */
 object Bench {
 
-  /** BENCH_FULL narrowing-guard decision (pure, spec-pinned): the full record
-    * accepts a run only when it covers at least as many queries, the same
-    * SF dir AND the same core count as the record it would replace. Round-10
+  /** Full-record narrowing-guard decision (pure, spec-pinned): a core
+    * count's full record accepts a run only when it covers at least as many
+    * queries and the same SF dir as the record it would replace. Round-10
     * postmortem: a 1-query investigation run clobbered the 93-query record;
     * round-15 postmortem: a full-count sf0.001 verification run clobbered
-    * the sf0.1 record — query count alone doesn't identify the workload;
-    * round-20: an 8-core run replaced the 32-core record. An absent or
-    * unparsable prior record accepts anything (first write wins), and a
-    * prior without a `cpus` stamp accepts any core count. A deliberate SF
-    * move (or recovering from a wrong-SF first write, which would otherwise
-    * hold the record forever) is BENCH_ALLOW_SF_CHANGE=1 — the same explicit
-    * ratchet-override contract as scale_bench's SCALE_ALLOW_DOWNSIZE. */
+    * the sf0.1 record — query count alone doesn't identify the workload.
+    * An absent or unparsable prior record accepts anything (first write
+    * wins). A deliberate SF move (or recovering from a wrong-SF first write,
+    * which would otherwise hold the record forever) is
+    * BENCH_ALLOW_SF_CHANGE=1 — the same explicit ratchet-override contract
+    * as scale_bench's SCALE_ALLOW_DOWNSIZE. */
   private[graft] def fullRecordAccepts(prior: String, nQueries: Int, sfDir: String,
-                                       cpus: Int = Harness.cpus,
                                        allowSfChange: Boolean = sys.env.get("BENCH_ALLOW_SF_CHANGE").contains("1")): Boolean = {
     val priorN = """"n_queries":(\d+)""".r
       .findFirstMatchIn(prior).map(_.group(1).toInt).getOrElse(0)
     val priorSf = """"sf":"([^"]+)"""".r
       .findFirstMatchIn(prior).map(_.group(1)).getOrElse(sfDir)
-    val priorCpus = """"cpus":(\d+)""".r
-      .findFirstMatchIn(prior).map(_.group(1).toInt).getOrElse(cpus)
-    nQueries >= priorN && (sfDir == priorSf || allowSfChange) && cpus == priorCpus
+    nQueries >= priorN && (sfDir == priorSf || allowSfChange)
+  }
+
+  /** Where a run's full record goes (pure, spec-pinned): its own core
+    * count's `BENCH_FULL_c{cpus}.json` when [[fullRecordAccepts]] takes the
+    * run over that file's content (`prior` reads a path, "" when absent),
+    * else `BENCH_PARTIAL.json`. One record per core count: round 20's
+    * 8-core run replaced the 32-core record. */
+  private[graft] def recordPath(cpus: Int, nQueries: Int, sfDir: String, prior: String => String): String = {
+    val full = s"BENCH_FULL_c$cpus.json"
+    if (fullRecordAccepts(prior(full), nQueries, sfDir)) full else "BENCH_PARTIAL.json"
   }
 
   /** The conditions a run was taken under, for the full record only:
     * cores, git HEAD, Spark and JVM versions. */
-  private def conditions(cpus: Int): String = {
+  private def conditions(cpus: Int): Seq[(String, Any)] = {
     val head =
       try {
         val p = new ProcessBuilder("git", "rev-parse", "HEAD").redirectErrorStream(true).start()
         val out = scala.io.Source.fromInputStream(p.getInputStream).mkString.trim
         if (p.waitFor() == 0) out else "unknown"
       } catch { case _: Throwable => "unknown" }
-    s""""cpus":$cpus,"git":"$head","spark":"${org.apache.spark.SPARK_VERSION}",""" +
-      s""""jvm":"${System.getProperty("java.version")}","""
+    Seq("cpus" -> cpus, "git" -> head, "spark" -> org.apache.spark.SPARK_VERSION,
+      "jvm" -> System.getProperty("java.version"))
+  }
+
+  /** One run's two renderings (pure, spec-pinned): the full record, which
+    * [[recordPath]] persists, and the compact stdout line. `best` holds each
+    * query's (sec, load) of its fastest sample in query order (sec -1 when
+    * every sample failed), `samples` every (sec, load) taken, newest first,
+    * `jobsOf` the (jobs, stages) and `stealOf` the stolen CPU share of each
+    * best sample, and `oracle` the DuckDB total and its own JSON line.
+    *
+    * The driver's artifact keeps only the LAST ~2000 chars of stdout (sbt
+    * appends its own lines after ours, so a whole line never parses), so
+    * the printed line carries only the compact summary, ending with the
+    * totals, ratio and failure count; the bulky per-sample history, the
+    * oracle's line and the per-query jobs/ratios objects live in the full
+    * record. */
+  private[graft] def render(sfDir: String, loadGate: Double, conditions: Seq[(String, Any)],
+                            best: Seq[(String, (Double, Double))],
+                            samples: collection.Map[String, List[(Double, Double)]],
+                            jobsOf: collection.Map[String, (Int, Int)],
+                            stealOf: collection.Map[String, Double],
+                            oracle: Option[(Double, String)]): (String, String) = {
+    def r3(d: Double): Double = if (d < 0) d else math.round(d * 1000.0) / 1000.0
+    def r2(d: Double): Double = if (d < 0) d else math.round(d * 100.0) / 100.0
+    def byName[V](m: collection.Map[String, V])(f: V => Any) =
+      Harness.obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> f(v) }: _*)
+    val measured = best.collect { case (k, (v, _)) if v >= 0 => (k, v) }
+    val total = measured.map(_._2).sum
+    // per-query oracle seconds, parsed back out of the oracle line's own
+    // "queries" object (every query name is q_-prefixed, so the regex
+    // cannot match the line's other fields)
+    val oracleQ: Map[String, Double] = oracle.map { case (_, oJson) =>
+      """"(q_[A-Za-z0-9_]+)":(-?[0-9.eE+]+)""".r.findAllMatchIn(oJson)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }.getOrElse(Map.empty)
+    val triples = measured.collect {
+      case (k, v) if oracleQ.get(k).exists(_ > 0) => (k, v, oracleQ(k), v / oracleQ(k))
+    }
+    // rank only pairs where BOTH engines do non-trivial work: a 0.5s Spark
+    // constant over a sub-millisecond DuckDB microquery is a 500x "ratio"
+    // that says nothing about scale behavior — `ratios` still carries every
+    // query for auditing those constants; `worst_jobs` is the floor
+    // attribution of the worst ratios ([n_jobs, n_stages] of the best sample)
+    val worst = triples.filter { case (_, s, o, _) => o >= 0.05 && s >= 0.25 }.sortBy(-_._4).take(8)
+    val head = Seq("metric" -> "total", "value" -> r3(total), "unit" -> "sec", "sf" -> sfDir,
+      "load_gate" -> loadGate)
+    val summary = Seq(
+      "queries" -> Harness.obj(best.map { case (k, (v, l)) => k -> Seq(r3(v), r2(l)) }: _*),
+      "slowest" -> Harness.obj(measured.sortBy(-_._2).take(8).map { case (k, v) => k -> r3(v) }: _*),
+      "worst_ratio" -> Harness.obj(worst.map { case (k, _, _, r) => k -> r2(r) }: _*),
+      "worst_jobs" -> Harness.obj(worst.flatMap { case (k, _, _, _) =>
+        jobsOf.get(k).map { case (j, st) => k -> Seq(j, st) } }: _*),
+      "spark_total_sec" -> r3(total),
+      "oracle_total_sec" -> oracle.fold[Any](None) { case (o, _) => r3(o) },
+      "ratio" -> oracle.fold[Any](None) { case (o, _) => r3(if (o > 0) total / o else -1.0) },
+      "failed" -> (best.size - measured.size), "n_queries" -> best.size)
+    val bulky = Seq("samples" -> byName(samples)(_.reverse.map { case (s, l) => Seq(r3(s), r2(l)) })) ++
+      oracle.map { case (_, oJson) => "oracle" -> Harness.Raw(oJson) } ++
+      Seq("jobs" -> byName(jobsOf) { case (j, st) => Seq(j, st) }, "steal" -> byName(stealOf)(r3),
+        "ratios" -> Harness.obj(triples.map { case (k, s, o, r) => k -> Seq(r3(s), r3(o), r2(r)) }: _*))
+    (Harness.json(Harness.obj(head ++ conditions ++ bulky ++ summary: _*)),
+      Harness.json(Harness.obj(head ++ summary: _*)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -104,127 +167,28 @@ object Bench {
       restart()
     }
 
-    // best = (sec, load of the sample that produced it); samples = every
-    // (sec, load) pair taken, newest first — all of it lands in the JSON
+    // what `render` reads, filled by `measure`
     val best = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     queries.foreach { case (name, _) => best(name) = (-1.0, -1.0) }
     val samples = scala.collection.mutable.Map[String, List[(Double, Double)]]().withDefaultValue(Nil)
-    // (jobs, stages) submitted during each query's BEST sample — the floor
-    // attribution (round-15 advice): a 13-16× ratio over a sub-second query
-    // is per-job scheduling floor, not a plan defect, and the job count says
-    // so without anyone re-reading the plan
     val jobsOf = scala.collection.mutable.Map[String, (Int, Int)]()
-    // stolen CPU share of each query's best sample (see Harness.stealShare)
     val stealOf = scala.collection.mutable.Map[String, Double]()
 
-    // The driver's artifact keeps only the LAST ~2000 chars of stdout (the
-    // full line has never survived: sbt appends its own lines after ours, so
-    // the driver's JSON parse fails every round and the truncated tail is
-    // what gets graded). r20 (round-19 verdict item): the PRINTED line no
-    // longer embeds the bulky raw data at all — the full per-sample history,
-    // the oracle's own line, and the per-query jobs/ratios objects live in
-    // BENCH_FULL.json (same repo artifact as before, nothing dropped), and
-    // stdout carries only the compact summary — per-query [sec, load] pairs,
-    // the slowest queries, totals, the spark/oracle ratio, and the failure
-    // count — so as much of the line as possible survives the tail capture
-    // and a compact line can parse whole. Field order within the printed
-    // line still puts the summary LAST (the tail keeps the end). This is a
-    // measurement-artifact fix only: the timed methodology, the queries, and
-    // every recorded number are unchanged (see OPTIMIZATION_r20.md).
+    // prints the compact line and persists the full record: the stdout
+    // copy is tail-truncated in the driver's round artifact, the file is
+    // not, and tools/bench_table.py renders the README table from it
     def emit(oracle: Option[(Double, String)]): Unit = {
-      def r3(d: Double): Double = if (d < 0) d else math.round(d * 1000.0) / 1000.0
-      def r2(d: Double): Double = if (d < 0) d else math.round(d * 100.0) / 100.0
-      val qs = best.map { case (k, (v, l)) => "\"" + k + "\":[" + r3(v) + "," + r2(l) + "]" }
-        .mkString("{", ",", "}")
-      val ss = samples.toSeq.sortBy(_._1).map { case (k, xs) =>
-        "\"" + k + "\":" + xs.reverse.map { case (s, l) => s"[${r3(s)},${r2(l)}]" }.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val slowest = best.toSeq.collect { case (k, (v, _)) if v >= 0 => (k, v) }
-        .sortBy(-_._2).take(8)
-        .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-      val failed = best.valuesIterator.count(_._1 < 0)
-      val total = best.valuesIterator.map(_._1).filter(_ >= 0).sum
-      val oracleRaw = oracle.map { case (_, oJson) => s""""oracle":$oJson,""" }.getOrElse("")
-      // per-query oracle seconds, parsed back out of the oracle line's own
-      // "queries" object (every query name is q_-prefixed, so the regex
-      // cannot match the line's other fields)
-      val oracleQ: Map[String, Double] = oracle.map { case (_, oJson) =>
-        """"(q_[A-Za-z0-9_]+)":(-?[0-9.eE+]+)""".r.findAllMatchIn(oJson)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-      // per-query [spark, oracle, ratio] triples (bulky zone), and the 8
-      // worst ratios compact enough to survive the tail truncation — a
-      // suite-level 0.97 can hide a 10× outlier; these make it self-identify
-      val triples = best.toSeq.collect {
-        case (k, (v, _)) if v >= 0 && oracleQ.get(k).exists(_ > 0) =>
-          (k, v, oracleQ(k), v / oracleQ(k))
-      }
-      val ratiosJson = triples
-        .map { case (k, s, o, r) => "\"" + k + s"""\":[${r3(s)},${r3(o)},${r2(r)}]""" }
-        .mkString("{", ",", "}")
-      // rank only pairs where BOTH engines do non-trivial work: a 0.5s Spark
-      // constant over a sub-millisecond DuckDB microquery is a 500x "ratio"
-      // that says nothing about scale behavior — the full ratios object above
-      // still carries every query for auditing those constants
-      val worstTriples = triples.filter { case (_, s, o, _) => o >= 0.05 && s >= 0.25 }
-        .sortBy(-_._4).take(8)
-      val worstRatio = worstTriples
-        .map { case (k, _, _, r) => "\"" + k + "\":" + r2(r) }.mkString("{", ",", "}")
-      // floor attribution for the worst ratios, compact enough for the tail:
-      // [n_jobs, n_stages] of the best sample — a big ratio with a two-digit
-      // job count is materialization/scheduling floor, not a plan defect
-      val worstJobs = worstTriples.flatMap { case (k, _, _, _) =>
-        jobsOf.get(k).map { case (j, st) => "\"" + k + s"""\":[$j,$st]""" }
-      }.mkString("{", ",", "}")
-      // the complete per-query (jobs, stages) map rides in the bulky zone
-      // (preserved whole in BENCH_FULL.json)
-      val jobsJson = jobsOf.toSeq.sortBy(_._1)
-        .map { case (k, (j, st)) => "\"" + k + s"""\":[$j,$st]""" }.mkString("{", ",", "}")
-      val stealJson = Harness.json(Harness.obj(stealOf.toSeq.sortBy(_._1).map { case (k, v) => k -> r3(v) }: _*))
-      val summary = oracle match {
-        case Some((oTotal, _)) =>
-          val ratio = if (oTotal > 0) total / oTotal else -1.0
-          s""""spark_total_sec":${r3(total)},"oracle_total_sec":${r3(oTotal)},"ratio":${r3(ratio)}"""
-        case None =>
-          s""""spark_total_sec":${r3(total)},"oracle_total_sec":null,"ratio":null"""
-      }
-      // full line (everything, as every round before) → BENCH_FULL.json;
-      // compact line (summary only) → stdout for the driver's tail capture
-      val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""load_gate":$loadGate,${conditions(cpus)}"samples":$ss,$oracleRaw"jobs":$jobsJson,"steal":$stealJson,"ratios":$ratiosJson,""" +
-        s""""queries":$qs,"slowest":$slowest,"worst_ratio":$worstRatio,"worst_jobs":$worstJobs,""" +
-        s"""$summary,"failed":$failed,"n_queries":${best.size}}"""
-      val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""load_gate":$loadGate,"queries":$qs,"slowest":$slowest,""" +
-        s""""worst_ratio":$worstRatio,"worst_jobs":$worstJobs,""" +
-        s"""$summary,"failed":$failed,"n_queries":${best.size}}"""
+      val (full, compact) = render(sfDir, loadGate, conditions(cpus), best.toSeq, samples,
+        jobsOf, stealOf, oracle)
       println(compact)
-      // The driver's round artifact preserves only the stdout TAIL, which
-      // truncates the bulky sections above — persist the complete line as a
-      // repo file so per-query triples stay auditable (and diffable) without
-      // re-running anything. tools/bench_table.py renders the README table
-      // from this file. Narrowing guard (round-10 postmortem: a 1-query
-      // investigation run clobbered the 93-query record): BENCH_FULL.json
-      // only accepts runs covering at least as many queries as it already
-      // holds; subset runs land in BENCH_PARTIAL.json instead.
       try {
-        val full = java.nio.file.Paths.get("BENCH_FULL.json")
-        val prior =
-          if (java.nio.file.Files.exists(full))
-            new String(java.nio.file.Files.readAllBytes(full),
-              java.nio.charset.StandardCharsets.UTF_8)
-          else ""
-        val target =
-          if (fullRecordAccepts(prior, best.size, sfDir)) full
-          else {
-            System.err.println(s"[bench] run covers ${best.size} queries at $sfDir vs " +
-              "a larger or different-SF existing record; writing BENCH_PARTIAL.json " +
-              "(BENCH_FULL.json untouched; set BENCH_ALLOW_SF_CHANGE=1 to accept a " +
-              "deliberate SF move)")
-            java.nio.file.Paths.get("BENCH_PARTIAL.json")
-          }
-        java.nio.file.Files.write(target,
-          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val target = recordPath(cpus, best.size, sfDir, p =>
+          if (Files.exists(Paths.get(p))) new String(Files.readAllBytes(Paths.get(p)), UTF_8) else "")
+        if (target == "BENCH_PARTIAL.json")
+          System.err.println(s"[bench] run covers ${best.size} queries at $sfDir vs a larger or " +
+            s"different-SF BENCH_FULL_c$cpus.json; writing BENCH_PARTIAL.json (set " +
+            "BENCH_ALLOW_SF_CHANGE=1 to accept a deliberate SF move)")
+        Files.write(Paths.get(target), (full + "\n").getBytes(UTF_8))
         ()
       } catch {
         case e: Throwable => System.err.println(s"[bench] bench artifact write failed: ${e.getMessage}")
@@ -279,17 +243,13 @@ object Bench {
           unstable.map(_._1).mkString(", "))
         unstable.foreach { case (name, fn) => measure("pass3", name, fn) }
       }
-      // Load-flagged final pass: min-of-2 + the instability trigger are both
-      // blind to SUSTAINED ambient load (every sample agrees at the inflated
-      // value, and the gate only blocks above ~0.5x cores — a co-tenant
-      // burning a quarter of the box sails under it yet inflated
-      // q_dedup_minhash 6x in one observed run). Any query whose BEST sample
-      // was taken above the clean-load threshold gets one more gated sample
-      // at the end of the run, when the box has had the longest chance to
-      // drain; min() keeps whichever is faster, and the recorded load tells
-      // the reader which regime won.
-      val loadFlag = sys.env.get("SPARK_GRAFT_LOAD_FLAG").map(_.toDouble)
-        .getOrElse(math.max(2.0, 0.1 * cpus))
+      // Load-flagged final pass: min-of-2 and the instability trigger are
+      // blind to SUSTAINED ambient load below the gate (a co-tenant burning
+      // a quarter of the box inflated q_dedup_minhash 6x in one run). Any
+      // query whose BEST sample started above max(2, 0.1 × cpus) load gets
+      // one more gated sample at the end of the run; min() keeps the faster,
+      // and the recorded load tells the reader which regime won.
+      val loadFlag = math.max(2.0, 0.1 * cpus)
       val loaded = queries.filter { case (name, _) =>
         val (sec, load) = best(name); sec >= 0 && load > loadFlag
       }
@@ -311,52 +271,39 @@ object Bench {
     }
   }
 
-  /** Time the DuckDB oracle suite for the same sf dir (driver-side python +
-    * duckdb; see tools/oracle_bench.py) and return (total_sec, full JSON
-    * line). Skipped quietly when the tool or its runtime is unavailable —
-    * the artifact then carries oracle_total_sec: null rather than a guess. */
+  /** Time the DuckDB oracle suite over the `measured` queries of the same
+    * sf dir (tools/oracle_bench.py) and return (total_sec, its JSON line).
+    * None when the tool, its runtime or any measurement is missing: the
+    * record then carries oracle_total_sec: null rather than a guess. */
   private def runOracleBench(sfDir: String, cpus: Int,
                              measured: Seq[String]): Option[(Double, String)] =
     try {
       val script = new java.io.File("tools/oracle_bench.py")
-      if (!script.exists()) {
-        System.err.println("[bench] tools/oracle_bench.py not found; skipping oracle total")
+      if (!script.exists() || measured.isEmpty) {
+        System.err.println("[bench] no tools/oracle_bench.py or no successful measurement; skipping oracle total")
         None
-      } else if (measured.isEmpty) {
-        System.err.println("[bench] no successful measurements; skipping oracle total")
-        None
-      } else runOracleScript(script, sfDir, cpus, measured)
+      } else {
+        System.err.println("[bench] timing DuckDB oracle suite for the ratio denominator…")
+        // always fresh, so the oracle never runs a stale statement set (the
+        // script's own fallback dump costs a full Verify run)
+        Harness.dumpOracleSql(new java.io.File("/tmp/graft_oracle_bench"))
+        val pb = new ProcessBuilder("python3", script.getPath, sfDir, cpus.toString)
+        pb.environment().put("SPARK_GRAFT_ONLY", measured.mkString(","))
+        // stderr flows straight to ours: buffering it behind the stdout read
+        // would deadlock once the child fills the pipe with diagnostics
+        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+        val proc = pb.start()
+        val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+        val code = proc.waitFor()
+        val parsed = out.linesIterator.filter(_.startsWith("{\"metric\":\"oracle_total\"")).toSeq.lastOption
+          .filter(_ => code == 0)
+          .flatMap(l => """"value":([0-9.eE+-]+)""".r.findFirstMatchIn(l).map(m => (m.group(1).toDouble, l)))
+        if (parsed.isEmpty) System.err.println(s"[bench] oracle bench exited $code with no parseable total")
+        parsed
+      }
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] oracle bench unavailable: ${e.getMessage}")
         None
     }
-
-  private def runOracleScript(script: java.io.File, sfDir: String, cpus: Int,
-                              measured: Seq[String]): Option[(Double, String)] = {
-      System.err.println("[bench] timing DuckDB oracle suite for the ratio denominator…")
-      // always fresh, so the oracle never runs a stale statement set (the
-      // script's own fallback dump costs a full Verify run)
-      Harness.dumpOracleSql(new java.io.File("/tmp/graft_oracle_bench"))
-      val pb = new ProcessBuilder("python3", script.getPath, sfDir, cpus.toString)
-      // scope the oracle run to the queries Spark actually measured
-      pb.environment().put("SPARK_GRAFT_ONLY", measured.mkString(","))
-      // stderr flows straight to ours: buffering it behind the stdout read
-      // would deadlock once the child fills the pipe with diagnostics
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
-      val code = proc.waitFor()
-      if (code != 0) {
-        System.err.println(s"[bench] oracle bench exited $code")
-        None
-      } else {
-        val line = out.linesIterator.filter(_.startsWith("{\"metric\":\"oracle_total\"")).toSeq.lastOption
-        val parsed = line.flatMap { l =>
-          """"value":([0-9.eE+-]+)""".r.findFirstMatchIn(l).map(m => (m.group(1).toDouble, l))
-        }
-        if (parsed.isEmpty) System.err.println("[bench] oracle bench produced no parseable total")
-        parsed
-      }
-  }
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSql
 
 /** The measurement core every main shares (Bench, Verify, Smoke, Explain,
-  * Probe, the `Scale*` harnesses) and the test session: one session factory,
-  * one result reduction, one load gate, one task/job ledger, one timed
-  * sample, one phase recorder, one JSON renderer and one oracle-SQL dump —
+  * the `Scale*` harnesses) and the test session: one session factory, one
+  * result reduction, one load gate, one task/job ledger, one timed sample,
+  * one phase recorder, one JSON renderer and one oracle-SQL dump —
   * so plan dumps, scale records and bench samples are all taken under the
   * conditions the bench measures.
   */
@@ -162,6 +162,17 @@ object Harness {
     def close(): Unit = spark.sparkContext.removeSparkListener(this)
   }
 
+  /** Wall time outside every job: `wallMs` minus the union of the `jobs`'
+    * spans, so concurrent jobs (an EtlGroup's DAG nodes) count once. A job
+    * that has not ended covers nothing. */
+  def driverGapMs(wallMs: Long, jobs: Seq[Job]): Long = {
+    val spans = jobs.filter(j => j.endMs >= j.startMs).map(j => (j.startMs, j.endMs)).sortBy(_._1)
+    val (covered, _) = spans.foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
+      if (e <= reach) (sum, reach) else (sum + e - math.max(s, reach), e)
+    }
+    wallMs - covered
+  }
+
   /** The aggregate `cpu` line of `/proc/stat`; "" when unreadable. */
   private def cpuLine(): String =
     try {
@@ -282,14 +293,20 @@ object Harness {
   /** An insertion-ordered JSON object for [[json]]. */
   def obj(fields: (String, Any)*): VectorMap[String, Any] = VectorMap(fields: _*)
 
+  /** Already-rendered JSON text that [[json]] embeds as it is. */
+  final case class Raw(text: String)
+
   /** JSON text of nested maps (insertion order kept) and sequences of Long,
-    * Int, Double, Boolean and String. */
+    * Int, Double, Boolean and String; `None` is `null` and a [[Raw]] is its
+    * own text. */
   def json(v: Any): String = v match {
     case m: scala.collection.Map[_, _] =>
       m.map { case (k, x) => jsonString(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
     case xs: Iterable[_] => xs.map(json).mkString("[", ",", "]")
     case s: String => jsonString(s)
     case x @ (_: Long | _: Int | _: Double | _: Boolean) => x.toString
+    case None => "null"
+    case Raw(text) => text
     case x => throw new IllegalArgumentException(s"json: unsupported value $x")
   }
 

@@ -33,9 +33,9 @@ object ScaleCorpus {
 
   /** A power-law random graph of `edges` draws over `nodes` ids
     * (`floor(N·u^2.5)` endpoints, u uniform, self-loops dropped): node 0
-    * collects ~0.3% of all endpoint draws, the hub skew [[ScaleGraph]] and
-    * `Probe ccskew` stress. Written to `dir`/edges.parquet and re-read like a
-    * real input table. */
+    * collects ~0.3% of all endpoint draws, the hub skew [[ScaleGraph]]'s
+    * `cc_dist` phase stresses. Written to `dir`/edges.parquet and re-read
+    * like a real input table. */
   def powerLawEdges(spark: SparkSession, edges: Long, nodes: Long, dir: String): DataFrame = {
     spark.range(edges).select(
         floor(pow(rand(7), 2.5) * nodes).cast("long").as("src"),

@@ -290,14 +290,13 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     * [[snapshot]]'s copy-then-rename publication relies on. HDFS and local
     * FS do; object stores (s3a, gs, abfs, …) emulate rename as
     * copy-object-per-key + delete, so a concurrent reader can observe a
-    * half-renamed dataset. Overridable via sys prop `graft.fs.atomicRename`
-    * (for tests and for schemes this list misjudges). */
-  protected def atomicRename(f: FileSystem): Boolean =
-    sys.props.get("graft.fs.atomicRename").map(_.toBoolean).getOrElse {
-      val scheme = Option(f.getScheme).getOrElse("file").toLowerCase
-      !Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss",
-        "cos", "cosn", "swift", "oci").contains(scheme)
-    }
+    * half-renamed dataset. A subclass overrides it for tests and for
+    * schemes this list misjudges. */
+  protected def atomicRename(f: FileSystem): Boolean = {
+    val scheme = Option(f.getScheme).getOrElse("file").toLowerCase
+    !Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss",
+      "cos", "cosn", "swift", "oci").contains(scheme)
+  }
 
   private def cachePtr(id: String) = new Path(s"$baseDir/${cacheId(id)}.ptr")
 
@@ -347,8 +346,8 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     * `graceMs` follows the call site's intent: [[drop]] is explicit
     * destruction of the id (grace 0 — no version may outlive it), but the
     * legacy-pointer cleanup on [[snapshot]]'s rename path keeps the normal
-    * grace window — during a protocol migration (a stale
-    * `graft.fs.atomicRename` override, a rolling config change) a CONCURRENT
+    * grace window — during a protocol migration (an [[atomicRename]]
+    * override, a rolling config change) a CONCURRENT
     * pointer-mode snapshot may still be materializing into a fresh version
     * directory, and deleting that mid-write would let its later PUT publish
     * a dangling target. */
@@ -382,10 +381,8 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     * between materialize and the pointer PUT (or from a lost concurrent
     * publish race). The grace window protects a CONCURRENT snapshot still
     * materializing into its own fresh directory: deleting that mid-write
-    * would let its later pointer PUT publish a dangling target. Default
-    * 15 min (sys prop `graft.fs.snapshotGcGraceMs`) — far beyond any
-    * single snapshot copy, so steady-state orphans are bounded to one
-    * grace window's worth. */
+    * would let its later pointer PUT publish a dangling target. Snapshots
+    * pass [[SnapshotGcGraceMs]]. */
   private def gcVersions(f: FileSystem, cid: String, keep: Option[Path], graceMs: Long): Unit = {
     val base = new Path(baseDir)
     if (!f.exists(base)) return
@@ -410,8 +407,9 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
     ()
   }
 
-  private def snapshotGcGraceMs: Long =
-    sys.props.get("graft.fs.snapshotGcGraceMs").map(_.toLong).getOrElse(15L * 60 * 1000)
+  /** 15 min: far beyond any single snapshot copy, so steady-state orphans
+    * are bounded to one grace window's worth. */
+  private val SnapshotGcGraceMs = 15L * 60 * 1000
 
   /** Snapshot `id` to `{id}_cache`.
     *
@@ -453,7 +451,7 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
       cf.rename(tmp, dst)
       // legacy pointer-mode snapshot, if any; normal grace — a concurrent
       // pointer-mode snapshot (protocol migration window) may be mid-write
-      retirePointer(cf, cachePtr(id), graceMs = snapshotGcGraceMs)
+      retirePointer(cf, cachePtr(id), graceMs = SnapshotGcGraceMs)
     } else {
       val prev = if (cf.exists(cachePtr(id))) Some(cachePath(id)) else None
       val ver = new Path(s"$baseDir/.$cid.v${System.currentTimeMillis()}_${System.nanoTime()}")
@@ -470,7 +468,7 @@ class Catalog(val spark: SparkSession, val baseDir: String) {
       // may be a concurrent snapshot still materializing — deleting that
       // mid-write would let its later PUT publish a dangling target.
       prev.filter(p => p != ver && cf.exists(p)).foreach(cf.delete(_, true))
-      gcVersions(cf, cid, keep = Some(ver), graceMs = snapshotGcGraceMs)
+      gcVersions(cf, cid, keep = Some(ver), graceMs = SnapshotGcGraceMs)
       // the legacy fixed-path snapshot is unreachable too: readers resolve
       // the pointer first
       if (cf.exists(dst)) cf.delete(dst, true)

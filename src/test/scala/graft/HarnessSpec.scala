@@ -76,7 +76,21 @@ class HarnessSpec extends AnyFunSuite {
     assert(node.get("loads").fieldNames().asScala.toSeq === Seq("z", "a"))
     assert(node.get("loads").get("a").asDouble === -1.0)
     assert(node.get("points").get(1).get("copies").asInt === 3)
-    intercept[IllegalArgumentException](Harness.json(Harness.obj("bad" -> None)))
+    assert(Harness.json(Harness.obj("none" -> None, "raw" -> Harness.Raw("""{"x":[1,2]}"""))) ===
+      """{"none":null,"raw":{"x":[1,2]}}""")
+    intercept[IllegalArgumentException](Harness.json(Harness.obj("bad" -> Some(1))))
+  }
+
+  test("driver gap: wall time minus the union of job spans, overlapping jobs counted once") {
+    def job(id: Int, start: Long, end: Long) = Harness.Job(id, start, end, Seq.empty, "")
+    assert(Harness.driverGapMs(1000, Seq.empty) === 1000)
+    // [100, 400] and [300, 600] overlap: together they cover 500 ms, not 600
+    assert(Harness.driverGapMs(1000, Seq(job(1, 100, 400), job(2, 300, 600))) === 500)
+    // a span inside another adds nothing; a disjoint one adds its length
+    assert(Harness.driverGapMs(1000,
+      Seq(job(1, 100, 600), job(2, 200, 300), job(3, 800, 900))) === 400)
+    // order does not matter, and a job that has not ended covers nothing
+    assert(Harness.driverGapMs(1000, Seq(job(3, 800, 900), job(1, 100, 600), job(4, 700, -1L))) === 400)
   }
 
   /** Run `f` with the load gate's wait budget spent, so a busy test box

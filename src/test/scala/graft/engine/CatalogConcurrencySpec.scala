@@ -67,9 +67,15 @@ class CatalogConcurrencySpec extends AnyFunSuite {
 
   private val nextTag = new AtomicLong(1)
 
+  /** A catalog over `baseDir` whose filesystem reports no atomic rename, as
+    * an object store does: snapshots publish through a pointer file. */
+  private def pointerCat(baseDir: String): Catalog = new Catalog(spark, baseDir) {
+    override protected def atomicRename(f: org.apache.hadoop.fs.FileSystem): Boolean = false
+  }
+
   private def runScenario(writes: Int, readerScripts: List[List[ReaderOp]],
                           mkCat: () => Catalog = () =>
-                            new Catalog(spark, Files.createTempDirectory("graft_cat_prop").toString)): Prop = {
+                            pointerCat(Files.createTempDirectory("graft_cat_prop").toString)): Prop = {
     val cat = mkCat()
     val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val publishedTags = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -121,22 +127,19 @@ class CatalogConcurrencySpec extends AnyFunSuite {
       })
     }
 
-    System.setProperty("graft.fs.atomicRename", "false") // pointer-publication mode
-    try {
-      (writer :: readers).foreach(_.start())
-      (writer :: readers).foreach { t =>
-        t.join(120000)
-        // join(timeout) returns silently on expiry — a hung thread would
-        // otherwise let the quiescent checks below race live writers
-        if (t.isAlive) violations.add(s"thread ${t.getName} still alive after 120s join")
-      }
-      // quiescent state: last published tag is what the cache now reads
-      val finalRows = cat.loadCache("s").collect()
-      val finalTags = finalRows.map(_.getLong(0)).distinct
-      if (finalTags.toSeq != Seq(lastTag) || finalRows.length != RowsPerTag)
-        violations.add(s"final read: tags=${finalTags.mkString(",")} want=$lastTag")
-      if (cat.isInDb("m")) violations.add("unbalanced inDb refcount survived join")
-    } finally System.clearProperty("graft.fs.atomicRename")
+    (writer :: readers).foreach(_.start())
+    (writer :: readers).foreach { t =>
+      t.join(120000)
+      // join(timeout) returns silently on expiry — a hung thread would
+      // otherwise let the quiescent checks below race live writers
+      if (t.isAlive) violations.add(s"thread ${t.getName} still alive after 120s join")
+    }
+    // quiescent state: last published tag is what the cache now reads
+    val finalRows = cat.loadCache("s").collect()
+    val finalTags = finalRows.map(_.getLong(0)).distinct
+    if (finalTags.toSeq != Seq(lastTag) || finalRows.length != RowsPerTag)
+      violations.add(s"final read: tags=${finalTags.mkString(",")} want=$lastTag")
+    if (cat.isInDb("m")) violations.add("unbalanced inDb refcount survived join")
 
     val vs = violations.toArray(Array.empty[String])
     if (vs.isEmpty) Prop.passed else Prop.falsified :| vs.mkString("; ")
@@ -178,9 +181,7 @@ class CatalogConcurrencySpec extends AnyFunSuite {
     def flakyCat(): Catalog = {
       val base = Files.createTempDirectory("graft_cat_flaky").toString
       FlakyObjectFs.delayedNamespace.add(base)
-      new Catalog(spark, s"graftflaky:$base") {
-        override protected def atomicRename(f: org.apache.hadoop.fs.FileSystem): Boolean = false
-      }
+      pointerCat(s"graftflaky:$base")
     }
     val prop = Prop.forAll(genScenario) { case (writes, readers) =>
       runScenario(writes, readers, mkCat = flakyCat _)

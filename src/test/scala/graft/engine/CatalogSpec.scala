@@ -22,6 +22,13 @@ class CatalogSpec extends AnyFunSuite {
   private def freshCat() =
     new Catalog(spark, Files.createTempDirectory("graft_cat").toString)
 
+  /** A catalog whose filesystem reports no atomic rename, as an object
+    * store does: snapshots publish through a pointer file. */
+  private def pointerCat() =
+    new Catalog(spark, Files.createTempDirectory("graft_cat").toString) {
+      override protected def atomicRename(f: org.apache.hadoop.fs.FileSystem): Boolean = false
+    }
+
   test("parquet round-trip preserves rows and schema incl. timestamp") {
     val cat = freshCat()
     val df = Seq(
@@ -188,32 +195,29 @@ class CatalogSpec extends AnyFunSuite {
 
   test("snapshot without atomic rename publishes via pointer; readers see whole versions") {
     // simulate an object store: force the capability check to false
-    System.setProperty("graft.fs.atomicRename", "false")
-    try {
-      val cat = freshCat()
-      cat.write(Seq(1, 2).toDF("v"), "d")
-      cat.snapshot("d")
-      assert(cat.existsCache("d"))
-      assert(TestSpark.rows(cat.loadCache("d")) === Set(Seq(1), Seq(2)))
-      // the snapshot lives in a versioned dir named by the pointer file, not
-      // at the fixed rename destination
-      val ptr = new java.io.File(s"${cat.baseDir}/d_cache.ptr")
-      assert(ptr.exists(), "pointer file must exist in non-atomic-rename mode")
-      val ver1 = scala.io.Source.fromFile(ptr).mkString.trim
-      assert(new java.io.File(ver1.stripPrefix("file:")).exists(), s"version dir missing: $ver1")
-      // re-snapshot swaps the pointer to a new version and retires the old one
-      cat.write(Seq(7).toDF("v"), "d")
-      cat.snapshot("d")
-      val ver2 = scala.io.Source.fromFile(ptr).mkString.trim
-      assert(ver2 !== ver1)
-      assert(TestSpark.rows(cat.loadCache("d")) === Set(Seq(7)))
-      assert(!new java.io.File(ver1.stripPrefix("file:")).exists(),
-        "superseded snapshot version must be deleted")
-      // drop removes pointer + version
-      cat.drop(cat.cacheId("d"))
-      assert(!ptr.exists())
-      assert(!cat.existsCache("d"))
-    } finally System.clearProperty("graft.fs.atomicRename")
+    val cat = pointerCat()
+    cat.write(Seq(1, 2).toDF("v"), "d")
+    cat.snapshot("d")
+    assert(cat.existsCache("d"))
+    assert(TestSpark.rows(cat.loadCache("d")) === Set(Seq(1), Seq(2)))
+    // the snapshot lives in a versioned dir named by the pointer file, not
+    // at the fixed rename destination
+    val ptr = new java.io.File(s"${cat.baseDir}/d_cache.ptr")
+    assert(ptr.exists(), "pointer file must exist in non-atomic-rename mode")
+    val ver1 = scala.io.Source.fromFile(ptr).mkString.trim
+    assert(new java.io.File(ver1.stripPrefix("file:")).exists(), s"version dir missing: $ver1")
+    // re-snapshot swaps the pointer to a new version and retires the old one
+    cat.write(Seq(7).toDF("v"), "d")
+    cat.snapshot("d")
+    val ver2 = scala.io.Source.fromFile(ptr).mkString.trim
+    assert(ver2 !== ver1)
+    assert(TestSpark.rows(cat.loadCache("d")) === Set(Seq(7)))
+    assert(!new java.io.File(ver1.stripPrefix("file:")).exists(),
+      "superseded snapshot version must be deleted")
+    // drop removes pointer + version
+    cat.drop(cat.cacheId("d"))
+    assert(!ptr.exists())
+    assert(!cat.existsCache("d"))
   }
 
   test("snapshot of an in-session (InDb) table writes the cached rows") {
@@ -229,21 +233,18 @@ class CatalogSpec extends AnyFunSuite {
     // the in-session branch must follow the SAME publication discipline as
     // the file-copy branch: pointer publish on the non-atomic-rename store,
     // superseded version deleted (not orphaned)
-    System.setProperty("graft.fs.atomicRename", "false")
-    try {
-      val cat = freshCat()
-      cat.markInDb(Seq("mem"))
-      cat.write(Seq(1, 2).toDF("v"), "mem")
-      cat.snapshot("mem")
-      val ptr = new java.io.File(s"${cat.baseDir}/mem_cache.ptr")
-      assert(ptr.exists(), "in-session snapshot must pointer-publish on a non-atomic store")
-      val ver1 = scala.io.Source.fromFile(ptr).mkString.trim
-      cat.write(Seq(9).toDF("v"), "mem")
-      cat.snapshot("mem")
-      assert(TestSpark.rows(cat.loadCache("mem")) === Set(Seq(9)))
-      assert(!new java.io.File(ver1.stripPrefix("file:")).exists(),
-        "superseded in-session snapshot version must be deleted")
-    } finally System.clearProperty("graft.fs.atomicRename")
+    val cat = pointerCat()
+    cat.markInDb(Seq("mem"))
+    cat.write(Seq(1, 2).toDF("v"), "mem")
+    cat.snapshot("mem")
+    val ptr = new java.io.File(s"${cat.baseDir}/mem_cache.ptr")
+    assert(ptr.exists(), "in-session snapshot must pointer-publish on a non-atomic store")
+    val ver1 = scala.io.Source.fromFile(ptr).mkString.trim
+    cat.write(Seq(9).toDF("v"), "mem")
+    cat.snapshot("mem")
+    assert(TestSpark.rows(cat.loadCache("mem")) === Set(Seq(9)))
+    assert(!new java.io.File(ver1.stripPrefix("file:")).exists(),
+      "superseded in-session snapshot version must be deleted")
   }
 
   test("copy of an in-session (InDb) table writes the cached rows durably") {
@@ -296,45 +297,42 @@ class CatalogSpec extends AnyFunSuite {
     // from the loser of a concurrent publish race; the next successful
     // publish must collect them — except directories younger than the grace
     // window, which may be a concurrent snapshot still materializing
-    System.setProperty("graft.fs.atomicRename", "false")
-    try {
-      val cat = freshCat()
-      val base = new java.io.File(cat.baseDir)
-      val expiredMtime = System.currentTimeMillis() - 16L * 60 * 1000 // > 15 min grace
-      // a crash orphan with a legacy nano-only name: the name parses as birth
-      // 0, but birth is judged by the STORE-side mtime — age it past grace
-      val legacyOrphan = new java.io.File(base, ".d_cache.v12345")
-      assert(legacyOrphan.mkdir() && legacyOrphan.setLastModified(expiredMtime))
-      // an expired wall-clock-stamped orphan, store-side old as well
-      val oldOrphan = new java.io.File(base, ".d_cache.v1000_1")
-      assert(oldOrphan.mkdir() && oldOrphan.setLastModified(expiredMtime))
-      // a freshly-CREATED directory with a legacy name — a still-running
-      // pre-millis writer mid-materialize. The old name-only rule parsed its
-      // birth as 0 and deleted it immediately (the r17-advice hazard: its
-      // later pointer PUT would publish a dangling target); the store mtime
-      // now protects it for a grace window.
-      val freshLegacy = new java.io.File(base, ".d_cache.v99")
-      assert(freshLegacy.mkdir())
-      // a YOUNG directory — stands in for a concurrent snapshot mid-write
-      val young = new java.io.File(base, s".d_cache.v${System.currentTimeMillis()}_1")
-      assert(young.mkdir())
-      cat.write(Seq(1).toDF("v"), "d")
-      cat.snapshot("d")
-      assert(!legacyOrphan.exists(), "store-side-expired legacy orphan must be GCed on publish")
-      assert(!oldOrphan.exists(), "expired orphan version must be GCed on publish")
-      assert(freshLegacy.exists(),
-        "a store-side-young directory must survive whatever its name stamp says")
-      assert(young.exists(), "a version younger than the grace window must survive")
-      // the published version itself survives, of course
-      val ptr = new java.io.File(s"${cat.baseDir}/d_cache.ptr")
-      val ver = scala.io.Source.fromFile(ptr).mkString.trim
-      assert(new java.io.File(ver.stripPrefix("file:")).exists())
-      assert(TestSpark.rows(cat.loadCache("d")) === Set(Seq(1)))
-      // drop is explicit destruction: every version goes, grace or not
-      cat.drop(cat.cacheId("d"))
-      assert(!ptr.exists() && !young.exists() && !freshLegacy.exists(),
-        "drop must GC all version directories including young ones")
-    } finally System.clearProperty("graft.fs.atomicRename")
+    val cat = pointerCat()
+    val base = new java.io.File(cat.baseDir)
+    val expiredMtime = System.currentTimeMillis() - 16L * 60 * 1000 // > 15 min grace
+    // a crash orphan with a legacy nano-only name: the name parses as birth
+    // 0, but birth is judged by the STORE-side mtime — age it past grace
+    val legacyOrphan = new java.io.File(base, ".d_cache.v12345")
+    assert(legacyOrphan.mkdir() && legacyOrphan.setLastModified(expiredMtime))
+    // an expired wall-clock-stamped orphan, store-side old as well
+    val oldOrphan = new java.io.File(base, ".d_cache.v1000_1")
+    assert(oldOrphan.mkdir() && oldOrphan.setLastModified(expiredMtime))
+    // a freshly-CREATED directory with a legacy name — a still-running
+    // pre-millis writer mid-materialize. The old name-only rule parsed its
+    // birth as 0 and deleted it immediately (the r17-advice hazard: its
+    // later pointer PUT would publish a dangling target); the store mtime
+    // now protects it for a grace window.
+    val freshLegacy = new java.io.File(base, ".d_cache.v99")
+    assert(freshLegacy.mkdir())
+    // a YOUNG directory — stands in for a concurrent snapshot mid-write
+    val young = new java.io.File(base, s".d_cache.v${System.currentTimeMillis()}_1")
+    assert(young.mkdir())
+    cat.write(Seq(1).toDF("v"), "d")
+    cat.snapshot("d")
+    assert(!legacyOrphan.exists(), "store-side-expired legacy orphan must be GCed on publish")
+    assert(!oldOrphan.exists(), "expired orphan version must be GCed on publish")
+    assert(freshLegacy.exists(),
+      "a store-side-young directory must survive whatever its name stamp says")
+    assert(young.exists(), "a version younger than the grace window must survive")
+    // the published version itself survives, of course
+    val ptr = new java.io.File(s"${cat.baseDir}/d_cache.ptr")
+    val ver = scala.io.Source.fromFile(ptr).mkString.trim
+    assert(new java.io.File(ver.stripPrefix("file:")).exists())
+    assert(TestSpark.rows(cat.loadCache("d")) === Set(Seq(1)))
+    // drop is explicit destruction: every version goes, grace or not
+    cat.drop(cat.cacheId("d"))
+    assert(!ptr.exists() && !young.exists() && !freshLegacy.exists(),
+      "drop must GC all version directories including young ones")
   }
 
   test("concurrent first reads of one linked id infer its schema once") {

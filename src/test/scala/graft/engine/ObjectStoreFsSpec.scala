@@ -103,8 +103,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
       .set("fs.graftobj.impl", classOf[NonAtomicTestFs].getName)
     val base = Files.createTempDirectory("graft_objstore").toString
     // declare the store non-atomic the way a deployment would for a scheme
-    // the built-in list misjudges — here per-instance instead of the
-    // graft.fs.atomicRename sys prop, to keep the suite parallel-safe
+    // the built-in list misjudges: a per-instance override
     new Catalog(spark, s"graftobj:$base") {
       override protected def atomicRename(f: FileSystem): Boolean = false
     }

@@ -1,18 +1,24 @@
 #!/usr/bin/env python3
-"""Render the README slow-query table from BENCH_FULL.json (the complete
-bench line graft.Bench persists alongside its stdout emission — the stdout
-copy gets tail-truncated in the driver's round artifact; the file does not).
+"""Render the README slow-query table from a full bench record (the complete
+bench line graft.Bench persists per core count as BENCH_FULL_c{cpus}.json
+alongside its stdout emission — the stdout copy gets tail-truncated in the
+driver's round artifact; the file does not).
 
-Usage: python3 tools/bench_table.py [BENCH_FULL.json] [N]
-Prints a markdown table of the N (default 8) slowest queries with their
-spark / oracle seconds and per-query ratio, plus the suite totals line.
+Usage: python3 tools/bench_table.py [BENCH_FULL_c{cpus}.json] [N]
+The default record is the one with the most cores. Prints a markdown table
+of the N (default 8) slowest queries with their spark / oracle seconds and
+per-query ratio, plus the suite totals line.
 """
+import glob
 import json
+import re
 import sys
 
 
 def main():
-    path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_FULL.json"
+    path = sys.argv[1] if len(sys.argv) > 1 else max(
+        glob.glob("BENCH_FULL_c*.json"),
+        key=lambda p: int(re.search(r"_c(\d+)\.json$", p).group(1)))
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     b = json.load(open(path))
     ratios = b.get("ratios", {})  # name -> [spark, oracle, ratio]

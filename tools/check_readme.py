@@ -55,13 +55,13 @@ def leaves(v, out):
 def artifact_numbers():
     out = []
     # PROGRESS.jsonl is the committed per-round log — historical prose
-    # ("the r16 237s point") resolves against it even after BENCH_FULL
-    # was overwritten by a later round
+    # ("the r16 237s point") resolves against it even after a BENCH_FULL_c*
+    # record was overwritten by a later round
     pj = os.path.join(REPO, "PROGRESS.jsonl")
     if os.path.exists(pj):
         for m in re.finditer(r"-?\d+(?:\.\d+)?", open(pj).read()):
             out.append(float(m.group(0)))
-    for pat in ("SCALE_r*.json", "BENCH_r*.json", "BENCH_FULL.json",
+    for pat in ("SCALE_r*.json", "BENCH_r*.json", "BENCH_FULL_c*.json",
                 "BENCH_PARTIAL.json", "BASELINE.json"):
         for p in glob.glob(os.path.join(REPO, pat)):
             try:
