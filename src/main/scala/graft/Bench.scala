@@ -48,13 +48,16 @@ object Bench {
   }
 
   /** Where a run's full record goes (pure, spec-pinned): its own core
-    * count's `BENCH_FULL_c{cpus}.json` when [[fullRecordAccepts]] takes the
-    * run over that file's content (`prior` reads a path, "" when absent),
-    * else `BENCH_PARTIAL.json`. One record per core count: round 20's
-    * 8-core run replaced the 32-core record. */
-  private[graft] def recordPath(cpus: Int, nQueries: Int, sfDir: String, prior: String => String): String = {
+    * count's `BENCH_FULL_c{cpus}.json` when the run is unfiltered and
+    * [[fullRecordAccepts]] takes it over that file's content (`prior` reads
+    * a path, "" when absent), else `BENCH_PARTIAL.json`. One record per core
+    * count: round 20's 8-core run replaced the 32-core record. A run
+    * `filtered` by SPARK_GRAFT_ONLY never becomes a full record, not even a
+    * core count's first: it would hold that record against the full suite. */
+  private[graft] def recordPath(cpus: Int, nQueries: Int, sfDir: String, prior: String => String,
+                                filtered: Boolean = false): String = {
     val full = s"BENCH_FULL_c$cpus.json"
-    if (fullRecordAccepts(prior(full), nQueries, sfDir)) full else "BENCH_PARTIAL.json"
+    if (!filtered && fullRecordAccepts(prior(full), nQueries, sfDir)) full else "BENCH_PARTIAL.json"
   }
 
   /** The conditions a run was taken under, for the full record only:
@@ -183,8 +186,11 @@ object Bench {
       println(compact)
       try {
         val target = recordPath(cpus, best.size, sfDir, p =>
-          if (Files.exists(Paths.get(p))) new String(Files.readAllBytes(Paths.get(p)), UTF_8) else "")
-        if (target == "BENCH_PARTIAL.json")
+          if (Files.exists(Paths.get(p))) new String(Files.readAllBytes(Paths.get(p)), UTF_8) else "",
+          filtered = only.isDefined)
+        if (only.isDefined)
+          System.err.println("[bench] SPARK_GRAFT_ONLY run; writing BENCH_PARTIAL.json")
+        else if (target == "BENCH_PARTIAL.json")
           System.err.println(s"[bench] run covers ${best.size} queries at $sfDir vs a larger or " +
             s"different-SF BENCH_FULL_c$cpus.json; writing BENCH_PARTIAL.json (set " +
             "BENCH_ALLOW_SF_CHANGE=1 to accept a deliberate SF move)")

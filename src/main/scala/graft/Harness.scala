@@ -113,10 +113,9 @@ object Harness {
     else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
   }
 
-  /** One finished task as the ledger saw it (times in ms). */
-  final case class Task(stage: Int, ms: Long, gcMs: Long, inputRecs: Long,
-                        shuffleReadRecs: Long, shuffleWriteRecs: Long)
-  final case class Stage(id: Int, tasks: Int, name: String)
+  /** One finished task as the ledger saw it (its duration in ms). */
+  final case class Task(stage: Int, ms: Long)
+  final case class Stage(id: Int, tasks: Int)
   /** One Spark job as the ledger saw it (event times, epoch ms; `site` is
     * its SQL execution id and any user-set call site). */
   final case class Job(id: Int, startMs: Long, endMs: Long, stages: Seq[Stage], site: String)
@@ -130,16 +129,12 @@ object Harness {
     spark.sparkContext.addSparkListener(this)
 
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = Option(te.taskMetrics)
-      tasks.add(Task(te.stageId, te.taskInfo.duration, m.fold(-1L)(_.jvmGCTime),
-        m.fold(-1L)(_.inputMetrics.recordsRead), m.fold(-1L)(_.shuffleReadMetrics.recordsRead),
-        m.fold(-1L)(_.shuffleWriteMetrics.recordsWritten)))
-      ()
+      tasks.add(Task(te.stageId, te.taskInfo.duration)); ()
     }
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
       val site = (prop("spark.sql.execution.id").map("exec=" + _) ++ prop("callSite.short")).mkString(" ")
-      val stages = js.stageInfos.sortBy(_.stageId).map(si => Stage(si.stageId, si.numTasks, si.name))
+      val stages = js.stageInfos.sortBy(_.stageId).map(si => Stage(si.stageId, si.numTasks))
       jobs.put(js.jobId, Job(js.jobId, js.time, -1L, stages, site)); ()
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit = {

@@ -135,17 +135,16 @@ object ScaleStream {
       // and a 256MB block cache holds the join-probe working set. Emission
       // equality vs the default provider is still asserted below, so the
       // tune cannot change results.
-      val confs: Map[String, String] =
-        if (rocks) Map(
+      val confs =
+        if (rocks) Seq(
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
           "spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB" -> "128",
           "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
           "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" -> "256")
-        else Map.empty
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally confs.keys.foreach(spark.conf.unset)
+        else Nil
+      graft.ops.StaticScope.withConf(spark, confs: _*)(body)
     }
 
     // 2) native session_window sessionization (30 min gap), 4 micro-batches,

@@ -107,8 +107,9 @@ object ScaleZOrder {
     val zWrite = rec.phase("zorder_write", k = 1) {
       // session-conf entries are copied into the write job's Hadoop conf, so
       // this caps clusteredWrite's internal writer the same way .option does
-      spark.conf.set("parquet.block.size", rgBytes)
-      graft.ops.ZOrder.clusteredWrite(events, Seq("user_id", "ts_us"), s"$work/zorder", nFiles)
+      graft.ops.StaticScope.withConf(spark, "parquet.block.size" -> rgBytes) {
+        graft.ops.ZOrder.clusteredWrite(events, Seq("user_id", "ts_us"), s"$work/zorder", nFiles)
+      }
     }
 
     // probe: 1% of users x 10% of the time range ~ 0.1% of rows

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
 /** Unit of dataflow: declares `inputIds`/`outputIds`, lifecycle start -> run -> end.
   *
@@ -65,22 +65,7 @@ class SqlNode(
   val outputIds: Seq[String] = sqls.keys.toSeq.sorted
 
   def run(cat: Catalog): Unit = {
-    // isolated temp-view namespace per node run (the Spark analogue of the
-    // reference's per-cursor DuckDB registration, rdb.py:80-88): no view leaks
-    // into the long-lived session, and concurrent nodes sharing an input id
-    // cannot race on register/drop of the same view name
-    val s = cat.spark.newSession()
-    // Node-scoped broadcast ceiling: every leaf this session sees is a
-    // Catalog-managed parquet dataset, so plan-time size estimates are exact
-    // file sizes — and a dimension table of tens of MB joined against a
-    // fan-out fact stream must broadcast, not sort-merge. Spark's 10 MB
-    // default is sized for small driver heaps; measured here (ScaleFlagship
-    // ×250): the final graph join's 15 MB customer-node side crossing 10 MB
-    // flipped a 685M-row stream from BroadcastHashJoin to SortMergeJoin and
-    // cost 568s where ~75s is linear. 64 MB parquet ≈ a few hundred MB
-    // hashed — routine broadcast traffic on a production cluster, and the
-    // conf is scoped to this node's session, never the caller's.
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", SqlNode.broadcastThreshold)
+    val s = SqlNode.nodeSession(cat)
     inputIds.foreach(id => cat.readAny(id, s).createOrReplaceTempView(id))
     outputIds.foreach { out =>
       val sql = sqls(out)
@@ -96,8 +81,35 @@ class SqlNode(
 }
 
 object SqlNode {
-  /** Node-session broadcast ceiling in bytes: 64 MB (the reason is in `run`). */
+  /** Node-session broadcast ceiling in bytes: 64 MB (the reason is at
+    * [[nodeSession]]). */
   private[graft] val broadcastThreshold: String = (64L << 20).toString
+
+  /** The child session one node run works in, for [[SqlNode]] and [[DfNode]].
+    *
+    * Isolation: a temp-view namespace per node run (the Spark analogue of
+    * the reference's per-cursor DuckDB registration, rdb.py:80-88), so no
+    * view leaks into the long-lived session and concurrent nodes sharing an
+    * input id cannot race on register/drop of the same view name. Plans a
+    * node builds bind to this session, so Catalog.write's statistics-gated
+    * static scope adjusts ITS conf without racing sibling nodes that
+    * EtlGroup runs in parallel.
+    *
+    * Broadcast ceiling: every leaf this session sees is a Catalog-managed
+    * parquet dataset, so plan-time size estimates are exact file sizes — and
+    * a dimension table of tens of MB joined against a fan-out fact stream
+    * must broadcast, not sort-merge. Spark's 10 MB default is sized for
+    * small driver heaps; measured here (ScaleFlagship ×250): the final graph
+    * join's 15 MB customer-node side crossing 10 MB flipped a 685M-row
+    * stream from BroadcastHashJoin to SortMergeJoin and cost 568s where ~75s
+    * is linear. 64 MB parquet ≈ a few hundred MB hashed — routine broadcast
+    * traffic on a production cluster, and the conf is set on this child
+    * session only, never the caller's. */
+  private[engine] def nodeSession(cat: Catalog): SparkSession = {
+    val s = cat.spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastThreshold)
+    s
+  }
 }
 
 /** Whole-table transform node: `Seq[DataFrame] => Seq[DataFrame]`.
@@ -117,13 +129,7 @@ class DfNode(
   extends EtlNode {
 
   def run(cat: Catalog): Unit = {
-    // per-node child session, the same isolation SqlNode has: plans built by
-    // `fn` bind to this session, so Catalog.write's statistics-gated static
-    // scope (r19) can adjust ITS conf without racing concurrently-running
-    // nodes — EtlGroup runs nodes in parallel, and a conf mutation on the
-    // shared session would leak into whatever a sibling node is planning.
-    val s = cat.spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", SqlNode.broadcastThreshold)
+    val s = SqlNode.nodeSession(cat)
     val outs =
       try fn(inputIds.map(id => cat.readAny(id, s)))
       catch {

@@ -327,19 +327,16 @@ object ConnectedComponents {
     // count picks ~RowsPerPartition edge rows per partition, clamped to the
     // session setting, so a cluster-scale edge set still uses every
     // configured partition.
-    // The conf reads happen BEFORE any conf mutation, so a failure here can
-    // never leak a mutated session conf past the finally below. The
-    // mutations themselves are session-global for the loop's duration — the
-    // engine runs one query at a time per session (DagExecutor parallelism
-    // is across *sessions*-safe node work, not concurrent actions on this
-    // one), which is the stated concurrency contract for CC.
+    // The mutations are session-global for the loop's duration and
+    // restored exactly afterwards (StaticScope.withConf) — the engine runs
+    // one query at a time per session (DagExecutor parallelism is across
+    // *sessions*-safe node work, not concurrent actions on this one), which
+    // is the stated concurrency contract for CC.
     val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.max(1L, math.min(confParts.toLong, edgeCount / rowsPerPartition + 1L)).toInt
     val skewSafe = edgeCount >= skewSafeMinEdges
-    val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled").getOrElse("true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-    try {
+    graft.ops.StaticScope.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
     var labels: DataFrame = null
 
     var iter = 0
@@ -475,9 +472,6 @@ object ConnectedComponents {
     }
     require(converged, s"connected components did not converge in $maxIter iterations")
     labels
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confParts)
     }
   }
 

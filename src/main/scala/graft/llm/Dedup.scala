@@ -217,8 +217,10 @@ object Dedup {
   def incrementalNearDups(newDocs: DataFrame, textCol: String, idCol: String,
                           existingSets: DataFrame, existingSig: DataFrame,
                           k: Int = 5, numHashes: Int = 8, bands: Int = 4,
-                          threshold: Double = 0.9, maxBucketSize: Int = 0): DataFrame = {
-    def nearDups: DataFrame = {
+                          threshold: Double = 0.9, maxBucketSize: Int = 0): DataFrame =
+    // the same statistics gate as minhashNearDups, taken on the summed size
+    // of all three inputs
+    graft.ops.StaticScope.materialize(newDocs, more = Seq(existingSets, existingSig)) {
       val rowsPerBand = numHashes / bands
       // one combined batch checkpoint (id, shs, h*), same fusion as
       // minhashNearDups — the sets/sig views below are cheap projections
@@ -239,13 +241,6 @@ object Dedup {
         existingSets.unionByName(newSS.select(col(idCol), col("shs"))), idCol)
         .filter(col("jaccard") >= threshold)
     }
-    // the same statistics gate as minhashNearDups, taken on the summed size
-    // of all three inputs; the result is materialized inside the scope
-    // (soundness rule)
-    val gated = Seq(newDocs, existingSets, existingSig)
-      .map(graft.ops.StaticScope.inputBytes).sum < BigInt(graft.ops.StaticScope.DefaultThresholdBytes)
-    if (gated) graft.ops.StaticScope.scoped(newDocs)(nearDups.localCheckpoint(true)) else nearDups
-  }
 
   /** Near-dup clusters: connected components over the pair edges (a, b),
     * each labelled by its min doc id. Output: (doc_id, cluster_id) for every

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Statistics-gated static planning for small-input multi-exchange plans.
   *
@@ -20,9 +20,9 @@ import org.apache.spark.sql.DataFrame
   * returns is materialized INSIDE the scope. [[materialize]] enforces that
   * for single-plan callers ([[scoped]] is for iterative callers that manage
   * their own eager materialization per round, e.g. Lloyd training loops).
-  * Confs are restored in `finally`; the engine runs one query at a time per
-  * session (the DagExecutor contract), so the temporary session-global
-  * mutation cannot interleave with another query's execution.
+  * Confs are restored in `finally` by [[withConf]]; the engine runs one
+  * query at a time per session (the DagExecutor contract), so the temporary
+  * session-global mutation cannot interleave with another query's execution.
   */
 object StaticScope {
 
@@ -68,29 +68,39 @@ object StaticScope {
                 minParts: Int = 0, estimate: DataFrame => BigInt = inputBytes)
                (body: => T): T = {
     val size = estimate(input)
-    if (size >= thresholdBytes) body
-    else {
-      val spark = input.sparkSession
-      val scopedKeys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-      val was = spark.conf.getAll
-      val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val floor = math.min(confParts.toLong,
-        if (minParts > 0) minParts.toLong else spark.sparkContext.defaultParallelism.toLong)
-      val parts = math.max(floor, math.min(confParts.toLong,
-        (size / BytesPerPartition).toLong + 1L)).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      // restore each key as it was: unset again when it was unset, so the
-      // scope leaves no conf residue in the session
-      try body
-      finally scopedKeys.foreach(k => was.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
-    }
+    if (size >= thresholdBytes) body else staticPlanning(input.sparkSession, size, minParts)(body)
   }
 
-  /** Gate a single plan: small input ⇒ evaluate eagerly (localCheckpoint)
-    * under static planning; large input ⇒ return the lazy plan for AQE. */
-  def materialize(input: DataFrame, thresholdBytes: Long = DefaultThresholdBytes)
-                 (plan: => DataFrame): DataFrame =
-    if (inputBytes(input) >= thresholdBytes) plan
-    else scoped(input, thresholdBytes)(plan.localCheckpoint(true))
+  /** Gate a plan over `input` and `more`, sized by their summed estimates:
+    * small ⇒ evaluate eagerly (localCheckpoint) under static planning;
+    * large ⇒ return the lazy plan for AQE. */
+  def materialize(input: DataFrame, thresholdBytes: Long = DefaultThresholdBytes,
+                  more: Seq[DataFrame] = Nil)(plan: => DataFrame): DataFrame = {
+    val size = (input +: more).map(inputBytes).sum
+    if (size >= thresholdBytes) plan
+    else staticPlanning(input.sparkSession, size, 0)(plan.localCheckpoint(true))
+  }
+
+  /** `body` with AQE off and shuffle partitions sized to `size` bytes. */
+  private def staticPlanning[T](spark: SparkSession, size: BigInt, minParts: Int)(body: => T): T = {
+    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val floor = math.min(confParts,
+      if (minParts > 0) minParts.toLong else spark.sparkContext.defaultParallelism.toLong)
+    val parts = math.max(floor, math.min(confParts, (size / BytesPerPartition).toLong + 1L))
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> parts.toString)(body)
+  }
+
+  /** Run `body` with each `kv` set in `spark`'s session conf, then restore
+    * every key exactly: its old value, or unset again when it was unset
+    * (`conf.getOption` would report a default as if it had been set). The
+    * one way `src/main` changes a session's conf; a node's own child
+    * session is configured once where it is made (`SqlNode.nodeSession`). */
+  private[graft] def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val was = spark.conf.getAll
+    try {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally kv.foreach { case (k, _) => was.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

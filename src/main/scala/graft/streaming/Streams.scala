@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ops.StaticScope
+
 /** Structured Streaming surface. The reference has no streams (SURVEY §2.11) —
   * its closest notion is incremental batch — so this module is the engine's
   * forward-looking extra: the same event table consumed as a stream with
@@ -76,31 +78,55 @@ object Streams {
 
   private val runId = new AtomicInteger(0)
 
-  /** Size the state-store fan-out to the backlog. A stateful streaming
-    * operator creates one-to-four state stores PER SHUFFLE PARTITION, each
-    * committing a delta file every micro-batch — at the session's 32
-    * partitions that is >100 store commits to drain a few-MB parity
-    * backlog, and the commits dominate the wall time. Gate on the planner's
-    * batch estimate of the same files (StaticScope's statistics dispatch):
-    * a small backlog runs with a handful of partitions, a real feed leaves
-    * the session setting untouched. minParts = 4 (was 8): the interval
-    * join keeps four stores per partition and the commit fan-out dominated
-    * the parity-fixture drain — measured 3.7s → 2.7s warm at sf0.1 with
-    * identical results. Sound because the whole run-to-completion (start →
-    * awaitTermination → sink copy) happens inside the scope. */
-  private def scopedStateful[T](spark: SparkSession, base: String, glob: String)(body: => T): T = {
+  /** Drain the parquet events at `eventsDir` (a directory, or one file) AS A
+    * STREAM through `plan` to completion (AvailableNow) into a memory sink,
+    * and return an eager copy of the result. Runs under `confs` and under
+    * the state-store fan-out gate below; in `finally` it drops the sink
+    * view, clears the terminated query and restores the conf, so a drain
+    * leaves no session residue, also when its stream fails.
+    *
+    * The fan-out gate: a stateful streaming operator creates one-to-four
+    * state stores PER SHUFFLE PARTITION, each committing a delta file every
+    * micro-batch — at the session's 32 partitions that is >100 store commits
+    * to drain a few-MB parity backlog, and the commits dominate the wall
+    * time. Gate on the planner's batch estimate of the same files
+    * (StaticScope's statistics dispatch): a small backlog runs with a
+    * handful of partitions, a real feed leaves the session setting
+    * untouched. minParts = 4 (was 8): the interval join keeps four stores
+    * per partition and the commit fan-out dominated the parity-fixture
+    * drain — measured 3.7s → 2.7s warm at sf0.1 with identical results.
+    * Sound because the whole run-to-completion (start → awaitTermination →
+    * sink copy) happens inside the scope. */
+  private def drain(spark: SparkSession, eventsDir: String, outputMode: String,
+                    confs: (String, String)*)(plan: DataFrame => DataFrame): DataFrame = {
+    val name = s"graft_stream_${runId.incrementAndGet()}"
+    // the file stream source requires a directory; accept a single file too
+    val (base, glob) = {
+      val p = new java.io.File(eventsDir)
+      if (p.isFile) (p.getParent, p.getName) else (eventsDir, "*")
+    }
+    val stream = plan(spark.readStream.schema(eventsSchema)
+      .option("pathGlobFilter", glob).parquet(base))
     val batchView = spark.read.schema(eventsSchema)
       .option("pathGlobFilter", glob).parquet(base)
-    graft.ops.StaticScope.scoped(batchView, minParts = 4)(body)
+    StaticScope.withConf(spark, confs: _*) {
+      StaticScope.scoped(batchView, minParts = 4) {
+        try {
+          stream.writeStream.format("memory").queryName(name).outputMode(outputMode)
+            .trigger(Trigger.AvailableNow()).start().awaitTermination()
+          // Copy the result OUT of the memory sink: sink tables pin their
+          // rows on the driver for the session's lifetime, and a bench loop
+          // calling this repeatedly would accumulate one per call. The
+          // checkpointed copy lives in unpersist-able RDD blocks instead.
+          spark.table(name).localCheckpoint(true)
+        } finally {
+          spark.catalog.dropTempView(name)
+          spark.streams.resetTerminated()
+        }
+      }
+    }
   }
 
-  /** Tumbling-window event aggregation over a parquet directory consumed AS A
-    * STREAM: watermark + 1h window, count + exact decimal sum per event type.
-    * Runs the backlog to completion (AvailableNow) and returns the result.
-    *
-    * Scale notes: the window agg is stateful with watermark-bounded state
-    * (late data beyond 1h is dropped; state for closed windows is evicted);
-    * on a live feed swap the trigger and sink, nothing else changes. */
   /** The tumbling-window transform shared by [[windowedEventCounts]] (one
     * AvailableNow drain) and the continuous-feed spec (the same plan under
     * `Trigger.ProcessingTime` across several micro-batches): watermark + 1h
@@ -114,35 +140,15 @@ object Streams {
       sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
     .select(col("window.start").as("window_start"), col("event_type"), col("cnt"), col("sum_value"))
 
-  def windowedEventCounts(spark: SparkSession, eventsDir: String): DataFrame = {
-    val name = s"graft_stream_${runId.incrementAndGet()}"
-    // the file stream source requires a directory; accept a single file too
-    val (base, glob) = {
-      val p = new java.io.File(eventsDir)
-      if (p.isFile) (p.getParent, p.getName) else (eventsDir, "*")
-    }
-    val stream = windowedAggPlan(spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", glob).parquet(base))
-
-    scopedStateful(spark, base, glob) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // Copy the result OUT of the memory sink and drop the sink table at
-      // once: sink tables pin their rows on the driver for the session's
-      // lifetime, and a bench loop calling this repeatedly would accumulate
-      // one per call. The checkpointed copy lives in unpersist-able RDD
-      // blocks instead.
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      spark.streams.resetTerminated()
-      out
-    }
-  }
+  /** Tumbling-window event aggregation over a parquet directory consumed AS A
+    * STREAM: watermark + 1h window, count + exact decimal sum per event type.
+    * Runs the backlog to completion (AvailableNow) and returns the result.
+    *
+    * Scale notes: the window agg is stateful with watermark-bounded state
+    * (late data beyond 1h is dropped; state for closed windows is evicted);
+    * on a live feed swap the trigger and sink, nothing else changes. */
+  def windowedEventCounts(spark: SparkSession, eventsDir: String): DataFrame =
+    drain(spark, eventsDir, "complete")(windowedAggPlan)
 
   /** STREAMING sessionization end-to-end: the events feed through
     * [[Sessionize.streamingSessions]]'s `flatMapGroupsWithState` — an open
@@ -158,28 +164,10 @@ object Streams {
   def streamSessions(spark: SparkSession, eventsDir: String,
                      gapMinutes: Int): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_${runId.incrementAndGet()}"
-    val (base, glob) = {
-      val p = new java.io.File(eventsDir)
-      if (p.isFile) (p.getParent, p.getName) else (eventsDir, "*")
-    }
-    val events = spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", glob).parquet(base)
-      .select(col("user_id"), col("event_id"), col("ts").as("ts_micros"))
-      .as[Sessionize.Event]
-    scopedStateful(spark, base, glob) {
-      val q = Sessionize.streamingSessions(events, gapMinutes).toDF()
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      spark.streams.resetTerminated()
-      out
+    drain(spark, eventsDir, "append") { events =>
+      Sessionize.streamingSessions(events
+        .select(col("user_id"), col("event_id"), col("ts").as("ts_micros"))
+        .as[Sessionize.Event], gapMinutes).toDF()
     }
   }
 
@@ -195,30 +183,19 @@ object Streams {
     * swap in `dropDuplicatesWithinWatermark` to evict state after the
     * watermark delay — same dataflow, time-bounded memory. */
   def streamDedupKeys(spark: SparkSession, eventsDir: String,
-                      keys: Seq[String]): DataFrame = {
-    val name = s"graft_stream_${runId.incrementAndGet()}"
-    val (base, glob) = {
-      val p = new java.io.File(eventsDir)
-      if (p.isFile) (p.getParent, p.getName) else (eventsDir, "*")
-    }
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", glob).parquet(base)
-      .select(keys.map(col): _*)
-      .dropDuplicates(keys)
-    scopedStateful(spark, base, glob) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      spark.streams.resetTerminated()
-      out
-    }
-  }
+                      keys: Seq[String]): DataFrame =
+    drain(spark, eventsDir, "append")(_.select(keys.map(col): _*).dropDuplicates(keys))
+
+  /** The session-window transform shared by [[sessionWindowCounts]] and the
+    * continuous-feed spec (same plan, different trigger). */
+  def sessionWindowPlan(events: DataFrame, gapMinutes: Int): DataFrame = events
+    .withColumn("event_ts", eventTime)
+    .withWatermark("event_ts", "1 hour")
+    .groupBy(col("user_id"), session_window(col("event_ts"), s"$gapMinutes minutes"))
+    .agg(count(lit(1)).as("n_events"))
+    .select(col("user_id"),
+      unix_micros(col("session_window.start")).as("session_start"),
+      col("n_events"))
 
   /** Native session-window aggregation consumed AS A STREAM: Spark's
     * `session_window` merges events whose time falls before the running
@@ -233,40 +210,9 @@ object Streams {
     * Scale notes: state is one (start, end, agg) triple per OPEN session,
     * merged and evicted by watermark — the managed-state path where
     * [[streamSessions]] is the arbitrary-state path; both bounded. */
-  /** The session-window transform shared by [[sessionWindowCounts]] and the
-    * continuous-feed spec (same plan, different trigger). */
-  def sessionWindowPlan(events: DataFrame, gapMinutes: Int): DataFrame = events
-    .withColumn("event_ts", eventTime)
-    .withWatermark("event_ts", "1 hour")
-    .groupBy(col("user_id"), session_window(col("event_ts"), s"$gapMinutes minutes"))
-    .agg(count(lit(1)).as("n_events"))
-    .select(col("user_id"),
-      unix_micros(col("session_window.start")).as("session_start"),
-      col("n_events"))
-
   def sessionWindowCounts(spark: SparkSession, eventsDir: String,
-                          gapMinutes: Int): DataFrame = {
-    val name = s"graft_stream_${runId.incrementAndGet()}"
-    val (base, glob) = {
-      val p = new java.io.File(eventsDir)
-      if (p.isFile) (p.getParent, p.getName) else (eventsDir, "*")
-    }
-    val stream = sessionWindowPlan(spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", glob).parquet(base), gapMinutes)
-    scopedStateful(spark, base, glob) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      spark.streams.resetTerminated()
-      out
-    }
-  }
+                          gapMinutes: Int): DataFrame =
+    drain(spark, eventsDir, "complete")(sessionWindowPlan(_, gapMinutes))
 
   /** STREAM-STREAM interval join: click events joined to view events of the
     * same user when the click lands inside the 60s window after the view —
@@ -283,63 +229,38 @@ object Streams {
     * worth of events, independent of stream history; the join itself is a
     * key-partitioned state lookup, no shuffle beyond the key exchange. An
     * inner join emits rows eagerly on match, so results are identical to the
-    * batch/DuckDB IEJoin oracle over the same backlog. */
+    * batch/DuckDB IEJoin oracle over the same backlog.
+    *
+    * The drain skips the watermark-finalizing NO-DATA micro-batch (r20,
+    * round-19 verdict item 8): an INNER stream-stream join emits every match
+    * eagerly inside the data batch — the trailing no-data batch exists only
+    * to advance the watermark and EVICT state, which a run-to-completion
+    * drain throws away anyway. Measured: the no-data batch was ~1.0s of pure
+    * state-store commit fan-out (4 stores per partition) for 0 output rows.
+    * NOT safe for append-mode aggregations (session/tumbling windows
+    * FINALIZE their output in that batch), so the conf is scoped to exactly
+    * this drain; results are oracle-checked identical. */
   def streamIntervalJoin(spark: SparkSession, eventsDir: String,
-                         windowSec: Int): DataFrame = {
-    val name = s"graft_stream_${runId.incrementAndGet()}"
-    val (base, glob) = {
-      val p = new java.io.File(eventsDir)
-      if (p.isFile) (p.getParent, p.getName) else (eventsDir, "*")
+                         windowSec: Int): DataFrame =
+    drain(spark, eventsDir, "append",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { events =>
+      // ONE file source, both join branches derived from it (stream-stream
+      // self-join): a second readStream would mean a second source with its
+      // own listing, offset log, and schema admin per micro-batch for the
+      // same bytes — the engine supports self-joins, so don't pay it twice
+      val src = events.withColumn("event_ts", eventTime)
+      val clicks = src.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+          col("ts").as("ts_us"), col("event_ts").as("c_ts"))
+        .withWatermark("c_ts", "10 minutes")
+      val views = src.filter(col("event_type") === "view")
+        .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
+          col("event_ts").as("v_ts"))
+        .withWatermark("v_ts", "10 minutes")
+      clicks.join(views,
+        col("c_user") === col("v_user") &&
+          col("c_ts") >= col("v_ts") &&
+          col("c_ts") <= col("v_ts") + expr(s"INTERVAL $windowSec SECONDS"))
+        .select(col("click_id"), col("view_id"), col("c_user").as("user_id"), col("ts_us"))
     }
-    // ONE file source, both join branches derived from it (stream-stream
-    // self-join): a second readStream would mean a second source with its
-    // own listing, offset log, and schema admin per micro-batch for the
-    // same bytes — the engine supports self-joins, so don't pay it twice
-    val src = spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", glob).parquet(base)
-      .withColumn("event_ts", eventTime)
-    def side(): DataFrame = src
-    val clicks = side().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("ts_us"), col("event_ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    val views = side().filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("event_ts").as("v_ts"))
-      .withWatermark("v_ts", "10 minutes")
-    val joined = clicks.join(views,
-      col("c_user") === col("v_user") &&
-        col("c_ts") >= col("v_ts") &&
-        col("c_ts") <= col("v_ts") + expr(s"INTERVAL $windowSec SECONDS"))
-      .select(col("click_id"), col("view_id"), col("c_user").as("user_id"), col("ts_us"))
-    scopedStateful(spark, base, glob) {
-      // Skip the watermark-finalizing NO-DATA micro-batch for this drain
-      // (r20, round-19 verdict item 8): an INNER stream-stream join emits
-      // every match eagerly inside the data batch — the trailing no-data
-      // batch exists only to advance the watermark and EVICT state, which a
-      // run-to-completion drain throws away anyway. Measured: the no-data
-      // batch was ~1.0s of pure state-store commit fan-out (4 stores per
-      // partition) for 0 output rows. NOT safe for append-mode aggregations
-      // (session/tumbling windows FINALIZE their output in that batch), so
-      // the conf is scoped to exactly this query and restored in finally —
-      // unset again when it was unset, so no session residue is left;
-      // results are oracle-checked identical.
-      val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val noDataWas = spark.conf.getAll.get(noData)
-      spark.conf.set(noData, "false")
-      try {
-        val q = joined.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val out = spark.table(name).localCheckpoint(true)
-        spark.catalog.dropTempView(name)
-        spark.streams.resetTerminated()
-        out
-      } finally noDataWas.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
-    }
-  }
 }

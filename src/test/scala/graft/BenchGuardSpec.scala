@@ -57,6 +57,12 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.recordPath(32, 98, "/root/testdata/sf0.1", records) === "BENCH_PARTIAL.json")
   }
 
+  test("a SPARK_GRAFT_ONLY run writes BENCH_PARTIAL.json, even where its core count has no record") {
+    assert(Bench.recordPath(4, 2, "/root/testdata/sf0.001", _ => "", filtered = true) === "BENCH_PARTIAL.json")
+    assert(Bench.recordPath(32, 120, "/root/testdata/sf0.1", _ => prior, filtered = true) === "BENCH_PARTIAL.json")
+    assert(Bench.recordPath(4, 2, "/root/testdata/sf0.001", _ => "") === "BENCH_FULL_c4.json")
+  }
+
   test("unparsable prior: accepted rather than wedging the artifact") {
     assert(Bench.fullRecordAccepts("not json at all", 5, "/root/testdata/sf0.1"))
   }

@@ -169,6 +169,21 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       dist.collect().map(r => (r.getInt(0), r.getInt(1))).toSet)
   }
 
+  test("distributed path leaves no session residue: confs unset before are unset after") {
+    // a fresh session has spark.sql.adaptive.enabled unset; the loop turns
+    // AQE off and must unset it again, not pin the default explicitly
+    val s = spark.newSession()
+    def views() = s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val (confBefore, viewsBefore) = (s.conf.getAll, views())
+    val edges = s.createDataFrame(Seq((1L, 2L), (2L, 3L), (10L, 11L))).toDF("src", "dst")
+    assert(ConnectedComponents.distributedPath(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === bruteForce(Seq((1L, 2L), (2L, 3L), (10L, 11L))))
+    val confAfter = s.conf.getAll.toSet
+    assert(confAfter.diff(confBefore.toSet) === Set.empty, "set or changed by the run")
+    assert(confBefore.toSet.diff(confAfter) === Set.empty, "unset or changed by the run")
+    assert(views() === viewsBefore)
+  }
+
   test("clusterMapping hashed=false emits min-id cluster ids; hashed=true stable hashes") {
     val edges = Seq((7L, 3L), (3L, 9L), (20L, 21L)).toDF("from", "to")
     val plain = ConnectedComponents.clusterMapping(edges)

@@ -149,6 +149,27 @@ class StreamsSpec extends AnyFunSuite {
     assert(s.conf.getAll === set)
   }
 
+  test("a drain whose stream fails throws and leaves no temp view and no conf change") {
+    // `ts` written as STRING against eventsSchema's LONG: the stream starts,
+    // registers its memory-sink view, then fails reading the file
+    val dir = java.nio.file.Files.createTempDirectory("graft_sfail")
+    graft.TempCleanup.deleteOnExit(dir)
+    Seq((10L, "86400000000", 1L, "view", 0.0, "{}"), (11L, "86400000000", 1L, "click", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(dir.toString)
+    val s = spark.newSession()
+    def views() = s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val (confBefore, viewsBefore) = (s.conf.getAll, views())
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streams.streamIntervalJoin(s, dir.toString, windowSec = 60)
+    }
+    val confAfter = s.conf.getAll.toSet
+    assert(confAfter.diff(confBefore.toSet) === Set.empty, "set or changed by the run")
+    assert(confBefore.toSet.diff(confAfter) === Set.empty, "unset or changed by the run")
+    assert(views() === viewsBefore)
+    assert(s.streams.active.isEmpty)
+  }
+
   test("streamed windowed aggregation equals the batch equivalent on the same files") {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
     // two hours of events, ts in µs (as the driver's events table stores them)
