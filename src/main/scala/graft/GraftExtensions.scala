@@ -7,11 +7,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expr.{AffineGapSimilarity, FreqSketch, KmvMinHashes, LongDotProduct, SortedIntersectCount, TopK}
 
 /** Session extensions registering the engine's native expressions for SQL use
-  * and the custom planner strategies (the as-of join physical operator).
-  * Install with `.config("spark.sql.extensions", "graft.GraftExtensions")`;
-  * the DataFrame API works without registration via the Column wrappers —
-  * except [[graft.plans.AsofJoinExec]], whose logical node needs the
-  * strategy to be plannable. */
+  * and the custom planner strategies and pruning rules of the as-of and
+  * range joins. Install with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`, as
+  * [[graft.Harness.session]] does. The expressions' DataFrame API works
+  * without registration via the Column wrappers; both joins
+  * ([[graft.plans.AsofJoinExec]], [[graft.plans.RangeJoinExec]]) do not:
+  * their logical nodes need the strategies to be plannable. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)

@@ -182,14 +182,14 @@ object ScaleStream {
       withStateProvider(rocks = true)(drain("interval_join(rocks=true)", joined, "append"))
     require(joinRows == joinRocksRows,
       s"interval join emission depends on state provider: default $joinRows vs rocksdb $joinRocksRows")
-    val batchJoinRows = graft.ops.RangeJoin.pointInRange(
+    val batchJoinRows = graft.plans.RangeJoinExec.pointInRange(
       batchEvents.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts")),
       batchEvents.filter(col("event_type") === "view")
         .select(col("event_id").as("view_id"), col("user_id"),
           col("ts").as("w_start"), (col("ts") + 60L * 1000000L).as("w_end")),
       keys = Seq("user_id"), ptCol = "ts", startCol = "w_start", endCol = "w_end",
-      binWidth = 60L * 1000000L).count()
+      valCols = Seq("view_id")).count()
     require(joinRows == batchJoinRows,
       s"stream interval join diverged from batch range join: $joinRows vs $batchJoinRows")
 

@@ -60,9 +60,9 @@ object Corpus {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val toks = tokenCol.cast("long")
     val start = sum(toks).over(w) - toks
-    // exact floor division past 2^53 (same decimal detour as RangeJoin:
-    // start - pmod is an exact multiple of maxTokens, so the quotient is
-    // exact; bare `/` on longs is DOUBLE division and would mis-chunk there)
+    // exact floor division past 2^53: start - pmod is an exact multiple of
+    // maxTokens, so the decimal quotient is exact; bare `/` on longs is
+    // DOUBLE division and would mis-chunk there
     val seqId = ((start - pmod(start, lit(maxTokens.toLong))).cast("decimal(38,0)")
       / lit(maxTokens.toLong)).cast("long")
     df.withColumn("n_tokens", toks)

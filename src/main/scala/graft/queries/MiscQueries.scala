@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{AsofJoin, Ids, Incremental, JsonFlatten, PortableHash, RangeJoin, ZOrder}
+import graft.ops.{Ids, Incremental, JsonFlatten, PortableHash, ZOrder}
+import graft.plans.{AsofJoinExec, RangeJoinExec}
 
 /** JSON flatten coverage (F7-F10), verifiable hash partitioning (W1/F4 scale
   * variant), F1 hash-id consistency, and the incremental cache-merge pattern. */
@@ -110,10 +111,10 @@ object MiscQueries {
         Seq("user_id", "event_type"))),
 
     // as-of join: each click picks up the value of the user's latest view
-    // at-or-before it (union-window formulation: ONE shuffle, no range
-    // join). Timestamps are compared at microsecond granularity — the
-    // cross-engine-exact resolution (DuckDB's parquet reader truncates the
-    // nano column to µs), same rule as the sessionize oracle.
+    // at-or-before it (the native sort-merge AsofJoinExec, planned through
+    // GraftExtensions). Timestamps are compared at microsecond granularity —
+    // the cross-engine-exact resolution (DuckDB's parquet reader truncates
+    // the nano column to µs), same rule as the sessionize oracle.
     "q_asof_join" -> ((s, dir) => {
       val events = s.read.schema(graft.streaming.Streams.eventsSchema)
         .parquet(s"$dir/events.parquet")
@@ -122,44 +123,13 @@ object MiscQueries {
         .select("event_id", "user_id", "ts_us")
       val views = events.filter(col("event_type") === "view")
         .groupBy("user_id", "ts_us").agg(max("value").as("view_value"))
-      AsofJoin.asofLeft(clicks, views, keys = Seq("user_id"), tsCol = "ts_us",
+      AsofJoinExec.asofLeft(clicks, views, keys = Seq("user_id"), tsCol = "ts_us",
         valCols = Seq("view_value"))
     }),
 
-    // as-of join through the NATIVE physical operator (AsofJoinNode ->
-    // AsofJoinStrategy -> AsofJoinExec, injected by GraftExtensions): same
-    // click/view enrichment and the same DuckDB ASOF oracle as q_asof_join,
-    // but executed as a declared-requirements sort-merge pass instead of
-    // the union-window composition
-    "q_asof_exec" -> ((s, dir) => {
-      val events = s.read.schema(graft.streaming.Streams.eventsSchema)
-        .parquet(s"$dir/events.parquet")
-        .withColumn("ts_us", col("ts"))
-      val clicks = events.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_us")
-      val views = events.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_us").agg(max("value").as("view_value"))
-      graft.plans.AsofJoinExec.asofLeft(clicks, views, keys = Seq("user_id"),
-        tsCol = "ts_us", valCols = Seq("view_value"))
-    }),
-
-    // the native operator in FORWARD mode (same merge, time scanned
-    // descending) under DuckDB's forward ASOF oracle
-    "q_asof_exec_fwd" -> ((s, dir) => {
-      val events = s.read.schema(graft.streaming.Streams.eventsSchema)
-        .parquet(s"$dir/events.parquet")
-        .withColumn("ts_us", col("ts"))
-      val clicks = events.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_us")
-      val views = events.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_us").agg(max("value").as("view_value"))
-      graft.plans.AsofJoinExec.asofLeft(clicks, views, keys = Seq("user_id"),
-        tsCol = "ts_us", valCols = Seq("view_value"), forward = true)
-    }),
-
     // forward as-of join: each click picks up the value of the user's
-    // EARLIEST view at-or-after it (next-event enrichment; same union-window
-    // plan scanning time the other way)
+    // EARLIEST view at-or-after it (next-event enrichment; the same merge
+    // with time scanned descending)
     "q_asof_forward" -> ((s, dir) => {
       val events = s.read.schema(graft.streaming.Streams.eventsSchema)
         .parquet(s"$dir/events.parquet")
@@ -168,7 +138,7 @@ object MiscQueries {
         .select("event_id", "user_id", "ts_us")
       val views = events.filter(col("event_type") === "view")
         .groupBy("user_id", "ts_us").agg(max("value").as("view_value"))
-      AsofJoin.asofLeft(clicks, views, keys = Seq("user_id"), tsCol = "ts_us",
+      AsofJoinExec.asofLeft(clicks, views, keys = Seq("user_id"), tsCol = "ts_us",
         valCols = Seq("view_value"), forward = true)
     }),
 
@@ -183,7 +153,8 @@ object MiscQueries {
     }),
 
     // range join: clicks attributed to the 60s window after each view,
-    // per user (bucketized equi-join, not a nested-loop range condition)
+    // per user (the native active-set sort-merge RangeJoinExec, not a
+    // nested-loop range condition)
     "q_range_join" -> ((s, dir) => {
       val events = s.read.schema(graft.streaming.Streams.eventsSchema)
         .parquet(s"$dir/events.parquet")
@@ -193,27 +164,9 @@ object MiscQueries {
       val windows = events.filter(col("event_type") === "view")
         .select(col("event_id").as("view_id"), col("user_id"),
           col("ts_us").as("w_start"), (col("ts_us") + 60L * 1000000L).as("w_end"))
-      RangeJoin.pointInRange(clicks, windows, keys = Seq("user_id"),
+      RangeJoinExec.pointInRange(clicks, windows, keys = Seq("user_id"),
         ptCol = "ts_us", startCol = "w_start", endCol = "w_end",
-        binWidth = 60L * 1000000L)
-        .select("click_id", "view_id", "user_id", "ts_us")
-    }),
-
-    // the NATIVE range-join operator (custom LogicalPlan + strategy +
-    // active-set sort-merge exec) under the same DuckDB IEJoin oracle as
-    // the bucketized q_range_join — no interval expansion, no bin tuning
-    "q_range_exec" -> ((s, dir) => {
-      val events = s.read.schema(graft.streaming.Streams.eventsSchema)
-        .parquet(s"$dir/events.parquet")
-        .withColumn("ts_us", col("ts"))
-      val clicks = events.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      val windows = events.filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id"),
-          col("ts_us").as("w_start"), (col("ts_us") + 60L * 1000000L).as("w_end"))
-      graft.plans.RangeJoinExec.pointInRange(clicks, windows,
-        keys = Seq("user_id"), ptCol = "ts_us", startCol = "w_start",
-        endCol = "w_end", valCols = Seq("view_id"))
+        valCols = Seq("view_id"))
         .select("click_id", "view_id", "user_id", "ts_us")
     }),
 
@@ -259,8 +212,8 @@ object MiscQueries {
     }),
 
     // as-of + range join COMPOSED inside an EtlGroup DAG (the reference-
-    // shaped workload test): extraction -> {AsofJoin enrichment DfNode,
-    // RangeJoin attribution DfNode} -> SqlNode join of the two outputs, all
+    // shaped workload test): extraction -> {as-of enrichment DfNode,
+    // range attribution DfNode} -> SqlNode join of the two outputs, all
     // wired by catalog ids and executed concurrently. Each click carries the
     // value of the user's latest at-or-before view AND the count of 60s
     // view-attribution windows containing it.
@@ -286,7 +239,7 @@ object MiscQueries {
       val enrich = new DfNode("asof_enrich", Seq("dag_clicks", "dag_views"),
         Seq("dag_clicks_enriched"),
         fn = { case Seq(clicks, views) =>
-          Seq(AsofJoin.asofLeft(clicks, views, keys = Seq("user_id"),
+          Seq(AsofJoinExec.asofLeft(clicks, views, keys = Seq("user_id"),
             tsCol = "ts_us", valCols = Seq("view_value")))
         })
       val attrib = new DfNode("range_attribution", Seq("dag_clicks", "dag_views"),
@@ -294,9 +247,9 @@ object MiscQueries {
         fn = { case Seq(clicks, views) =>
           val windows = views.select(col("user_id"), col("ts_us").as("w_start"),
             (col("ts_us") + 60L * 1000000L).as("w_end"))
-          Seq(RangeJoin.pointInRange(clicks, windows, keys = Seq("user_id"),
+          Seq(RangeJoinExec.pointInRange(clicks, windows, keys = Seq("user_id"),
             ptCol = "ts_us", startCol = "w_start", endCol = "w_end",
-            binWidth = 60L * 1000000L)
+            valCols = Seq("w_start"))
             .groupBy("event_id").agg(count(lit(1)).as("n_windows")))
         })
       val result = new SqlNode("asof_dag_result",
@@ -477,9 +430,6 @@ object MiscQueries {
     "q_stream_dedup" ->
       "SELECT DISTINCT user_id, event_type FROM events",
 
-    // the oracle uses DuckDB's NATIVE ASOF JOIN — an independent
-    // implementation of the same semantics, not a mirror of the
-    // union-window plan
     // the oracle states the range join DECLARATIVELY — DuckDB plans the
     // inequality condition with its own IEJoin, an independent execution
     // strategy for the same semantics
@@ -504,20 +454,6 @@ object MiscQueries {
         |    + ((((l_suppkey % 1024) >> i) & 1) << (2*i + 1))
         |  )) AS BIGINT) AS zkey
         |FROM lineitem""".stripMargin,
-
-    // the native exec must reproduce the identical row set under DuckDB's
-    // independent IEJoin execution of the declarative condition
-    "q_range_exec" ->
-      """WITH clicks AS (
-        |  SELECT event_id AS click_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type = 'click'),
-        |windows AS (
-        |  SELECT event_id AS view_id, user_id, epoch_us(ts) AS w_start,
-        |    epoch_us(ts) + 60000000 AS w_end
-        |  FROM events WHERE event_type = 'view')
-        |SELECT c.click_id, w.view_id, c.user_id, c.ts_us
-        |FROM clicks c JOIN windows w
-        |  ON c.user_id = w.user_id AND c.ts_us BETWEEN w.w_start AND w.w_end""".stripMargin,
 
     // the STREAM-STREAM formulation must produce the identical row set as
     // the declarative batch range join over the same backlog
@@ -548,27 +484,8 @@ object MiscQueries {
       """SELECT l_orderkey, l_partkey, l_quantity, p_name
         |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin,
 
-    "q_asof_exec_fwd" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, max(value) AS view_value FROM events
-        |  WHERE event_type = 'view' GROUP BY 1, 2)
-        |SELECT c.event_id, c.user_id, c.ts_us, v.view_value
-        |FROM clicks c ASOF LEFT JOIN views v
-        |  ON c.user_id = v.user_id AND c.ts_us <= v.ts_us""".stripMargin,
-
-    // the native AsofJoinExec path against DuckDB's native ASOF JOIN
-    "q_asof_exec" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, max(value) AS view_value FROM events
-        |  WHERE event_type = 'view' GROUP BY 1, 2)
-        |SELECT c.event_id, c.user_id, c.ts_us, v.view_value
-        |FROM clicks c ASOF LEFT JOIN views v
-        |  ON c.user_id = v.user_id AND c.ts_us >= v.ts_us""".stripMargin,
-
+    // the oracle uses DuckDB's NATIVE ASOF JOIN — an independent
+    // implementation of the same semantics
     "q_asof_join" ->
       """WITH clicks AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events WHERE event_type = 'click'),

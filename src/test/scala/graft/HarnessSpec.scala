@@ -51,7 +51,7 @@ class HarnessSpec extends AnyFunSuite {
   test("oracle dump escapes tab, CR and other control characters") {
     assert(Harness.jsonString("a\"b\\c\nd\re\tf\u0001g") ===
       "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")
-    val out = Files.createTempDirectory("graft_oracle_dump")
+    val out = TestSpark.tempDir("graft_oracle_dump")
     Harness.dumpOracleSql(out.toFile)
     Seq("oracle_sql.json", "oracle_bench_sql.json").foreach { f =>
       val json = new String(Files.readAllBytes(Paths.get(s"$out/$f")), StandardCharsets.UTF_8)

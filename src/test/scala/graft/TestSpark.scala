@@ -13,4 +13,13 @@ object TestSpark {
 
   def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** A fresh directory under the system temp dir, deleted when the test JVM
+    * exits: the one way a spec makes a temp directory, so a run leaves none
+    * behind. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    TempCleanup.deleteOnExit(dir)
+    dir
+  }
 }

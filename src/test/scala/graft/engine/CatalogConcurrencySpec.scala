@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.functions._
@@ -75,7 +74,7 @@ class CatalogConcurrencySpec extends AnyFunSuite {
 
   private def runScenario(writes: Int, readerScripts: List[List[ReaderOp]],
                           mkCat: () => Catalog = () =>
-                            pointerCat(Files.createTempDirectory("graft_cat_prop").toString)): Prop = {
+                            pointerCat(TestSpark.tempDir("graft_cat_prop").toString)): Prop = {
     val cat = mkCat()
     val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val publishedTags = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -179,7 +178,7 @@ class CatalogConcurrencySpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftflaky.impl", classOf[FlakyObjectFs].getName)
     def flakyCat(): Catalog = {
-      val base = Files.createTempDirectory("graft_cat_flaky").toString
+      val base = TestSpark.tempDir("graft_cat_flaky").toString
       FlakyObjectFs.delayedNamespace.add(base)
       pointerCat(s"graftflaky:$base")
     }

@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -20,12 +19,12 @@ class CatalogSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshCat() =
-    new Catalog(spark, Files.createTempDirectory("graft_cat").toString)
+    new Catalog(spark, TestSpark.tempDir("graft_cat").toString)
 
   /** A catalog whose filesystem reports no atomic rename, as an object
     * store does: snapshots publish through a pointer file. */
   private def pointerCat() =
-    new Catalog(spark, Files.createTempDirectory("graft_cat").toString) {
+    new Catalog(spark, TestSpark.tempDir("graft_cat").toString) {
       override protected def atomicRename(f: org.apache.hadoop.fs.FileSystem): Boolean = false
     }
 
@@ -158,7 +157,7 @@ class CatalogSpec extends AnyFunSuite {
     val cat = freshCat()
     cat.write(Seq((1, 1.0)).toDF("a", "b"), "dst") // memoizes (a, b) for dst
     // a source the catalog has never read or written: no memo for it
-    val extDir = Files.createTempDirectory("graft_ext_copy").toString
+    val extDir = TestSpark.tempDir("graft_ext_copy").toString
     spark.range(2).select(col("id"), lit("s").as("txt"))
       .write.mode("overwrite").parquet(s"$extDir/src.parquet")
     cat.link("srcx", s"$extDir/src.parquet")
@@ -169,7 +168,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("drop of a linked id unlinks without deleting the external files") {
     val cat = freshCat()
-    val extDir = Files.createTempDirectory("graft_ext_drop").toString
+    val extDir = TestSpark.tempDir("graft_ext_drop").toString
     spark.range(3).write.mode("overwrite").parquet(s"$extDir/keep.parquet")
     cat.link("lnk", s"$extDir/keep.parquet")
     assert(cat.read("lnk").count() === 3)
@@ -181,7 +180,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("copy onto a LINKED id lands in the catalog namespace, external data untouched") {
     val cat = freshCat()
-    val extDir = Files.createTempDirectory("graft_ext_copy_dst").toString
+    val extDir = TestSpark.tempDir("graft_ext_copy_dst").toString
     Seq((9, "keep")).toDF("id", "s").write.parquet(s"$extDir/linked.parquet")
     cat.link("dst", s"$extDir/linked.parquet")
     cat.write(Seq((1, "src")).toDF("id", "s"), "src")
@@ -337,7 +336,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("concurrent first reads of one linked id infer its schema once") {
     val cat = freshCat()
-    val ext = s"${Files.createTempDirectory("graft_ext")}/linked.parquet"
+    val ext = s"${TestSpark.tempDir("graft_ext")}/linked.parquet"
     spark.range(8).select(col("id"), lit("k").as("s")).write.parquet(ext)
     cat.link("linked", ext)
     val tag = s"infer-${System.nanoTime()}"
@@ -373,7 +372,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("link reads an external dataset without copying; write stays internal") {
     val cat = freshCat()
-    val extDir = Files.createTempDirectory("graft_ext").toString
+    val extDir = TestSpark.tempDir("graft_ext").toString
     Seq((1, "x")).toDF("id", "s").write.parquet(s"$extDir/ext.parquet")
     cat.link("ext", s"$extDir/ext.parquet")
     assert(cat.exists("ext"))

@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -26,7 +25,7 @@ class EtlSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshCat() =
-    new Catalog(spark, Files.createTempDirectory("graft_etl").toString)
+    new Catalog(spark, TestSpark.tempDir("graft_etl").toString)
 
   test("SqlNode registers inputs and materializes one output per SQL (UNION shape of test_executor.py:26-32)") {
     val cat = freshCat()

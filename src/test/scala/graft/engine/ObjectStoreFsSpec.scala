@@ -1,7 +1,6 @@
 package graft.engine
 
 import java.net.URI
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path, RawLocalFileSystem}
@@ -101,7 +100,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
   private def freshObjCat(): Catalog = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftobj.impl", classOf[NonAtomicTestFs].getName)
-    val base = Files.createTempDirectory("graft_objstore").toString
+    val base = TestSpark.tempDir("graft_objstore").toString
     // declare the store non-atomic the way a deployment would for a scheme
     // the built-in list misjudges: a per-instance override
     new Catalog(spark, s"graftobj:$base") {
@@ -121,7 +120,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
     assert(cat.exists("t"))
 
     // link: an external graftobj dataset, read without copying
-    val extBase = Files.createTempDirectory("graft_objstore_ext").toString
+    val extBase = TestSpark.tempDir("graft_objstore_ext").toString
     Seq((9L, "x")).toDF("id", "s").write.parquet(s"graftobj:$extBase/ext.parquet")
     cat.link("ext", s"graftobj:$extBase/ext.parquet")
     assert(TestSpark.rows(cat.read("ext")) === Set(Seq(9L, "x")))
@@ -175,7 +174,7 @@ class ObjectStoreFsSpec extends AnyFunSuite {
     // semantics: linked external input, concurrent DAG execution, lazy
     // in-db hand-offs, durable group outputs, incremental-cache snapshot
     val cat = freshObjCat()
-    val extBase = Files.createTempDirectory("graft_objstore_dag").toString
+    val extBase = TestSpark.tempDir("graft_objstore_dag").toString
     Seq((1, "a"), (2, "b"), (3, "a")).toDF("k", "tag")
       .write.parquet(s"graftobj:$extBase/src.parquet")
     cat.link("src", s"graftobj:$extBase/src.parquet")

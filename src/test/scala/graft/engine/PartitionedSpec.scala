@@ -35,16 +35,6 @@ class PartitionedSpec extends AnyFunSuite {
     assert(out === Set((1L, 1L, 1L), (2L, 2L, 0L), (3L, 3L, 1L), (4L, 4L, 0L), (5L, 5L, 1L)))
   }
 
-  test("saltedJoin equals the plain join on a skewed key") {
-    // 90% of left rows share one hot key
-    val left = (1 to 200).map(i => (if (i <= 180) "hot" else s"k$i", i)).toDF("k", "v")
-    val right = Seq(("hot", "H"), ("k190", "X")).toDF("k", "tag")
-    val plain = left.join(right, Seq("k"))
-    val salted = Partitioned.saltedJoin(left, right, Seq("k"), saltFactor = 8)
-    assert(TestSpark.rows(salted.select("k", "v", "tag")) ===
-      TestSpark.rows(plain.select("k", "v", "tag")))
-  }
-
   test("partitionKeyByHash values are stable and bounded") {
     val p1 = Partitioned.partitionKeyByHash(base, col("id"), 8).select("id", "partition")
     val p2 = Partitioned.partitionKeyByHash(base, col("id"), 8).select("id", "partition")

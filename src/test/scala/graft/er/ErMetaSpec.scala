@@ -51,7 +51,7 @@ class ErMetaSpec extends AnyFunSuite {
   }
 
   test("grouping stage reads rewritten ids end-to-end through the engine DAG") {
-    val work = java.nio.file.Files.createTempDirectory("graft_ermeta").toString
+    val work = TestSpark.tempDir("graft_ermeta").toString
     val cat = new Catalog(spark, work)
     // "numpy >= 1.2" is a messy alias of the canonical "numpy" package
     cat.write(Seq(

@@ -69,7 +69,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("Batched link-id validator: one action, per-check messages, all checks evaluated") {
     val cat = new graft.engine.Catalog(spark,
-      Files.createTempDirectory("val_batch").toString)
+      TestSpark.tempDir("val_batch").toString)
     cat.write(Seq(1L, 2L).toDF("node_id"), "gn_a")
     cat.write(Seq(10L, 20L).toDF("node_id"), "gn_b")
     cat.write(Seq((1L, 10L), (2L, 99L)).toDF("from_id", "to_id"), "gl_x")
@@ -95,7 +95,7 @@ class GraphSpec extends AnyFunSuite {
       (11L, "plain", 1.5),
       (12L, "has \"quote\" and \\slash", 2.0)
     ).toDF("node_id", "name", "score")
-    val dir = Files.createTempDirectory("rg").toString + "/node_pkg"
+    val dir = TestSpark.tempDir("rg").toString + "/node_pkg"
     RedisGraphCsv.writeNodes(nodes, "pkg", dir)
     val part = Files.list(Paths.get(dir)).toArray.map(_.toString).filter(_.endsWith(".txt")).head
     val lines = Files.readAllLines(Paths.get(part)).toArray.map(_.toString).toSeq
@@ -106,7 +106,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("RedisGraph link CSV: START/END typed headers (redisgraph.py:74-94)") {
     val links = Seq((1L, 2L, "dep")).toDF("from_id", "to_id", "kind")
-    val dir = Files.createTempDirectory("rg").toString + "/link_req"
+    val dir = TestSpark.tempDir("rg").toString + "/link_req"
     RedisGraphCsv.writeLinks(links, "pkg", "req", dir)
     val part = Files.list(Paths.get(dir)).toArray.map(_.toString).filter(_.endsWith(".txt")).head
     val lines = Files.readAllLines(Paths.get(part)).toArray.map(_.toString).toSeq
@@ -243,7 +243,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("RedisGraph CSV multi-file write: the header leads EVERY part file") {
     val nodes = (1 to 40).map(i => (i.toLong, s"n$i")).toDF("node_id", "name").repartition(4)
-    val dir = Files.createTempDirectory("rg").toString + "/multi"
+    val dir = TestSpark.tempDir("rg").toString + "/multi"
     RedisGraphCsv.write(RedisGraphCsv.nodeHeader(nodes, "pkg"), dir, singleFile = false)
     val parts = Files.list(Paths.get(dir)).toArray.map(_.toString).filter(_.endsWith(".txt"))
     assert(parts.length > 1, "expected a multi-part write")

@@ -84,8 +84,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("equi-depth clustered write round-trips rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_ed").toString
-    graft.TempCleanup.deleteOnExit(java.nio.file.Paths.get(dir))
+    val dir = TestSpark.tempDir("graft_zorder_ed").toString
     val df = spark.range(1, 4097)
       .selectExpr("id", "CAST(floor(1e7 / id) AS LONG) AS a", "(id * 37) % 64 AS b")
     ZOrder.clusteredWriteEquiDepth(df, Seq("a", "b"), s"$dir/z", numFiles = 4)
@@ -94,8 +93,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("clustered write gives tighter per-file envelopes on BOTH dims than a linear sort") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    graft.TempCleanup.deleteOnExit(java.nio.file.Paths.get(dir))
+    val dir = TestSpark.tempDir("graft_zorder").toString
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey")
 

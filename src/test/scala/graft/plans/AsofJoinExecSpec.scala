@@ -6,17 +6,32 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.ops.AsofJoin
 
-/** The native sort-merge as-of operator must agree with the union-window
-  * formulation on every contract point — the union-window is itself pinned
-  * to DuckDB's ASOF JOIN by the oracle gate, so agreement here chains the
-  * physical operator to the same external semantics. */
+/** The sort-merge as-of operator on every contract point: hand-written
+  * cases, plus random fixtures checked against a driver-side brute force
+  * (the oracle gate pins the same semantics to DuckDB's ASOF JOIN). */
 class AsofJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def canon(df: DataFrame): Set[Seq[Any]] = TestSpark.rows(df)
+
+  /** Driver-side as-of over the collected fixture: each left
+    * (event_id, user_id, ts) with the `v` of the same user's latest right
+    * row at or before `ts` (earliest at or after, forward), else null.
+    * Right rows are unique on (user_id, ts). */
+  private def bruteAsof(left: DataFrame, right: DataFrame, forward: Boolean): Set[Seq[Any]] = {
+    val byUser = right.select("user_id", "ts", "v").as[(Long, Long, Double)].collect()
+      .groupBy(_._1)
+    left.select("event_id", "user_id", "ts").as[(Long, Long, Long)].collect().map {
+      case (id, user, ts) =>
+        val seen = byUser.getOrElse(user, Array.empty[(Long, Long, Double)])
+          .filter(r => if (forward) r._2 >= ts else r._2 <= ts)
+        val hit = if (seen.isEmpty) None
+          else Some(if (forward) seen.minBy(_._2) else seen.maxBy(_._2))
+        Seq[Any](id, user, ts, hit.map(_._3).orNull)
+    }.toSet
+  }
 
   test("physical plan contains AsofJoinExec with shuffles planned by EnsureRequirements") {
     val left = Seq((1L, 10L, 5L)).toDF("event_id", "user_id", "ts")
@@ -33,7 +48,57 @@ class AsofJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(exchanges.size === 2, s"expected 2 shuffles in:\n$executed")
   }
 
-  test("agrees with union-window asofLeft on dense random data (backward)") {
+  test("latest at-or-before match per key; null before first right row; keys isolated") {
+    val left = Seq(
+      (1L, 10L, 5L),    // u10 @5: before any view -> null
+      (2L, 10L, 15L),   // u10 @15: view@10 wins over nothing later
+      (3L, 10L, 20L),   // u10 @20: ties with view@20 -> inclusive match
+      (4L, 11L, 100L),  // u11 @100: only u11's views are visible
+      (5L, 12L, 50L)    // u12: key with no right rows at all
+    ).toDF("event_id", "user_id", "ts")
+    val right = Seq(
+      (10L, 10L, 1.0),
+      (10L, 20L, 2.0),
+      (11L, 90L, 9.0),
+      (11L, 10L, 8.0)
+    ).toDF("user_id", "ts", "v")
+    val out = AsofJoinExec.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(3))).toMap
+    assert(out === Map(
+      1L -> None, 2L -> Some(1.0), 3L -> Some(2.0), 4L -> Some(9.0), 5L -> None))
+  }
+
+  test("forward mode: earliest at-or-after match; null after the last right row") {
+    val left = Seq(
+      (1L, 10L, 5L),   // next view @10
+      (2L, 10L, 10L),  // ties with view@10 -> inclusive match
+      (3L, 10L, 15L),  // next view @20
+      (4L, 10L, 25L)   // nothing after -> null
+    ).toDF("event_id", "user_id", "ts")
+    val right = Seq((10L, 10L, 1.0), (10L, 20L, 2.0)).toDF("user_id", "ts", "v")
+    val out = AsofJoinExec.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"),
+      forward = true)
+      .collect().map(r => r.getLong(0) -> Option(r.get(3))).toMap
+    assert(out === Map(
+      1L -> Some(1.0), 2L -> Some(1.0), 3L -> Some(2.0), 4L -> None))
+  }
+
+  test("key or ts type mismatch fails at build time, naming the column and both types") {
+    val right = Seq((10L, 1L, 1.0)).toDF("user_id", "ts", "v")
+    // a STRING key against a BIGINT key would match nothing; an INT ts
+    // against a BIGINT ts would fail inside a task
+    val stringKey = Seq((1L, "10", 5L)).toDF("event_id", "user_id", "ts")
+    val intTs = Seq((1L, 10L, 5)).toDF("event_id", "user_id", "ts")
+    for ((left, name, lType) <- Seq((stringKey, "user_id", "STRING"), (intTs, "ts", "INT"))) {
+      val e = intercept[IllegalArgumentException] {
+        AsofJoinExec.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"))
+      }
+      assert(e.getMessage.contains(s"left column $name is $lType") &&
+        e.getMessage.contains(s"right column $name is BIGINT"), e.getMessage)
+    }
+  }
+
+  test("agrees with a driver-side brute force on dense random data (backward)") {
     val left = spark.range(0, 2000).selectExpr(
       "id AS event_id", "id % 37 AS user_id",
       "(xxhash64(id) % 1000 + 1000) AS ts")
@@ -41,13 +106,12 @@ class AsofJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "id % 41 AS user_id", "(xxhash64(id, 7) % 900 + 1000) AS ts",
       "CAST(id AS DOUBLE) AS v")
       .groupBy("user_id", "ts").agg(org.apache.spark.sql.functions.max("v").as("v"))
-    val viaWindow = AsofJoin.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"))
     val viaExec = AsofJoinExec.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"))
-    assert(viaExec.columns.toSeq === viaWindow.columns.toSeq)
-    assert(canon(viaExec) === canon(viaWindow))
+    assert(viaExec.columns.toSeq === Seq("event_id", "user_id", "ts", "v"))
+    assert(canon(viaExec) === bruteAsof(left, right, forward = false))
   }
 
-  test("agrees with union-window asofLeft forward, including keys with no right rows") {
+  test("agrees with a driver-side brute force forward, including keys with no right rows") {
     val left = spark.range(0, 1500).selectExpr(
       "id AS event_id", "id % 53 AS user_id",
       "(xxhash64(id, 3) % 1000) AS ts")
@@ -55,11 +119,9 @@ class AsofJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "id % 29 AS user_id", "(xxhash64(id, 11) % 800) AS ts",
       "CAST(id AS DOUBLE) AS v")
       .groupBy("user_id", "ts").agg(org.apache.spark.sql.functions.max("v").as("v"))
-    val viaWindow = AsofJoin.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"),
-      forward = true)
     val viaExec = AsofJoinExec.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"),
       forward = true)
-    assert(canon(viaExec) === canon(viaWindow))
+    assert(canon(viaExec) === bruteAsof(left, right, forward = true))
   }
 
   test("matched row's NULL value stays NULL and columns stay row-consistent") {
@@ -118,7 +180,7 @@ class AsofJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(out.collect().map(_.toSeq).toSeq === Seq(Seq(1L, 1.0)))
   }
 
-  test("skewed keys: one key holding half the rows still agrees with the window form") {
+  test("skewed keys: one key holding half the rows still agrees with the brute force") {
     val left = spark.range(0, 3000).selectExpr(
       "id AS event_id",
       "CASE WHEN id % 2 = 0 THEN 7 ELSE id % 23 END AS user_id", // key 7 ~ 52%
@@ -127,9 +189,8 @@ class AsofJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "CASE WHEN id % 2 = 0 THEN 7 ELSE id % 19 END AS user_id",
       "(xxhash64(id, 13) % 450) AS ts", "CAST(id AS DOUBLE) AS v")
       .groupBy("user_id", "ts").agg(org.apache.spark.sql.functions.max("v").as("v"))
-    val viaWindow = AsofJoin.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"))
     val viaExec = AsofJoinExec.asofLeft(left, right, Seq("user_id"), "ts", Seq("v"))
-    assert(canon(viaExec) === canon(viaWindow))
+    assert(canon(viaExec) === bruteAsof(left, right, forward = false))
   }
 
   test("composite keys and left column order preserved") {

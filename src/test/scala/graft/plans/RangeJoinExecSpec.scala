@@ -4,12 +4,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.ops.RangeJoin
 
-/** The native sort-merge range operator must agree with the bucketized
-  * formulation on every contract point — the bucketized operator is itself
-  * pinned to DuckDB's IEJoin by the oracle gate, so agreement here chains
-  * the physical operator to the same external semantics. */
+/** The active-set sort-merge range operator on every contract point:
+  * hand-written edge cases, plus a random fixture checked against a
+  * driver-side brute force (the oracle gate pins the same semantics to
+  * DuckDB's IEJoin). */
 class RangeJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -52,7 +51,7 @@ class RangeJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(out.toSet === brute)
   }
 
-  test("agrees with the bucketized operator on dense random data, many keys") {
+  test("agrees with a driver-side brute force on dense random data, many keys") {
     val points = spark.range(0, 3000).selectExpr(
       "id AS pid", "id % 23 AS k", "xxhash64(id) % 2000 AS pt")
     val ranges = spark.range(0, 1200).selectExpr(
@@ -62,11 +61,14 @@ class RangeJoinExecSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val native = RangeJoinExec.pointInRange(points, ranges,
       keys = Seq("k"), ptCol = "pt", startCol = "s", endCol = "e", valCols = Seq("rid"))
       .select("pid", "rid")
-    val bucketized = RangeJoin.pointInRange(points, ranges,
-      keys = Seq("k"), ptCol = "pt", startCol = "s", endCol = "e", binWidth = 64L)
-      .select("pid", "rid")
-    assert(TestSpark.rows(native) === TestSpark.rows(bucketized))
-    assert(native.count() > 1000, "fixture produced too few matches to be meaningful")
+    val rs = ranges.as[(Long, Long, Long, Long)].collect().groupBy(_._2)
+    val brute = (for {
+      (pid, k, pt) <- points.as[(Long, Long, Long)].collect().toSeq
+      (rid, _, s, e) <- rs.getOrElse(k, Array.empty[(Long, Long, Long, Long)])
+      if pt >= s && pt <= e
+    } yield Seq[Any](pid, rid)).toSet
+    assert(TestSpark.rows(native) === brute)
+    assert(brute.size > 1000, "fixture produced too few matches to be meaningful")
   }
 
   test("RangeJoinPruning: a select above the node prunes unused left columns and values") {

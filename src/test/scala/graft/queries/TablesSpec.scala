@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ class TablesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("schema memo serves the current dataset state, not a stale schema, after in-JVM regeneration") {
-    val dir = Files.createTempDirectory("graft_tables").toString
+    val dir = TestSpark.tempDir("graft_tables").toString
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
     assert(Tables.read(spark, dir, "t").columns.toSeq === Seq("id", "s"))
     // regenerate with a RENAMED column in the same JVM — a stale memo would

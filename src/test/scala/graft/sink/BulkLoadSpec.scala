@@ -18,7 +18,7 @@ class BulkLoadSpec extends AnyFunSuite {
   }
 
   test("command discovers node_/link_ files sorted and carries the reference flags") {
-    val dir = Files.createTempDirectory("graft_rg")
+    val dir = TestSpark.tempDir("graft_rg")
     touch(dir, "node_customer")
     touch(dir, "link_has_license")
     touch(dir, "node_license")
@@ -33,7 +33,7 @@ class BulkLoadSpec extends AnyFunSuite {
   }
 
   test("run hands the argv to the injected runner and enforces exit code 0") {
-    val dir = Files.createTempDirectory("graft_rg")
+    val dir = TestSpark.tempDir("graft_rg")
     touch(dir, "node_a")
     var seen: Seq[String] = Seq.empty
     val rc = RedisGraphBulkLoad.run(dir.toString, "redis://h:1", "G") { argv =>
@@ -47,7 +47,7 @@ class BulkLoadSpec extends AnyFunSuite {
   }
 
   test("multi-part dirs merge to one CSV; header-only parts are dropped") {
-    val dir = Files.createTempDirectory("graft_rg_parts")
+    val dir = TestSpark.tempDir("graft_rg_parts")
     val sub = Files.createDirectory(dir.resolve("node_pkg"))
     def part(name: String, lines: String*): Unit = {
       Files.write(sub.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
@@ -72,7 +72,7 @@ class BulkLoadSpec extends AnyFunSuite {
   }
 
   test("a dir whose every part is header-only contributes nothing") {
-    val dir = Files.createTempDirectory("graft_rg_empty")
+    val dir = TestSpark.tempDir("graft_rg_empty")
     val sub = Files.createDirectory(dir.resolve("node_ghost"))
     Files.write(sub.resolve("part-00000"),
       "\":ID(ghost)\"".getBytes(StandardCharsets.UTF_8))
@@ -82,7 +82,7 @@ class BulkLoadSpec extends AnyFunSuite {
 
   test("end-to-end: S7 CSV export of a real DataFrame feeds the S11 command") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_rg_e2e")
+    val dir = TestSpark.tempDir("graft_rg_e2e")
     val nodes = Seq(("n1", "alpha", 3L), ("n2", "be\"ta", 5L)).toDF("node_id", "name", "cnt")
     // write under the node_ prefix the loader scan expects
     RedisGraphCsv.writeNodes(nodes, "customer", s"$dir/node_customer")

@@ -64,7 +64,7 @@ class SourceSpec extends AnyFunSuite {
       r.getAs[String]("name") -> ((r.getAs[String]("latest"), r.getAs[String]("etag")))).toMap
 
   test("LocalFsSource lists keys and serves content ETags") {
-    val dir = Files.createTempDirectory("graft_src")
+    val dir = TestSpark.tempDir("graft_src")
     write(dir, "b", """{"v":2}""")
     write(dir, "a", """{"v":1}""")
     val src = LocalFsSource(dir.toString)
@@ -76,12 +76,12 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("incremental crawl: first run fetches all, unchanged keys skip re-download, changes re-crawl") {
-    val dir = Files.createTempDirectory("graft_src")
+    val dir = TestSpark.tempDir("graft_src")
     write(dir, "a", """{"v":"a1"}""")
     write(dir, "b", """{"v":"b1"}""")
     RecordingSource.reset()
     val src = new RecordingSource(LocalFsSource(dir.toString))
-    val cat = new Catalog(spark, Files.createTempDirectory("graft_crawl").toString)
+    val cat = new Catalog(spark, TestSpark.tempDir("graft_crawl").toString)
     val node = new CrawlNode("crawl", src, "latest")
 
     // run 1: both keys are new -> two unconditional 200s
@@ -114,7 +114,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("transient errors retry up to maxAttempts, then fail the run") {
-    val dir = Files.createTempDirectory("graft_src")
+    val dir = TestSpark.tempDir("graft_src")
     write(dir, "x", """{"v":1}""")
 
     FlakySource.reset()

@@ -22,8 +22,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("streaming dedup emits each key once, including duplicates across files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup")
-    graft.TempCleanup.deleteOnExit(dir)
+    val dir = TestSpark.tempDir("graft_sdedup")
     def file(n: Int, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/b$n.tmp")
@@ -45,12 +44,12 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("streaming sessionizer carries open sessions across micro-batch runs via state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sess_ck").toString
+    val dir = TestSpark.tempDir("graft_sess").toString
+    val ckpt = TestSpark.tempDir("graft_sess_ck").toString
     val min = 60L * 1000000L
 
     // file sink (memory sink cannot recover from a checkpoint across runs)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sess_out").toString
+    val outDir = TestSpark.tempDir("graft_sess_out").toString
     def runBatch(): Unit = {
       val q = Sessionize.streamingSessions(
         spark.readStream.schema("user_id LONG, event_id LONG, ts_micros LONG")
@@ -71,7 +70,7 @@ class StreamsSpec extends AnyFunSuite {
     // the file source lists plain files in the watched dir — drop each batch
     // in as a single flat parquet file
     def addFile(n: Int, rows: Seq[Sessionize.Event]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sess_w").toString
+      val tmp = TestSpark.tempDir("graft_sess_w").toString
       rows.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dir, s"b$n.parquet"))
@@ -90,7 +89,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("session_window stream: gap merges, exact-gap boundary still merges (inclusive end)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sw").toString
+    val dir = TestSpark.tempDir("graft_sw").toString
     val min = 60L * 1000000L
     val t0 = 86400L * 1000000L // clear of the initial watermark
     Seq(
@@ -113,7 +112,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join matches at both inclusive window bounds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sjoin").toString
+    val dir = TestSpark.tempDir("graft_sjoin").toString
     val sec = 1000000L
     // base offset keeps event times clear of the initial watermark (epoch 0):
     // a row AT the watermark is dropped as late by the join's state filter
@@ -132,7 +131,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join leaves no conf residue, whether the no-data toggle was set or unset") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sjoin_conf").toString
+    val dir = TestSpark.tempDir("graft_sjoin_conf").toString
     val t0 = 86400L * 1000000L
     Seq((10L, t0, 1L, "view", 0.0, "{}"), (11L, t0, 1L, "click", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -152,8 +151,7 @@ class StreamsSpec extends AnyFunSuite {
   test("a drain whose stream fails throws and leaves no temp view and no conf change") {
     // `ts` written as STRING against eventsSchema's LONG: the stream starts,
     // registers its memory-sink view, then fails reading the file
-    val dir = java.nio.file.Files.createTempDirectory("graft_sfail")
-    graft.TempCleanup.deleteOnExit(dir)
+    val dir = TestSpark.tempDir("graft_sfail")
     Seq((10L, "86400000000", 1L, "view", 0.0, "{}"), (11L, "86400000000", 1L, "click", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(dir.toString)
@@ -171,7 +169,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("streamed windowed aggregation equals the batch equivalent on the same files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = TestSpark.tempDir("graft_stream").toString
     // two hours of events, ts in µs (as the driver's events table stores them)
     def us(h: Int, m: Int): Long = (h * 3600L + m * 60L) * 1000000L
     Seq(
@@ -259,8 +257,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("windowed agg state merges across a 3-micro-batch continuous feed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_feed_win")
-    graft.TempCleanup.deleteOnExit(dir)
+    val dir = TestSpark.tempDir("graft_feed_win")
     val fed = runThreeBatches(dir, Streams.windowedAggPlan)
     // reference: the identical backlog drained in ONE AvailableNow pass
     val oneShot = Streams.windowedEventCounts(spark, dir.toString)
@@ -273,8 +270,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("session_window state merges across a 3-micro-batch continuous feed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_feed_sess")
-    graft.TempCleanup.deleteOnExit(dir)
+    val dir = TestSpark.tempDir("graft_feed_sess")
     val fed = runThreeBatches(dir, Streams.sessionWindowPlan(_, gapMinutes = 45))
     val oneShot = Streams.sessionWindowCounts(spark, dir.toString, gapMinutes = 45)
     assert(TestSpark.rows(fed) === TestSpark.rows(oneShot))
@@ -288,8 +284,7 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("writeTimeOrderedFeed replays files in event-time order (mtime = path = ts order)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_feed_order")
-    graft.TempCleanup.deleteOnExit(dir)
+    val dir = TestSpark.tempDir("graft_feed_order")
     val path = s"$dir/events"
     // deliberately scrambled input partitioning: the writer must range-sort it
     val events = spark.range(1000).select(

@@ -117,22 +117,20 @@ def table(merged):
     d = merged["scale_dedup"]
     j = merged["scale_joins"]
     a = merged["scale_ann"]
+    # records from before the native operators became the only as-of and
+    # range joins time them as the asof_exec / range_exec phases
+    asof = "asof_exec" if "asof_exec_sec" in j else "asof"
+    rng = "range_exec" if "range_exec_sec" in j else "range"
     rows = [
         ("MinHash+LSH cascade", f"{d['docs']:,} docs",
          f"pairs {d['pairs_sec']:.1f}s, CC {d['cc_sec']:.1f}s",
          f"{d['straggler_ratio']:.2f}"),
         ("As-of join", f"{j['events']:,} events / {j['users']:,} users (hot user ~1%)",
-         f"{j['asof_sec']:.1f}s ({j['asof_rows']:,} rows)",
-         f"{j['stragglers']['asof']:.2f}"),
-        ("As-of join, native AsofJoinExec", "same batch",
-         f"{j.get('asof_exec_sec', float('nan')):.1f}s (rows identical)",
-         f"{j['stragglers'].get('asof_exec', float('nan')):.2f}"),
+         f"{j[asof + '_sec']:.1f}s ({j['asof_rows']:,} rows)",
+         f"{j['stragglers'][asof]:.2f}"),
         ("Range join (60s windows)", f"{j['events']:,} events",
-         f"{j['range_sec']:.1f}s ({j['range_rows']:,} rows)",
-         f"{j['stragglers']['range']:.2f}"),
-        ("Range join, native RangeJoinExec", "same batch",
-         f"{j.get('range_exec_sec', float('nan')):.1f}s (rows identical)",
-         f"{j['stragglers'].get('range_exec', float('nan')):.2f}"),
+         f"{j[rng + '_sec']:.1f}s ({j['range_rows']:,} rows)",
+         f"{j['stragglers'][rng]:.2f}"),
         ("Top-5/user: window vs top_k agg", f"{j['events']:,} events",
          f"{j.get('topk_window_sec', float('nan')):.1f}s / "
          f"{j.get('topk_agg_sec', float('nan')):.1f}s ({j.get('topk_rows', 0):,} rows)",
