@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -13,9 +14,15 @@ import graft.expr.{AffineGapSimilarity, FreqSketch, KmvMinHashes, LongDotProduct
   * [[graft.Harness.session]] does. The expressions' DataFrame API works
   * without registration via the Column wrappers; both joins
   * ([[graft.plans.AsofJoinExec]], [[graft.plans.RangeJoinExec]]) do not:
-  * their logical nodes need the strategies to be plannable. */
+  * their logical nodes need the strategies to be plannable.
+  *
+  * Installing the extensions also turns off Spark 4's per-session artifact
+  * isolation for the whole context ([[GraftExtensions.isolationDefault]]),
+  * so a new session (one per DAG node in [[graft.engine.SqlNode]]) reuses
+  * the context's generated classes instead of compiling them again. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.isolationDefault(SparkEnv.get.conf)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinPruning)
@@ -105,4 +112,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           children(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()
       }))
   }
+}
+
+object GraftExtensions {
+  /** Default `spark.sql.artifact.isolation.enabled` to `false` on the
+    * context conf `conf`. Spark applies session extensions after the
+    * SparkContext exists and before the first session clones the context
+    * conf, so every session of the context, `newSession()` children
+    * included, inherits the default. Isolation gives each session its own
+    * executor classloader for artifacts added through Spark Connect; the
+    * engine adds none, so it only made each session recompile its generated
+    * code. A host that needs isolation (a Spark Connect server) sets the key
+    * itself, and its value is kept. Spark reads the key once per session,
+    * when the session first runs anything, so it is set here per context
+    * rather than per session. */
+  private[graft] def isolationDefault(conf: SparkConf): Unit =
+    conf.setIfMissing("spark.sql.artifact.isolation.enabled", "false")
 }

@@ -105,7 +105,7 @@ object SqlNode {
     * is linear. 64 MB parquet ≈ a few hundred MB hashed — routine broadcast
     * traffic on a production cluster, and the conf is set on this child
     * session only, never the caller's. */
-  private[engine] def nodeSession(cat: Catalog): SparkSession = {
+  private[graft] def nodeSession(cat: Catalog): SparkSession = {
     val s = cat.spark.newSession()
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcastThreshold)
     s

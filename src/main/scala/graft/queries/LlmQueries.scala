@@ -33,16 +33,16 @@ object LlmQueries {
 
   /** The untrained PQ codebook (8 subspaces × 16 first-id codes) the flat-PQ
     * and IVF×PQ queries share, from the [[AnnIndex]] cache. */
-  private def untrainedPqCodebook(dir: String, emb: DataFrame): Array[Array[Array[Long]]] =
-    AnnIndex.codebook(AnnIndex.key(dir, "pq_cb"))(
+  private def untrainedPqCodebook(s: SparkSession, dir: String, emb: DataFrame): Array[Array[Array[Long]]] =
+    AnnIndex.codebook(s, dir, "pq_cb")(
       Similarity.pqCodebook(emb, "vec_id", "embedding", m = 8, nCodes = 16))
 
   /** Flat-PQ top-5 for the first 10 vectors over the cached untrained
     * codebook and codes; `rerank` as in [[Similarity.pqTopK]]. */
   private def untrainedPq(s: SparkSession, dir: String, rerank: Int): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    val cb = untrainedPqCodebook(dir, emb)
-    val enc = AnnIndex.table(s, AnnIndex.key(dir, "pq_enc"))(
+    val cb = untrainedPqCodebook(s, dir, emb)
+    val enc = AnnIndex.table(s, dir, "pq_enc")(
       Similarity.pqEncode(emb, "vec_id", "embedding", cb, "match_id"))
     Similarity.pqTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding", cb, enc,
       k = 5, rerank = rerank)
@@ -73,41 +73,38 @@ object LlmQueries {
       new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
     private val codebooks =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Long]]]]()
-    /** Cache key: artifact name + the sf dir + an INPUT FINGERPRINT of the
-      * embeddings table every ANN artifact derives from (each data file's
-      * name, length, mtime) — regenerating the parquet under `dir` within
-      * the JVM changes the fingerprint and misses the cache instead of
-      * silently serving an index built over the old data. */
-    def key(dir: String, name: String): String = {
-      val src = new java.io.File(s"$dir/embeddings.parquet")
-      val files =
-        if (src.isFile) Array(src)
-        else Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      val fp = files.sortBy(_.getName)
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-      name + "_" + java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(dir).toLong << 32 |
-          (scala.util.hashing.MurmurHash3.stringHash(fp).toLong & 0xffffffffL))
-    }
-    def table(s: SparkSession, k: String)(build: => DataFrame): DataFrame = {
-      // schema memoized WITH the path (same rule as Tables' memo): a bare
-      // s.read.parquet would run a one-task footer-inference job in every
-      // fresh session that touches the artifact — pure per-query floor for
-      // the whole ANN family under the bench's session isolation
-      val (path, schema) = tables.computeIfAbsent(k, _ => {
-        val p = s"$root/$k.parquet"
-        build.write.mode("overwrite").parquet(p)
-        // memoize the INFERRED read schema (one footer job, at build time
-        // only) — the written df.schema can differ in nullability from what
-        // a parquet read reports, and a mismatched user schema would
-        // silently change downstream plan shapes
-        (p, s.read.parquet(p).schema)
-      })
-      s.read.schema(schema).parquet(path)
-    }
-    def codebook(k: String)(build: => Array[Array[Array[Long]]]): Array[Array[Array[Long]]] =
-      codebooks.computeIfAbsent(k, _ => build)
+    /** Cache key: artifact name + the sf dir + the [[Tables.fingerprint]]
+      * of the embeddings table every ANN artifact derives from, so
+      * regenerating the parquet under `dir` within the JVM misses the cache
+      * instead of silently serving an index built over the old data. None
+      * when the table cannot be statted: the artifact is then built per
+      * query and never cached. */
+    private def key(s: SparkSession, dir: String, name: String): Option[String] =
+      Tables.fingerprint(s, s"$dir/embeddings.parquet").map { fp =>
+        name + "_" + java.lang.Long.toHexString(
+          scala.util.hashing.MurmurHash3.stringHash(dir).toLong << 32 |
+            (scala.util.hashing.MurmurHash3.stringHash(fp).toLong & 0xffffffffL))
+      }
+    def table(s: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame =
+      key(s, dir, name).fold(build) { k =>
+        // schema memoized WITH the path (same rule as Tables' memo): a bare
+        // s.read.parquet would run a one-task footer-inference job in every
+        // fresh session that touches the artifact — pure per-query floor for
+        // the whole ANN family under the bench's session isolation
+        val (path, schema) = tables.computeIfAbsent(k, _ => {
+          val p = s"$root/$k.parquet"
+          build.write.mode("overwrite").parquet(p)
+          // memoize the INFERRED read schema (one footer job, at build time
+          // only) — the written df.schema can differ in nullability from what
+          // a parquet read reports, and a mismatched user schema would
+          // silently change downstream plan shapes
+          (p, s.read.parquet(p).schema)
+        })
+        s.read.schema(schema).parquet(path)
+      }
+    def codebook(s: SparkSession, dir: String, name: String)(
+        build: => Array[Array[Array[Long]]]): Array[Array[Array[Long]]] =
+      key(s, dir, name).fold(build)(codebooks.computeIfAbsent(_, _ => build))
   }
 
   // ---- shared oracle fragments ----
@@ -590,9 +587,9 @@ object LlmQueries {
     // once-per-snapshot; the measured query is the within-cluster prune.
     "q_dedup_semantic" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val seeds = AnnIndex.table(s, AnnIndex.key(dir, "ivfk_seeds"))(
+      val seeds = AnnIndex.table(s, dir, "ivfk_seeds")(
         Similarity.kmeansSeeds(emb, "vec_id", "embedding", nLists = 16, iters = 2))
-      val lists = AnnIndex.table(s, AnnIndex.key(dir, "ivfk_lists"))(
+      val lists = AnnIndex.table(s, dir, "ivfk_lists")(
         Similarity.assignToLists(emb, "vec_id", "embedding", seeds, "match_id"))
       Dedup.semanticPrune(emb, "vec_id", "embedding", nClusters = 16,
         trainIters = 2, threshold = 0.35, seedTable = Some(seeds),
@@ -637,9 +634,9 @@ object LlmQueries {
       // trained-IVF lifecycle: the Lloyd-refined seeds and the inverted
       // lists are once-per-snapshot index artifacts (built on first use in
       // this JVM — see AnnIndex); the measured query is the per-batch probe
-      val seeds = AnnIndex.table(s, AnnIndex.key(dir, "ivfk_seeds"))(
+      val seeds = AnnIndex.table(s, dir, "ivfk_seeds")(
         Similarity.kmeansSeeds(emb, "vec_id", "embedding", nLists = 16, iters = 2))
-      val lists = AnnIndex.table(s, AnnIndex.key(dir, "ivfk_lists"))(
+      val lists = AnnIndex.table(s, dir, "ivfk_lists")(
         Similarity.assignToLists(emb, "vec_id", "embedding", seeds, "match_id"))
       Similarity.ivfTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         seeds, lists, k = 5)
@@ -660,9 +657,9 @@ object LlmQueries {
     // q_ann_pq — only the codebook differs.
     "q_ann_pq_trained" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cb = AnnIndex.codebook(AnnIndex.key(dir, "pq_cb_t2"))(
+      val cb = AnnIndex.codebook(s, dir, "pq_cb_t2")(
         Similarity.pqCodebookTrained(emb, "vec_id", "embedding", m = 8, nCodes = 16, iters = 2))
-      val enc = AnnIndex.table(s, AnnIndex.key(dir, "pq_enc_t2"))(
+      val enc = AnnIndex.table(s, dir, "pq_enc_t2")(
         Similarity.pqEncode(emb, "vec_id", "embedding", cb, "match_id"))
       Similarity.pqTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding", cb, enc, k = 5)
     }),
@@ -680,8 +677,8 @@ object LlmQueries {
       // the codebook and the two-level (list_id, codes) table are the
       // once-per-snapshot artifacts and come from the AnnIndex cache
       val seeds = Similarity.untrainedSeeds(emb, "vec_id", "embedding", 16)
-      val cb = untrainedPqCodebook(dir, emb)
-      val enc = AnnIndex.table(s, AnnIndex.key(dir, "ivfpq_enc"))(
+      val cb = untrainedPqCodebook(s, dir, emb)
+      val enc = AnnIndex.table(s, dir, "ivfpq_enc")(
         Similarity.ivfPqEncode(emb, "vec_id", "embedding", seeds, cb, "match_id"))
       Similarity.ivfPqTopK(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
         seeds, cb, enc, k = 5, nProbe = 4, rerank = 50)
@@ -703,9 +700,9 @@ object LlmQueries {
       // corpus (vec_ids 1..21 minus the multiples of 4 held out as the
       // future batch) and the existing corpus' list assignments — stored
       // index artifacts with the usual AnnIndex lifecycle
-      val storedSeeds = AnnIndex.table(s, AnnIndex.key(dir, "inc_seeds"))(
+      val storedSeeds = AnnIndex.table(s, dir, "inc_seeds")(
         Similarity.untrainedSeeds(existing, "vec_id", "embedding", 22))
-      val storedLists = AnnIndex.table(s, AnnIndex.key(dir, "inc_lists"))(
+      val storedLists = AnnIndex.table(s, dir, "inc_lists")(
         Similarity.assignToLists(existing, "vec_id", "embedding",
           storedSeeds, "match_id"))
       // the maintenance work: assign ONLY the new batch against the stored

@@ -18,34 +18,38 @@ object Tables {
 
   private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** Memo key fingerprints the dataset's current state (same defense as
-    * LlmQueries' AnnIndex key): a table regenerated in-JVM with a changed
-    * schema must MISS — serving the old schema to spark.read.schema would
-    * silently return NULL for the renamed columns, not an error. For the
-    * read-only testdata the stat costs ~nothing and the key never changes.
+  /** The current state of the dataset at `path`, a single file or a
+    * directory of part files: its max mtime (directory included), data-file
+    * count and total bytes. Both process-wide memos key on it, this schema
+    * memo and LlmQueries' ANN index cache, so a dataset regenerated in-JVM
+    * misses instead of being served state derived from the old data (for
+    * the schema memo, NULLs for renamed columns rather than an error).
     *
-    * The fingerprint goes through the Hadoop FileSystem API, not
-    * java.io.File: for hdfs://, s3a://, or any custom-scheme path a local
-    * File stat silently returns null/0 and the key would collapse to a
-    * constant — the exact staleness this key exists to prevent. Stat
-    * covers the directory and every part file (max mtime + count + total
-    * bytes). If the store can't be statted at all, return None and skip
-    * memoization entirely — correctness over the saved footer job. */
-  private def key(s: SparkSession, path: String): Option[String] =
+    * The stat goes through the Hadoop FileSystem API, not java.io.File:
+    * for hdfs://, s3a://, or any custom-scheme path a local File stat
+    * silently returns null/0 and the key would collapse to a constant. If
+    * the store can't be statted at all, return None, and the caller skips
+    * memoization entirely — correctness over the saved work. */
+  private[queries] def fingerprint(s: SparkSession, path: String): Option[String] =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val parts = fs.listStatus(p).filter(_.getPath.getName.startsWith("part-"))
-      val mod = parts.map(_.getModificationTime)
-        .foldLeft(fs.getFileStatus(p).getModificationTime)(math.max)
-      Some(s"$path@$mod#${parts.length}:${parts.map(_.getLen).sum}")
+      val root = fs.getFileStatus(p)
+      val data =
+        if (root.isFile) Array(root)
+        else fs.listStatus(p).filter { f =>
+          val n = f.getPath.getName
+          f.isFile && !n.startsWith(".") && !n.startsWith("_")
+        }
+      val mod = data.map(_.getModificationTime).foldLeft(root.getModificationTime)(math.max)
+      Some(s"$path@$mod#${data.length}:${data.map(_.getLen).sum}")
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Read `dir/name.parquet` with the memoized schema (inferring and
     * memoizing on first touch). */
   def read(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    key(s, path) match {
+    fingerprint(s, path) match {
       case Some(k) =>
         val sch = schemas.computeIfAbsent(k, _ => s.read.parquet(path).schema)
         s.read.schema(sch).parquet(path)

@@ -21,6 +21,24 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.sparkContext.master === "local[4]")
   }
 
+  test("artifact isolation is off in the harness session and every child session") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val cat = new graft.engine.Catalog(spark, TestSpark.tempDir("graft_isolation").toString)
+    Seq(spark, spark.newSession(), graft.engine.SqlNode.nodeSession(cat)).foreach { s =>
+      assert(s.conf.get(key) === "false")
+    }
+  }
+
+  test("the isolation default yields to a host's explicit value") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val unset = new org.apache.spark.SparkConf(false)
+    GraftExtensions.isolationDefault(unset)
+    assert(unset.get(key) === "false")
+    val host = new org.apache.spark.SparkConf(false).set(key, "true")
+    GraftExtensions.isolationDefault(host)
+    assert(host.get(key) === "true")
+  }
+
   test("GraftExtensions SQL functions resolve in a harness session") {
     val r = spark.sql("SELECT sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L))").head()
     assert(r.getAs[Number](0).longValue === 2L)

@@ -9,8 +9,10 @@ compares: columns sorted by name, rows sorted, values compared exactly
 Usage: python3 tools/check.py [sfdir] [--only q_name,...] [--bench-sql]
 
 graft.Verify runs on SPARK_GRAFT_CPUS cores when it is set, else on 8.
+Each run starts from an empty output dir, so every result it compares was
+written by this run.
 """
-import sys, os, json, glob, subprocess
+import sys, os, json, glob, shutil, subprocess
 
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
 ONLY = None
@@ -30,6 +32,9 @@ def classpath():
     return ":".join([classes] + jars)
 
 def run_verify(only=None):
+    # a result left by an earlier run would stand in for one this run failed
+    # to write, and a deleted query would still be reported
+    shutil.rmtree(OUT, ignore_errors=True)
     add_opens = []
     for p in ["java.base/java.lang","java.base/java.lang.invoke","java.base/java.lang.reflect",
               "java.base/java.io","java.base/java.net","java.base/java.nio","java.base/java.util",
