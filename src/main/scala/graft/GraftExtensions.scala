@@ -16,13 +16,14 @@ import graft.expr.{AffineGapSimilarity, FreqSketch, KmvMinHashes, LongDotProduct
   * ([[graft.plans.AsofJoinExec]], [[graft.plans.RangeJoinExec]]) do not:
   * their logical nodes need the strategies to be plannable.
   *
-  * Installing the extensions also turns off Spark 4's per-session artifact
-  * isolation for the whole context ([[GraftExtensions.isolationDefault]]),
-  * so a new session (one per DAG node in [[graft.engine.SqlNode]]) reuses
-  * the context's generated classes instead of compiling them again. */
+  * Installing the extensions also sets two context defaults
+  * ([[GraftExtensions.contextDefaults]]): artifact isolation off, so a new
+  * session (one per DAG node in [[graft.engine.SqlNode]]) reuses the
+  * context's generated classes, and a codegen cache sized to the engine's
+  * working set, so a warm query finds its generated classes compiled. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.isolationDefault(SparkEnv.get.conf)
+    GraftExtensions.contextDefaults(SparkEnv.get.conf)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinPruning)
@@ -115,17 +116,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Default `spark.sql.artifact.isolation.enabled` to `false` on the
-    * context conf `conf`. Spark applies session extensions after the
-    * SparkContext exists and before the first session clones the context
-    * conf, so every session of the context, `newSession()` children
-    * included, inherits the default. Isolation gives each session its own
-    * executor classloader for artifacts added through Spark Connect; the
-    * engine adds none, so it only made each session recompile its generated
-    * code. A host that needs isolation (a Spark Connect server) sets the key
-    * itself, and its value is kept. Spark reads the key once per session,
-    * when the session first runs anything, so it is set here per context
-    * rather than per session. */
-  private[graft] def isolationDefault(conf: SparkConf): Unit =
-    conf.setIfMissing("spark.sql.artifact.isolation.enabled", "false")
+  /** The context defaults [[contextDefaults]] sets, key to value.
+    *
+    *  - `spark.sql.artifact.isolation.enabled=false`: isolation gives each
+    *    session its own executor classloader for artifacts added through
+    *    Spark Connect; the engine adds none, so it only made each session
+    *    recompile its generated code. Spark reads the key once per session,
+    *    when the session first runs anything, so it is set per context. A
+    *    host that needs isolation (a Spark Connect server) sets it itself.
+    *  - `spark.sql.codegen.cache.maxEntries=2000`: the entries of Spark's
+    *    JVM-wide LRU cache of compiled generated classes (default 100). One
+    *    pass over the 106 `SparkEntry` queries, each on a new session,
+    *    compiles 1,103 distinct classes (sf0.01, `local[4]`, counted with
+    *    `CodegenMetrics`), so at 100 entries every warm pass missed and
+    *    recompiled about 1,300 of them, and at 2000 it recompiles 13-24.
+    *    2000 is that working set with about 1.8x headroom. The key is static:
+    *    Spark reads it once per JVM, when `CodeGenerator` first initializes,
+    *    so the default applies only in a JVM whose first generated code is
+    *    compiled in a session of a graft context. */
+  private[graft] val defaults: Seq[(String, String)] = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "2000")
+
+  /** Sets each of [[defaults]] on the context conf `conf` unless the host
+    * has set it, whose value is then kept. Spark applies session extensions
+    * after the SparkContext exists and before the first session clones the
+    * context conf, so every session of the context, `newSession()` children
+    * included, inherits them. */
+  private[graft] def contextDefaults(conf: SparkConf): Unit =
+    defaults.foreach { case (k, v) => conf.setIfMissing(k, v) }
 }

@@ -18,6 +18,16 @@ object GraphQueries {
   private def v(s: SparkSession, dir: String, name: String): Unit =
     Tables.view(s, dir, name)
 
+  // The SQL-text queries register their views in a child session of the
+  // caller's, so they leave its temp views as they found them; the plans
+  // they return are bound to the child.
+  private def linkSession(s: SparkSession, dir: String): SparkSession = {
+    val c = s.newSession()
+    v(c, dir, "orders"); v(c, dir, "customer")
+    c.sql(licenseNodeSql).createOrReplaceTempView("license_node")
+    c
+  }
+
   // node extraction (license-node shape, reference examples/meta.py:102-120)
   private val licenseNodeSql =
     """SELECT DISTINCT md5(license) AS node_id, license, cnt FROM (
@@ -94,15 +104,12 @@ object GraphQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_graph_nodes" -> ((s, dir) => {
-      v(s, dir, "orders")
-      s.sql(licenseNodeSql)
+      val c = s.newSession()
+      v(c, dir, "orders")
+      c.sql(licenseNodeSql)
     }),
 
-    "q_graph_links" -> ((s, dir) => {
-      v(s, dir, "orders"); v(s, dir, "customer")
-      s.sql(licenseNodeSql).createOrReplaceTempView("license_node")
-      s.sql(orderLinkSql)
-    }),
+    "q_graph_links" -> ((s, dir) => linkSession(s, dir).sql(orderLinkSql)),
 
     // The grouping chain as the JOIN it algebraically is. The generated text
     // (pop = DISTINCT ids of buyer ∪ account, then pop ⟕ buyer ⟕ account) is
@@ -185,10 +192,8 @@ object GraphQueries {
 
     // J8: link-id containment — violations table, empty = valid
     "q_graph_validate" -> ((s, dir) => {
-      v(s, dir, "orders"); v(s, dir, "customer")
-      s.sql(licenseNodeSql).createOrReplaceTempView("license_node")
-      val links = s.sql(orderLinkSql)
-      Validate.violations(links, s.sql(licenseNodeSql), "to_id")
+      val c = linkSession(s, dir)
+      Validate.violations(c.sql(orderLinkSql), c.sql(licenseNodeSql), "to_id")
     }),
 
     // Fixed-point integer PageRank (10 damped rounds) over the

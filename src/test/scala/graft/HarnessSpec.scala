@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,22 +23,49 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.sparkContext.master === "local[4]")
   }
 
+  /** The harness session, a `newSession()` child and a node-session child:
+    * each must see the context defaults of [[GraftExtensions]]. */
+  private def contextSessions: Seq[SparkSession] = {
+    val cat = new graft.engine.Catalog(spark, TestSpark.tempDir("graft_ctx_defaults").toString)
+    Seq(spark, spark.newSession(), graft.engine.SqlNode.nodeSession(cat))
+  }
+
+  /** `key`'s context default is `default`, and a host's `hostValue` wins. */
+  private def yieldsToHost(key: String, default: String, hostValue: String): Unit = {
+    val unset = new org.apache.spark.SparkConf(false)
+    GraftExtensions.contextDefaults(unset)
+    assert(unset.get(key) === default)
+    val host = new org.apache.spark.SparkConf(false).set(key, hostValue)
+    GraftExtensions.contextDefaults(host)
+    assert(host.get(key) === hostValue)
+  }
+
   test("artifact isolation is off in the harness session and every child session") {
-    val key = "spark.sql.artifact.isolation.enabled"
-    val cat = new graft.engine.Catalog(spark, TestSpark.tempDir("graft_isolation").toString)
-    Seq(spark, spark.newSession(), graft.engine.SqlNode.nodeSession(cat)).foreach { s =>
-      assert(s.conf.get(key) === "false")
-    }
+    contextSessions.foreach(s => assert(s.conf.get("spark.sql.artifact.isolation.enabled") === "false"))
   }
 
   test("the isolation default yields to a host's explicit value") {
-    val key = "spark.sql.artifact.isolation.enabled"
-    val unset = new org.apache.spark.SparkConf(false)
-    GraftExtensions.isolationDefault(unset)
-    assert(unset.get(key) === "false")
-    val host = new org.apache.spark.SparkConf(false).set(key, "true")
-    GraftExtensions.isolationDefault(host)
-    assert(host.get(key) === "true")
+    yieldsToHost("spark.sql.artifact.isolation.enabled", "false", "true")
+  }
+
+  test("the codegen cache is sized in the harness session and every child session") {
+    contextSessions.foreach(s => assert(s.conf.get("spark.sql.codegen.cache.maxEntries") === "2000"))
+  }
+
+  test("the codegen cache default yields to a host's explicit value") {
+    yieldsToHost("spark.sql.codegen.cache.maxEntries", "2000", "100")
+  }
+
+  test("150 plans re-run in a new session compile no generated class") {
+    // more distinct generated classes than Spark's default 100-entry cache
+    // holds, fewer than the engine's default: a warm re-run must hit them all
+    val plans = (0 until 150).map(i => (s: SparkSession) => s.range(1).selectExpr(s"id + $i").collect())
+    val cold = spark.newSession()
+    plans.foreach(_(cold))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val warm = spark.newSession()
+    plans.foreach(_(warm))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0L)
   }
 
   test("GraftExtensions SQL functions resolve in a harness session") {
