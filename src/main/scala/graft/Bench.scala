@@ -156,7 +156,10 @@ object Bench {
       spark
     }
 
-    // optional comma-separated filter for one-off investigations
+    // optional comma-separated filter for one-off investigations. Queries
+    // run in name order and the earlier ones warm the JIT and the codegen
+    // cache for the later ones, so a query's time depends on the rest of the
+    // set: an A/B runs each touched query alone (SPARK_GRAFT_ONLY=q_name)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

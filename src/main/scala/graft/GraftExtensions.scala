@@ -65,7 +65,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Spark's own Bloom-filter sketch pair, internal to its runtime-filter
     // optimization, surfaced as engine functions so the SAME mechanism can
     // gate explicit semi/anti-join patterns (see
-    // TextAnalysis.contaminationFlagsBloom): bloom_agg builds the filter
+    // TextAnalysis.contaminationFlags): bloom_agg builds the filter
     // binary over xxhash64(value) longs, bloom_contains probes it.
     ext.injectFunction((
       new FunctionIdentifier("bloom_agg"),

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Measured:
   *  - `train_postings` / `gated_postings` — training gram postings total vs
   *    surviving the narrow `bloom_contains` prefilter: `postings_pruned_frac`
-  *    is THE claim under test (TextAnalysis.contaminationFlagsBloom docs say
+  *    is THE claim under test (TextAnalysis.contaminationFlags docs say
   *    "for a benchmark measured in MB against a corpus measured in TB that is
   *    a >99% shuffle reduction");
   *  - `bloom_sec` — the production operator ([[graft.llm.TextAnalysis.contaminationFlags]],

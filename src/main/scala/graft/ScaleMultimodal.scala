@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Dataset
 
 import graft.llm.{GifCodec, JpegCodec, Multimodal, WavCodec}
-import graft.llm.Multimodal.MediaRow
+import graft.llm.Multimodal.{Decoded, MediaRow}
 
 /** Off-toy scale proof for the multimodal codec tier: the oracle queries
   * prove CORRECTNESS on ~60k tiny images; this measures decode THROUGHPUT
@@ -31,17 +31,20 @@ object ScaleMultimodal {
 
     // --- corpora: 64x64 payloads with per-doc content, generated once ------
     val ids = spark.range(nImages).as[Long]
+    def pixels(format: String, decode: Array[Byte] => Option[Decoded]): Dataset[MediaRow] => Dataset[Long] =
+      ds => Multimodal.extractPixels(ds, format, decode)
+        .map(m => { require(m.format == format); m.pix_checksum })
     val formats = Seq[(String, Long => Array[Byte], Dataset[MediaRow] => Dataset[Long])](
       ("png", d => Multimodal.PngCodec.encode(64, 64, 3,
           (x, y, c) => ((d + x * (c + 3) + y * (7 - c)) % 256).toInt,
           y => ((d + y) % 5).toInt),
-        ds => Multimodal.extractPngPixels(ds).map(m => { require(m.format == "png"); m.pix_checksum })),
+        pixels("png", Multimodal.PngCodec.decodePixels)),
       ("gif", { val pal = Array.tabulate(64)(i => (i * 4, 255 - i * 4, (i * 37) % 256))
           d => GifCodec.encode(64, 64, pal,
             (x, y) => ((d + x * 3 + y * 5 + x * y) % 64).toInt, interlaced = d % 2 == 1) },
-        ds => Multimodal.extractGifPixels(ds).map(m => { require(m.format == "gif"); m.pix_checksum })),
+        pixels("gif", GifCodec.decodePixels)),
       ("jpeg", d => JpegCodec.encode(64, 64, 3, (x, y, c) => ((d + x * 7 + y * 13 + c * 41) % 256).toInt),
-        ds => Multimodal.extractJpegPixels(ds).map(m => { require(m.format == "jpeg"); m.pix_checksum })),
+        pixels("jpeg", JpegCodec.decodePixels)),
       ("wav", d => WavCodec.encode(16000, 2, 16, 16000,
           (f, c) => (((d * 31 + f * 7 + c * 13) % 65536) - 32768).toInt),
         ds => Multimodal.extractAudio(ds).map(m => { require(m.format == "wav"); m.pcm_checksum })))

@@ -1,5 +1,8 @@
 package graft.llm
 
+import ByteReader.{le16, u8}
+import Multimodal.Decoded
+
 /** GIF pixel codec with no codec library — GIF's only compression is LZW
   * (GIF89a spec, appendix F), which is dictionary arithmetic the JVM needs
   * no help with, and unlike JPEG it is LOSSLESS: a round-trip is bit-exact
@@ -16,12 +19,6 @@ package graft.llm
   * table, out-of-range palette index — returns None, never throws.
   */
 object GifCodec {
-
-  /** Decoded pixels: dims + RGB channel count + the same order-sensitive
-    * checksum as the other walkers — Σ (k+1)·(R + 2G + 3B) over top-down
-    * row-major pixel index k (interlaced images are de-interlaced first,
-    * so the checksum is over PRESENTATION order). */
-  final case class Decoded(width: Int, height: Int, channels: Int, checksum: Long)
 
   // ---- encoder -------------------------------------------------------------
 
@@ -131,12 +128,10 @@ object GifCodec {
 
   // ---- decoder -------------------------------------------------------------
 
-  private def u8(p: Array[Byte], i: Int): Int = p(i) & 0xff
-  private def le16(p: Array[Byte], i: Int): Int = u8(p, i) | (u8(p, i + 1) << 8)
-
   /** Full GIF pixel decode of the first image frame: LZW decompression
     * (growing widths, KwKwK case, CLEAR resync), palette mapping,
-    * de-interlacing. None for anything malformed or truncated. */
+    * de-interlacing — the [[Decoded]] checksum is over PRESENTATION row
+    * order, 3 RGB channels. None for anything malformed or truncated. */
   def decodePixels(p: Array[Byte]): Option[Decoded] = {
     try decodeImpl(p)
     catch { case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None }

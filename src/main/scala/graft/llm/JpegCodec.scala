@@ -1,5 +1,8 @@
 package graft.llm
 
+import ByteReader.be16
+import Multimodal.Decoded
+
 /** Baseline JPEG pixel codec with no codec library — the JVM ships everything
   * a baseline (SOF0) JPEG needs: it is canonical Huffman coding + integer
   * quantization + an 8x8 DCT, all plain arithmetic. This closes the last
@@ -411,16 +414,13 @@ object JpegCodec {
 
   // ---- decoder -------------------------------------------------------------
 
-  /** Decoded pixels: dims + channels + the same order-sensitive checksum as
-    * the BMP/PNG walkers — Σ (k+1)·Σ_c (c+1)·P_c over top-down row-major
-    * pixel index k, cropped to the true image dims (padding excluded). */
-  final case class Decoded(width: Int, height: Int, channels: Int, checksum: Long)
-
   private val Soi = Array(0xff.toByte, 0xd8.toByte)
 
   /** Full baseline JPEG pixel decode: marker walk, canonical Huffman decode,
-    * dequant, IDCT, YCbCr→RGB. None (never throws) for anything malformed,
-    * truncated, or outside the baseline 8-bit 4:4:4 scope. */
+    * dequant, IDCT, YCbCr→RGB; the [[Decoded]] checksum is cropped to the
+    * true image dims (block padding excluded). None (never throws) for
+    * anything malformed, truncated, or outside the baseline 8-bit 4:4:4
+    * scope. */
   def decodePixels(p: Array[Byte]): Option[Decoded] = {
     try decodeImpl(p)
     catch { case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None }
@@ -452,11 +452,11 @@ object JpegCodec {
         case n if n >= 0xd0 && n <= 0xd7 => () // stray RST, standalone
         case 0xc0 | 0xc1 => // baseline / extended-sequential Huffman SOF
           if (i + 2 > p.length) return None
-          val len = ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
+          val len = be16(p, i)
           if (i + len > p.length || len < 8) return None
           val prec = p(i + 2) & 0xff
-          h = ((p(i + 3) & 0xff) << 8) | (p(i + 4) & 0xff)
-          w = ((p(i + 5) & 0xff) << 8) | (p(i + 6) & 0xff)
+          h = be16(p, i + 3)
+          w = be16(p, i + 5)
           ncomp = p(i + 7) & 0xff
           if (prec != 8 || (ncomp != 1 && ncomp != 3)) return None
           if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
@@ -474,7 +474,7 @@ object JpegCodec {
           return None // progressive / hierarchical / arithmetic: out of scope
         case 0xdb => // DQT (possibly several tables per segment)
           if (i + 2 > p.length) return None
-          val len = ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
+          val len = be16(p, i)
           if (i + len > p.length) return None
           var j = i + 2
           while (j < i + len) {
@@ -490,7 +490,7 @@ object JpegCodec {
           i += len
         case 0xc4 => // DHT (possibly several tables per segment)
           if (i + 2 > p.length) return None
-          val len = ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
+          val len = be16(p, i)
           if (i + len > p.length) return None
           var j = i + 2
           while (j < i + len) {
@@ -509,11 +509,11 @@ object JpegCodec {
           i += len
         case 0xdd => // DRI
           if (i + 4 > p.length) return None
-          restartInterval = ((p(i + 2) & 0xff) << 8) | (p(i + 3) & 0xff)
+          restartInterval = be16(p, i + 2)
           i += 4
         case 0xda => // SOS
           if (!sofSeen || i + 2 > p.length) return None
-          val len = ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
+          val len = be16(p, i)
           if (i + len > p.length) return None
           val ns = p(i + 2) & 0xff
           if (ns != ncomp || len != 6 + 2 * ns) return None
@@ -529,7 +529,7 @@ object JpegCodec {
           scanAt = i + len
         case _ => // APPn / COM / anything else with a length: skip
           if (i + 2 > p.length) return None
-          val len = ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
+          val len = be16(p, i)
           if (len < 2 || i + len > p.length) return None
           i += len
       }

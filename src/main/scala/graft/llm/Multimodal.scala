@@ -1,30 +1,51 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: media payloads ride as opaque `binary` columns
-  * with typed metadata extracted by a distributed decode pass.
-  *
-  * Header DECODE is real: [[HeaderDecoder]] parses PNG IHDR, GIF logical
-  * screen, BMP info header, and JPEG SOF segments by direct byte slicing —
-  * no codec libraries, pure JVM, distributed inside `mapPartitions`. PIXEL
-  * decode is real for the containers the bare JVM can carry: uncompressed
-  * 24-bpp BI_RGB BMP ([[HeaderDecoder.decodePixels]] walks the padded
-  * bottom-up pixel array byte-by-byte) and 8-bit RGB/RGBA non-interlaced
-  * PNG ([[PngCodec.decodePixels]] — IDAT is zlib DEFLATE, which
-  * `java.util.zip.Inflater` decodes natively; the five scanline filters are
-  * implemented from the spec), and baseline 8-bit 4:4:4 JPEG
-  * ([[JpegCodec.decodePixels]] — canonical Huffman + dequant + IDCT are
-  * plain arithmetic; the oracle proves bit-exactness on DC-only blocks,
-  * where Annex-K quantization is lossless). Progressive/arithmetic JPEG
-  * and payloads with no recognized container magic fall back to the
-  * clearly-marked [[StubDecoder]] so the plumbing stays testable on
-  * text stand-in payloads. Everything around the decode is the real 100 TB
-  * shape: a typed `Dataset[MediaRow]`, `mapPartitions` so per-partition
-  * decoder state (codec contexts, model handles) initializes once per task
-  * rather than once per row, and a typed `MediaMeta` output schema that
+import ByteReader._
+
+/** The one byte reader of the multimodal tier: unsigned and fixed-width
+  * integer reads in either byte order, and the bounds check every container
+  * walk makes before it trusts a length read from the payload. */
+private[llm] object ByteReader {
+  def u8(p: Array[Byte], i: Int): Int = p(i) & 0xff
+  def be16(p: Array[Byte], i: Int): Int = (u8(p, i) << 8) | u8(p, i + 1)
+  def le16(p: Array[Byte], i: Int): Int = (u8(p, i + 1) << 8) | u8(p, i)
+  def be32(p: Array[Byte], i: Int): Int = (be16(p, i) << 16) | be16(p, i + 2)
+  def le32(p: Array[Byte], i: Int): Int = (le16(p, i + 2) << 16) | le16(p, i)
+
+  /** True when a chunk at offset `at` — `head` header bytes, then `len`
+    * payload bytes — lies wholly inside `p`. Long arithmetic, so a hostile
+    * length near `Int.MaxValue` cannot wrap negative past the check. */
+  def fits(p: Array[Byte], at: Int, head: Int, len: Int): Boolean =
+    len >= 0 && at.toLong + head + len <= p.length
+}
+
+/** The multimodal tier: media payloads ride as opaque `binary` columns
+  * ([[MediaRow]]) and ONE extractor loop decodes them into typed rows that
   * downstream relational ops consume like any other table.
+  *
+  * One extractor: [[perRow]] is the tier's only `mapPartitions` pass. It
+  * backs [[extractPixels]] (any image decoder, one [[PixelMeta]] row type),
+  * [[extractAudio]] ([[AudioMeta]]) and [[extractMeta]] ([[MediaMeta]]).
+  *
+  * Five decoders, all pure JVM (no codec library; the published format
+  * specs are the only input), each total — None on anything malformed,
+  * truncated or out of scope, never an exception:
+  *  - BMP: [[HeaderDecoder.decodePixels]], uncompressed 24-bpp BI_RGB;
+  *  - PNG: [[PngCodec.decodePixels]], 8-bit RGB/RGBA non-interlaced (IDAT
+  *    inflated by `java.util.zip.Inflater`, the five scanline filters);
+  *  - GIF: [[GifCodec.decodePixels]], LZW + palette, first frame;
+  *  - JPEG: [[JpegCodec.decodePixels]], baseline 8-bit 1- or 3-component
+  *    4:4:4;
+  *  - WAV: [[WavCodec.decode]], 8/16-bit PCM.
+  * The four image decoders return one [[Decoded]]. [[HeaderDecoder.decode]]
+  * reads container dimensions of any PNG/GIF/BMP/JPEG flavor without
+  * touching pixels, and [[StubDecoder]] gives payloads with no container
+  * magic (the testdata's text stand-ins) deterministic dimensions. The
+  * container walks read multi-byte integers and check chunk bounds
+  * through [[ByteReader]].
   */
 object Multimodal {
 
@@ -36,21 +57,20 @@ object Multimodal {
   final case class MediaMeta(id: Long, n_bytes: Int, digest: String,
                              checksum: Long, format: String, width: Int, height: Int)
 
+  /** What each image decoder returns: dims, channel count, and the
+    * order-sensitive checksum Σ k·Σ_c (c+1)·P_c over the 1-based top-down
+    * row-major pixel index k and channel c in the decoded channel order
+    * (B,G,R for BMP; R,G,B[,A] for PNG, GIF and RGB JPEG) — any stride,
+    * row-order, filter or channel-order bug changes the value. */
+  final case class Decoded(width: Int, height: Int, channels: Int, checksum: Long)
+
+  private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
+
   /** Container-header parsing by direct byte slicing — the part of "decode"
     * that needs no codec, only the published file-format layouts:
     * PNG (ISO 15948 §5.3/§11.2.2), GIF87a/89a logical screen descriptor,
     * BMP BITMAPINFOHEADER, JPEG (ITU T.81) SOFn frame headers. */
   object HeaderDecoder {
-
-    private def u8(b: Byte): Int = b & 0xff
-    private def be16(p: Array[Byte], i: Int): Int = (u8(p(i)) << 8) | u8(p(i + 1))
-    private def le16(p: Array[Byte], i: Int): Int = (u8(p(i + 1)) << 8) | u8(p(i))
-    private def be32(p: Array[Byte], i: Int): Int =
-      (u8(p(i)) << 24) | (u8(p(i + 1)) << 16) | (u8(p(i + 2)) << 8) | u8(p(i + 3))
-    private def le32(p: Array[Byte], i: Int): Int =
-      (u8(p(i + 3)) << 24) | (u8(p(i + 2)) << 16) | (u8(p(i + 1)) << 8) | u8(p(i))
-
-    private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
     /** (format, width, height) when the payload opens with a recognized
       * container; None otherwise. Never throws on truncated/garbage input. */
@@ -68,7 +88,7 @@ object Multimodal {
         // BITMAPINFOHEADER at offset 14: biWidth LE32 at 18, biHeight LE32
         // at 22 (negative = top-down row order; magnitude is the height)
         Some(("bmp", le32(p, 18), math.abs(le32(p, 22))))
-      } else if (p.length >= 4 && u8(p(0)) == 0xff && u8(p(1)) == 0xd8) {
+      } else if (p.length >= 4 && u8(p, 0) == 0xff && u8(p, 1) == 0xd8) {
         decodeJpeg(p)
       } else None
     }
@@ -77,12 +97,11 @@ object Multimodal {
       * 24-bpp BI_RGB BMP (the Windows DIB layout: pixel array at the
       * BITMAPFILEHEADER's bfOffBits, rows padded to 4-byte boundaries,
       * POSITIVE biHeight = bottom-up row order, channels stored B,G,R).
-      * Returns (width, height, checksum) where checksum is the rolling
-      * per-pixel sum Σ (k+1)·(B + 2·G + 3·R) over the LOGICAL top-down
-      * row-major pixel index k — deliberately order- and padding-sensitive,
-      * so a row-stride, bottom-up, or channel-order bug changes the value.
-      * None for anything that isn't a complete uncompressed 24-bpp BMP. */
-    def decodePixels(p: Array[Byte]): Option[(Int, Int, Long)] = {
+      * The [[Decoded]] checksum is Σ k·(B + 2·G + 3·R) over the LOGICAL
+      * top-down pixel index k, so the bottom-up storage and the row padding
+      * are both under test. None for anything that isn't a complete
+      * uncompressed 24-bpp BMP. */
+    def decodePixels(p: Array[Byte]): Option[Decoded] = {
       if (p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
       val off = le32(p, 10)
       val w = le32(p, 18)
@@ -108,16 +127,16 @@ object Multimodal {
         val base = off + (if (topDown) y else h - 1 - y) * stride
         var x = 0
         while (x < w) {
-          val b = u8(p(base + 3 * x))
-          val g = u8(p(base + 3 * x + 1))
-          val r = u8(p(base + 3 * x + 2))
+          val b = u8(p, base + 3 * x)
+          val g = u8(p, base + 3 * x + 1)
+          val r = u8(p, base + 3 * x + 2)
           k += 1
           cs += k * (b + 2L * g + 3L * r)
           x += 1
         }
         y += 1
       }
-      Some((w, h, cs))
+      Some(Decoded(w, h, 3, cs))
     }
 
     /** Walk JPEG marker segments to the first SOFn frame header (T.81
@@ -125,8 +144,8 @@ object Multimodal {
       * are 0xC0-0xCF minus 0xC4 (DHT), 0xC8 (JPG), 0xCC (DAC). */
     private def decodeJpeg(p: Array[Byte]): Option[(String, Int, Int)] = {
       var i = 2
-      while (i + 3 < p.length && u8(p(i)) == 0xff) {
-        val marker = u8(p(i + 1))
+      while (i + 3 < p.length && u8(p, i) == 0xff) {
+        val marker = u8(p, i + 1)
         if (marker == 0xff) { i += 1 } // fill byte
         else if (marker >= 0xd0 && marker <= 0xd9) { i += 2 } // standalone
         else {
@@ -152,15 +171,8 @@ object Multimodal {
     * types None/Sub/Up/Average/Paeth (§9.2). Scope: 8-bit truecolor
     * (colorType 2 = RGB, 6 = RGBA), non-interlaced — the dominant PNG shape
     * in a scraped corpus; palette/interlace/16-bit return None and fall
-    * through to the header-only path. JPEG pixel decode (arithmetic/Huffman
-    * entropy coding, no JVM built-in) remains the one declared stub. */
+    * through to the header-only path. */
   object PngCodec {
-
-    private val Sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-
-    private def u8(b: Byte): Int = b & 0xff
-    private def be32(p: Array[Byte], i: Int): Int =
-      (u8(p(i)) << 24) | (u8(p(i + 1)) << 16) | (u8(p(i + 2)) << 8) | u8(p(i + 3))
 
     /** Paeth predictor (§9.4): closest of left/up/up-left to a+b-c, ties
       * broken left, up, up-left. */
@@ -228,37 +240,31 @@ object Multimodal {
         .putInt(w).putInt(h).put(8.toByte)
         .put((if (channels == 3) 2 else 6).toByte)
         .put(0.toByte).put(0.toByte).put(0.toByte)
-      Sig ++ chunk("IHDR", ihdr.array()) ++ chunk("IDAT", zipped.toByteArray) ++
+      PngSig ++ chunk("IHDR", ihdr.array()) ++ chunk("IDAT", zipped.toByteArray) ++
         chunk("IEND", Array.emptyByteArray)
     }
-
-    /** Decoded pixels: dims + channel count + the order-sensitive checksum
-      * Σ (k+1)·(C1 + 2·C2 + 3·C3 [+ 4·C4]) over top-down row-major pixel
-      * index k — same discipline as the BMP walker: any stride, row-order,
-      * filter, or channel-order bug changes the value. */
-    final case class Decoded(width: Int, height: Int, channels: Int, checksum: Long)
 
     /** Full PNG pixel decode: chunk walk with CRC-32 verification, zlib
       * inflate of the concatenated IDAT stream, per-row unfilter of all five
       * filter types. None (never throws) for anything malformed, truncated,
       * checksum-corrupt, or outside the 8-bit RGB/RGBA non-interlaced scope. */
     def decodePixels(p: Array[Byte]): Option[Decoded] = {
-      if (p.length < 45 || !p.startsWith(Sig)) return None
+      if (p.length < 45 || !p.startsWith(PngSig)) return None
       var i = 8
       var w = 0; var h = 0; var channels = 0; var seenIhdr = false
       val idat = new java.io.ByteArrayOutputStream()
       var end = false
       while (!end && i + 12 <= p.length) {
         val len = be32(p, i)
-        if (len < 0 || i + 12 + len > p.length) return None
+        if (!fits(p, i, 12, len)) return None
         val crc = new java.util.zip.CRC32(); crc.update(p, i + 4, 4 + len)
         if (crc.getValue.toInt != be32(p, i + 8 + len)) return None
         new String(p, i + 4, 4, "US-ASCII") match {
           case "IHDR" =>
             if (len != 13 || seenIhdr) return None
             w = be32(p, i + 8); h = be32(p, i + 12)
-            val (depth, color) = (u8(p(i + 16)), u8(p(i + 17)))
-            val (comp, filt, inter) = (u8(p(i + 18)), u8(p(i + 19)), u8(p(i + 20)))
+            val (depth, color) = (u8(p, i + 16), u8(p, i + 17))
+            val (comp, filt, inter) = (u8(p, i + 18), u8(p, i + 19), u8(p, i + 20))
             if (depth != 8 || (color != 2 && color != 6) ||
                 comp != 0 || filt != 0 || inter != 0) return None
             // size guard: a hostile header must not provision gigabytes
@@ -298,14 +304,14 @@ object Multimodal {
       var y = 0
       while (y < h) {
         val ro = y * stride
-        val ft = u8(raw(ro))
+        val ft = u8(raw, ro)
         if (ft > 4) return None
         var j = 0
         while (j < rowLen) {
-          val x = u8(raw(ro + 1 + j))
-          val a = if (j >= channels) u8(raw(ro + 1 + j - channels)) else 0
-          val b = if (y > 0) u8(raw(ro + 1 + j - stride)) else 0
-          val c = if (y > 0 && j >= channels) u8(raw(ro + 1 + j - channels - stride)) else 0
+          val x = u8(raw, ro + 1 + j)
+          val a = if (j >= channels) u8(raw, ro + 1 + j - channels) else 0
+          val b = if (y > 0) u8(raw, ro + 1 + j - stride) else 0
+          val c = if (y > 0 && j >= channels) u8(raw, ro + 1 + j - channels - stride) else 0
           val v = ft match {
             case 0 => x
             case 1 => x + a
@@ -328,7 +334,7 @@ object Multimodal {
           k += 1
           var c = 0
           while (c < channels) {
-            cs += k * (c + 1).toLong * u8(raw(ro + 1 + x * channels + c))
+            cs += k * (c + 1).toLong * u8(raw, ro + 1 + x * channels + c)
             c += 1
           }
           x += 1
@@ -339,82 +345,47 @@ object Multimodal {
     }
   }
 
-  /** PNG pixel decode output ([[PngCodec.decodePixels]]): `format` is `png`
-    * on success, `unknown` otherwise (checksum -1). */
-  final case class PngPixelMeta(id: Long, format: String, width: Int, height: Int,
-                                channels: Int, pix_checksum: Long)
+  /** One decoded image row of [[extractPixels]]: `format` names the codec
+    * on a successful decode, `unknown` otherwise (zero dims, checksum -1). */
+  final case class PixelMeta(id: Long, format: String, width: Int, height: Int,
+                             channels: Int, pix_checksum: Long)
 
-  /** Distributed PNG pixel extraction — the same mapPartitions shape as
-    * [[extractPixels]], with the full inflate + unfilter walk per payload. */
-  def extractPngPixels(rows: Dataset[MediaRow]): Dataset[PngPixelMeta] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        PngCodec.decodePixels(r.payload) match {
-          case Some(d) => PngPixelMeta(r.id, "png", d.width, d.height, d.channels, d.checksum)
-          case None    => PngPixelMeta(r.id, "unknown", 0, 0, 0, -1L)
-        }
-      }
-    }
-  }
-
-  /** JPEG pixel decode output ([[JpegCodec.decodePixels]]): `format` is
-    * `jpeg` on success, `unknown` otherwise (checksum -1). */
-  final case class JpegPixelMeta(id: Long, format: String, width: Int, height: Int,
-                                 channels: Int, pix_checksum: Long)
-
-  /** Distributed JPEG pixel extraction — the same mapPartitions shape as
-    * [[extractPixels]], with the full entropy-decode + IDCT walk per
-    * payload. */
-  def extractJpegPixels(rows: Dataset[MediaRow]): Dataset[JpegPixelMeta] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        JpegCodec.decodePixels(r.payload) match {
-          case Some(d) => JpegPixelMeta(r.id, "jpeg", d.width, d.height, d.channels, d.checksum)
-          case None    => JpegPixelMeta(r.id, "unknown", 0, 0, 0, -1L)
-        }
-      }
-    }
-  }
-
-  /** GIF pixel decode output ([[GifCodec.decodePixels]]): `format` is
-    * `gif` on success, `unknown` otherwise (checksum -1). */
-  final case class GifPixelMeta(id: Long, format: String, width: Int, height: Int,
-                                channels: Int, pix_checksum: Long)
-
-  /** Distributed GIF pixel extraction — the same mapPartitions shape as
-    * [[extractPixels]], with the full LZW + palette walk per payload. */
-  def extractGifPixels(rows: Dataset[MediaRow]): Dataset[GifPixelMeta] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        GifCodec.decodePixels(r.payload) match {
-          case Some(d) => GifPixelMeta(r.id, "gif", d.width, d.height, d.channels, d.checksum)
-          case None    => GifPixelMeta(r.id, "unknown", 0, 0, 0, -1L)
-        }
-      }
-    }
-  }
-
-  /** WAV/PCM decode output ([[WavCodec.decode]]): `format` is `wav` on
-    * success, `unknown` otherwise (checksum -1). The audio modality rides
-    * the same opaque-binary + mapPartitions plumbing as images. */
+  /** One decoded audio row of [[extractAudio]] ([[WavCodec.decode]]):
+    * `format` is `wav` on success, `unknown` otherwise (checksum -1). */
   final case class AudioMeta(id: Long, format: String, sample_rate: Int,
                              channels: Int, bits: Int, frames: Long,
                              pcm_checksum: Long)
 
-  /** Distributed PCM audio extraction — chunk walk + sample checksum per
-    * payload, the audio twin of the pixel extractors. */
+  /** The tier's one decode loop: `f` runs over each partition's rows in a
+    * single `mapPartitions` pass — bytes in, typed rows out, no driver
+    * collect. */
+  private def perRow[T: Encoder](rows: Dataset[MediaRow])(f: MediaRow => T): Dataset[T] =
+    rows.mapPartitions(_.map(f))
+
+  /** Distributed pixel extraction through one image decoder
+    * ([[HeaderDecoder.decodePixels]], [[PngCodec.decodePixels]],
+    * [[GifCodec.decodePixels]], [[JpegCodec.decodePixels]]): a decoded row
+    * is tagged `format`, a rejected one `unknown`. */
+  def extractPixels(rows: Dataset[MediaRow], format: String,
+                    decode: Array[Byte] => Option[Decoded]): Dataset[PixelMeta] = {
+    import rows.sparkSession.implicits._
+    perRow(rows) { r =>
+      decode(r.payload) match {
+        case Some(d) => PixelMeta(r.id, format, d.width, d.height, d.channels, d.checksum)
+        case None    => PixelMeta(r.id, "unknown", 0, 0, 0, -1L)
+      }
+    }
+  }
+
+  /** Distributed PCM audio extraction: chunk walk + sample checksum per
+    * payload through the same loop as the images. */
   def extractAudio(rows: Dataset[MediaRow]): Dataset[AudioMeta] = {
     import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        WavCodec.decode(r.payload) match {
-          case Some(d) =>
-            AudioMeta(r.id, "wav", d.sampleRate, d.channels, d.bits, d.frames, d.checksum)
-          case None => AudioMeta(r.id, "unknown", 0, 0, 0, 0L, -1L)
-        }
+    perRow(rows) { r =>
+      WavCodec.decode(r.payload) match {
+        case Some(d) =>
+          AudioMeta(r.id, "wav", d.sampleRate, d.channels, d.bits, d.frames, d.checksum)
+        case None => AudioMeta(r.id, "unknown", 0, 0, 0, 0L, -1L)
       }
     }
   }
@@ -422,8 +393,7 @@ object Multimodal {
   /** The clearly-marked PIXEL-decode stand-in for payloads with no known
     * container magic (the testdata's text payloads): derives dimensions
     * deterministically from size/checksum so the plumbing stays
-    * oracle-verifiable. A production deployment would plug codec calls into
-    * [[extractMeta]]'s partition loop instead. */
+    * oracle-verifiable. */
   object StubDecoder {
     def decode(payload: Array[Byte]): (Int, Int) = {
       val checksum = byteSum997(payload)
@@ -460,59 +430,19 @@ object Multimodal {
     acc % 997L
   }
 
-  /** Distributed metadata extraction: one decoder per partition, streaming
-    * through rows (no per-row decoder setup, no driver collect). Real header
-    * parse first; stub dimensions only for unrecognized payloads. */
+  /** Distributed metadata extraction: byte size, MD5 digest, byte checksum,
+    * and the real header parse, with stub dimensions only for unrecognized
+    * payloads. */
   def extractMeta(rows: Dataset[MediaRow]): Dataset[MediaMeta] = {
     import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      // per-partition decoder/codec initialization would go here
-      it.map { r =>
-        val checksum = byteSum997(r.payload)
-        val (fmt, w, h) = HeaderDecoder.decode(r.payload) match {
-          case Some(ok) => ok
-          case None =>
-            val (sw, sh) = StubDecoder.decode(r.payload)
-            ("unknown", sw, sh)
-        }
-        MediaMeta(r.id, r.payload.length, md5Hex(r.payload), checksum, fmt, w, h)
+    perRow(rows) { r =>
+      val (fmt, w, h) = HeaderDecoder.decode(r.payload).getOrElse {
+        val (sw, sh) = StubDecoder.decode(r.payload)
+        ("unknown", sw, sh)
       }
+      MediaMeta(r.id, r.payload.length, md5Hex(r.payload), byteSum997(r.payload), fmt, w, h)
     }
   }
-
-  /** Per-pixel decode output: dimensions + the order-sensitive pixel
-    * checksum ([[HeaderDecoder.decodePixels]]); `format` is `bmp` on a
-    * successful decode, `unknown` otherwise (checksum -1). */
-  final case class PixelMeta(id: Long, format: String, width: Int, height: Int,
-                             pix_checksum: Long)
-
-  /** Distributed PIXEL extraction (same mapPartitions shape as
-    * [[extractMeta]]): parse each payload as an uncompressed 24-bpp BMP and
-    * emit dimensions + the rolling per-pixel checksum. This is the real
-    * decode path end-to-end — bytes in, pixels walked, no stub. */
-  def extractPixels(rows: Dataset[MediaRow]): Dataset[PixelMeta] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions { it =>
-      it.map { r =>
-        HeaderDecoder.decodePixels(r.payload) match {
-          case Some((w, h, cs)) => PixelMeta(r.id, "bmp", w, h, cs)
-          case None => PixelMeta(r.id, "unknown", 0, 0, -1L)
-        }
-      }
-    }
-  }
-
-  /** Spread a source across the session's cores before a CPU-heavy per-row
-    * codec pass WHEN the scan arrives in fewer splits than half the cores:
-    * the sf-scale parquet is a single row group, so the whole decode pass
-    * would otherwise serialize in ONE task (measured: q_multimodal_jpeg ran
-    * its full encode+decode single-threaded). Hash-partitioning on the id
-    * column is deterministic under task retry (guide §2.5 — no rand-derived
-    * keys) and shuffles only the narrow pre-payload rows. A wide scan — the
-    * 100 TB case, thousands of splits — is left untouched: repartitioning
-    * payload bytes there would shuffle the corpus for nothing (guide §8). */
-  def spreadIfNarrow(df: DataFrame, idCol: String): DataFrame =
-    graft.ops.Spread.full(df, idCol)
 
   /** Wrap a string column as a binary media payload (the testdata has no real
     * media blobs; UTF-8 text bytes stand in — the plumbing is identical). */

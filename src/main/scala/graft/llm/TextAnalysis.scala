@@ -165,25 +165,6 @@ object TextAnalysis {
     * compose the same tokenization (e.g. the scale proof's posting counts). */
   def wordGrams(textCol: String, n: Int): Column = gramsArray(textCol, n)
 
-  /** Benchmark decontamination (the GPT-3 appendix-C / Pile n-gram-overlap
-    * family): flag training documents sharing at least `minHits` DISTINCT
-    * word `n`-grams with the benchmark corpus. Output: (id, n_shared) for
-    * flagged documents.
-    *
-    * Scale shape: each side explodes to per-doc-distinct gram postings
-    * (narrow transform + array_distinct, no pre-shuffle), the benchmark side
-    * is deduped globally, and the equi-join on the gram string matches each
-    * training posting against AT MOST ONE benchmark row — stop-gram skew
-    * cannot blow up the join the way a postings self-join would. Runs the
-    * Bloom-gated formulation of [[contaminationFlagsBloom]]. A driver-side
-    * literal variant (collect the benchmark gram set, `array_intersect` per
-    * row) was measured at 5.4s vs 2.2s for this path at sf0.1 AND collected
-    * a gram set ~n× the benchmark's own bytes to the driver — strictly
-    * dominated, removed. */
-  def contaminationFlags(docs: DataFrame, bench: DataFrame, textCol: String,
-                         idCol: String, n: Int, minHits: Int): DataFrame =
-    contaminationFlagsBloom(docs, bench, textCol, idCol, n, minHits)
-
   /** Benchmark gram estimate past which the Bloom gate is skipped: past ~8M
     * grams Spark's filter binary saturates its 64M-bit cap, so every task
     * would pay an 8MB broadcast literal (plus the driver collect that builds
@@ -194,11 +175,26 @@ object TextAnalysis {
     * every row on both paths. */
   private[llm] val MaxBloomGrams: Long = 8000000L
 
-  /** [[contaminationFlags]] with a Bloom-filter gate: the benchmark gram set
-    * is compiled into ONE filter binary (Spark's own runtime-filter sketch,
-    * surfaced as `bloom_agg`/`bloom_contains`) that ships to every executor
-    * as a literal, and the training-side gram stream is prefiltered by a
-    * NARROW `bloom_contains` probe BEFORE the exact equi-join.
+  /** Benchmark decontamination (the GPT-3 appendix-C / Pile n-gram-overlap
+    * family): flag training documents sharing at least `minHits` DISTINCT
+    * word `n`-grams with the benchmark corpus. Output: (id, n_shared) for
+    * flagged documents.
+    *
+    * Scale shape: each side explodes to per-doc-distinct gram postings
+    * (narrow transform + array_distinct, no pre-shuffle), the benchmark side
+    * is deduped globally, and the equi-join on the gram string matches each
+    * training posting against AT MOST ONE benchmark row — stop-gram skew
+    * cannot blow up the join the way a postings self-join would. A
+    * driver-side literal variant (collect the benchmark gram set,
+    * `array_intersect` per row) was measured at 5.4s vs 2.2s for this path
+    * at sf0.1 AND collected a gram set ~n× the benchmark's own bytes to the
+    * driver — strictly dominated, removed.
+    *
+    * Bloom gate: the benchmark gram set is compiled into ONE filter binary
+    * (Spark's own runtime-filter sketch, surfaced as `bloom_agg`/
+    * `bloom_contains`) that ships to every executor as a literal, and the
+    * training-side gram stream is prefiltered by a NARROW `bloom_contains`
+    * probe BEFORE the exact equi-join.
     *
     * Same output, different 100 TB cost: without the gate, every gram of
     * the training corpus crosses the join shuffle just to miss; with it,
@@ -210,17 +206,18 @@ object TextAnalysis {
     * positives cost one discarded join row each, never a wrong answer: the
     * exact join confirms every survivor, so no false negatives exist by
     * construction (Bloom guarantee) and the result is bit-identical to the
-    * ungated operator (spec + shared oracle row).
+    * ungated join (spec).
     *
     * The driver collects the filter binary once (the benchmark is the SMALL
-    * side — the same bounded statistics pass as IVF seeding). When the
-    * benchmark-side estimate exceeds [[MaxBloomGrams]] (8M grams — where
-    * Spark's 64M-bit filter cap saturates), the gate is
-    * skipped and the operator degrades to the plain exact equi-join with no
+    * side — the same bounded statistics pass as IVF seeding), sized to
+    * `expectedGrams` when given, else to twice the benchmark's distinct
+    * gram count. When that estimate exceeds [[MaxBloomGrams]] (8M grams —
+    * where Spark's 64M-bit filter cap saturates), the gate is skipped and
+    * the operator degrades to the plain exact equi-join with no
     * driver-held state and no extension-function dependency. */
-  def contaminationFlagsBloom(docs: DataFrame, bench: DataFrame, textCol: String,
-                              idCol: String, n: Int, minHits: Int,
-                              expectedGrams: Long = 0L): DataFrame = {
+  def contaminationFlags(docs: DataFrame, bench: DataFrame, textCol: String,
+                         idCol: String, n: Int, minHits: Int,
+                         expectedGrams: Long = 0L): DataFrame = {
     // minHits = 0 would emit EVERY document (count >= 0 always holds) while
     // reading as "no filter" — and the removed literal path actually did so
     // where this join path structurally cannot (unmatched docs never reach

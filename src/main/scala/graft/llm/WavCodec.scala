@@ -1,5 +1,7 @@
 package graft.llm
 
+import ByteReader.{fits, le16, le32, u8}
+
 /** WAV/PCM audio codec — the audio twin of the image pixel walkers, and the
   * simplest honest decode in the whole multimodal family: RIFF is a length-
   * prefixed chunk container and PCM samples are just little-endian integers,
@@ -52,10 +54,6 @@ object WavCodec {
     buf.array()
   }
 
-  private def le16(p: Array[Byte], i: Int): Int = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-  private def le32(p: Array[Byte], i: Int): Int =
-    (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) | ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
-
   /** Chunk-walking PCM decode; None for anything malformed, truncated,
     * or non-PCM. Never throws. */
   def decode(p: Array[Byte]): Option[Decoded] = {
@@ -68,7 +66,7 @@ object WavCodec {
     while (i + 8 <= p.length) {
       val cid = new String(p, i, 4, "US-ASCII")
       val len = le32(p, i + 4)
-      if (len < 0 || i + 8 + len > p.length) return None
+      if (!fits(p, i, 8, len)) return None
       cid match {
         case "fmt " =>
           if (len < 16) return None
@@ -93,7 +91,7 @@ object WavCodec {
             while (c < channels) {
               val s =
                 if (bits == 16) le16(p, off).toShort.toInt // signed
-                else p(off) & 0xff // 8-bit WAV is unsigned
+                else u8(p, off) // 8-bit WAV is unsigned
               cs += (f + 1).toLong * (c + 1) * s
               off += bytesPer
               c += 1

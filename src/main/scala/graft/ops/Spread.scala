@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Conditional cross-core spread for CPU-heavy per-row consumers above a
-  * narrow scan (the one helper behind `Tables.readSpread` and
-  * `Multimodal.spreadIfNarrow`, which duplicated it verbatim in r19).
+  * narrow scan (the one helper behind `Tables.readSpread` and the
+  * multimodal codec queries).
   *
   * The sf-scale testdata tables are single-row-group parquet, so a scan —
   * and every narrow stage above it (Expand, partial aggregation, per-row

@@ -1,9 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
-import graft.llm.{Corpus, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.llm.{Corpus, Dedup, GifCodec, JpegCodec, Multimodal, Similarity, TextAnalysis, WavCodec}
+import graft.llm.Multimodal.{MediaRow, PngCodec}
+import graft.ops.Spread
 
 /** Large-scale training-data pipeline queries (dedup, similarity search,
   * text analysis, multimodal plumbing) over `documents` / `embeddings`.
@@ -17,6 +20,22 @@ object LlmQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.read(s, dir, name)
+
+  /** The codec round-trip of the `q_multimodal_*` encode/decode queries:
+    * each doc_id, spread across the cores (the codec cost is per row and
+    * invisible to the planner's size estimate), becomes one payload by
+    * `encode`; `extract` decodes it back in one `mapPartitions` pass, and
+    * every Int column of its rows is widened to BIGINT, the oracle's type. */
+  private def codecRoundTrip(s: SparkSession, dir: String,
+                             extract: Dataset[MediaRow] => Dataset[_])(
+                             encode: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    val ids = Spread.full(
+      t(s, dir, "documents").select(col("doc_id").cast("long").as("doc_id")), "doc_id").as[Long]
+    val out = extract(ids.map(d => MediaRow(d, encode(d)))).toDF()
+    out.select(out.schema.fields.toIndexedSeq.map(f =>
+      if (f.dataType == IntegerType) col(f.name).cast("long").as(f.name) else col(f.name)): _*)
+  }
 
   /** The near-dup cascade every MinHash dedup query runs: 5-char shingles,
     * 8 hashes in 4 bands, exact Jaccard >= 0.9 (the oracle's parameters). */
@@ -758,16 +777,6 @@ object LlmQueries {
         "text", "doc_id", n = 3, minHits = 3)
     }),
 
-    // same decontamination output through the Bloom gate: the benchmark gram
-    // set compiled to one filter binary, the training gram stream narrowed by
-    // bloom_contains BEFORE the exact confirming join (same oracle SQL)
-    "q_decontam_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      TextAnalysis.contaminationFlagsBloom(
-        docs.filter(col("doc_id") >= 50), docs.filter(col("doc_id") < 50),
-        "text", "doc_id", n = 3, minHits = 3)
-    }),
-
     // C4-style scrubbing: URL -> email -> long-digit-run redaction
     "q_text_scrub" -> ((s, dir) =>
       t(s, dir, "documents").select(
@@ -853,7 +862,7 @@ object LlmQueries {
       // cost more than it bought on the ~600 KB input (guide §2, r19
       // verdict) — Spread.bySize leaves inputs this small unspread
       val media = Multimodal.asMedia(
-        graft.ops.Spread.bySize(t(s, dir, "documents"), "doc_id"), "doc_id", "text")
+        Spread.bySize(t(s, dir, "documents"), "doc_id"), "doc_id", "text")
       Multimodal.extractMeta(media).toDF()
         .select(col("id"), col("n_bytes").cast("long").as("n_bytes"), col("digest"),
           col("checksum"), col("width").cast("long").as("width"),
@@ -884,7 +893,7 @@ object LlmQueries {
            |  ELSE concat('FFD8FFC0000B08', $hh4, $wh4, '01')
            |END""".stripMargin
       val media = Multimodal.asMedia(
-        Multimodal.spreadIfNarrow(t(s, dir, "documents"), "doc_id")
+        Spread.full(t(s, dir, "documents"), "doc_id")
           .select(col("doc_id"), unhex(expr(payloadHex)).as("payload")),
         "doc_id", "payload")
       Multimodal.extractMeta(media).toDF()
@@ -924,11 +933,11 @@ object LlmQueries {
            |    lpad(hex((x * ($h - 1 - sr) + $d) % 256), 2, '0'))), ''),
            |  repeat('00', $pad))), '')""".stripMargin
       val media = Multimodal.asMedia(
-        Multimodal.spreadIfNarrow(t(s, dir, "documents"), "doc_id")
+        Spread.full(t(s, dir, "documents"), "doc_id")
           .select(col("doc_id"),
             unhex(expr(s"concat($headerHex, $pixelsHex)")).as("payload")),
         "doc_id", "payload")
-      Multimodal.extractPixels(media).toDF()
+      Multimodal.extractPixels(media, "bmp", Multimodal.HeaderDecoder.decodePixels).toDF()
         .select(col("id"), col("format"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("pix_checksum"))
     }),
@@ -941,27 +950,17 @@ object LlmQueries {
     // The oracle recomputes the checksum in closed form from doc_id without
     // touching a byte, so the pixels must survive the real compression
     // round-trip bit-exactly; a known-good external fixture in
-    // MultimodalSpec rules out a symmetric encoder/decoder filter bug.
-    "q_multimodal_png" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Multimodal.spreadIfNarrow(
-        t(s, dir, "documents").select(col("doc_id").cast("long").as("doc_id")), "doc_id").as[Long]
-      val media = docs.map { d =>
-        val w = (1 + d % 5).toInt
-        val h = (1 + d % 4).toInt
-        Multimodal.MediaRow(d, Multimodal.PngCodec.encode(w, h, 3,
+    // LlmSpec rules out a symmetric encoder/decoder filter bug.
+    "q_multimodal_png" -> ((s, dir) =>
+      codecRoundTrip(s, dir, Multimodal.extractPixels(_, "png", PngCodec.decodePixels)) { d =>
+        PngCodec.encode((1 + d % 5).toInt, (1 + d % 4).toInt, 3,
           (x, y, c) => c match {
             case 0 => ((d + 3L * x + 7L * y) % 256).toInt
             case 1 => ((2L * d + 5L * x + y) % 256).toInt
             case _ => ((x.toLong * y + d) % 256).toInt
           },
-          y => ((d + y) % 5).toInt))
-      }
-      Multimodal.extractPngPixels(media).toDF()
-        .select(col("id"), col("format"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("channels").cast("long").as("channels"), col("pix_checksum"))
-    }),
+          y => ((d + y) % 5).toInt)
+      }),
 
     // REAL baseline-JPEG pixel decode, oracle-checked bit-exactly despite
     // JPEG being lossy: each 8x8 block is constant at an even offset from
@@ -972,22 +971,11 @@ object LlmQueries {
     // conversion) runs for real. The oracle recomputes the checksum in
     // closed form from doc_id; JpegSpec's hand-derived fixture and
     // independent-pipeline test cover the general AC path.
-    "q_multimodal_jpeg" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Multimodal.spreadIfNarrow(
-        t(s, dir, "documents").select(col("doc_id").cast("long").as("doc_id")), "doc_id").as[Long]
-      val media = docs.map { d =>
-        val w = 8 * (1 + d % 3).toInt
-        val h = 8 * (1 + d % 2).toInt
-        val v = (x: Int, y: Int) =>
-          (128 + 2 * (((d + 3L * (x / 8) + 5L * (y / 8)) % 64) - 32)).toInt
-        Multimodal.MediaRow(d, graft.llm.JpegCodec.encode(w, h, 3, (x, y, _) => v(x, y)))
-      }
-      Multimodal.extractJpegPixels(media).toDF()
-        .select(col("id"), col("format"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("channels").cast("long").as("channels"), col("pix_checksum"))
-    }),
+    "q_multimodal_jpeg" -> ((s, dir) =>
+      codecRoundTrip(s, dir, Multimodal.extractPixels(_, "jpeg", JpegCodec.decodePixels)) { d =>
+        JpegCodec.encode(8 * (1 + d % 3).toInt, 8 * (1 + d % 2).toInt, 3, (x, y, _) =>
+          (128 + 2 * (((d + 3L * (x / 8) + 5L * (y / 8)) % 64) - 32)).toInt)
+      }),
 
     // REAL GIF pixel decode, oracle-checked per pixel: LZW is lossless, so
     // any palette-indexed image must round-trip bit-exactly — the per-doc
@@ -999,20 +987,11 @@ object LlmQueries {
     // de-interlaces correctly... the pixel function depends on y, so a
     // pass-order bug changes the checksum).
     "q_multimodal_gif" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Multimodal.spreadIfNarrow(
-        t(s, dir, "documents").select(col("doc_id").cast("long").as("doc_id")), "doc_id").as[Long]
       val pal = Array.tabulate(8)(i => (i * 31 % 256, i * 57 % 256, i * 11 % 256))
-      val media = docs.map { d =>
-        val w = (3 + d % 14).toInt
-        val h = (3 + d % 11).toInt
-        Multimodal.MediaRow(d, graft.llm.GifCodec.encode(w, h, pal,
-          (x, y) => ((d + 3L * x + 5L * y) % 8).toInt, interlaced = d % 2 == 1))
+      codecRoundTrip(s, dir, Multimodal.extractPixels(_, "gif", GifCodec.decodePixels)) { d =>
+        GifCodec.encode((3 + d % 14).toInt, (3 + d % 11).toInt, pal,
+          (x, y) => ((d + 3L * x + 5L * y) % 8).toInt, interlaced = d % 2 == 1)
       }
-      Multimodal.extractGifPixels(media).toDF()
-        .select(col("id"), col("format"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("channels").cast("long").as("channels"), col("pix_checksum"))
     }),
 
     // REAL audio decode: WAV/PCM is uncompressed, so the sample checksum is
@@ -1020,26 +999,15 @@ object LlmQueries {
     // 16-bit-signed vs 8-bit-unsigned handling, and channel interleave
     // (even docs are 16-bit stereo with signed samples, odd docs 8-bit
     // mono), per document from doc_id alone.
-    "q_multimodal_wav" -> ((s, dir) => {
-      import s.implicits._
-      val docs = Multimodal.spreadIfNarrow(
-        t(s, dir, "documents").select(col("doc_id").cast("long").as("doc_id")), "doc_id").as[Long]
-      val media = docs.map { d =>
+    "q_multimodal_wav" -> ((s, dir) =>
+      codecRoundTrip(s, dir, Multimodal.extractAudio) { d =>
         val frames = (40 + d % 60).toInt
-        val payload =
-          if (d % 2 == 0)
-            graft.llm.WavCodec.encode(16000, 2, 16, frames,
-              (f, c) => (((d * 31 + f * 7 + c * 13) % 65536) - 32768).toInt)
-          else
-            graft.llm.WavCodec.encode(8000, 1, 8, frames, (f, _) => ((d * 31 + f * 7) % 256).toInt)
-        Multimodal.MediaRow(d, payload)
-      }
-      Multimodal.extractAudio(media).toDF()
-        .select(col("id"), col("format"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("bits").cast("long").as("bits"), col("frames"), col("pcm_checksum"))
-    })
+        if (d % 2 == 0)
+          WavCodec.encode(16000, 2, 16, frames,
+            (f, c) => (((d * 31 + f * 7 + c * 13) % 65536) - 32768).toInt)
+        else
+          WavCodec.encode(8000, 1, 8, frames, (f, _) => ((d * 31 + f * 7) % 256).toInt)
+      })
   )
 
   val oracleSql: Map[String, String] = Map(
@@ -1254,20 +1222,6 @@ object LlmQueries {
     },
 
     "q_decontaminate" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tw FROM documents),
-        |dg AS (SELECT DISTINCT doc_id, array_to_string(tw[i:i+2], ' ') AS g
-        |       FROM t, UNNEST(generate_series(1, len(tw) - 2)) AS s(i)
-        |       WHERE doc_id >= 50),
-        |bg AS (SELECT DISTINCT array_to_string(tw[i:i+2], ' ') AS g
-        |       FROM t, UNNEST(generate_series(1, len(tw) - 2)) AS s(i)
-        |       WHERE doc_id < 50)
-        |SELECT doc_id, count(*) AS n_shared
-        |FROM dg JOIN bg USING (g)
-        |GROUP BY doc_id HAVING count(*) >= 3""".stripMargin,
-
-    // bit-identical to q_decontaminate: the Bloom gate is a prefilter with
-    // no false negatives, the exact join confirms every survivor
-    "q_decontam_bloom" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tw FROM documents),
         |dg AS (SELECT DISTINCT doc_id, array_to_string(tw[i:i+2], ' ') AS g
         |       FROM t, UNNEST(generate_series(1, len(tw) - 2)) AS s(i)

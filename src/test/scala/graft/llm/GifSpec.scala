@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GifSpec extends AnyFunSuite {
 
   import GifCodec._
+  import Multimodal.Decoded
 
   private def checksum(w: Int, h: Int, pal: Array[(Int, Int, Int)],
                        idx: (Int, Int) => Int): Long = {

@@ -20,6 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class JpegSpec extends AnyFunSuite {
 
   import JpegCodec._
+  import Multimodal.Decoded
 
   private def closedFormGray(w: Int, h: Int, px: (Int, Int) => Int): Long = {
     var cs = 0L; var k = 0L

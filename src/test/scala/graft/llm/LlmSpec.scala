@@ -9,6 +9,18 @@ class LlmSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def le32(v: Int) = Array(v, v >> 8, v >> 16, v >> 24).map(x => (x & 0xff).toByte)
+  private def le16(v: Int) = Array(v, v >> 8).map(x => (x & 0xff).toByte)
+
+  /** Headers of a 24-bpp BI_RGB BMP, `w` x |`h`| (negative `h`: top-down
+    * rows), pixel array at offset 54. */
+  private def bmpHeader(w: Int, h: Int): Array[Byte] = {
+    val size = ((3 * w + 3) & ~3) * math.abs(h)
+    "BM".getBytes("US-ASCII") ++ le32(54 + size) ++ le32(0) ++ le32(54) ++
+      le32(40) ++ le32(w) ++ le32(h) ++ le16(1) ++ le16(24) ++ le32(0) ++
+      le32(size) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
+  }
+
   private val corpus = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
     (2L, "the quick brown fox jumps over the lazy dog near the river bank todaz"), // 1-char near-dup of 1
@@ -577,7 +589,7 @@ class LlmSpec extends AnyFunSuite {
       .join(bench.select(explode(TextAnalysis.wordGrams("text", 3)).as("g")).distinct(), Seq("g"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 2)
-    val bloom = TextAnalysis.contaminationFlagsBloom(docs, bench, "text", "doc_id", n = 3, minHits = 2)
+    val bloom = TextAnalysis.contaminationFlags(docs, bench, "text", "doc_id", n = 3, minHits = 2)
     assert(TestSpark.rows(bloom) === TestSpark.rows(plain))
   }
 
@@ -592,7 +604,7 @@ class LlmSpec extends AnyFunSuite {
     val docs = (0L until 60L).map(i => (i, doc(20))).toDF("doc_id", "text")
     val gated = TextAnalysis.contaminationFlags(docs, bench, "text", "doc_id", n = 3, minHits = 2)
     val gatedRows = TestSpark.rows(gated)
-    val fallback = TextAnalysis.contaminationFlagsBloom(docs, bench, "text", "doc_id", n = 3,
+    val fallback = TextAnalysis.contaminationFlags(docs, bench, "text", "doc_id", n = 3,
       minHits = 2, expectedGrams = TextAnalysis.MaxBloomGrams + 1)
     assert(TestSpark.rows(fallback) === gatedRows)
   }
@@ -713,20 +725,15 @@ class LlmSpec extends AnyFunSuite {
     //   (0,0)=(1,2,3) (1,0)=(4,5,6) (0,1)=(7,8,9) (1,1)=(10,11,12)
     // storage: row0 = logical y=1 [7,8,9, 10,11,12, pad,pad],
     //          row1 = logical y=0 [1,2,3, 4,5,6, pad,pad]
-    def le32(v: Int) = Array(v, v >> 8, v >> 16, v >> 24).map(x => (x & 0xff).toByte)
-    def le16(v: Int) = Array(v, v >> 8).map(x => (x & 0xff).toByte)
-    def header(h: Int) =
-      "BM".getBytes("US-ASCII") ++ le32(54 + 16) ++ le32(0) ++ le32(54) ++
-        le32(40) ++ le32(2) ++ le32(h) ++ le16(1) ++ le16(24) ++ le32(0) ++
-        le32(16) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
+    def header(h: Int) = bmpHeader(2, h)
     val rowY1 = Array(7, 8, 9, 10, 11, 12, 0, 0).map(_.toByte)
     val rowY0 = Array(1, 2, 3, 4, 5, 6, 0, 0).map(_.toByte)
     // checksum over logical top-down k: k=1 (0,0), k=2 (1,0), k=3 (0,1), k=4 (1,1)
     val expected = 1L * (1 + 2 * 2 + 3 * 3) + 2L * (4 + 2 * 5 + 3 * 6) +
       3L * (7 + 2 * 8 + 3 * 9) + 4L * (10 + 2 * 11 + 3 * 12)
-    assert(decodePixels(header(2) ++ rowY1 ++ rowY0) === Some((2, 2, expected)))
+    assert(decodePixels(header(2) ++ rowY1 ++ rowY0) === Some(Multimodal.Decoded(2, 2, 3, expected)))
     // top-down (negative height): rows stored in logical order
-    assert(decodePixels(header(-2) ++ rowY0 ++ rowY1) === Some((2, 2, expected)))
+    assert(decodePixels(header(-2) ++ rowY0 ++ rowY1) === Some(Multimodal.Decoded(2, 2, 3, expected)))
     // truncated pixel array, wrong bpp, non-BMP: None, never throw
     assert(decodePixels(header(2) ++ rowY1) === None)
     assert(decodePixels("plain text".getBytes("UTF-8")) === None)
@@ -744,7 +751,7 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("PNG codec round-trip: every filter type, RGB and RGBA, checksum matches closed form") {
-    import Multimodal.PngCodec
+    import Multimodal.{Decoded, PngCodec}
     def closedForm(w: Int, h: Int, ch: Int, px: (Int, Int, Int) => Int): Long = {
       var cs = 0L; var k = 0L
       for (y <- 0 until h; x <- 0 until w) {
@@ -758,19 +765,19 @@ class LlmSpec extends AnyFunSuite {
       val px = (x: Int, y: Int, c: Int) => (31 * x + 17 * y + 53 * c + ft) % 256
       val img = PngCodec.encode(6, 5, 3, px, _ => ft)
       assert(PngCodec.decodePixels(img) ===
-        Some(PngCodec.Decoded(6, 5, 3, closedForm(6, 5, 3, px))), s"filter $ft")
+        Some(Decoded(6, 5, 3, closedForm(6, 5, 3, px))), s"filter $ft")
     }
     // RGBA with mixed filters per row
     val px4 = (x: Int, y: Int, c: Int) => (7 * x + 11 * y + 3 * c + 1) % 256
     val rgba = PngCodec.encode(4, 7, 4, px4, y => y % 5)
-    assert(PngCodec.decodePixels(rgba) === Some(PngCodec.Decoded(4, 7, 4, closedForm(4, 7, 4, px4))))
+    assert(PngCodec.decodePixels(rgba) === Some(Decoded(4, 7, 4, closedForm(4, 7, 4, px4))))
     // 1x1 edge
     val one = PngCodec.encode(1, 1, 3, (_, _, c) => c * 80, _ => 4)
-    assert(PngCodec.decodePixels(one) === Some(PngCodec.Decoded(1, 1, 3, 1L * 0 + 2 * 80 + 3 * 160)))
+    assert(PngCodec.decodePixels(one) === Some(Decoded(1, 1, 3, 1L * 0 + 2 * 80 + 3 * 160)))
   }
 
   test("PNG decoder agrees with an EXTERNAL encoder (Python zlib fixtures, all five filters)") {
-    import Multimodal.PngCodec
+    import Multimodal.{Decoded, PngCodec}
     def hexBytes(hex: String): Array[Byte] =
       hex.replaceAll("\\s", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
     // Generated by CPython's zlib + an independently written filter pass
@@ -783,17 +790,17 @@ class LlmSpec extends AnyFunSuite {
       "89504e470d0a1a0a0000000d4948445200000005000000040802000000c95162170000002849444154789c6361" +
       "3788e446020c72ee059a41d526b16df61913bd8ae7309ac6b523cb3389a302004bd309865584ef49000000004945" +
       "4e44ae426082")
-    assert(Multimodal.PngCodec.decodePixels(f1) === Some(PngCodec.Decoded(5, 4, 3, 168780L)))
+    assert(PngCodec.decodePixels(f1) === Some(Decoded(5, 4, 3, 168780L)))
     // F2: 3x5 RGBA, px = (97x + 13y + 29c + 3) % 256, row filters [0,1,2,3,4]
     val f2 = hexBytes(
       "89504e470d0a1a0a0000000d4948445200000003000000050806000000807156a20000002d49444154789c6360" +
       "56b08d4a699cb7fbe8a3ff328c02ba5ee98950c0c48b049865b42cddcdc160fb76166419004f9e0e7152299d5b00" +
       "00000049454e44ae426082")
-    assert(Multimodal.PngCodec.decodePixels(f2) === Some(PngCodec.Decoded(3, 5, 4, 150040L)))
+    assert(PngCodec.decodePixels(f2) === Some(Decoded(3, 5, 4, 150040L)))
     // and OUR encoder reproduces the same pixels under the same parameters
     val ours = PngCodec.encode(5, 4, 3,
       (x, y, c) => (11 * x + 23 * y + 41 * c + 7) % 256, y => (y + 4) % 5)
-    assert(PngCodec.decodePixels(ours) === Some(PngCodec.Decoded(5, 4, 3, 168780L)))
+    assert(PngCodec.decodePixels(ours) === Some(Decoded(5, 4, 3, 168780L)))
   }
 
   test("PNG decoder rejects corruption: bad chunk CRC, bad Adler-32, truncation, bad scope") {
@@ -823,9 +830,46 @@ class LlmSpec extends AnyFunSuite {
       System.arraycopy(be32(c2.getValue), 0, bad, 29, 4)
       assert(PngCodec.decodePixels(bad) === None, s"offset $off")
     }
+    // a 64-byte PNG whose first chunk claims Int.MaxValue - 10 bytes: in
+    // Int arithmetic offset + 12 + length wraps negative past the bounds
+    // check and the CRC pass indexes far outside the array
+    val hostile = good.take(8) ++ be32(Int.MaxValue - 10) ++ "IHDR".getBytes("US-ASCII") ++
+      new Array[Byte](48)
+    assert(PngCodec.decodePixels(hostile) === None)
     // garbage and empty
     assert(PngCodec.decodePixels("not a png at all, just text".getBytes("UTF-8")) === None)
     assert(PngCodec.decodePixels(Array.emptyByteArray) === None)
+  }
+
+  test("one extractor: each codec decodes its own container, every other row comes back unknown") {
+    import Multimodal.{AudioMeta, Decoded, MediaRow, PixelMeta}
+    val bmp = bmpHeader(1, 1) ++ Array(7, 8, 9, 0).map(_.toByte) // one B,G,R pixel + pad
+    val payloads = Map(
+      1L -> Multimodal.PngCodec.encode(3, 2, 3, (x, y, c) => 10 * x + 20 * y + c, _ => 4),
+      2L -> GifCodec.encode(4, 3, Array((1, 2, 3), (40, 50, 60)), (x, y) => (x + y) % 2),
+      3L -> JpegCodec.encode(8, 8, 1, (_, _, _) => 136),
+      4L -> bmp,
+      5L -> "plain text, no container magic".getBytes("UTF-8"))
+    val media = payloads.toSeq.map { case (id, p) => MediaRow(id, p) }.toDS()
+    val codecs = Seq[(String, Long, Array[Byte] => Option[Decoded])](
+      ("png", 1L, Multimodal.PngCodec.decodePixels), ("gif", 2L, GifCodec.decodePixels),
+      ("jpeg", 3L, JpegCodec.decodePixels), ("bmp", 4L, Multimodal.HeaderDecoder.decodePixels))
+    for ((format, own, decode) <- codecs) {
+      val rows = Multimodal.extractPixels(media, format, decode).collect().map(m => m.id -> m).toMap
+      assert(rows.keySet === payloads.keySet, format)
+      val d = decode(payloads(own)).get
+      assert(rows(own) === PixelMeta(own, format, d.width, d.height, d.channels, d.checksum))
+      for ((id, m) <- rows if id != own)
+        assert(m === PixelMeta(id, "unknown", 0, 0, 0, -1L), s"$format decoder on row $id")
+    }
+    assert(Multimodal.HeaderDecoder.decodePixels(bmp) === Some(Decoded(1, 1, 3, 7L + 2 * 8 + 3 * 9)))
+
+    val wav = WavCodec.encode(8000, 1, 8, 5, (f, _) => 40 * f)
+    val audio = Multimodal.extractAudio(Seq(MediaRow(6L, wav), MediaRow(1L, payloads(1L))).toDS())
+      .collect().map(m => m.id -> m).toMap
+    val w = WavCodec.decode(wav).get
+    assert(audio(6L) === AudioMeta(6L, "wav", w.sampleRate, w.channels, w.bits, w.frames, w.checksum))
+    assert(audio(1L) === AudioMeta(1L, "unknown", 0, 0, 0, 0L, -1L))
   }
 
   test("header decoder never throws on arbitrary bytes (fuzz with magic prefixes)") {
