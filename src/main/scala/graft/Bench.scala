@@ -27,24 +27,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  /** Full-record narrowing-guard decision (pure, spec-pinned): a core
-    * count's full record accepts a run only when it covers at least as many
-    * queries and the same SF dir as the record it would replace. Round-10
-    * postmortem: a 1-query investigation run clobbered the 93-query record;
-    * round-15 postmortem: a full-count sf0.001 verification run clobbered
-    * the sf0.1 record — query count alone doesn't identify the workload.
-    * An absent or unparsable prior record accepts anything (first write
-    * wins). A deliberate SF move (or recovering from a wrong-SF first write,
-    * which would otherwise hold the record forever) is
-    * BENCH_ALLOW_SF_CHANGE=1 — the same explicit ratchet-override contract
-    * as scale_bench's SCALE_ALLOW_DOWNSIZE. */
-  private[graft] def fullRecordAccepts(prior: String, nQueries: Int, sfDir: String,
+  /** Full-record guard decision (pure, spec-pinned): a core count's full
+    * record accepts a run only when it was taken over the same SF dir as the
+    * record it would replace. Round-15 postmortem: a full-suite sf0.001
+    * verification run clobbered the sf0.1 record. The query count is no
+    * part of the identity: an unfiltered run covers the whole current suite,
+    * so it replaces a record of an older, larger or smaller suite, and a
+    * `filtered` run never reaches a full record ([[recordPath]]). An absent
+    * or unparsable prior record accepts anything (first write wins). A
+    * deliberate SF move (or recovering from a wrong-SF first write, which
+    * would otherwise hold the record forever) is BENCH_ALLOW_SF_CHANGE=1. */
+  private[graft] def fullRecordAccepts(prior: String, sfDir: String,
                                        allowSfChange: Boolean = sys.env.get("BENCH_ALLOW_SF_CHANGE").contains("1")): Boolean = {
-    val priorN = """"n_queries":(\d+)""".r
-      .findFirstMatchIn(prior).map(_.group(1).toInt).getOrElse(0)
     val priorSf = """"sf":"([^"]+)"""".r
       .findFirstMatchIn(prior).map(_.group(1)).getOrElse(sfDir)
-    nQueries >= priorN && (sfDir == priorSf || allowSfChange)
+    sfDir == priorSf || allowSfChange
   }
 
   /** Where a run's full record goes (pure, spec-pinned): its own core
@@ -53,11 +50,12 @@ object Bench {
     * a path, "" when absent), else `BENCH_PARTIAL.json`. One record per core
     * count: round 20's 8-core run replaced the 32-core record. A run
     * `filtered` by SPARK_GRAFT_ONLY never becomes a full record, not even a
-    * core count's first: it would hold that record against the full suite. */
-  private[graft] def recordPath(cpus: Int, nQueries: Int, sfDir: String, prior: String => String,
+    * core count's first: it would hold that record against the full suite
+    * (round 10: a 1-query investigation run clobbered the 93-query record). */
+  private[graft] def recordPath(cpus: Int, sfDir: String, prior: String => String,
                                 filtered: Boolean = false): String = {
     val full = s"BENCH_FULL_c$cpus.json"
-    if (!filtered && fullRecordAccepts(prior(full), nQueries, sfDir)) full else "BENCH_PARTIAL.json"
+    if (!filtered && fullRecordAccepts(prior(full), sfDir)) full else "BENCH_PARTIAL.json"
   }
 
   /** The conditions a run was taken under, for the full record only:
@@ -188,15 +186,14 @@ object Bench {
         jobsOf, stealOf, oracle)
       println(compact)
       try {
-        val target = recordPath(cpus, best.size, sfDir, p =>
+        val target = recordPath(cpus, sfDir, p =>
           if (Files.exists(Paths.get(p))) new String(Files.readAllBytes(Paths.get(p)), UTF_8) else "",
           filtered = only.isDefined)
         if (only.isDefined)
           System.err.println("[bench] SPARK_GRAFT_ONLY run; writing BENCH_PARTIAL.json")
         else if (target == "BENCH_PARTIAL.json")
-          System.err.println(s"[bench] run covers ${best.size} queries at $sfDir vs a larger or " +
-            s"different-SF BENCH_FULL_c$cpus.json; writing BENCH_PARTIAL.json (set " +
-            "BENCH_ALLOW_SF_CHANGE=1 to accept a deliberate SF move)")
+          System.err.println(s"[bench] run at $sfDir vs a different-SF BENCH_FULL_c$cpus.json; writing " +
+            "BENCH_PARTIAL.json (set BENCH_ALLOW_SF_CHANGE=1 to accept a deliberate SF move)")
         Files.write(Paths.get(target), (full + "\n").getBytes(UTF_8))
         ()
       } catch {

@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the full-record guard and the record renderer of [[Bench]]. Each
   * core count has its own full record (`BENCH_FULL_c{cpus}.json`; round 20's
-  * 8-core run replaced the 32-core record), and it only accepts runs that
-  * cover at least as many queries and the same SF dir as the record they
-  * would replace (a 1-query run clobbered the 93-query record in round 10; a
-  * full-count sf0.001 run clobbered the sf0.1 record in round 15). The
+  * 8-core run replaced the 32-core record). An unfiltered run replaces it
+  * unless it was taken over another SF dir (a full-suite sf0.001 run
+  * clobbered the sf0.1 record in round 15); a SPARK_GRAFT_ONLY run never
+  * does (a 1-query run clobbered the 93-query record in round 10). The
   * rendered record and stdout line keep the keys, order and number format
   * that `tools/bench_table.py` and the driver's tail capture read.
   */
@@ -19,52 +19,56 @@ class BenchGuardSpec extends AnyFunSuite {
     """{"metric":"total","value":87.285,"unit":"sec","sf":"/root/testdata/sf0.1",""" +
       """"ratio":0.718,"failed":0,"n_queries":99}"""
 
-  test("same SF, same or more queries: accepted") {
-    assert(Bench.fullRecordAccepts(prior, 99, "/root/testdata/sf0.1"))
-    assert(Bench.fullRecordAccepts(prior, 120, "/root/testdata/sf0.1"))
+  private def withQueries(n: Int) = prior.replace(""""n_queries":99""", s""""n_queries":$n""")
+
+  test("same SF: accepted") {
+    assert(Bench.fullRecordAccepts(prior, "/root/testdata/sf0.1"))
   }
 
-  test("fewer queries: rejected (round-10 postmortem)") {
-    assert(!Bench.fullRecordAccepts(prior, 1, "/root/testdata/sf0.1"))
-    assert(!Bench.fullRecordAccepts(prior, 98, "/root/testdata/sf0.1"))
+  test("an unfiltered 105-query run replaces a 109-query record") {
+    // the committed full records hold a 109-query suite that has since
+    // shrunk to 105; an unfiltered run covers the whole current suite
+    val records = Map("BENCH_FULL_c32.json" -> withQueries(109))
+    assert(Bench.recordPath(32, "/root/testdata/sf0.1", records.getOrElse(_, "")) === "BENCH_FULL_c32.json")
+    // the round-10 case, a 1-query investigation, is a filtered run
+    assert(Bench.recordPath(32, "/root/testdata/sf0.1", records.getOrElse(_, ""), filtered = true) ===
+      "BENCH_PARTIAL.json")
   }
 
   test("different SF dir: rejected even at full query count (round-15 postmortem)") {
-    assert(!Bench.fullRecordAccepts(prior, 99, "/root/testdata/sf0.001"))
-    assert(!Bench.fullRecordAccepts(prior, 200, "/root/testdata/sf1"))
+    assert(!Bench.fullRecordAccepts(prior, "/root/testdata/sf0.001"))
+    assert(!Bench.fullRecordAccepts(withQueries(200), "/root/testdata/sf1"))
   }
 
   test("SF change accepted only under the explicit override (wrong-SF first write is recoverable)") {
-    assert(Bench.fullRecordAccepts(prior, 99, "/root/testdata/sf1", allowSfChange = true))
-    assert(!Bench.fullRecordAccepts(prior, 99, "/root/testdata/sf1", allowSfChange = false))
-    // the override relaxes only the SF clause, never the narrowing guard
-    assert(!Bench.fullRecordAccepts(prior, 98, "/root/testdata/sf1", allowSfChange = true))
+    assert(Bench.fullRecordAccepts(prior, "/root/testdata/sf1", allowSfChange = true))
+    assert(!Bench.fullRecordAccepts(prior, "/root/testdata/sf1", allowSfChange = false))
   }
 
   test("no prior record: anything accepted (first write wins)") {
-    assert(Bench.fullRecordAccepts("", 1, "/root/testdata/sf0.001"))
+    assert(Bench.fullRecordAccepts("", "/root/testdata/sf0.001"))
   }
 
   test("an 8-core run writes its own record, never the 32-core one") {
-    val records = Map("BENCH_FULL_c32.json" -> prior.replace(""""n_queries":99""", """"n_queries":120"""))
-    assert(Bench.recordPath(8, 99, "/root/testdata/sf0.1", records.getOrElse(_, "")) === "BENCH_FULL_c8.json")
+    val records = Map("BENCH_FULL_c32.json" -> withQueries(120))
+    assert(Bench.recordPath(8, "/root/testdata/sf0.1", records.getOrElse(_, "")) === "BENCH_FULL_c8.json")
   }
 
   test("a 32-core run is narrow-guarded by the 32-core record only") {
     val records = Map("BENCH_FULL_c32.json" -> prior,
-      "BENCH_FULL_c8.json" -> prior.replace(""""n_queries":99""", """"n_queries":120"""))
-    assert(Bench.recordPath(32, 99, "/root/testdata/sf0.1", records) === "BENCH_FULL_c32.json")
-    assert(Bench.recordPath(32, 98, "/root/testdata/sf0.1", records) === "BENCH_PARTIAL.json")
+      "BENCH_FULL_c8.json" -> prior.replace("/root/testdata/sf0.1", "/root/testdata/sf1"))
+    assert(Bench.recordPath(32, "/root/testdata/sf0.1", records) === "BENCH_FULL_c32.json")
+    assert(Bench.recordPath(32, "/root/testdata/sf1", records) === "BENCH_PARTIAL.json")
   }
 
   test("a SPARK_GRAFT_ONLY run writes BENCH_PARTIAL.json, even where its core count has no record") {
-    assert(Bench.recordPath(4, 2, "/root/testdata/sf0.001", _ => "", filtered = true) === "BENCH_PARTIAL.json")
-    assert(Bench.recordPath(32, 120, "/root/testdata/sf0.1", _ => prior, filtered = true) === "BENCH_PARTIAL.json")
-    assert(Bench.recordPath(4, 2, "/root/testdata/sf0.001", _ => "") === "BENCH_FULL_c4.json")
+    assert(Bench.recordPath(4, "/root/testdata/sf0.001", _ => "", filtered = true) === "BENCH_PARTIAL.json")
+    assert(Bench.recordPath(32, "/root/testdata/sf0.1", _ => prior, filtered = true) === "BENCH_PARTIAL.json")
+    assert(Bench.recordPath(4, "/root/testdata/sf0.001", _ => "") === "BENCH_FULL_c4.json")
   }
 
   test("unparsable prior: accepted rather than wedging the artifact") {
-    assert(Bench.fullRecordAccepts("not json at all", 5, "/root/testdata/sf0.1"))
+    assert(Bench.fullRecordAccepts("not json at all", "/root/testdata/sf0.1"))
   }
 
   private val oracleLine =

@@ -1,39 +1,50 @@
 #!/usr/bin/env python3
-"""Run the three off-toy scale harnesses (graft.ScaleBench dedup cascade,
-graft.ScaleJoins as-of/range, graft.ScaleAnn IVF) and merge their JSON lines
-into one machine-readable round artifact, so scale regressions are diffable
-round-over-round instead of living in README prose.
+"""Run the off-toy scale harnesses (the graft.Scale* mains in HARNESSES) and
+write their records into one machine-readable round artifact, so scale
+regressions are diffable round-over-round instead of living in README prose.
 
-Usage: python3 tools/scale_bench.py [out.json] [--only graft.ScaleJoins,...]
-  out.json default SCALE_r08.json (pass SCALE_rNN.json per round)
-  --only re-runs just the named harnesses and merges their records into the
-  existing artifact — the recovery path when one harness's record was taken
-  under co-tenant load (row counts never change, only wall times inflate)
+Usage: python3 tools/scale_bench.py OUT.json [--only graft.ScaleJoins,...] [--table]
+
+One run per record: a record is the one {"metric"...} line that one harness
+JVM printed, stored whole, plus the 1-min load at the JVM's start and end.
+Each phase in it is already the fastest of its load-gated samples
+(graft.Harness.Recorder), so this script selects, merges and folds nothing:
+every number in a record was measured under the conditions it states.
+
+Write rule:
+  - without --only, OUT.json must not exist yet: a round writes a new file;
+  - --only h1,h2 re-runs the named harnesses and replaces their records in an
+    existing OUT.json whole. It refuses a record whose input sizes
+    (INPUT_FIELDS) differ from the stored record's, so a run at other sizes
+    never replaces a record; the refused record is not written;
+  - OUT.json is rewritten after each harness finishes, so a harness that
+    fails keeps the records of those before it.
+To carry a record into a new round, copy the round file to the new name and
+re-run the harnesses that changed with --only.
 
 Env knobs pass through to the harnesses (SCALE_COPIES, SCALE_EVENTS,
-SCALE_USERS, SPARK_GRAFT_CPUS, ...). SCALE_LOAD_GATE (default 8.0) sets the
-1-min loadavg each harness waits for before starting; SCALE_SETTLE_TRIES
-bounds the wait. SCALE_RUNS (default 1) runs each harness K times and keeps
-the record with the smallest primary wall-time — the min-of-K defense
-against co-tenant load bursts that outlast a single harness (row counts are
-deterministic, so every run agrees on everything but the clock). Records
-carry load_at_start AND load_at_end: a burst that lands mid-run is
-self-identifying in the artifact. Also prints the README markdown table
-derived from the artifact (--table re-prints it from an existing artifact
-without re-running).
+SCALE_USERS, SPARK_GRAFT_CPUS, ...). A run ends by printing the README scale
+table derived from OUT.json; --table only prints it, running nothing.
 """
+import argparse
 import glob
 import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 HARNESSES = ["graft.ScaleBench", "graft.ScaleJoins", "graft.ScaleAnn",
              "graft.ScaleZOrder", "graft.ScaleBuckets", "graft.ScaleStream",
              "graft.ScaleDecontam", "graft.ScaleGraph", "graft.ScaleFlagship",
              "graft.ScaleEr", "graft.ScaleMultimodal"]
+# A record's workload identity: its input sizes, not derived measurements
+# such as task counts, which vary with AQE. A default-size rerun once
+# replaced the 1.25M-doc dedup record; --only refuses that.
+INPUT_FIELDS = ("copies", "docs", "events", "users", "vectors",
+                "images_per_format", "n_lists", "queries", "k", "rows",
+                "buckets", "pq_rerank_n", "bench_docs", "gram_n", "min_hits",
+                "nodes_param", "pr_iters", "edges_param")
 
 
 def loadavg():
@@ -41,23 +52,6 @@ def loadavg():
         return float(open("/proc/loadavg").read().split()[0])
     except OSError:
         return -1.0
-
-
-def settle(gate=None, tries=None, nap=30):
-    if gate is None:
-        gate = float(os.environ.get("SCALE_LOAD_GATE", "8.0"))
-    if tries is None:
-        tries = int(os.environ.get("SCALE_SETTLE_TRIES", "10"))
-    """Back-to-back 32-thread harnesses leave a decaying 1-min load that
-    inflates the next harness's single-sample numbers — wait (bounded) for it
-    to drain, same discipline as Bench's per-sample load gate."""
-    l = loadavg()
-    while l > gate and tries > 0:
-        print(f"[scale] load={l:.1f} > {gate}, settling {nap}s", file=sys.stderr)
-        time.sleep(nap)
-        tries -= 1
-        l = loadavg()
-    return l
 
 
 def run_one(main):
@@ -70,7 +64,7 @@ def run_one(main):
               "sun.security.action", "sun.util.calendar"]:
         add_opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd = ["java"] + add_opens + ["-Xmx48g", "-cp", cp, main]
-    load = settle()
+    load = loadavg()
     print(f"[scale] running {main} (load={load:.1f}) ...", file=sys.stderr)
     r = subprocess.run(cmd, capture_output=True, text=True)
     if r.returncode != 0:
@@ -82,35 +76,6 @@ def run_one(main):
     rec["load_at_start"] = load
     rec["load_at_end"] = loadavg()
     return rec
-
-
-# per-harness primary wall-time: the min-of-K selector key
-PRIMARY = {
-    "scale_dedup": lambda r: r["pairs_sec"],
-    "scale_joins": lambda r: r["asof_sec"] + r["range_sec"],
-    "scale_ann": lambda r: (r["brute_sec"] + r["ivf8_sec"] + r.get("pq_encode_sec", 0.0)
-                            + r.get("pq_adc_sec", 0.0) + r.get("pq_rerank_sec", 0.0)),
-    "scale_zorder": lambda r: r["zorder"]["scan_sec"] + r["zorder"]["scan_user_sec"],
-    "scale_buckets": lambda r: r["bucket_join_sec"] + r["plain_join_sec"],
-    "scale_stream": lambda r: (r["windowed"]["drain_sec"] + r["sessions"]["drain_sec"]
-                               + r["interval_join"]["drain_sec"]),
-    "scale_decontam": lambda r: r["bloom_sec"] + r["nogate_sec"],
-    "scale_graph": lambda r: r["tri_shuffle_sec"] + r["pr_shuffle_sec"],
-    "scale_flagship": lambda r: r["total_sec"],
-    "scale_er": lambda r: (r["gaz_nogate_sec"] + r["gaz_gated_sec"]
-                           + r["pairs_nogate_sec"] + r["pairs_gated_sec"]),
-    "scale_multimodal": lambda r: (r["png"]["decode_sec"] + r["gif"]["decode_sec"]
-                                   + r["jpeg"]["decode_sec"] + r["wav"]["decode_sec"]),
-}
-
-
-def run_best(main):
-    runs = int(os.environ.get("SCALE_RUNS", "1"))
-    recs = [run_one(main) for _ in range(runs)]
-    best = min(recs, key=lambda r: PRIMARY.get(r["metric"], lambda _: 0.0)(r))
-    if runs > 1:
-        best["n_runs"] = runs
-    return best
 
 
 def table(merged):
@@ -347,257 +312,41 @@ def table(merged):
     return "\n".join(out)
 
 
-# Per-field-FAMILY refold: a kept (min-ratchet) record can still carry a
-# sub-experiment measured under load while a newer losing run measured it
-# clean — the r17/r18 postmortem: the quiet-window LSH sweep was re-measured
-# twice and existed only in README prose, because the record-level min kept
-# the old record and the new-field fold only covers fields the old record
-# LACKS. A family ties together the fields that must move as one (the sweep
-# dict + its headline scalars + the per-phase entries in stragglers/loads)
-# so a refold can never publish an internally inconsistent record. Non-clock
-# leaves (recalls, rows, plane counts) are deterministic for the same
-# workload and must be EQUAL for the refold to engage; the family's summed
-# clock decides. Refolds are tagged in `refolded_fields` with the
-# contributing run's loads — same reader-visible provenance discipline as
-# `folded_fields` and the flagship points' `"folded": true`.
-REFOLD_FAMILIES = {
-    "scale_ann": [{
-        "name": "lsh",
-        "fields": ["lsh_sweep", "lsh_sec", "lsh_recall", "lsh_mp_sec",
-                   "lsh_mp_recall", "lsh_planes"],
-        "subkeys": {"stragglers": ["lsh", "lsh_multiprobe"],
-                    "loads": ["lsh", "lsh_multiprobe"]},
-    }],
-    # r19: the JPEG codec's IDCT moved to a nonzero-coefficient walk; the
-    # kept record's jpeg sub-experiment predates it. `derived` lists leaves
-    # computed FROM the clock (rows/s, MB/s, straggler) — excluded from the
-    # determinism witness (n/mb/checksum must still agree exactly).
-    "scale_multimodal": [{
-        "name": "jpeg",
-        "fields": ["jpeg"],
-        "subkeys": {"phase_loads": ["jpeg_decode"]},
-        "derived": ["rows_per_sec", "mb_per_sec", "straggler"],
-        # decision clock: decode only. gen_sec (the encoder) is 5-10x the
-        # decode and moves with ambient load, so a summed clock would let a
-        # loaded encode window veto a clean decode measurement; the adopted
-        # sub-record is still ONE run's numbers as a unit (gen included).
-        "clock_keys": ["decode_sec"],
-    }],
-}
-
-
-def _clock_sum(v):
-    """Recursive sum of wall-clock leaves (keys named `sec` / `*_sec`)."""
-    if isinstance(v, dict):
-        return sum(_clock_sum(x) if not (isinstance(x, (int, float))
-                                         and (k == "sec" or k.endswith("_sec")))
-                   else float(x) for k, x in v.items())
-    return 0.0
-
-
-def _nonclock(v, derived=()):
-    """Recursive copy with clock leaves (and clock-DERIVED leaves named in
-    the family's `derived` list: rates, stragglers) removed — the
-    determinism witness."""
-    if isinstance(v, dict):
-        return {k: _nonclock(x, derived) for k, x in v.items()
-                if not ((isinstance(x, (int, float))
-                         and (k == "sec" or k.endswith("_sec")))
-                        or k in derived)}
-    return v
-
-
-def refold_families(metric, old, rec):
-    for fam in REFOLD_FAMILIES.get(metric, []):
-        fields = [f for f in fam["fields"] if f in old and f in rec]
-        clocked = [f for f in fields
-                   if f == "sec" or f.endswith("_sec") or isinstance(rec[f], dict)]
-        if not clocked:
-            continue
-        plain = [f for f in fields if f not in clocked]
-        # determinism witness: every non-clock value (incl. non-clock leaves
-        # inside dict fields) must agree, else this is a different experiment
-        # (changed planes/geometry) and field-level mixing would lie.
-        # Scalar `*_sec` fields are pure clock — no witness to compare.
-        derived = tuple(fam.get("derived", ()))
-        if any(_nonclock(old[f], derived) != _nonclock(rec[f], derived)
-               for f in clocked if isinstance(old[f], dict)) or \
-           any(old[f] != rec[f] for f in plain):
-            continue
-        ck = fam.get("clock_keys")
-        def fam_clock(src):
-            if ck:
-                return sum(float(src[f][k]) for f in clocked
-                           if isinstance(src[f], dict) for k in ck if k in src[f])
-            return sum(float(src[f]) if not isinstance(src[f], dict)
-                       else _clock_sum(src[f]) for f in clocked)
-        old_clock = fam_clock(old)
-        new_clock = fam_clock(rec)
-        if new_clock < old_clock:
-            for f in fields:
-                old[f] = rec[f]
-            for top, keys in fam.get("subkeys", {}).items():
-                for kk in keys:
-                    if top in old and kk in rec.get(top, {}):
-                        old[top][kk] = rec[top][kk]
-            old.setdefault("refolded_fields", {})[fam["name"]] = {
-                "fields": fields,
-                "load_at_start": rec.get("load_at_start"),
-                "load_at_end": rec.get("load_at_end"),
-                "loads": {kk: rec.get("loads", {}).get(kk)
-                          for kk in fam.get("subkeys", {}).get("loads", [])},
-            }
-            print(f"[scale] refolded {metric} family '{fam['name']}' from the "
-                  f"cleaner run ({new_clock:.1f}s < {old_clock:.1f}s)",
-                  file=sys.stderr)
-
-
-def merge_flagship_points(keep, other):
-    """Per-point min for the flagship linearity curve: the record's points
-    are INDEPENDENT measurements of deterministic workloads (graph_rows agree
-    run-to-run), so each x-point gets the same min-of-K estimator the
-    record-level rule applies to whole harnesses. Without this, one loaded
-    point poisons an otherwise-clean record forever: run A can be clean at
-    x400 while run B is clean at x250 — the curve's true shape is the
-    pointwise min. `keep` is the surviving record; `other` contributes only
-    per-point wall times, and only where row counts prove the same workload.
-    The LAST point is never folded: the record's total_sec, stage_secs, and
-    loads all describe that run's final point, and splicing a foreign total
-    under this run's stage breakdown would publish a row whose stages sum to
-    more than its total — the record-level min already arbitrates the last
-    point by choosing whole records.
-
-    Folded points are tagged `"folded": true` in the published record: their
-    point-level wall times come from a different run than the record-level
-    context (loads, stage_stragglers, load_at_start/end), so a downstream
-    reader of SCALE_r*.json must be able to tell composite points from
-    single-run points instead of attributing run A's ambient-load fields to
-    run B's clock."""
-    if keep.get("metric") != "scale_flagship" or "points" not in other:
-        return
-    by_copies = {p["copies"]: p for p in other.get("points", [])}
-    for p in keep.get("points", [])[:-1]:
-        o = by_copies.get(p["copies"])
-        # only row-verified points fold, so a both-None graph_rows pair is refused on purpose
-        if o and "total_sec" in o and "result_sec" in o \
-                and o.get("graph_rows") is not None \
-                and o["graph_rows"] == p.get("graph_rows") \
-                and o["total_sec"] < p["total_sec"]:
-            print(f"[scale] flagship x{p['copies']}: folding in cleaner point "
-                  f"({o['total_sec']:.1f}s < {p['total_sec']:.1f}s)", file=sys.stderr)
-            p["total_sec"] = o["total_sec"]
-            p["result_sec"] = o["result_sec"]
-            p["folded"] = True
+def workload(rec):
+    return {f: rec[f] for f in INPUT_FIELDS if f in rec}
 
 
 def main():
-    out_path = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") \
-        else "SCALE_r08.json"
-    only = None
-    for i, a in enumerate(sys.argv):
-        if a == "--only" and i + 1 < len(sys.argv):
-            only = sys.argv[i + 1].split(",")
-        elif a.startswith("--only="):
-            only = a.split("=", 1)[1].split(",")
-    replay = None
-    for i, a in enumerate(sys.argv):
-        if a == "--replay" and i + 1 < len(sys.argv):
-            replay = sys.argv[i + 1].split(",")
-        elif a.startswith("--replay="):
-            replay = a.split("=", 1)[1].split(",")
-    if "--table" in sys.argv:
-        merged = json.load(open(out_path))
-    else:
-        harnesses = HARNESSES if only is None else [h for h in HARNESSES if h in only]
-        keep_old = os.path.exists(out_path) and "--fresh" not in sys.argv
-        merged = json.load(open(out_path)) if keep_old else {}
-        # --replay f.json[,g.json]: merge already-captured harness records
-        # (e.g. a clean run whose record lost the whole-record min but whose
-        # POINTS are partially cleaner) through the same rules as a live run
-        records = ([json.load(open(p)) for p in replay] if replay
-                   else (run_best(m) for m in harnesses))
-        for rec in records:
-            k = rec["metric"]
-            old = merged.get(k)
-            # deterministic workloads: row counts agree run-to-run, only the
-            # clock varies with co-tenant load — so the smaller primary
-            # wall-time is always the cleaner record. Repeated invocations
-            # monotonically improve the artifact (--fresh discards history).
-            # Only records of the SAME workload compete: a run at default
-            # size must not displace a deliberately larger record just
-            # because it finished faster (a 100k-doc rerun once clobbered
-            # the 1.25M-doc dedup record this way). Workload identity =
-            # the input-size parameters (NOT derived measurements like task
-            # counts, which vary with AQE).
-            INPUT_FIELDS = ("copies", "docs", "events", "users", "vectors",
-                            "images_per_format",
-                            "n_lists", "queries", "k", "rows", "buckets",
-                            "pq_rerank_n", "bench_docs", "gram_n", "min_hits",
-                            "nodes_param", "pr_iters", "edges_param")
-            def workload(r):
-                return {f: r[f] for f in INPUT_FIELDS if f in r}
-            same = old is not None and workload(old) == workload(rec)
-            covers = same and all(f in old for f in rec if f.endswith("_sec"))
-            # downsize ratchet (two postmortems: a 100k-doc default rerun
-            # clobbered the 1.25M-doc dedup record, then a default sweep
-            # clobbered the 250-copy dedup AND ann records): a run whose
-            # every numeric input is <= the stored record's — and at least
-            # one strictly smaller — is a smaller workload, and replacing a
-            # big-scale proof with it is never what a sweep means. Grow or
-            # reshape replaces (with the warning); shrink requires intent.
-            def downsized(o, r):
-                keys = set(workload(o)) & set(workload(r))
-                nums = [(o[f], r[f]) for f in keys
-                        if isinstance(o[f], (int, float)) and isinstance(r[f], (int, float))]
-                return (nums and all(rv <= ov for ov, rv in nums)
-                        and any(rv < ov for ov, rv in nums))
-            allow_shrink = os.environ.get("SCALE_ALLOW_DOWNSIZE") == "1"
-            if (old is not None and not same and not allow_shrink
-                    and downsized(old, rec)):
-                print(f"[scale] keeping existing {k} record: this run is a "
-                      f"SMALLER workload {workload(rec)} than the stored "
-                      f"{workload(old)} (SCALE_ALLOW_DOWNSIZE=1 to override)",
-                      file=sys.stderr)
-                # the record survives whole, but a deliberately smaller
-                # validation run can still contribute cleaner NOT-LAST curve
-                # points (row-count witnesses inside merge_flagship_points
-                # prove the same workload; the last point never folds) —
-                # without this, a post-optimization x100 re-measurement could
-                # never improve the curve without re-running x800
-                merge_flagship_points(old, rec)
-            elif covers and k in PRIMARY and PRIMARY[k](old) <= PRIMARY[k](rec):
-                print(f"[scale] keeping existing {k} record "
-                      f"({PRIMARY[k](old):.1f}s <= {PRIMARY[k](rec):.1f}s)", file=sys.stderr)
-                merge_flagship_points(old, rec)
-                refold_families(k, old, rec)
-                # NEW-experiment fields the kept record predates (a harness
-                # gained a measurement since the stored record was taken) are
-                # folded in rather than dropped — tagged with provenance, same
-                # discipline as the flagship points' "folded": the kept
-                # record's loads/stragglers don't describe these fields'
-                # run, and a reader must be able to tell.
-                new_fields = [f for f in rec
-                              if f not in old and f not in ("load_at_start",
-                                                            "load_at_end", "n_runs")]
-                if new_fields:
-                    for f in new_fields:
-                        old[f] = rec[f]
-                    old.setdefault("folded_fields", []).extend(
-                        f for f in new_fields if f not in old.get("folded_fields", []))
-                    print(f"[scale] folded new fields into kept {k} record: "
-                          f"{new_fields}", file=sys.stderr)
-            else:
-                if old is not None and not same:
-                    print(f"[scale] WARNING: {k} workload changed "
-                          f"{workload(old)} -> {workload(rec)}; replacing the old "
-                          f"record (set SCALE_* envs to match if unintended)",
-                          file=sys.stderr)
-                if old is not None and same:
-                    merge_flagship_points(rec, old)
-                merged[k] = rec
-        with open(out_path, "w") as f:
+    ap = argparse.ArgumentParser(prog="tools/scale_bench.py", add_help=False)
+    ap.add_argument("out", metavar="OUT.json")
+    ap.add_argument("--only", metavar="graft.ScaleJoins,...", type=lambda s: s.split(","))
+    ap.add_argument("--table", action="store_true")
+    args = ap.parse_args()
+    if args.table:
+        print(table(json.load(open(args.out))))
+        return
+    exists = os.path.exists(args.out)
+    if args.only is None and exists:
+        raise SystemExit(f"[scale] {args.out} exists: a round writes a new file "
+                         f"(--only replaces named records in it)")
+    if args.only is not None and not exists:
+        raise SystemExit(f"[scale] {args.out} not found: --only replaces records "
+                         f"in an existing round file")
+    unknown = set(args.only or ()) - set(HARNESSES)
+    if unknown:
+        ap.error(f"unknown harness(es) {sorted(unknown)}; known: {HARNESSES}")
+    merged = json.load(open(args.out)) if exists else {}
+    for h in HARNESSES if args.only is None else [h for h in HARNESSES if h in args.only]:
+        rec = run_one(h)
+        old = merged.get(rec["metric"])
+        if old is not None and workload(old) != workload(rec):
+            raise SystemExit(f"[scale] refusing {rec['metric']}: input sizes "
+                             f"{workload(rec)} differ from the stored {workload(old)}; "
+                             f"the stored record is kept")
+        merged[rec["metric"]] = rec
+        with open(args.out, "w") as f:
             json.dump(merged, f, indent=1)
-        print(f"[scale] wrote {out_path}", file=sys.stderr)
+        print(f"[scale] wrote {rec['metric']} to {args.out}", file=sys.stderr)
     print(table(merged))
 
 
