@@ -13,15 +13,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    + bit_xor), so every projected expression is actually computed;
   *  - one un-timed warm-up pass absorbs first-touch codegen, classloading
   *    and parquet footer caching;
-  *  - each query runs on a FRESH SparkSession (rounds 2-5: in-session decay
-  *    inflated heavy queries 10-25×);
-  *  - the two timed passes are INTERLEAVED suite-wide, so a load burst hits
-  *    at most one sample per query, plus a third sample where the two
-  *    disagree by >1.5× and a last one where the best sample ran loaded;
+  *  - each sample runs on a FRESH SparkContext and session (rounds 2-5:
+  *    in-session decay inflated heavy queries 10-25×);
+  *  - [[Passes]] timed passes are INTERLEAVED suite-wide, so a load burst
+  *    hits at most one sample per query, and each query keeps its fastest
+  *    successful sample; no query is sampled again, and tools/oracle_bench.py
+  *    times the DuckDB side the same way;
   *  - every timed sample is LOAD-GATED ([[Harness.sample]]) and records the
   *    load it started under, so an inflated sample identifies itself;
   *  - the DuckDB oracle total for the same queries is merged into the same
-  *    record with the spark/oracle ratio, so the 2× gate is auditable;
+  *    record with the spark/oracle ratio, its per-query geomean and Spark's
+  *    win count, so the 2× gate is auditable;
   *  - failures are recorded per query (-1 + stderr), never swallowed into a
   *    plausible wall time.
   */
@@ -71,12 +73,37 @@ object Bench {
       "jvm" -> System.getProperty("java.version"))
   }
 
+  /** Timed passes over the suite, on both engines: each query's minimum is
+    * taken over samples from three separate stretches of the run, so one
+    * load burst inflates at most one of them. */
+  private[graft] val Passes = 3
+
+  /** One timed sample of one query: seconds (-1 when it failed), the load it
+    * started under, its (jobs, stages) and the stolen CPU share. */
+  private[graft] final case class Timed(sec: Double, load: Double, jobs: (Int, Int), steal: Double) {
+    def ok: Boolean = sec >= 0
+  }
+
+  /** The timed passes (spec-pinned with a fake `measure`): [[Passes]] passes
+    * over `names`, pass-major, so all of pass 1 runs before pass 2. Returns
+    * each query's samples in the order taken, in `names` order. A throw out
+    * of `measure` (a session rebuild that died) ends the suite, keeping the
+    * samples it returned before. */
+  private[graft] def timedPasses(names: Seq[String])(measure: (Int, String) => Timed): Seq[(String, Seq[Timed])] = {
+    val taken = scala.collection.mutable.ArrayBuffer[(String, Timed)]()
+    try for (pass <- 1 to Passes; name <- names) taken += name -> measure(pass, name)
+    catch {
+      case e: Throwable => System.err.println(s"[bench] suite aborted, emitting partial results: ${e.getMessage}")
+    }
+    names.map(n => n -> taken.collect { case (`n`, t) => t }.toSeq)
+  }
+
   /** One run's two renderings (pure, spec-pinned): the full record, which
-    * [[recordPath]] persists, and the compact stdout line. `best` holds each
-    * query's (sec, load) of its fastest sample in query order (sec -1 when
-    * every sample failed), `samples` every (sec, load) taken, newest first,
-    * `jobsOf` the (jobs, stages) and `stealOf` the stolen CPU share of each
-    * best sample, and `oracle` the DuckDB total and its own JSON line.
+    * [[recordPath]] persists, and the compact stdout line. `runs` holds each
+    * query's samples in query order ([[timedPasses]]); a query's entry is
+    * its fastest successful sample (sec -1 when every sample failed), with
+    * that sample's load, jobs and steal. `oracle` is the DuckDB total and
+    * its own JSON line.
     *
     * The driver's artifact keeps only the LAST ~2000 chars of stdout (sbt
     * appends its own lines after ours, so a whole line never parses), so
@@ -85,17 +112,17 @@ object Bench {
     * oracle's line and the per-query jobs/ratios objects live in the full
     * record. */
   private[graft] def render(sfDir: String, loadGate: Double, conditions: Seq[(String, Any)],
-                            best: Seq[(String, (Double, Double))],
-                            samples: collection.Map[String, List[(Double, Double)]],
-                            jobsOf: collection.Map[String, (Int, Int)],
-                            stealOf: collection.Map[String, Double],
+                            runs: Seq[(String, Seq[Timed])],
                             oracle: Option[(Double, String)]): (String, String) = {
     def r3(d: Double): Double = if (d < 0) d else math.round(d * 1000.0) / 1000.0
     def r2(d: Double): Double = if (d < 0) d else math.round(d * 100.0) / 100.0
-    def byName[V](m: collection.Map[String, V])(f: V => Any) =
-      Harness.obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> f(v) }: _*)
-    val measured = best.collect { case (k, (v, _)) if v >= 0 => (k, v) }
-    val total = measured.map(_._2).sum
+    def jobs(t: Timed) = Seq(t.jobs._1, t.jobs._2)
+    // each query's successful samples in the order taken, and its fastest
+    val ok = runs.map { case (k, ts) => k -> ts.filter(_.ok) }.filter(_._2.nonEmpty)
+    val best = ok.map { case (k, ts) => k -> ts.minBy(_.sec) }
+    val byName = best.sortBy(_._1)
+    val bestOf = best.toMap
+    val total = best.map(_._2.sec).sum
     // per-query oracle seconds, parsed back out of the oracle line's own
     // "queries" object (every query name is q_-prefixed, so the regex
     // cannot match the line's other fields)
@@ -103,8 +130,8 @@ object Bench {
       """"(q_[A-Za-z0-9_]+)":(-?[0-9.eE+]+)""".r.findAllMatchIn(oJson)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }.getOrElse(Map.empty)
-    val triples = measured.collect {
-      case (k, v) if oracleQ.get(k).exists(_ > 0) => (k, v, oracleQ(k), v / oracleQ(k))
+    val triples = best.collect {
+      case (k, t) if oracleQ.get(k).exists(_ > 0) => (k, t.sec, oracleQ(k), t.sec / oracleQ(k))
     }
     // rank only pairs where BOTH engines do non-trivial work: a 0.5s Spark
     // constant over a sub-millisecond DuckDB microquery is a 500x "ratio"
@@ -112,21 +139,29 @@ object Bench {
     // query for auditing those constants; `worst_jobs` is the floor
     // attribution of the worst ratios ([n_jobs, n_stages] of the best sample)
     val worst = triples.filter { case (_, s, o, _) => o >= 0.05 && s >= 0.25 }.sortBy(-_._4).take(8)
+    // the per-query view of the suite: a suite total is dominated by its few
+    // heaviest queries, the geomean and the win count are not
+    val perQuery: Seq[(String, Any)] =
+      if (triples.isEmpty) Seq("geomean_ratio" -> None, "spark_wins" -> None)
+      else Seq("geomean_ratio" -> r3(math.exp(triples.map(t => math.log(t._4)).sum / triples.size)),
+        "spark_wins" -> triples.count { case (_, s, o, _) => s < o })
     val head = Seq("metric" -> "total", "value" -> r3(total), "unit" -> "sec", "sf" -> sfDir,
       "load_gate" -> loadGate)
     val summary = Seq(
-      "queries" -> Harness.obj(best.map { case (k, (v, l)) => k -> Seq(r3(v), r2(l)) }: _*),
-      "slowest" -> Harness.obj(measured.sortBy(-_._2).take(8).map { case (k, v) => k -> r3(v) }: _*),
+      "queries" -> Harness.obj(runs.map { case (k, _) =>
+        k -> bestOf.get(k).fold(Seq(-1.0, -1.0))(t => Seq(r3(t.sec), r2(t.load))) }: _*),
+      "slowest" -> Harness.obj(best.sortBy(-_._2.sec).take(8).map { case (k, t) => k -> r3(t.sec) }: _*),
       "worst_ratio" -> Harness.obj(worst.map { case (k, _, _, r) => k -> r2(r) }: _*),
-      "worst_jobs" -> Harness.obj(worst.flatMap { case (k, _, _, _) =>
-        jobsOf.get(k).map { case (j, st) => k -> Seq(j, st) } }: _*),
+      "worst_jobs" -> Harness.obj(worst.map { case (k, _, _, _) => k -> jobs(bestOf(k)) }: _*)) ++ perQuery ++ Seq(
       "spark_total_sec" -> r3(total),
       "oracle_total_sec" -> oracle.fold[Any](None) { case (o, _) => r3(o) },
       "ratio" -> oracle.fold[Any](None) { case (o, _) => r3(if (o > 0) total / o else -1.0) },
-      "failed" -> (best.size - measured.size), "n_queries" -> best.size)
-    val bulky = Seq("samples" -> byName(samples)(_.reverse.map { case (s, l) => Seq(r3(s), r2(l)) })) ++
+      "failed" -> (runs.size - best.size), "n_queries" -> runs.size)
+    val bulky = Seq("samples" -> Harness.obj(ok.sortBy(_._1).map { case (k, ts) =>
+      k -> ts.map(t => Seq(r3(t.sec), r2(t.load))) }: _*)) ++
       oracle.map { case (_, oJson) => "oracle" -> Harness.Raw(oJson) } ++
-      Seq("jobs" -> byName(jobsOf) { case (j, st) => Seq(j, st) }, "steal" -> byName(stealOf)(r3),
+      Seq("jobs" -> Harness.obj(byName.map { case (k, t) => k -> jobs(t) }: _*),
+        "steal" -> Harness.obj(byName.map { case (k, t) => k -> r3(t.steal) }: _*),
         "ratios" -> Harness.obj(triples.map { case (k, s, o, r) => k -> Seq(r3(s), r3(o), r2(r)) }: _*))
     (Harness.json(Harness.obj(head ++ conditions ++ bulky ++ summary: _*)),
       Harness.json(Harness.obj(head ++ summary: _*)))
@@ -171,19 +206,11 @@ object Bench {
       restart()
     }
 
-    // what `render` reads, filled by `measure`
-    val best = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    queries.foreach { case (name, _) => best(name) = (-1.0, -1.0) }
-    val samples = scala.collection.mutable.Map[String, List[(Double, Double)]]().withDefaultValue(Nil)
-    val jobsOf = scala.collection.mutable.Map[String, (Int, Int)]()
-    val stealOf = scala.collection.mutable.Map[String, Double]()
-
     // prints the compact line and persists the full record: the stdout
     // copy is tail-truncated in the driver's round artifact, the file is
     // not, and tools/bench_table.py renders the README table from it
-    def emit(oracle: Option[(Double, String)]): Unit = {
-      val (full, compact) = render(sfDir, loadGate, conditions(cpus), best.toSeq, samples,
-        jobsOf, stealOf, oracle)
+    def emit(runs: Seq[(String, Seq[Timed])], oracle: Option[(Double, String)]): Unit = {
+      val (full, compact) = render(sfDir, loadGate, conditions(cpus), runs, oracle)
       println(compact)
       try {
         val target = recordPath(cpus, sfDir, p =>
@@ -201,80 +228,30 @@ object Bench {
       }
     }
 
-    def measure(pass: String, name: String, fn: (SparkSession, String) => DataFrame): Unit = {
+    val fns = queries.toMap
+    val runs = timedPasses(queries.map(_._1)) { (pass, name) =>
       val ledger = new Harness.Ledger(spark)
       val s = Harness.sample(name, ledger) {
-        try { Harness.consume(fn(spark, sfDir)); true }
+        try { Harness.consume(fns(name)(spark, sfDir)); true }
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
         }
       }
-      val (sec, load) = (if (s.value) s.sec else -1.0, s.load)
       val jobLog = ledger.jobLog()
       ledger.close()
-      val (jobs, stages) = (jobLog.size, jobLog.map(_.stages.size).sum)
-      System.err.println(f"[bench][$pass] $name $sec%.2fs load=$load%.2f steal=${s.steal}%.3f " +
-        s"jobs=$jobs stages=$stages")
-      if (sec >= 0) {
-        samples(name) = (sec, load) :: samples(name)
-        val (prev, _) = best(name)
-        if (prev < 0 || sec < prev) {
-          best(name) = (sec, load)
-          jobsOf(name) = (jobs, stages)
-          stealOf(name) = s.steal
-        }
-      }
+      val t = Timed(if (s.value) s.sec else -1.0, s.load, (jobLog.size, jobLog.map(_.stages.size).sum), s.steal)
+      System.err.println(f"[bench][pass$pass] $name ${t.sec}%.2fs load=${t.load}%.2f steal=${t.steal}%.3f " +
+        s"jobs=${t.jobs._1} stages=${t.jobs._2}")
       restart()
+      t
     }
-
-    // Results are emitted even if a session rebuild dies mid-suite: a crash
-    // in pass 2 must not discard every measurement already taken.
-    try {
-      for (pass <- 1 to 2)
-        queries.foreach { case (name, fn) => measure(s"pass$pass", name, fn) }
-      // Adaptive third sample: two samples that disagree by >1.5× mean at
-      // least one was taken under a load burst — exactly the case where
-      // min-of-2 can still overstate (the smaller sample may itself be
-      // inflated). Bounded extra cost: only the disagreeing queries re-run.
-      val unstable = queries.filter { case (name, _) =>
-        samples(name).map(_._1) match {
-          case a :: b :: _ => math.max(a, b) > 1.5 * math.min(a, b)
-          case _ => true // a failed sample: give it one more chance
-        }
-      }
-      if (unstable.nonEmpty) {
-        System.err.println(s"[bench] re-measuring ${unstable.size} unstable queries: " +
-          unstable.map(_._1).mkString(", "))
-        unstable.foreach { case (name, fn) => measure("pass3", name, fn) }
-      }
-      // Load-flagged final pass: min-of-2 and the instability trigger are
-      // blind to SUSTAINED ambient load below the gate (a co-tenant burning
-      // a quarter of the box inflated q_dedup_minhash 6x in one run). Any
-      // query whose BEST sample started above max(2, 0.1 × cpus) load gets
-      // one more gated sample at the end of the run; min() keeps the faster,
-      // and the recorded load tells the reader which regime won.
-      val loadFlag = math.max(2.0, 0.1 * cpus)
-      val loaded = queries.filter { case (name, _) =>
-        val (sec, load) = best(name); sec >= 0 && load > loadFlag
-      }
-      if (loaded.nonEmpty) {
-        System.err.println(s"[bench] re-measuring ${loaded.size} load-flagged queries " +
-          s"(best sample above load $loadFlag): " + loaded.map(_._1).mkString(", "))
-        loaded.foreach { case (name, fn) => measure("pass4", name, fn) }
-      }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] suite aborted, emitting partial results: ${e.getMessage}")
-    } finally {
-      try spark.stop() catch { case _: Throwable => () }
-      // ratio denominator = the queries Spark actually measured, so a failed
-      // or aborted suite cannot produce a spuriously LOW ratio (partial spark
-      // total over the full oracle total)
-      val measured = best.collect { case (k, (sec, _)) if sec >= 0 => k }.toSeq
-      emit(runOracleBench(sfDir, cpus, measured))
-    }
+    try spark.stop() catch { case _: Throwable => () }
+    // ratio denominator = the queries Spark actually measured, so a failed
+    // or aborted suite cannot produce a spuriously LOW ratio (partial spark
+    // total over the full oracle total)
+    emit(runs, runOracleBench(sfDir, cpus, runs.collect { case (k, ts) if ts.exists(_.ok) => k }))
   }
 
   /** Time the DuckDB oracle suite over the `measured` queries of the same

@@ -7,10 +7,13 @@ driver's round artifact; the file does not).
 Usage: python3 tools/bench_table.py [BENCH_FULL_c{cpus}.json] [N]
 The default record is the one with the most cores. Prints a markdown table
 of the N (default 8) slowest queries with their spark / oracle seconds and
-per-query ratio, plus the suite totals line.
+per-query ratio, plus the suite totals line and its per-query view: the
+geomean of spark/oracle and the number of queries Spark wins, both over the
+queries in the record's `ratios` (those both engines measured).
 """
 import glob
 import json
+import math
 import re
 import sys
 
@@ -45,6 +48,11 @@ def main():
     print(f"Suite: spark {b.get('spark_total_sec')}s vs oracle "
           f"{b.get('oracle_total_sec')}s = ratio {b.get('ratio')} over "
           f"{b.get('n_queries')} queries ({b.get('failed')} failed).")
+    if ratios:
+        geomean = math.exp(sum(math.log(s / o) for s, o, _ in ratios.values()) / len(ratios))
+        wins = sum(1 for s, o, _ in ratios.values() if s < o)
+        print(f"Per query: geomean spark/oracle {geomean:.2f}, "
+              f"Spark faster on {wins} of {len(ratios)} queries.")
     # same floor as Bench's emitted worst_ratio: rank only pairs where both
     # engines do non-trivial work (a Spark constant over a sub-ms DuckDB
     # microquery is a huge "ratio" that says nothing about scale behavior)

@@ -12,7 +12,9 @@ graft.Verify runs on SPARK_GRAFT_CPUS cores when it is set, else on 8.
 Each run starts from an empty output dir, so every result it compares was
 written by this run.
 """
-import sys, os, json, glob, shutil, subprocess
+import sys, os, json, glob, shutil
+
+import jvm
 
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
 ONLY = None
@@ -24,32 +26,16 @@ for i, a in enumerate(_args):
         ONLY = set(_args[i + 1].split(","))
 
 OUT = "/tmp/graft_verify"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-def classpath():
-    classes = os.path.join(REPO, "target/scala-2.13/classes")
-    jars = glob.glob("/opt/spark/jars/*.jar")
-    return ":".join([classes] + jars)
 
 def run_verify(only=None):
     # a result left by an earlier run would stand in for one this run failed
     # to write, and a deleted query would still be reported
     shutil.rmtree(OUT, ignore_errors=True)
-    add_opens = []
-    for p in ["java.base/java.lang","java.base/java.lang.invoke","java.base/java.lang.reflect",
-              "java.base/java.io","java.base/java.net","java.base/java.nio","java.base/java.util",
-              "java.base/java.util.concurrent","java.base/java.util.concurrent.atomic",
-              "java.base/sun.nio.ch","java.base/sun.nio.cs","java.base/sun.security.action",
-              "java.base/sun.util.calendar"]:
-        add_opens += ["--add-opens", p + "=ALL-UNNAMED"]
-    cmd = ["java"] + add_opens + [
-        "-Xmx8g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-cp", classpath(), "graft.Verify", SF, OUT]
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_CPUS", "8")
     if only is not None:
         env["GRAFT_VERIFY_ONLY"] = only
-    r = subprocess.run(cmd, capture_output=True, text=True, env=env)
+    r = jvm.run("graft.Verify", SF, OUT, heap="8g", env=env)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:])
         sys.exit("verify failed")

@@ -5,9 +5,10 @@ the Spark bench ratio.
 The Scala bench cannot embed DuckDB (driver-side tool only), so the per-round
 "how close to the oracle are we" ratio is produced here instead: run every
 SparkEntry.oracleSql statement in DuckDB over the same sf parquet tables the
-Spark bench reads, with the same discipline (one warm-up pass, then two timed
-passes interleaved suite-wide, per-query min), and emit one JSON line shaped
-like the Spark bench's so the two artifacts line up field-for-field.
+Spark bench reads, with the same sampling rule as graft.Bench (one warm-up
+pass, then three timed passes interleaved suite-wide, each query keeping its
+fastest successful sample), and emit one JSON line shaped like the Spark
+bench's so the two artifacts line up field-for-field.
 
 Usage: python3 tools/oracle_bench.py [sfdir] [threads]
   sfdir   default /root/testdata/sf0.1
@@ -16,16 +17,15 @@ Usage: python3 tools/oracle_bench.py [sfdir] [threads]
 Requires target/scala-2.13/classes to be built (runs graft.Verify once to
 dump oracle_sql.json if it is not already present for this sfdir).
 """
-import glob
 import json
 import os
-import subprocess
 import sys
 import time
 
+import jvm
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 THREADS = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = "/tmp/graft_oracle_bench"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -34,19 +34,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def dump_oracle_sql():
     """Run graft.Verify (cheapest available dump of SparkEntry.oracleSql)."""
-    classes = os.path.join(REPO, "target/scala-2.13/classes")
-    jars = glob.glob("/opt/spark/jars/*.jar")
-    cp = ":".join([classes] + jars)
-    add_opens = []
-    for p in ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-              "java.net", "java.nio", "java.util", "java.util.concurrent",
-              "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-              "sun.security.action", "sun.util.calendar"]:
-        add_opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-    cmd = ["java"] + add_opens + ["-Xmx8g", "-Dspark.ui.enabled=false",
-                                  "-cp", cp, "graft.Verify", SF, OUT]
-    r = subprocess.run(cmd, capture_output=True, text=True,
-                       env=dict(os.environ, SPARK_GRAFT_CPUS="8"))
+    r = jvm.run("graft.Verify", SF, OUT, heap="8g",
+                env=dict(os.environ, SPARK_GRAFT_CPUS="8"))
     if r.returncode != 0:
         print(r.stderr[-2000:], file=sys.stderr)
         sys.exit("verify failed; cannot dump oracle_sql.json")
@@ -127,7 +116,7 @@ def main():
         once(name)
 
     best = {n: -1.0 for n in names}
-    for pas in (1, 2):  # interleaved suite-wide, like the Spark bench
+    for pas in (1, 2, 3):  # interleaved suite-wide, like graft.Bench.Passes
         for name in names:
             try:
                 load = open("/proc/loadavg").read().split()[0]

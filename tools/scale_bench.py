@@ -27,13 +27,12 @@ SCALE_USERS, SPARK_GRAFT_CPUS, ...). A run ends by printing the README scale
 table derived from OUT.json; --table only prints it, running nothing.
 """
 import argparse
-import glob
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import jvm
+
 HARNESSES = ["graft.ScaleBench", "graft.ScaleJoins", "graft.ScaleAnn",
              "graft.ScaleZOrder", "graft.ScaleBuckets", "graft.ScaleStream",
              "graft.ScaleDecontam", "graft.ScaleGraph", "graft.ScaleFlagship",
@@ -55,18 +54,9 @@ def loadavg():
 
 
 def run_one(main):
-    classes = os.path.join(REPO, "target/scala-2.13/classes")
-    cp = ":".join([classes] + glob.glob("/opt/spark/jars/*.jar"))
-    add_opens = []
-    for p in ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-              "java.net", "java.nio", "java.util", "java.util.concurrent",
-              "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-              "sun.security.action", "sun.util.calendar"]:
-        add_opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-    cmd = ["java"] + add_opens + ["-Xmx48g", "-cp", cp, main]
     load = loadavg()
     print(f"[scale] running {main} (load={load:.1f}) ...", file=sys.stderr)
-    r = subprocess.run(cmd, capture_output=True, text=True)
+    r = jvm.run(main, heap="48g")
     if r.returncode != 0:
         print(r.stderr[-3000:], file=sys.stderr)
         raise SystemExit(f"{main} failed with exit {r.returncode}")
